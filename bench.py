@@ -28,21 +28,16 @@ Sections:
   (AUDIT_ROTATING_POOL), so the section's cost is bounded while every
   tier still lands in a bench JSON every ~3 rounds.
 
-Since round 8 every section also carries a `*_cpu_seconds` companion:
-executor CPU time per query from the stage store (plans/instrument.py::
-stage_delta). External VM steal inflates wall-clock but not CPU time,
-so CPU ratios are the round-over-round performance signal; the wall
-fields remain frozen for methodology comparability.
-
-Known blind spot of the CPU signal: executorCpuTime counts JVM task-
-thread CPU only. A stage that hands batches to Python workers
-(mapInPandas / Arrow UDFs) blocks its JVM thread — that time lands in
-executorRunTime, not executorCpuTime — so a regression inside Python
-worker code would NOT move cpu_seconds. This is benign for the benched
-sets (every benched query is lint-proven Python-free on the hot path,
-tests/test_plan_lint.py); if a Python-stage query is ever added, cite
-its stage_delta `run_seconds` alongside CPU (see
-plans/instrument.py::stage_delta, which returns both).
+Every section also carries a `*_cpu_seconds` companion: executor CPU
+time per query. Every timing is one call of
+``databeats_spark.plans.instrument.profile`` (noop-sink timed region,
+stage counters read from marks taken outside it). External VM steal
+inflates wall-clock but not CPU time, so CPU ratios are the
+round-over-round performance signal; the wall fields remain frozen for
+methodology comparability. executorCpuTime counts JVM task-thread CPU
+only: a stage feeding Python workers (mapInPandas / Arrow UDFs) shows
+in the profile's ``run_seconds`` instead. Every benched query is
+lint-proven Python-free on the hot path (tests/test_plan_lint.py).
 """
 
 from __future__ import annotations
@@ -50,7 +45,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 # The grading driver keeps only the LAST 2,000 chars of stdout. Round 8
 # shipped no driver-legible benchmark because the single rich JSON line
@@ -250,9 +244,84 @@ def adaptive_for(sf_dir: str) -> bool:
     return _total_parquet_bytes(sf_dir) >= (512 << 20)
 
 
+# additive corpus-mining / curation section (round 4+), appended in
+# landing order so earlier rows compare like-for-like per query
+_MINING = (
+    "bigram_pmi", "incremental_corpus_dups", "sequence_packing",
+    "semdedup_near_dups", "pagerank_docs", "curation_funnel",
+    "span_dedup_docs", "oov_rate", "substring_dup_spans",
+    "substring_dup_spans_packed",
+)
+
+
+def rich_summary(
+    sections: dict[str, dict[str, dict]],
+    env_marks: list[tuple[str, dict]],
+    pagerank_rounds: list[float],
+    sf_dir: str,
+) -> dict:
+    """Assemble the rich bench dict from per-section profile records
+    (``{section: {query: instrument.profile record}}`` for the
+    headline, mining, audit_core and audit_rotating sections), the
+    environment probes taken after each section, and pagerank's
+    per-round walls. Spark-free, so its key set is pytest-pinned."""
+    wall = {s: {n: r["wall_s"] for n, r in recs.items()} for s, recs in sections.items()}
+    cpu = {s: {n: r["cpu_seconds"] for n, r in recs.items()} for s, recs in sections.items()}
+
+    def total(d: dict) -> float:
+        return round(sum(d.values()), 4)
+
+    # per-section + overall contention readout: high steal or load1 >>
+    # the bench's own parallelism with FLAT cpu_seconds means the wall
+    # numbers are contention-polluted, not a plan regression
+    env = {cur[0]: _env_delta(prev[1], cur[1]) for prev, cur in zip(env_marks, env_marks[1:])}
+    env["overall"] = _env_delta(env_marks[0][1], env_marks[-1][1])
+    audit = {**wall["audit_core"], **wall["audit_rotating"]}
+    audit_cpu = {**cpu["audit_core"], **cpu["audit_rotating"]}
+    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    return {
+        "metric": "headline_queries_total_runtime",
+        "value": total(wall["headline"]),
+        "unit": "sec",
+        "queries": wall["headline"],
+        "queries_cpu_seconds": cpu["headline"],
+        # driver-side scheduling cost per headline query (rich line
+        # only): job count is a plan property, steal-immune like bytes
+        "queries_jobs": {n: r["n_jobs"] for n, r in sections["headline"].items()},
+        "cpu_seconds_total": total(cpu["headline"]),
+        "mining_queries_total_runtime": total(wall["mining"]),
+        "mining_queries": wall["mining"],
+        "mining_queries_cpu_seconds": cpu["mining"],
+        "mining_cpu_seconds_total": total(cpu["mining"]),
+        "pagerank_rounds": pagerank_rounds,
+        # compare audit_core_* round-over-round; audit_rotating_* varies
+        # by design, and the combined audit_* keys (core + this round's
+        # rotation) continue the r5-r9 records
+        "audit_core_total_runtime": total(wall["audit_core"]),
+        "audit_core_queries": wall["audit_core"],
+        "audit_core_queries_cpu_seconds": cpu["audit_core"],
+        "audit_core_cpu_seconds_total": total(cpu["audit_core"]),
+        "audit_rotating_total_runtime": total(wall["audit_rotating"]),
+        "audit_rotating_queries": wall["audit_rotating"],
+        "audit_rotating_queries_cpu_seconds": cpu["audit_rotating"],
+        "audit_rotating_cpu_seconds_total": total(cpu["audit_rotating"]),
+        "audit_queries_total_runtime": total(audit),
+        "audit_queries": audit,
+        "audit_queries_cpu_seconds": audit_cpu,
+        "audit_cpu_seconds_total": total(audit_cpu),
+        "env": env,
+        "env_steal_pct": env["overall"]["steal_pct"],
+        "env_load1_max": round(max(m[1]["load1"] for m in env_marks), 2),
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+    }
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    from databeats_spark.plans.instrument import profile
     from databeats_spark.registry import bench_queries
+    from databeats_spark.registry import queries as all_queries
+    from databeats_spark.registry.mining import _pagerank_docs
     from databeats_spark.session import get_spark
 
     spark = get_spark(
@@ -262,184 +331,41 @@ def main() -> None:
     )
 
     qs = bench_queries()
-    qs = {n: qs[n] for n in _R1_ORDER if n in qs} | {
-        n: b for n, b in qs.items() if n not in _R1_ORDER
-    }
+    headline = [n for n in _R1_ORDER if n in qs] + [n for n in qs if n not in _R1_ORDER]
     # warmup: touch every table + JIT the scan path
-    next(iter(qs.values()))(spark, sf_dir).limit(1).collect()
+    qs[headline[0]](spark, sf_dir).limit(1).collect()
 
-    # steady-state timing: best of 3 runs per query (first run pays
-    # whole-stage-codegen compilation; production queries run warm,
-    # and min-of-3 rejects GC/scheduler noise spikes).
-    # Each run is also bracketed by plans/instrument.py::stage_delta —
-    # executor CPU time from the stage store (r7 VERDICT item 2). CPU
-    # seconds are immune to external VM steal (steal inflates wall, not
-    # CPU), so `*_cpu_seconds` is the cross-round comparison signal;
-    # the wall fields stay frozen for methodology comparability.
-    from databeats_spark.plans.instrument import stage_delta, stage_snapshot
+    # pagerank_docs runs with a sink: its round_* rows carry the
+    # per-round walls — uniform inflation on a driver run means
+    # external CPU steal, a single slow round means a plan problem
+    builds = dict(all_queries())
+    pagerank_sink: list[dict] = []
+    builds["pagerank_docs"] = lambda s, d: _pagerank_docs(s, d, metrics_sink=pagerank_sink)
 
+    # headline: best of 3 (the first run pays whole-stage-codegen
+    # compilation; min-of-3 rejects GC/scheduler spikes). The other
+    # sections run once: several are iterative ops whose first-run cost
+    # IS the production cost, and a re-run mostly re-measures caches.
+    plan = (
+        ("headline", headline, 3),
+        ("mining", _MINING, 1),
+        ("audit_core", AUDIT_CORE, 1),
+        ("audit_rotating", rotating_audit(), 1),
+    )
     env_marks = [("start", _env_probe())]
+    sections: dict[str, dict[str, dict]] = {}
+    for section, names, reps in plan:
+        sections[section] = {
+            n: profile(spark, lambda b=builds[n]: b(spark, sf_dir), reps) for n in names
+        }
+        env_marks.append((section, _env_probe()))
+    rounds = [r["wall_s"] for r in pagerank_sink if r["step"].startswith("round_")]
+    out = rich_summary(sections, env_marks, rounds, sf_dir)
 
-    timings: dict[str, float] = {}
-    jobs: dict[str, int] = {}
-    cpu: dict[str, float] = {}
-    for name, build in qs.items():
-        best = float("inf")
-        best_cpu = float("inf")
-        best_jobs = 0
-        for _ in range(3):
-            snap = stage_snapshot(spark)
-            t0 = time.perf_counter()
-            build(spark, sf_dir).write.mode("overwrite").format("noop").save()
-            best = min(best, time.perf_counter() - t0)
-            d = stage_delta(spark, snap)
-            best_cpu = min(best_cpu, d["cpu_seconds"])
-            best_jobs = d["n_jobs"]  # identical across reps (plan property)
-        timings[name] = round(best, 4)
-        cpu[name] = round(best_cpu, 4)
-        jobs[name] = best_jobs
-    env_marks.append(("headline", _env_probe()))
-
-    # additive section (round 4+): the corpus-mining / curation
-    # heavyweights. Single timed run each — several are iterative
-    # (CC rounds, PageRank power iteration, per-stage counts) whose
-    # first-run cost IS the production cost; min-of-3 would mostly
-    # re-measure checkpoint caches.
-    from databeats_spark.registry import queries as all_queries
-
-    _MINING = [
-        "bigram_pmi", "incremental_corpus_dups", "sequence_packing",
-        "semdedup_near_dups", "pagerank_docs", "curation_funnel",
-        # r4 mid-round additions (extend the section BEFORE the r4
-        # baseline records, so r5 compares like-for-like per query)
-        "span_dedup_docs", "oov_rate",
-        # r6 addition: variable-length substring dedup (suffix sort)
-        "substring_dup_spans",
-        # r8 addition: the packed-tail scale posture of the same tier
-        # (appended so earlier rows compare like-for-like per query)
-        "substring_dup_spans_packed",
-    ]
-    reg = all_queries()
-    mining: dict[str, float] = {}
-    mining_cpu: dict[str, float] = {}
-    for name in _MINING:
-        snap = stage_snapshot(spark)
-        t0 = time.perf_counter()
-        reg[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        mining[name] = round(time.perf_counter() - t0, 4)
-        mining_cpu[name] = stage_delta(spark, snap)["cpu_seconds"]
-    env_marks.append(("mining", _env_probe()))
-
-    # per-round wall seconds of pagerank's power iteration (populated
-    # during the pagerank_docs build above): the steal-vs-plan
-    # diagnostic the r5 verdict asked for — uniform per-round inflation
-    # on a driver run means external CPU steal, a single slow round
-    # means a plan problem. Every round is one eager contribution job;
-    # odd-indexed (check) rounds add a small L1-delta job on top.
-    from databeats_spark.registry.mining import PAGERANK_ROUND_TIMINGS
-
-    pagerank_rounds = list(PAGERANK_ROUND_TIMINGS)
-
-    # audit section (round 5+), restructured in r10 (VERDICT r9 item 3):
-    # the old _AUDIT list grew every round (22 -> 30 queries in r9), so
-    # its round-over-round wall total measured list growth, not
-    # performance. Now: a FROZEN core of the 12 heaviest / most
-    # shape-diverse queries for comparability, plus a deterministic
-    # N-per-round rotation over the remaining audited tiers (the window-
-    # rotation idea applied to the bench — every tier's cost is tracked,
-    # ~1/3 of the pool per round). Single timed run each, same rationale
-    # as the mining section. Core membership is pytest-pinned
-    # (tests/test_entry_contract.py). source_kmv_overlap is in NEITHER
-    # set (VERDICT r9 item 2): its exact-verifier half is correctness
-    # work the sf0.01 oracle run certifies; the bench times the
-    # mergeable-sketch posture source_kmv_sketch instead.
-    audit_core: dict[str, float] = {}
-    audit_core_cpu: dict[str, float] = {}
-    for name in AUDIT_CORE:
-        snap = stage_snapshot(spark)
-        t0 = time.perf_counter()
-        reg[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        audit_core[name] = round(time.perf_counter() - t0, 4)
-        audit_core_cpu[name] = stage_delta(spark, snap)["cpu_seconds"]
-    env_marks.append(("audit_core", _env_probe()))
-
-    audit_rot: dict[str, float] = {}
-    audit_rot_cpu: dict[str, float] = {}
-    for name in rotating_audit():
-        snap = stage_snapshot(spark)
-        t0 = time.perf_counter()
-        reg[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-        audit_rot[name] = round(time.perf_counter() - t0, 4)
-        audit_rot_cpu[name] = stage_delta(spark, snap)["cpu_seconds"]
-    env_marks.append(("audit_rotating", _env_probe()))
-
-    # per-section + overall contention readout (VERDICT r10 item 2)
-    env = {
-        name: _env_delta(prev[1], cur[1])
-        for (prev, cur) in zip(env_marks, env_marks[1:])
-        for name in (cur[0],)
-    }
-    env["overall"] = _env_delta(env_marks[0][1], env_marks[-1][1])
-
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    out = {
-        "metric": "headline_queries_total_runtime",
-        "value": round(sum(timings.values()), 4),
-        "unit": "sec",
-        "queries": timings,
-        # additive since r8: steal-immune executor-CPU companions (see
-        # the stage_delta bracketing above) — cite THESE in perf claims
-        "queries_cpu_seconds": cpu,
-        # driver-side scheduling cost per headline query (rich line
-        # only — never a compact key): job count is a PLAN property,
-        # steal-immune like the byte metrics; at sf0.1 the headline is
-        # overhead-dominated, so this is the wall lever to watch
-        # round-over-round (r12: 37 total under the data-sized
-        # adaptive policy, was 75)
-        "queries_jobs": jobs,
-        "cpu_seconds_total": round(sum(cpu.values()), 4),
-        "mining_queries_total_runtime": round(sum(mining.values()), 4),
-        "mining_queries": mining,
-        "mining_queries_cpu_seconds": mining_cpu,
-        "mining_cpu_seconds_total": round(sum(mining_cpu.values()), 4),
-        "pagerank_rounds": pagerank_rounds,
-        # frozen-core vs rotating audit split (r10) — compare
-        # audit_core_* round-over-round; audit_rotating_* varies by
-        # design (the deterministic per-round pool slice). The combined
-        # audit_queries_* keys remain for continuity with r5-r9 records
-        # (core + this round's rotation).
-        "audit_core_total_runtime": round(sum(audit_core.values()), 4),
-        "audit_core_queries": audit_core,
-        "audit_core_queries_cpu_seconds": audit_core_cpu,
-        "audit_core_cpu_seconds_total": round(sum(audit_core_cpu.values()), 4),
-        "audit_rotating_total_runtime": round(sum(audit_rot.values()), 4),
-        "audit_rotating_queries": audit_rot,
-        "audit_rotating_queries_cpu_seconds": audit_rot_cpu,
-        "audit_rotating_cpu_seconds_total": round(sum(audit_rot_cpu.values()), 4),
-        "audit_queries_total_runtime": round(sum(audit_core.values()) + sum(audit_rot.values()), 4),
-        "audit_queries": {**audit_core, **audit_rot},
-        "audit_queries_cpu_seconds": {**audit_core_cpu, **audit_rot_cpu},
-        "audit_cpu_seconds_total": round(
-            sum(audit_core_cpu.values()) + sum(audit_rot_cpu.values()), 4
-        ),
-        # environment self-description (VERDICT r10 item 2): per-section
-        # steal share + loadavg brackets, plus the two compact scalars.
-        # Reading a bench artifact: high env_steal_pct or load1 >> the
-        # bench's own parallelism with FLAT cpu_seconds means the wall
-        # numbers are contention-polluted, not a plan regression.
-        "env": env,
-        "env_steal_pct": env["overall"]["steal_pct"],
-        "env_load1_max": round(max(m[1]["load1"] for m in env_marks), 2),
-        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-    }
     # rich line first: head-truncated in the driver's stdout tail but
-    # fully recoverable from the live artifact (and the tail of this
-    # line — the audit section — still lands inside the window).
-    # artifacts/BENCH_LOCAL.json is GITIGNORED (r12): every run — the
-    # driver's included — overwrites it freely without dirtying the
-    # tree (the r10/r11 failure mode). Reference samples worth keeping
-    # are copied to artifacts/bench_samples/<name>.json and committed
-    # explicitly.
+    # fully recoverable from artifacts/BENCH_LOCAL.json (gitignored —
+    # every run overwrites it; reference samples worth keeping are
+    # copied to artifacts/bench_samples/ and committed explicitly)
     rich_line = json.dumps(out)
     print(rich_line)
     try:

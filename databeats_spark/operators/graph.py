@@ -91,20 +91,25 @@ def connected_components(
     # read cached blocks; result-identical by construction.
     pre_edges = edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
     e_in = pre_edges.localCheckpoint(eager=False)
+    t0 = time.perf_counter()
     pre_sym = (
         e_in.union(e_in.select(F.col("b").alias("a"), F.col("a").alias("b")))
         .distinct()
     )
     sym = pre_sym.localCheckpoint()  # single materialization of the edge generator
-    record_metrics(metrics_sink, "cc_input_edges", pre_edges)
-    record_metrics(metrics_sink, "cc_edges", pre_sym)
+    # the lazy input checkpoint ran inside the sym action: both rows
+    # carry that action's wall
+    record_metrics(metrics_sink, "cc_input_edges", pre_edges, t0)
+    record_metrics(metrics_sink, "cc_edges", pre_sym, t0)
+    t0 = time.perf_counter()
     pre_labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
     labels = pre_labels.localCheckpoint()
-    record_metrics(metrics_sink, "cc_labels_init", pre_labels)
+    record_metrics(metrics_sink, "cc_labels_init", pre_labels, t0)
     sym_keyed = sym.select("a", F.col("b").alias("node"))
     for i in range(max_iter):
+        t0 = time.perf_counter()
         if salt_factor:
             from databeats_spark.operators.scale import salted_join
 
@@ -133,7 +138,7 @@ def connected_components(
             .select("node", "label")
         )
         labels = pre_round.localCheckpoint()  # the ONE action of the round
-        record_metrics(metrics_sink, f"cc_round_{i + 1}", pre_round)
+        record_metrics(metrics_sink, f"cc_round_{i + 1}", pre_round, t0)
         if (obs.get["changed"] or 0) == 0:
             break
     return labels.select(F.col("node"), F.col("label").alias("component"))
@@ -341,7 +346,6 @@ def pagerank(
     max_iter: int = 15,
     tol: float = 1e-6,
     check_every: int = 2,
-    round_timings: list | None = None,
     metrics_sink: list | None = None,
 ) -> DataFrame:
     """Distributed PageRank by power iteration over the edge list —
@@ -382,12 +386,12 @@ def pagerank(
     aggregate over two contribution tables (:func:`_rank_l1_delta`).
     The per-round driver reads (observed flowing mass, delta) are
     bounded 1-row actions. Pass ``tol=None`` to run exactly
-    ``max_iter`` rounds; pass a list as ``round_timings`` to receive
-    per-round wall seconds (the steal-vs-plan diagnostic: uniform
-    inflation across rounds on a loaded host = external steal, one
-    slow round = a plan problem); pass a list as ``metrics_sink`` to
-    receive per-checkpoint data-movement rows (edge materialization +
-    every round — the byte-denominated companion, SHUFFLE.md).
+    ``max_iter`` rounds; pass a list as ``metrics_sink`` to receive one
+    row per checkpoint action (edge materialization, nodes, every
+    round) with its data movement and ``wall_s``. A ``round_*`` row's
+    wall covers the whole round, delta job included — the
+    steal-vs-plan diagnostic: uniform inflation across rounds on a
+    loaded host = external steal, one slow round = a plan problem.
     """
     from databeats_spark.plans.instrument import record_metrics
 
@@ -398,16 +402,18 @@ def pagerank(
     # subtree — nodes and every round's contribution join read these
     # blocks, so an LSH/candidate pipeline upstream runs exactly once,
     # not once per iteration
+    t0 = time.perf_counter()
     pre_withdeg = out_edges.join(degrees, "e_src")
     withdeg = pre_withdeg.localCheckpoint()
-    record_metrics(metrics_sink, "edges", pre_withdeg)
+    record_metrics(metrics_sink, "edges", pre_withdeg, t0)
+    t0 = time.perf_counter()
     pre_nodes = (
         withdeg.select(F.col("e_src").alias("node"))
         .union(withdeg.select(F.col("e_dst").alias("node")))
         .distinct()
     )
     nodes = pre_nodes.localCheckpoint()
-    record_metrics(metrics_sink, "nodes", pre_nodes)
+    record_metrics(metrics_sink, "nodes", pre_nodes, t0)
     n = nodes.count()  # one scalar; fixed for the whole run
     if n == 0:
         # empty graph (e.g. a corpus slice with no near-dup edges):
@@ -456,7 +462,6 @@ def pagerank(
             .observe(obs, F.sum("inflow").alias("flow"))
         )
         new_contribs = pre_contribs.localCheckpoint()  # eager: the ONE action of the round
-        record_metrics(metrics_sink, f"round_{i + 1}", pre_contribs)
         prev_contribs, prev_flow = contribs, flow
         contribs, flow = new_contribs, float(obs.get["flow"] or 0.0)
         converged = False
@@ -465,8 +470,7 @@ def pagerank(
         if tol is not None and i % check_every == check_every - 1 and i < max_iter - 1:
             delta = _rank_l1_delta(contribs, flow, prev_contribs, prev_flow, damping, n)
             converged = delta < tol
-        if round_timings is not None:
-            round_timings.append(round(time.perf_counter() - t0, 4))
+        record_metrics(metrics_sink, f"round_{i + 1}", pre_contribs, t0)
         if converged:
             break
     return rank_view(contribs, flow)

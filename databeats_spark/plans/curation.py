@@ -28,6 +28,8 @@ tests/test_curation_plan.py.
 
 from __future__ import annotations
 
+import time
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -266,9 +268,10 @@ def curate_corpus(
     SEGMENT, not per stage — same counts, same order, fewer jobs.
 
     ``metrics_sink`` (requires ``observe_counts`` — the eager seals are
-    the actions being measured) receives one data-movement row per
-    segment checkpoint plus the CC label rounds inside the near_dup
-    stage — the funnel's entry in the deterministic SHUFFLE.md audit."""
+    the actions being measured) receives one row per segment
+    checkpoint (data movement plus the seal's ``wall_s``) and the CC
+    label rounds inside the near_dup stage — the funnel's entry in the
+    deterministic SHUFFLE.md audit."""
     # the whole flow is compute-bound (shingling, signatures, quality
     # expressions): spread a few-split scan once at the head and every
     # stage inherits the parallelism (no-op when the scan has splits)
@@ -308,9 +311,10 @@ def curate_corpus(
 
         def pin(name: str, df: DataFrame) -> DataFrame:
             pre = observe_only(name, df)
+            t0 = time.perf_counter()
             out = pre.localCheckpoint()  # the segment's ONE action
             names = [n for n, _ in pending]
-            record_metrics(metrics_sink, "stage_" + "+".join(names), pre)
+            record_metrics(metrics_sink, "stage_" + "+".join(names), pre, t0)
             for n, obs in pending:
                 observe_counts[n] = int(obs.get["n"])
             pending.clear()

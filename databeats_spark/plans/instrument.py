@@ -1,47 +1,47 @@
-"""Deterministic execution metrics — the steal-proof bench companion.
+"""The measurement core: every timing and every byte audit in the repo
+is one of the two calls below, and iterative operators report through
+one per-step channel.
 
-Wall-clock on a shared VM is noisy (README "Bench variance note"), but
-the BYTES a plan moves are a property of the plan and the data: shuffle
-exchange dataSize, broadcast sizes, and scan row/byte counts reproduce
-exactly run over run. ``execution_metrics`` executes a DataFrame's own
-physical plan and folds the SQLMetrics of every exchange/scan in the
-final adaptive plan into one dict — the regression signal that survives
-any amount of external CPU steal, and the direct evidence for the
-100 TB posture claims (a broadcast star join shows megabytes of
-broadcast and ZERO fact-side shuffle; a regression to sort-merge-join
-shows up as a 100x shuffle-byte jump long before anyone trusts a
-timing).
+- :func:`profile` times a query. The timed region is exactly
+  ``build().write.mode("overwrite").format("noop").save()`` — the full
+  plan runs, nothing is collected — and the record carries the
+  min-over-reps ``wall_s`` / ``cpu_seconds`` / ``run_seconds`` plus the
+  stage counters of the last rep (jobs, stages, tasks, shuffle-write
+  bytes/records, spill: plan properties, identical across reps).
+  ``bench.py`` and ``scripts/{job_audit,scale_cores,scale_curve}.py``
+  render it.
+- :func:`movement` audits the bytes a query moves: it executes the
+  df's own physical plan, folds the exchange/scan/spill SQLMetrics of
+  the final plan AND of every pre-checkpoint plan captured during
+  build+execute (:func:`capture_checkpoint_sources`), and adds the
+  stage counters. ``scripts/shuffle_audit.py`` and
+  ``scripts/scale_curve_bytes.py`` render it. Bytes are a property of
+  plan + data and reproduce exactly run over run; wall-clock on this
+  VM does not.
+- The ``metrics_sink`` list is the per-step channel of iterative
+  operators (PageRank/CC rounds, funnel segments): their
+  driver-coordinated sub-jobs run in query executions the final plan
+  never carries, so each step calls :func:`record_metrics`, which
+  appends ``{"step", "wall_s", **executed_metrics(df)}`` folded from
+  the step's already-executed plan (no re-run).
 
-Three entry points:
-
-- :func:`execution_metrics` — single-plan queries: execute the df's own
-  physical plan, then fold its exchange/scan SQLMetrics.
-- :func:`executed_metrics` — iterative operators (PageRank rounds, CC
-  label rounds, funnel stages): their driver-coordinated sub-jobs run
-  in OTHER query executions the final plan never carries, so each
-  round's operator threads a ``metrics_sink`` list and calls this on
-  the round's ALREADY-EXECUTED DataFrame (the eager localCheckpoint is
-  the action) — folding without re-running. Summing sink entries gives
-  the op's total movement; per-entry rows expose compounding.
-- :func:`stage_snapshot` / :func:`stage_delta` — STAGE-level totals
-  from the AppStatusStore, bracketing a query run (r7 VERDICT items
-  2+3). Two blind spots of plan-walking die here at once:
-  (a) ``executorCpuTime`` is CPU time, not wall — external VM steal
-      inflates wall-clock but not CPU, so per-query ``cpu_seconds``
-      deltas are the steal-immune timing companion bench.py emits;
-  (b) every stage that RAN is recorded in the store even when AQE's
-      empty-relation propagation replaces the subtree in the final
-      plan — so stage-level shuffle-write deltas report the true
-      executed movement for queries whose final plan reads 0 B
-      (SHUFFLE.md's former sf0.1 caveat rows).
-  Deltas are only attributable when queries run serially on the
-  session (bench.py / shuffle_audit.py do). Stage-store eviction
-  (spark.ui.retainedStages) would corrupt long-session deltas;
-  :func:`get_spark` raises the retention well above any bench run.
+Stage counters (:func:`stage_mark` / :func:`stage_work`) read the
+AppStatusStore for the stages created since a mark — O(stages of the
+query), not O(every retained stage). ``cpu_seconds`` is
+executorCpuTime, which external VM steal does not inflate; it counts
+JVM task threads only, so a stage feeding Python workers accrues to
+``run_seconds`` instead. Attribution assumes queries run serially on
+the session. RETENTION CAVEAT: a stage evicted from the store before
+it is read is skipped, and a store over ``spark.ui.retainedStages``
+evicts skipped stages first — the current query's included. Keep the
+session's stage count under the limit: ``get_spark`` pins it to
+100000; a session built elsewhere defaults to 1000.
 """
 
 from __future__ import annotations
 
+import time
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
@@ -174,86 +174,98 @@ def executed_metrics(df: DataFrame) -> dict[str, int]:
     return _fold_plan_metrics(df._jdf.queryExecution().executedPlan())
 
 
-def stage_snapshot(spark: SparkSession) -> dict[str, int]:
-    """Sum task metrics over every stage the AppStatusStore retains.
-
-    Drains the listener bus first so all completed-stage events are
-    folded in (the status listener is asynchronous; without the drain a
-    snapshot taken right after an action can miss its final stages).
-    Returns monotonically-growing totals — meaningful only as deltas
-    via :func:`stage_delta` around a serially-run query.
-
-    RETENTION CAVEAT: both totals are ABSOLUTE counts over what the
-    store currently retains. ``get_spark`` pins
-    ``spark.ui.retainedJobs``/``retainedStages`` to 100000 so a bench
-    sweep never evicts a 'before' snapshot's entries; against a
-    session this engine did not build (defaults: 1000 stages / 1000
-    jobs) a long sweep can rotate 'before' jobs/stages out mid-run and
-    silently corrupt the delta (ADVICE r12). Keep deltas short or pin
-    retention before snapshotting.
-    """
+def stage_mark(spark: SparkSession) -> tuple[int, int]:
+    """(next stage id, next job id) once the listener bus has drained —
+    a point in the session's sequence of stages and jobs. Take it
+    outside any timed region."""
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    jvm = sc._jvm
-    stages = sc._jsc.sc().statusStore().stageList(
-        jvm.java.util.ArrayList(),          # all statuses
-        False, False,                       # no task details / summaries
-        sc._gateway.new_array(jvm.double, 0),
-        jvm.java.util.ArrayList(),          # all task statuses
-    )
+    dag = sc._jsc.sc().dagScheduler()
+    return int(dag.nextStageId()), int(dag.nextJobId())
+
+
+def stage_work(spark: SparkSession, mark: tuple[int, int]) -> dict[str, int | float]:
+    """Task metrics summed over the stages created since ``mark``, plus
+    the number of jobs submitted since it."""
+    end = stage_mark(spark)
+    store = spark.sparkContext._jsc.sc().statusStore()
     out = {
-        "cpu_ns": 0,            # executorCpuTime: CPU, steal-immune
-        "run_ms": 0,            # executorRunTime: wall across tasks
+        "n_jobs": end[1] - mark[1], "n_stages": 0, "n_tasks": 0,
+        "cpu_ns": 0, "run_ms": 0,
         "stage_shuffle_write_bytes": 0,   # post-compression, executed
         "stage_shuffle_write_records": 0,
         "stage_spill_bytes": 0,
-        "n_stages": 0,
-        "n_tasks": 0,
     }
-    it = stages.iterator()
-    while it.hasNext():
-        s = it.next()
+    for sid in range(mark[0], end[0]):
+        try:
+            s = store.lastStageAttempt(sid)
+        except Exception:  # noqa: BLE001 — created but never reported
+            continue
+        out["n_stages"] += 1
+        out["n_tasks"] += s.numCompleteTasks() + s.numFailedTasks()
         out["cpu_ns"] += s.executorCpuTime()
         out["run_ms"] += s.executorRunTime()
         out["stage_shuffle_write_bytes"] += s.shuffleWriteBytes()
         out["stage_shuffle_write_records"] += s.shuffleWriteRecords()
         out["stage_spill_bytes"] += s.diskBytesSpilled()
-        out["n_stages"] += 1
-        out["n_tasks"] += s.numCompleteTasks() + s.numFailedTasks()
-    # jobs are the driver-side scheduling unit: each one is an action
-    # round-trip (job submit, DAG build, stage wake-ups). At sf0.1 the
-    # headline set is overhead-dominated (VERDICT r11: 16.5 s wall vs
-    # 6.8 cpu-s over 32 cores), so JOB COUNT per query is the lever
-    # wall-clock still responds to when bytes and cpu are flat.
-    out["n_jobs"] = sc._jsc.sc().statusStore().jobsList(
-        jvm.java.util.ArrayList()
-    ).size()
+    out["cpu_seconds"] = round(out.pop("cpu_ns") / 1e9, 4)
+    out["run_seconds"] = round(out.pop("run_ms") / 1e3, 4)
     return out
 
 
-def stage_delta(spark: SparkSession, before: dict[str, int]) -> dict[str, int | float]:
-    """Snapshot again and return the per-query attribution:
-    ``cpu_seconds`` (float, from executorCpuTime nanos) plus the raw
-    stage-level byte/record/spill deltas.
+def profile(
+    spark: SparkSession, build: Callable[[], DataFrame], reps: int = 1
+) -> dict[str, int | float]:
+    """Run ``build()`` through the noop sink ``reps`` times; return the
+    min-over-reps ``wall_s``, ``cpu_seconds`` and ``run_seconds`` and
+    the last rep's stage counters. The builder runs inside the timed
+    region (eager build-time jobs count); the marks sit outside it."""
+    recs = []
+    for _ in range(reps):
+        mark = stage_mark(spark)
+        t0 = time.perf_counter()
+        build().write.mode("overwrite").format("noop").save()
+        wall = time.perf_counter() - t0
+        recs.append({"wall_s": round(wall, 4), **stage_work(spark, mark)})
+    best = {k: min(r[k] for r in recs) for k in ("wall_s", "cpu_seconds", "run_seconds")}
+    return {**recs[-1], **best}
 
-    ``cpu_seconds`` counts JVM task-thread CPU ONLY — a stage feeding
-    Python workers (mapInPandas / Arrow UDFs) blocks its JVM thread,
-    which accrues to ``run_seconds`` (executorRunTime), not CPU. For
-    Python-stage queries cite both: cpu_seconds for the JVM side,
-    run_seconds (steal-affected but complete) for the Python side."""
-    after = stage_snapshot(spark)
-    d = {k: after[k] - before[k] for k in before}
-    d["cpu_seconds"] = round(d.pop("cpu_ns") / 1e9, 4)
-    d["run_seconds"] = round(d.pop("run_ms") / 1e3, 4)
-    return d
+
+def movement(spark: SparkSession, build: Callable[[], DataFrame]) -> dict[str, int | float]:
+    """Execute ``build()``'s plan and return its data movement: the
+    :func:`execution_metrics` fold of the final plan plus that of every
+    pre-checkpoint plan captured during build and execute, and the
+    :func:`stage_work` counters of the run."""
+    mark = stage_mark(spark)
+    # capture brackets build AND execute: lazy checkpoints are created
+    # at build time but run with the final action. The segments are
+    # disjoint (each plan ends at the next checkpoint down its own
+    # lineage), so summing is exact, not double-counting.
+    with capture_checkpoint_sources() as sources:
+        m = execution_metrics(build())
+    for src in sources:
+        for k, v in executed_metrics(src).items():
+            m[k] += v
+    return {**m, **stage_work(spark, mark)}
 
 
-def record_metrics(sink: list | None, step: str, df: DataFrame) -> None:
-    """Append ``{"step": step, **executed_metrics(df)}`` to ``sink``
-    when a sink is provided — the one-liner the iterative operators
-    gate their instrumentation on (None = zero overhead)."""
+def record_metrics(sink: list | None, step: str, df: DataFrame, t0: float) -> None:
+    """Append ``{"step", "wall_s", **executed_metrics(df)}`` to ``sink``
+    when a sink is provided (None = zero overhead). ``wall_s`` runs
+    from ``t0``, the step's start, to now — read before the fold, so
+    folding never counts. Call it once the step's action has run."""
     if sink is not None:
-        sink.append({"step": step, **executed_metrics(df)})
+        wall = round(time.perf_counter() - t0, 4)
+        sink.append({"step": step, "wall_s": wall, **executed_metrics(df)})
+
+
+def fmt_bytes(n: float) -> str:
+    """Human-readable byte count for the audit tables."""
+    for unit in ("B", "KB", "MB", "GB"):
+        if n < 1024 or unit == "GB":
+            return f"{n} B" if unit == "B" else f"{n:.1f} {unit}"
+        n /= 1024.0
+    return f"{n} B"
 
 
 # operators that spill to disk under memory pressure (their SQLMetrics

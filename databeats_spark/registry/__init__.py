@@ -81,72 +81,60 @@ class QuerySpec:
 # displacing the tail overflow.
 # Regenerate with ``python scripts/rotation_report.py``.
 _WINDOW = (
-    # r14 FINAL rotation (optimization round 2): the 18 r14
-    # CHANGED_QUERIES re-certs (funnel fold, suffix-anchor prefilter,
-    # prefix-sum exchange-sizing fan-out, RAKE restructure — the
-    # changed-query class outranks everything but never-verified
-    # slots; the attempted hits_copurchase change was reverted, so it
-    # keeps its r13-green row and takes no slot), then the 4 age-4
-    # certifying twins (TWIN_MAX_AGE breach), the 14 bench headliners
-    # (r12-green, two rounds stale), and the oldest-green r7/r8 tail
-    # that still fits. Mirrors scripts/rotation_report.py's
-    # recommended front-50 exactly; the displaced r7/r8 fillers
-    # (price_quantiles … posexplode_tokens) stay green on their prior
-    # rows and return with the r15 free slots.
-    # — r14-CHANGED re-certs (report order):
-    "epoch_shard_layout",
-    "substring_dup_spans",
-    "customer_deciles",
-    "mann_whitney_effect",
-    "ks_two_sample",
-    "quantile_treatment_effect",
-    "cvm_two_sample",
-    "quantile_normalized_lengths",
-    "token_budget_pack",
+    # Mirrors scripts/rotation_report.py's recommended front-50 exactly.
+    # — r15 CHANGED_QUERIES re-certs (per-step sink wall_s):
     "curation_funnel_exact",
-    "vocab_growth",
-    "sequence_packing",
     "curation_funnel",
-    "rake_keyphrases",
-    "peak_concurrency",
-    "substring_dup_spans_hashed",
-    "substring_dup_spans_packed",
-    "robust_spend_stats",
-    # — age-4 certifying twins (forced):
-    "approx_distinct_parts_exact",
-    "approx_price_quantiles_exact",
-    "phash_near_dups_exact",
-    "hll_distinct_users_exact",
-    # — bench headliners (r12-green, two rounds stale):
-    "top_terms",
-    "rolling_7d_spend",
-    "cosine_topk",
-    "pricing_summary",
-    "filter_project",
-    "top_customers",
-    "revenue_by_nation",
-    "weekly_chart_streak",
-    "sessionization",
-    "asof_purchase_value",
-    "dedup_exact_docs",
-    "text_stats",
-    "near_dup_pairs",
-    # — r7/r8 tail (oldest greens), report order:
-    "source_pareto",
-    "length_drift_ks",
-    "fluency_buckets",
-    "ngram_novelty",
-    "substring_scrub_stats",
-    "corpus_summary_cube",
-    "length_percentiles_by_source",
-    "temperature_mix_allocation",
-    "token_budget_allocation",
-    "sql_api_revenue",
-    "sql_lateral_topk",
-    "supplier_part_stats",
-    "repeat_customers",
-    "priority_flags",
-    "open_only_customers",
+    "dedup_components",
+    "pagerank_docs",
+    "pagerank_docs_exact",
+    # — age-4 certifying twin (forced):
+    "blockmean_near_dups_exact",
+    # — oldest greens, report order:
+    "minhash_near_dups",
+    "price_quantiles",
+    "order_gaps",
+    "session_windows",
+    "approx_price_quantiles",
+    "range_attribution",
+    "daily_from_hourly_rollup",
+    "user_value_ranks",
+    "user_funnel_summary",
+    "weekly_resample",
+    "hourly_event_stats",
+    "event_type_pivot",
+    "deterministic_sample",
+    "stratified_sample",
+    "doc_fingerprints",
+    "lang_id",
+    "posexplode_tokens",
+    "multimodal_bytes",
+    "tf_idf_terms",
+    "bpe_token_stats",
+    "bpe_merges",
+    "bpe_segmentation",
+    "ann_recall_audit",
+    "embedding_isotropy_audit",
+    "semantic_decontam",
+    "stratified_effect",
+    "time_weighted_value",
+    "srm_daily_check",
+    "did_experiment_effect",
+    "cuped_experiment_effect",
+    "session_transcripts",
+    "lang_label_noise",
+    "lang_id_kappa",
+    "zorder_locality_audit",
+    "bloom_incremental_dedup",
+    "bpe_fertility_by_lang",
+    "cusum_changepoint",
+    "dow_seasonal_decompose",
+    "theil_sen_trend",
+    "holt_winters_forecast",
+    "holt_linear_forecast",
+    "js_source_drift",
+    "chao1_vocab_richness",
+    "k_eidetic_histogram",
 )
 
 # Queries whose BUILDER or ORACLE changed this round (reset to () at
@@ -156,36 +144,15 @@ _WINDOW = (
 # window — the "changed query re-certifies" precedent (markov/lang_id
 # in r10, jackknife in r11), mechanical instead of CLAUDE.md prose the
 # report "cannot see".
-# r14 (optimization round 2): reset at round start; entries added as
-# optimization changes land (the r13 entries earned their driver-green
-# re-certs in CORRECTNESS_r13.json).
 CHANGED_QUERIES: tuple[str, ...] = (
-    # funnel fold (VERDICT r13 item 1): exact_dedup_stage window form +
-    # segment-folded observe seals in curate_corpus
+    # metrics_sink rows carry each step's wall_s, pagerank's per-round
+    # timing included (operators/graph.py, registry/mining.py,
+    # plans/curation.py)
+    "pagerank_docs",
+    "pagerank_docs_exact",
+    "dedup_components",
     "curation_funnel",
     "curation_funnel_exact",
-    # hot-anchor prefilter on the suffix shuffle (item 3)
-    "substring_dup_spans",
-    "substring_dup_spans_hashed",
-    "substring_dup_spans_packed",
-    # partitioned_running_total range exchange sized by
-    # spark.sql.shuffle.partitions instead of defaultParallelism
-    # (item 2) — every prefix-sum consumer re-certifies
-    "robust_spend_stats",
-    "mann_whitney_effect",
-    "quantile_treatment_effect",
-    "ks_two_sample",
-    "cvm_two_sample",
-    "epoch_shard_layout",
-    "token_budget_pack",
-    "quantile_normalized_lengths",
-    "vocab_growth",
-    "sequence_packing",
-    "customer_deciles",
-    "peak_concurrency",
-    # map-side run extraction + distinct-phrase scoring (token-stream
-    # window exchange and per-occurrence regroup removed)
-    "rake_keyphrases",
 )
 
 # The driver gate only sees the first _GATE_WIDTH entries; anything past

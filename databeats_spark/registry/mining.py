@@ -836,14 +836,6 @@ ORDER BY n.doc_id
 
 PAGERANK_EDGE_THRESHOLD = 0.2
 
-# per-round wall seconds of the LAST _pagerank_docs build (the power
-# iteration runs its driver-coordinated rounds AT build time, so the
-# list is complete when the builder returns). bench.py publishes it in
-# the mining section so a driver-run bench carries its own
-# steal-vs-plan diagnosis: uniform inflation across rounds = external
-# CPU steal; one slow round = a plan problem.
-PAGERANK_ROUND_TIMINGS: list = []
-
 
 def _pagerank_docs(
     spark: SparkSession, sf_dir: str, metrics_sink: list | None = None
@@ -867,11 +859,11 @@ def _pagerank_docs(
     # the L1 delta crosses 1e-6 after 1-2 rounds — fixed 10 rounds was
     # paying ~8 no-op iterations. r6 shape: ONE eager contribution job
     # per round (flowing mass observed on it; dangling semi-join gone),
-    # plus a small paired-aggregate delta job every 2nd round.
-    PAGERANK_ROUND_TIMINGS.clear()
+    # plus a small paired-aggregate delta job every 2nd round. The
+    # rounds run at build time, so ``metrics_sink`` (one row per
+    # checkpoint action, ``wall_s`` per round) is complete on return.
     out = pagerank(
-        edges, "id_a", "id_b", max_iter=10, tol=1e-6,
-        round_timings=PAGERANK_ROUND_TIMINGS, metrics_sink=metrics_sink,
+        edges, "id_a", "id_b", max_iter=10, tol=1e-6, metrics_sink=metrics_sink
     )
     return out.select(
         F.col("node").alias("doc_id"), F.round("rank", 6).alias("rank")

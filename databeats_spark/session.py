@@ -79,11 +79,12 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
-        # keep every stage AND job of a bench/audit run in the status
-        # store so plans/instrument.py::stage_delta's per-query
-        # attribution never loses a "before" entry to eviction mid-run
-        # (static confs; the 1000 defaults are below a full registry
-        # sweep's counts — jobs matter since r12's n_jobs delta)
+        # keep every stage of a bench/audit query in the status store
+        # until plans/instrument.py::profile / movement read it: once
+        # the store is over its limit it evicts skipped stages first,
+        # the current query's included, and the counters skip what is
+        # gone (static confs; the 1000 defaults are below a full
+        # registry sweep's stage count)
         .config("spark.ui.retainedStages", "100000")
         .config("spark.ui.retainedJobs", "100000")
         # local mode: all shuffle is local disk; compress less, spill less

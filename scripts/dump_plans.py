@@ -57,8 +57,11 @@ FLAGSHIPS = {
 
 # Hand-maintained measured-evidence section (preserved across plan
 # regeneration because this script rewrites PLANS.md wholesale).
-# Refresh the numbers with scripts/scale_curve.py and
-# scripts/curate.py --stage-times.
+# Refresh the numbers with scripts/scale_curve.py (one
+# plans/instrument.py::profile per query and scale factor), the
+# metrics_sink rows of pagerank / curate_corpus (per-step wall_s and
+# bytes — bench.py's pagerank_rounds reads pagerank_docs' round rows),
+# and scripts/curate.py --stage-times.
 SCALE_EVIDENCE = """\
 ## Measured scale evidence (round 6)
 

@@ -5,9 +5,10 @@ vs 6.8 cpu-s over 32 cores. Bytes and cpu have been flat for four
 rounds, so the remaining wall lever is fixed per-query scheduling cost
 — jobs (action round-trips: AQE re-optimizations each materialize a
 query stage as its own job), stages, and tasks. This script brackets
-each headline query with plans/instrument.py::stage_snapshot and
-reports the deltas; run it idle and compare n_jobs/n_stages before and
-after a plan change (they are steal-immune like the byte metrics).
+each headline query with plans/instrument.py::profile (min-of-3 wall
+and CPU, stage counters of the last rep); run it idle and compare
+n_jobs/n_stages before and after a plan change (they are steal-immune
+like the byte metrics).
 
 Usage: python scripts/job_audit.py [query ...]   (default: headline 14)
 """
@@ -16,14 +17,13 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
     from bench import _R1_ORDER, adaptive_for, shuffle_partitions_for  # type: ignore
-    from databeats_spark.plans.instrument import stage_delta, stage_snapshot
+    from databeats_spark.plans.instrument import profile
     from databeats_spark.registry import queries as all_queries
     from databeats_spark.session import get_spark
 
@@ -40,18 +40,9 @@ def main() -> None:
     print(f"{'query':28s} {'wall_s':>7s} {'cpu_s':>6s} {'jobs':>5s} {'stages':>6s} {'tasks':>6s}")
     tot = {"n_jobs": 0, "n_stages": 0, "n_tasks": 0}
     for name in names:
-        best = None
-        for _ in range(3):
-            snap = stage_snapshot(spark)
-            t0 = time.perf_counter()
-            qs[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-            wall = time.perf_counter() - t0
-            d = stage_delta(spark, snap)
-            if best is None or wall < best[0]:
-                best = (wall, d)
-        wall, d = best
+        d = profile(spark, lambda: qs[name](spark, sf_dir), reps=3)
         print(
-            f"{name:28s} {wall:7.3f} {d['cpu_seconds']:6.2f} "
+            f"{name:28s} {d['wall_s']:7.3f} {d['cpu_seconds']:6.2f} "
             f"{d['n_jobs']:5d} {d['n_stages']:6d} {d['n_tasks']:6d}"
         )
         for k in tot:

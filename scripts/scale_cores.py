@@ -30,7 +30,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -60,9 +59,9 @@ def main() -> None:
         raise SystemExit("run scripts/make_scale_data.py first (.scale/sf0.2 missing)")
 
     os.environ["SPARK_GRAFT_CPUS"] = str(args.cpus)
-    from bench import _env_probe, shuffle_partitions_for
+    from bench import _env_delta, _env_probe, shuffle_partitions_for
 
-    from databeats_spark.plans.instrument import stage_delta, stage_snapshot
+    from databeats_spark.plans.instrument import profile
     from databeats_spark.registry import queries
     from databeats_spark.session import get_spark
 
@@ -77,21 +76,10 @@ def main() -> None:
     for name in PROBES:
         # warm once (codegen/JIT), then min-of-3 like the headline bench
         reg[name](spark, SF2_DIR).write.mode("overwrite").format("noop").save()
-        best_w, best_c = float("inf"), float("inf")
-        for _ in range(3):
-            snap = stage_snapshot(spark)
-            t0 = time.perf_counter()
-            reg[name](spark, SF2_DIR).write.mode("overwrite").format("noop").save()
-            best_w = min(best_w, time.perf_counter() - t0)
-            best_c = min(best_c, stage_delta(spark, snap)["cpu_seconds"])
-        rows[name] = {"wall": round(best_w, 3), "cpu": round(best_c, 3)}
+        p = profile(spark, lambda: reg[name](spark, SF2_DIR), reps=3)
+        rows[name] = {"wall": round(p["wall_s"], 3), "cpu": round(p["cpu_seconds"], 3)}
         print(json.dumps({"cpus": args.cpus, "q": name, **rows[name]}))
-    env1 = _env_probe()
-    steal = (
-        round(100.0 * (env1["steal"] - env0["steal"]) / (env1["total"] - env0["total"]), 2)
-        if env1["total"] > env0["total"]
-        else 0.0
-    )
+    steal = _env_delta(env0, _env_probe())["steal_pct"]
 
     data = {}
     if os.path.exists(OUT):

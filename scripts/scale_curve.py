@@ -21,7 +21,6 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 HEAVIES = [
     "minhash_near_dups",
@@ -43,6 +42,7 @@ SF_DIRS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from bench import shuffle_partitions_for
+    from databeats_spark.plans.instrument import profile
     from databeats_spark.registry import queries as all_queries
     from databeats_spark.session import get_spark
 
@@ -60,9 +60,7 @@ def main() -> None:
         spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions_for(sf_dir)))
         reg["pricing_summary"](spark, sf_dir).limit(1).collect()  # warmup
         for name in HEAVIES:
-            t0 = time.perf_counter()
-            reg[name](spark, sf_dir).write.mode("overwrite").format("noop").save()
-            times[name][label] = round(time.perf_counter() - t0, 4)
+            times[name][label] = profile(spark, lambda: reg[name](spark, sf_dir))["wall_s"]
 
     out = {
         name: {

@@ -11,13 +11,13 @@ with BOTH growth ratios per query:
 - x10 ratio: sf0.1 / sf0.01 bytes vs 10x data (linear = ~10);
 - x2 ratio: sf0.2 / sf0.1 bytes vs 2x data (linear = ~2).
 
-Movement signal per query is the stage-store ``exec write`` column
-(post-compression shuffle bytes actually written by every executed
-stage — covers the prefix-sum checkpoint queries whose plan-walk
-columns under-report) alongside the plan-walk uncompressed
-shuffle-bytes for the single-plan queries. A super-linear ratio at
-EITHER decade pinpoints a re-quadratizing stage; both near-linear is
-the evidence the shapes hold as data outgrows the test SFs.
+Each measurement is one ``plans/instrument.py::movement`` record: the
+stage-store ``exec write`` column (post-compression shuffle bytes
+actually written by every executed stage) alongside the plan-walk
+uncompressed shuffle bytes, which fold every pre-checkpoint plan
+segment too. A super-linear ratio at EITHER decade pinpoints a
+re-quadratizing stage; both near-linear is the evidence the shapes
+hold as data outgrows the test SFs.
 
     python scripts/make_scale_data.py   # once, materializes .scale/sf0.2
     python scripts/scale_curve_bytes.py
@@ -79,22 +79,12 @@ X4_MOVERS = ("hits_copurchase", "adamic_adar_links")
 SF4_DIR = os.path.join(REPO, ".scale", "sf0.4")
 
 
-def fmt_bytes(n: float) -> str:
-    for unit in ("B", "KB", "MB", "GB"):
-        if n < 1024 or unit == "GB":
-            return f"{n} B" if unit == "B" else f"{n:.1f} {unit}"
-        n /= 1024.0
-    return f"{n} B"
-
-
 def main() -> None:
     if not os.path.isdir(SF_DIRS[2][0]):
         raise SystemExit("run scripts/make_scale_data.py first (.scale/sf0.2 missing)")
 
     from bench import shuffle_partitions_for
-    from databeats_spark.plans.instrument import (
-        execution_metrics, stage_delta, stage_snapshot,
-    )
+    from databeats_spark.plans.instrument import fmt_bytes, movement
     from databeats_spark.registry import queries
     from databeats_spark.session import get_spark
 
@@ -113,10 +103,7 @@ def main() -> None:
             "spark.sql.shuffle.partitions", str(shuffle_partitions_for(sf_dir))
         )
         for name in (MOVERS if sf != 0.4 else X4_MOVERS):
-            snap = stage_snapshot(spark)
-            m = execution_metrics(reg[name](spark, sf_dir))
-            m.update(stage_delta(spark, snap))
-            rows[name][sf] = m
+            rows[name][sf] = m = movement(spark, lambda: reg[name](spark, sf_dir))
             print(json.dumps({"sf": sf, "query": name,
                               "exec_write": m["stage_shuffle_write_bytes"],
                               "shuffle_bytes": m["shuffle_bytes"]}))
@@ -129,16 +116,15 @@ def main() -> None:
             "key-remapped + salted copy built by\n"
             "`scripts/make_scale_data.py` — see its docstring for why the\n"
             "augmentation neither plants near-dups nor collapses\n"
-            "distinct-value sets). Bytes are deterministic properties of\n"
-            "plan + data, immune to the +-25% wall-clock steal on this VM.\n\n"
+            "distinct-value sets). Every cell is one\n"
+            "`plans/instrument.py::movement` record. Bytes are\n"
+            "deterministic properties of plan + data, immune to the\n"
+            "+-25% wall-clock steal on this VM.\n\n"
             "`exec write` = stage-store shuffle bytes actually written\n"
-            "(post-compression, covers checkpointed prefix-sum queries);\n"
-            "`plan shuffle` = plan-walk uncompressed exchange dataSize of\n"
-            "the FINAL plan only — unlike SHUFFLE.md this script does not\n"
-            "capture pre-checkpoint plans, so checkpointed queries\n"
-            "(source_kmv_sketch, hits_copurchase, minhash, basket's pinned\n"
-            "collect_set) under-read or 0 there; in THIS file exec write\n"
-            "is the authoritative column for them.\n"
+            "(post-compression); `plan shuffle` = plan-walk uncompressed\n"
+            "exchange dataSize of the final plan plus every\n"
+            "pre-checkpoint plan segment the query ran (the same fold as\n"
+            "SHUFFLE.md, so the two files agree at sf0.01/sf0.1).\n"
             "Linear scaling is ~10.0 in the x10 column and ~2.0 in the x2\n"
             "column; far-below-linear means the mover is a bounded\n"
             "catalog/sketch/top-k set rather than the corpus (expected for\n"
@@ -147,103 +133,81 @@ def main() -> None:
             "the copied half's marker tokens are longer than the average\n"
             "word — per-TOKEN movement is linear; per-byte input grows\n"
             "slightly faster than 2x. substring_dup_spans_packed reads\n"
-            "SUB-linear (x2 ~1.86) since the r14 hot-anchor prefilter: the\n"
-            "augmentation replaces every 4th word of the copied half with\n"
-            "a unique marker, so EVERY 8-token window there contains a\n"
-            "marker and the copy contributes zero new multi-doc anchors —\n"
-            "only the narrow hot-key count pass doubles while the\n"
-            "candidate suffix rows stay the originals'. An augmentation\n"
-            "artifact BY DESIGN (the same device that protects the dedup\n"
-            "movers from fake near-dups); on natural text the ~9%\n"
-            "candidate share is scale-stable (8.9%/9.1% at the real\n"
-            "decade) and the x10 column reads 9.6-10.2 linear. The curve\n"
-            "also caught a\n"
-            "real artifact on its first run: an unordered augmented\n"
-            "lineitem (DuckDB parallel COPY) destroyed basket locality and\n"
-            "collapsed basket_lift_rules' map-side collect_set combine\n"
-            "(3.8x bytes at 2x data) — the fix (natural-key ORDER BY in\n"
-            "make_scale_data.py) restored 2.00x, and the lesson stands for\n"
-            "production: entity-clustered file layout is what makes\n"
-            "partial aggregation work; Z-order/sort-on-write is a\n"
-            "first-class scale lever, not cosmetics.\n"
+            "SUB-linear (x2 ~1.86): the augmentation replaces every 4th\n"
+            "word of the copied half with a unique marker, so EVERY\n"
+            "8-token window there contains a marker and the copy\n"
+            "contributes zero new multi-doc anchors — only the narrow\n"
+            "hot-key count pass doubles while the candidate suffix rows\n"
+            "stay the originals'. An augmentation artifact BY DESIGN; on\n"
+            "natural text the ~9% candidate share is scale-stable\n"
+            "(8.9%/9.1% at the real decade) and the x10 column reads\n"
+            "linear. basket_lift_rules stays at 2.00x only because\n"
+            "make_scale_data.py writes every table ORDER BY its natural\n"
+            "key: entity-clustered file layout is what makes its map-side\n"
+            "collect_set combine work (an unordered copy moved 3.8x bytes\n"
+            "at 2x data).\n"
             "\n"
-            "The three r10-extension movers read differently and honestly:\n"
-            "minhash_near_dups is linear at both decades (banded buckets stay\n"
-            "sparse — content-keyed, not corpus-keyed). bm25_topk is ~flat at\n"
-            "~100 B because its corpus side NEVER shuffles: term stats ride\n"
-            "broadcasts and the result is a TakeOrdered head — the bounded-mover\n"
-            "ideal. hits_copurchase jumps 12.4x across the FIRST decade — a\n"
-            "one-time broadcast->sort-merge transition (at sf0.01 the per-round\n"
-            "weight tables broadcast and the edge table never moves; at sf0.1\n"
-            "AQE correctly flips the round joins to SMJ, so ~6 edge-scale\n"
-            "shuffles appear at once; forcing the broadcast would violate the\n"
-            "r9 hint policy and OOM at real scale — it read 19.4x before the\n"
-            "r13 single-pin materialization cut the re-executed scans) — and\n"
-            "the x2 columns (1.82 here, 1.94 at the fourth point below) show\n"
-            "the post-transition shape is linear, which is the shape a\n"
-            "100 TB run lives in. An r14 attempt to remove the per-round\n"
-            "edge shuffles via orientation-partitioned checkpoints was\n"
-            "measured and rejected: localCheckpoint records\n"
-            "UnknownPartitioning under AQE, so the trick only fires in the\n"
-            "AQE-off tiny-input session (see OPTIMIZATION_r14.md item 4).\n"
+            "minhash_near_dups is linear at both decades (banded buckets\n"
+            "stay sparse — content-keyed, not corpus-keyed). bm25_topk is\n"
+            "~flat at ~100 B because its corpus side NEVER shuffles: term\n"
+            "stats ride broadcasts and the result is a TakeOrdered head.\n"
+            "hits_copurchase jumps 12.4x across the FIRST decade — a\n"
+            "one-time broadcast->sort-merge transition (at sf0.01 the\n"
+            "per-round weight tables broadcast and the edge table never\n"
+            "moves; at sf0.1 AQE flips the round joins to SMJ, so ~6\n"
+            "edge-scale shuffles appear at once) — and its x2 columns\n"
+            "(~1.8-1.9 here, ~1.95 at the fourth point below) show the\n"
+            "post-transition shape is linear. localCheckpoint records\n"
+            "UnknownPartitioning under AQE, so orientation-partitioned\n"
+            "checkpoints cannot remove its per-round edge shuffles\n"
+            "(OPTIMIZATION_r14.md item 4).\n"
             "\n"
-            "The four r10-session-3 movers, residuals read honestly:\n"
-            "adamic_adar_links is linear across the real decade (x10 10.7)\n"
+            "adamic_adar_links is linear across the real decade (x10 10.6)\n"
             "but SUB-linear at the augmented x2 (1.26) — an augmentation\n"
             "artifact, not a plan property: make_scale_data doubles facts\n"
             "but keeps the 20k-part catalog fixed, so part degree doubles\n"
             "and the <=24 niche cap bites much harder (the kept tail\n"
-            "shrinks). On real testdata parts scale with SF and degree is\n"
-            "SF-invariant — the x10 column is the honest decade for it.\n"
+            "shrinks). Its plan column is ~flat for the same reason: the\n"
+            "growing orders x lineitem edge segment and the thinning\n"
+            "capped expansion sum to ~55-57 MB at every point. On real\n"
+            "testdata parts scale with SF and degree is SF-invariant — the\n"
+            "x10 column is the honest decade for it.\n"
             "stupid_backoff_logprob inverts: x10 4.7 (sub-linear because\n"
             "the synthetic vocabulary is CLOSED — the train unigram/bigram\n"
             "tables are vocab-keyed and stay ~constant while only the\n"
             "token streams grow) and x2 2.94 (super-linear because the\n"
             "augmentation's every-4th-word unique markers inflate bigram\n"
-            "vocabulary BY DESIGN — the same device that protects the\n"
-            "dedup movers from fake near-dups). At natural-text scale both\n"
-            "effects soften to Heaps growth; the corpus-keyed movement\n"
-            "(the held-out pair join) is linear in both columns.\n"
+            "vocabulary BY DESIGN). At natural-text scale both effects\n"
+            "soften to Heaps growth.\n"
             "dsir_importance_weights sits between (x10 5.7, x2 2.03): its\n"
             "bucket tables are a FIXED 1024 rows at any scale, so only the\n"
             "feature stream moves. lpa_communities is ~flat tiny: the\n"
-            "near-dup graph is PAIR_DOC_LIMIT-bounded by construction and\n"
-            "its plan-walk column reads 0 B behind the edge checkpoint\n"
-            "(the known LogicalRDD caveat — the exec-write column is the\n"
-            "real signal).\n"
+            "near-dup graph is PAIR_DOC_LIMIT-bounded by construction.\n"
             "\n"
-            "The two r11 movers: contamination_scorecard (x10 9.3, x2\n"
-            "2.12) is the corpus-keyed doc-shingle stream — linear at\n"
-            "both decades — while its broadcast side is the EVAL set,\n"
-            "benchmark-sized at any corpus scale (~100 MB constant in\n"
-            "SHUFFLE.md, absent from the shuffle columns by\n"
-            "construction). heaps_exponent_by_source reads like\n"
-            "stupid_backoff above, for the same two reasons in the same\n"
-            "directions: x10 6.2 sub-linear (the synthetic vocabulary is\n"
-            "CLOSED, so the distinct-type half of the movement flattens\n"
-            "while only the token stream grows) and x2 2.43 mildly\n"
-            "super-linear (the augmentation's every-4th-word unique\n"
-            "markers inflate distinct-type counts BY DESIGN — the device\n"
-            "that protects the dedup movers from fake near-dups). The\n"
-            "decile spine itself moves one row per (source, decile),\n"
-            "catalog-bounded; at natural-text scale both vocabulary\n"
-            "effects soften to Heaps growth.\n"
+            "contamination_scorecard (x10 9.3, x2 2.12) is the corpus-keyed\n"
+            "doc-shingle stream — linear at both decades — while its\n"
+            "broadcast side is the EVAL set, benchmark-sized at any corpus\n"
+            "scale. heaps_exponent_by_source reads like stupid_backoff, for\n"
+            "the same two reasons: x10 6.2 sub-linear (closed synthetic\n"
+            "vocabulary) and x2 2.41 mildly super-linear (the augmentation's\n"
+            "unique markers inflate distinct-type counts). Its decile spine\n"
+            "moves one row per (source, decile), catalog-bounded.\n"
             "\n"
             "| query | exec write sf0.01 | sf0.1 | sf0.2 | x10 ratio | x2 ratio "
             "| plan shuffle sf0.1 | sf0.2 | plan x2 |\n"
             "|---|---|---|---|---|---|---|---|---|\n"
         )
+        def ratio(m: dict, key: str, lo: float, hi: float) -> float:
+            return m[hi][key] / m[lo][key] if m[lo][key] else float("nan")
+
+        ew, sb = "stage_shuffle_write_bytes", "shuffle_bytes"
         for name in MOVERS:
             m = rows[name]
-            ew = {sf: m[sf]["stage_shuffle_write_bytes"] for _, sf in SF_DIRS}
-            sb = {sf: m[sf]["shuffle_bytes"] for _, sf in SF_DIRS}
-            x10 = ew[0.1] / ew[0.01] if ew[0.01] else float("nan")
-            x2 = ew[0.2] / ew[0.1] if ew[0.1] else float("nan")
-            px2 = sb[0.2] / sb[0.1] if sb[0.1] else float("nan")
             f.write(
-                f"| {name} | {fmt_bytes(ew[0.01])} | {fmt_bytes(ew[0.1])} "
-                f"| {fmt_bytes(ew[0.2])} | {x10:.2f} | {x2:.2f} "
-                f"| {fmt_bytes(sb[0.1])} | {fmt_bytes(sb[0.2])} | {px2:.2f} |\n"
+                f"| {name} | {fmt_bytes(m[0.01][ew])} | {fmt_bytes(m[0.1][ew])} "
+                f"| {fmt_bytes(m[0.2][ew])} | {ratio(m, ew, 0.01, 0.1):.2f} "
+                f"| {ratio(m, ew, 0.1, 0.2):.2f} | {fmt_bytes(m[0.1][sb])} "
+                f"| {fmt_bytes(m[0.2][sb])} | {ratio(m, sb, 0.1, 0.2):.2f} |\n"
             )
         if any(0.4 in rows[n] for n in X4_MOVERS):
             f.write(
@@ -251,37 +215,27 @@ def main() -> None:
                 "movers (r11, VERDICT r10 item 6)\n\n"
                 "Augmented 4x-sf0.1 fact set (orders/lineitem x4 via\n"
                 "three key-remapped copies, part catalog FIXED — built by\n"
-                "`make_scale_data.py --x4-facts`). Measured second-doubling\n"
-                "slopes came out ~1.92 for BOTH movers — the near-linear\n"
-                "post-transition shape: hits_copurchase's 19.4x first-decade\n"
-                "jump (broadcast->SMJ) was one-time, and adamic_adar's\n"
-                "sub-linear first doubling (1.26 — the fixed catalog pushes\n"
-                "part degree past the <=24 cap, thinning the kept tail) is\n"
-                "ALSO a one-time transition: once the degree distribution\n"
-                "sits above the cap the per-part expansion is cap-bounded\n"
-                "and bytes track the fact tables again. adamic_adar's\n"
-                "plan-shuffle column reads 0 B at sf0.4 — the known\n"
-                "AQE/checkpoint plan-walk under-report (see the SHUFFLE.md\n"
-                "note); the exec-write column is the real signal.\n\n"
+                "`make_scale_data.py --x4-facts`). Second-doubling slopes\n"
+                "come out ~1.95 for BOTH movers — the near-linear\n"
+                "post-transition shape: hits_copurchase's first-decade\n"
+                "jump (broadcast->SMJ) is one-time, and adamic_adar's\n"
+                "sub-linear first doubling (the fixed catalog pushes part\n"
+                "degree past the <=24 cap, thinning the kept tail) is ALSO\n"
+                "a one-time transition: once the degree distribution sits\n"
+                "above the cap the per-part expansion is cap-bounded and\n"
+                "exec-write bytes track the fact tables again.\n\n"
                 "| query | exec write sf0.2 | sf0.4 | x2 (2nd doubling) "
                 "| plan shuffle sf0.4 | plan x2 |\n"
                 "|---|---|---|---|---|---|\n"
             )
             for name in X4_MOVERS:
-                if 0.4 not in rows[name]:
-                    continue
                 m = rows[name]
-                ew2, ew4 = (
-                    m[0.2]["stage_shuffle_write_bytes"],
-                    m[0.4]["stage_shuffle_write_bytes"],
-                )
-                sb2, sb4 = m[0.2]["shuffle_bytes"], m[0.4]["shuffle_bytes"]
-                f.write(
-                    f"| {name} | {fmt_bytes(ew2)} | {fmt_bytes(ew4)} "
-                    f"| {ew4 / ew2 if ew2 else float('nan'):.2f} "
-                    f"| {fmt_bytes(sb4)} "
-                    f"| {sb4 / sb2 if sb2 else float('nan'):.2f} |\n"
-                )
+                if 0.4 in m:
+                    f.write(
+                        f"| {name} | {fmt_bytes(m[0.2][ew])} | {fmt_bytes(m[0.4][ew])} "
+                        f"| {ratio(m, ew, 0.2, 0.4):.2f} | {fmt_bytes(m[0.4][sb])} "
+                        f"| {ratio(m, sb, 0.2, 0.4):.2f} |\n"
+                    )
         cores_path = os.path.join(REPO, "artifacts", "SCALE_CORES.json")
         if os.path.exists(cores_path):
             with open(cores_path) as cf:

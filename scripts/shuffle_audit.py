@@ -9,35 +9,28 @@ matter how noisy the clock is).
 
     python scripts/shuffle_audit.py
 
-Three measurement layers per query (r7 VERDICT item 3; third added
-r13):
+Each row is one ``plans/instrument.py::movement`` record, which folds
+three layers:
 
-- PLAN layer (``execution_metrics``): exchange/scan SQLMetrics folded
-  from the final adaptive plan — uncompressed dataSize, per-exchange
-  attribution. Blind spot: AQE's empty-relation propagation can erase
-  already-executed exchanges from the FINAL plan (empty result at one
-  SF), under-reporting them as 0 B.
-- CHECKPOINT layer (``capture_checkpoint_sources``, r13): a
-  localCheckpoint truncates lineage, so the final plan misses every
-  exchange upstream of it. The capture records each pre-checkpoint
-  DataFrame during build+execute and folds its executedPlan's
-  SQLMetrics into the PLAN columns — disjoint segments, summed
-  exactly. This closed the former under-reporting on every
-  prefix-sum/attach_global_scalar query (hits_copurchase 32 B ->
-  real MBs); the PLAN columns are now those queries' movement signal
-  too.
-- STAGE layer (``stage_delta``): shuffle-write bytes + executor CPU
-  summed over every stage the run actually executed, from the
-  AppStatusStore — records EVERY stage that ran regardless of what the
-  final plan looks like, closing the AQE-empty blind spot. Bytes here
-  are post-compression (smaller than dataSize), so the two columns are
-  complementary, not comparable.
+- PLAN layer: exchange/scan SQLMetrics folded from the final adaptive
+  plan — uncompressed dataSize, per-exchange attribution. Blind spot:
+  AQE's empty-relation propagation can erase already-executed
+  exchanges from the FINAL plan (empty result at one SF), reading 0 B.
+- CHECKPOINT layer: a localCheckpoint truncates lineage, so the final
+  plan misses every exchange upstream of it. ``movement`` captures
+  each pre-checkpoint DataFrame during build+execute and folds its
+  executedPlan's SQLMetrics into the PLAN columns — disjoint
+  segments, summed exactly.
+- STAGE layer: shuffle-write bytes + executor CPU summed over every
+  stage the run created, from the AppStatusStore — records every
+  stage that ran regardless of the final plan, closing the AQE-empty
+  blind spot. Bytes here are post-compression (smaller than
+  dataSize), so the two columns are complementary, not comparable.
 
 Iterative queries (pagerank_docs, curation_funnel, dedup_components)
 run driver-coordinated rounds in separate query executions whose
-exchanges the final plan doesn't carry — since r7 they are measured
-through their operators' ``metrics_sink`` hook (one row per checkpoint
-action, folded by ``plans/instrument.py::executed_metrics``) and
+exchanges the final plan doesn't carry — they are measured through
+their operators' ``metrics_sink`` rows (one per checkpoint action) and
 published in their own per-step section.
 """
 
@@ -160,42 +153,24 @@ def iterative_runs(spark, sf_dir: str) -> dict[str, list[dict]]:
     eager checkpoint already in the sink, so its totals cover
     checkpoint actions completely and no final_plan row exists."""
     from databeats_spark.plans.curation import curate_corpus
-    from databeats_spark.plans.instrument import (
-        execution_metrics, stage_delta, stage_snapshot,
-    )
+    from databeats_spark.plans.instrument import execution_metrics, stage_mark, stage_work
     from databeats_spark.registry.documents import _dedup_components
     from databeats_spark.registry.mining import _pagerank_docs
 
-    out: dict[str, list[dict]] = {}
+    def run(build, final_plan: bool) -> list[dict]:
+        mark, sink = stage_mark(spark), []
+        final = build(sink)
+        if final_plan:
+            sink.append({"step": "final_plan", **execution_metrics(final)})
+        return sink + [{"step": "stage_totals", **stage_work(spark, mark)}]
 
-    snap = stage_snapshot(spark)
-    sink: list[dict] = []
-    final = _pagerank_docs(spark, sf_dir, metrics_sink=sink)
-    sink.append({"step": "final_plan", **execution_metrics(final)})
-    sink.append({"step": "stage_totals", **stage_delta(spark, snap)})
-    out["pagerank_docs"] = sink
-
-    snap = stage_snapshot(spark)
-    sink = []
-    final = _dedup_components(spark, sf_dir, metrics_sink=sink)
-    sink.append({"step": "final_plan", **execution_metrics(final)})
-    sink.append({"step": "stage_totals", **stage_delta(spark, snap)})
-    out["dedup_components"] = sink
-
-    snap = stage_snapshot(spark)
-    sink = []
-    curate_corpus(spark, sf_dir, observe_counts={}, metrics_sink=sink)
-    sink.append({"step": "stage_totals", **stage_delta(spark, snap)})
-    out["curation_funnel"] = sink
-    return out
-
-
-def fmt_bytes(n: int) -> str:
-    for unit in ("B", "KB", "MB", "GB"):
-        if n < 1024 or unit == "GB":
-            return f"{n:.1f} {unit}" if unit != "B" else f"{n} B"
-        n /= 1024.0
-    return f"{n} B"
+    return {
+        "pagerank_docs": run(lambda s: _pagerank_docs(spark, sf_dir, metrics_sink=s), True),
+        "dedup_components": run(lambda s: _dedup_components(spark, sf_dir, metrics_sink=s), True),
+        "curation_funnel": run(
+            lambda s: curate_corpus(spark, sf_dir, observe_counts={}, metrics_sink=s), False
+        ),
+    }
 
 
 SF_DIRS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
@@ -203,10 +178,7 @@ SF_DIRS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
 def main() -> None:
     from bench import shuffle_partitions_for
-    from databeats_spark.plans.instrument import (
-        capture_checkpoint_sources, executed_metrics, execution_metrics,
-        stage_delta, stage_snapshot,
-    )
+    from databeats_spark.plans.instrument import fmt_bytes, movement
     from databeats_spark.registry import queries
     from databeats_spark.session import get_spark
 
@@ -220,22 +192,7 @@ def main() -> None:
     for sf_dir in SF_DIRS:
         rows = by_sf[sf_dir] = {}
         for name in QUERIES:
-            snap = stage_snapshot(spark)
-            # capture brackets build AND execute: checkpoints truncate
-            # lineage, so the final plan's walk misses every exchange
-            # upstream of a localCheckpoint (hits_copurchase read 32 B
-            # while its rounds moved 44.6 MB — VERDICT r12 item 5).
-            # Each captured pre-checkpoint df's own executedPlan holds
-            # those exchanges' populated SQLMetrics after the run;
-            # segments are disjoint (each plan ends at the next
-            # checkpoint down), so summing is exact, not double-count.
-            with capture_checkpoint_sources() as sources:
-                m = execution_metrics(reg[name](spark, sf_dir))
-            for src in sources:
-                sm = executed_metrics(src)
-                for k in sm:
-                    m[k] += sm[k]
-            m.update(stage_delta(spark, snap))
+            m = movement(spark, lambda: reg[name](spark, sf_dir))
             rows[name] = m
             print(json.dumps({"sf_dir": sf_dir, "query": name, **m}))
         iter_by_sf[sf_dir] = iterative_runs(spark, sf_dir)
@@ -260,35 +217,31 @@ def main() -> None:
             "growth exposes a re-quadratizing stage regardless of clock\n"
             "noise; far-below-10x means the mover is a bounded candidate /\n"
             "catalog / top-k set, not the corpus).\n\n"
-            "Columns come from two layers: plan-walk SQLMetrics (shuffle/\n"
-            "broadcast dataSize — uncompressed, per-exchange) and, since\n"
-            "r8, stage-store totals for the same run (`exec write` =\n"
+            "Every row is one `plans/instrument.py::movement` record.\n"
+            "Its columns come from two layers: plan-walk SQLMetrics\n"
+            "(shuffle/broadcast dataSize — uncompressed, per-exchange)\n"
+            "and stage-store totals for the same run (`exec write` =\n"
             "post-compression shuffle bytes actually written by every\n"
             "stage that RAN, `cpu_s` = executor CPU seconds — both\n"
-            "steal-immune). The stage layer closes the former sf0.1\n"
-            "caveat: queries whose bounded verifier slice is empty at\n"
-            "sf0.1 (near_dup_pairs, split_leakage_pairs, dedup_components)\n"
-            "read 0 B in the PLAN columns there because AQE's\n"
-            "empty-relation propagation erases already-executed exchanges\n"
-            "from the final plan — their `exec write` column now shows the\n"
-            "true executed movement (the shingle/join work runs either\n"
-            "way; AQE discovers emptiness bottom-up).\n"
+            "steal-immune). Queries whose bounded verifier slice is empty\n"
+            "at sf0.1 (near_dup_pairs, split_leakage_pairs,\n"
+            "dedup_components) read 0 B in the PLAN columns there because\n"
+            "AQE's empty-relation propagation erases already-executed\n"
+            "exchanges from the final plan — their `exec write` column\n"
+            "shows the true executed movement (the shingle/join work runs\n"
+            "either way; AQE discovers emptiness bottom-up).\n"
             "The spill column sums disk spill over sort/aggregate/join/\n"
             "window operators — 0 B everywhere is the partition-sizing\n"
             "proof (every partition fits its task's memory share);\n"
             "test_shuffle_budget.py pins it at the correctness SF.\n\n"
-            "Since r13 the PLAN columns also see past localCheckpoints\n"
-            "(the former hits_copurchase blind spot: its final plan read\n"
-            "32 B because attach_global_scalar's checkpoint truncates\n"
-            "lineage): the audit captures every pre-checkpoint DataFrame\n"
-            "during build+execute and folds its executedPlan's SQLMetrics\n"
-            "into the row — disjoint plan segments, summed exactly\n"
-            "(plans/instrument.py::capture_checkpoint_sources).\n\n"
+            "The PLAN columns also see past localCheckpoints: `movement`\n"
+            "captures every pre-checkpoint DataFrame during build+execute\n"
+            "and folds its executedPlan's SQLMetrics into the row —\n"
+            "disjoint plan segments, summed exactly.\n\n"
             "Iterative queries (pagerank/CC/funnel) are measured per\n"
-            "checkpoint action via their metrics_sink hooks and tabled in\n"
+            "checkpoint action via their metrics_sink rows and tabled in\n"
             "their own section — their exchanges run in separate query\n"
-            "executions the final plan never carries\n"
-            "(databeats_spark/plans/instrument.py). The funnel's last\n"
+            "executions the final plan never carries. The funnel's last\n"
             "stage is itself an eager checkpoint, so its rows cover the\n"
             "op completely; pagerank/CC carry an explicit final_plan row\n"
             "for the post-iteration ranking plan.\n"
@@ -326,17 +279,15 @@ def main() -> None:
                 "|---|---|---|---|---|---|---|\n"
             )
             for name, steps in iter_by_sf[sf_dir].items():
-                for s in steps:
-                    if s["step"] == "stage_totals":
-                        continue  # written after the plan-layer total
+                *rows, st = steps  # stage_totals is last
+                for s in rows:
                     f.write(
                         f"| {name} | {s['step']} | {s['n_shuffles']} "
                         f"| {fmt_bytes(s['shuffle_bytes'])} | {s['shuffle_records']} "
                         f"| {s['n_broadcasts']} | {fmt_bytes(s['broadcast_bytes'])} |\n"
                     )
-                total = sum(s.get("shuffle_bytes", 0) for s in steps)
+                total = sum(s["shuffle_bytes"] for s in rows)
                 f.write(f"| {name} | **total** | — | **{fmt_bytes(total)}** | — | — | — |\n")
-                st = next(s for s in steps if s["step"] == "stage_totals")
                 f.write(
                     f"| {name} | **stage layer** | — "
                     f"| **{fmt_bytes(st['stage_shuffle_write_bytes'])} exec write** "
@@ -350,30 +301,28 @@ def main() -> None:
             "0 B at either SF (the AQE-empty cases above).\n\n"
             "| query | sf0.01 | sf0.1 | byte ratio |\n|---|---|---|---|\n"
         )
-        small, large = by_sf[SF_DIRS[0]], by_sf[SF_DIRS[1]]
-        for name in QUERIES:
-            a, b = small[name]["shuffle_bytes"], large[name]["shuffle_bytes"]
+
+        def growth(sf_dir: str) -> dict[str, tuple[int, int]]:
+            """name -> (plan shuffle bytes, stage exec-write bytes)"""
+            out = {
+                n: (m["shuffle_bytes"], m["stage_shuffle_write_bytes"])
+                for n, m in by_sf[sf_dir].items()
+            }
+            for n, (*rows, st) in iter_by_sf[sf_dir].items():
+                out[f"{n} (all rounds)"] = (
+                    sum(s["shuffle_bytes"] for s in rows), st["stage_shuffle_write_bytes"]
+                )
+            return out
+
+        large = growth(SF_DIRS[1])
+        for name, (a, sa) in growth(SF_DIRS[0]).items():
+            b, sb = large[name]
             if a and b:
                 ratio = f"{b / a:.2f}x"
             else:
-                sa = small[name]["stage_shuffle_write_bytes"]
-                sb = large[name]["stage_shuffle_write_bytes"]
                 a, b = sa, sb
-                ratio = f"{sb / sa:.2f}x\\*" if sa else "—"
-            f.write(f"| {name} | {fmt_bytes(a)} | {fmt_bytes(b)} | {ratio} |\n")
-        small_it, large_it = iter_by_sf[SF_DIRS[0]], iter_by_sf[SF_DIRS[1]]
-        for name in small_it:
-            a = sum(s.get("shuffle_bytes", 0) for s in small_it[name])
-            b = sum(s.get("shuffle_bytes", 0) for s in large_it[name])
-            if a and b:
-                ratio = f"{b / a:.2f}x"
-            else:
-                sa = next(s for s in small_it[name] if s["step"] == "stage_totals")
-                sb = next(s for s in large_it[name] if s["step"] == "stage_totals")
-                a = sa["stage_shuffle_write_bytes"]
-                b = sb["stage_shuffle_write_bytes"]
                 ratio = f"{b / a:.2f}x\\*" if a else "—"
-            f.write(f"| {name} (all rounds) | {fmt_bytes(a)} | {fmt_bytes(b)} | {ratio} |\n")
+            f.write(f"| {name} | {fmt_bytes(a)} | {fmt_bytes(b)} | {ratio} |\n")
     print("SHUFFLE.md written")
 
 
