@@ -13,9 +13,9 @@ current:
            -> append to a centroid-partitioned parquet corpus
 
 Exactly-once: every micro-batch writes under its own ``epoch=<id>``
-partition with DYNAMIC partition overwrite (the ingest_guard pattern —
-a replayed epoch overwrites exactly its own partition). The corpus
-layout is partitioned by (epoch, centroid_id): searches still prune on
+partition (streaming/compaction.py's write_epoch — a replayed epoch
+overwrites exactly its own partition). The corpus layout is
+partitioned by (epoch, centroid_id): searches still prune on
 ``centroid_id`` (partition pruning works at any partition level), and
 epoch is a physical detail the reader never filters on.
 
@@ -32,6 +32,11 @@ from pyspark.sql import functions as F
 
 from databeats_spark.ml.ann import IVFIndex
 from databeats_spark.operators.multimodal import encode_payloads
+from databeats_spark.streaming.compaction import (
+    committed_epochs,
+    compact_epoch_partials,
+    write_epoch,
+)
 
 
 class StreamingIVFIngest:
@@ -57,7 +62,7 @@ class StreamingIVFIngest:
 
     def sink(self, batch_df: DataFrame, batch_id: int) -> None:
         """The foreachBatch target: encode → assign → epoch-partitioned
-        append (replay-idempotent via dynamic partition overwrite)."""
+        append (replay-idempotent)."""
         from pyspark.ml.functions import array_to_vector
 
         emb = encode_payloads(
@@ -70,13 +75,7 @@ class StreamingIVFIngest:
         assigned = self.index.kmeans.transform(
             emb.withColumn("__v", array_to_vector(F.col("embedding")))
         ).select(self.id_col, "embedding", "centroid_id")
-        (
-            assigned.withColumn("epoch", F.lit(int(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("epoch", "centroid_id")
-            .parquet(self.out_path)
-        )
+        write_epoch(assigned, self.out_path, batch_id, ["epoch", "centroid_id"])
 
     def corpus(self, spark: SparkSession) -> DataFrame:
         """Everything ingested so far: (id, embedding, centroid_id)."""
@@ -104,3 +103,29 @@ class StreamingIVFIngest:
             F.col("embedding").alias(self.index.vec_col),
         )
         return self.index.mean_assignment_distance(latest)
+
+
+def compact_ann_corpus(
+    spark: SparkSession,
+    corpus_path: str,
+    checkpoint_path: str | None = None,
+    committed: set[int] | None = None,
+    keep_latest: bool = True,
+) -> int:
+    """Compact the streamed IVF corpus (streaming/compaction.py).
+
+    Unlike the additive sinks this corpus is APPEND rows, so the fold
+    is identity — the value is layout: N epochs × K centroids of small
+    files re-cluster to ONE base partition per centroid (fewer files,
+    and every probe's partition pruning touches one directory instead
+    of one per epoch). By default the LATEST committed epoch stays
+    unfolded so ``drift()`` (which reads max(epoch) as "the newest
+    batch") keeps answering the refit question; pass
+    ``keep_latest=False`` for a terminal pack."""
+    if committed is None:
+        committed = committed_epochs(checkpoint_path or corpus_path + "_ckpt")
+    exclude = {max(committed)} if keep_latest and committed else set()
+    return compact_epoch_partials(
+        spark, corpus_path, lambda df: df.drop("epoch"), ["epoch", "centroid_id"],
+        checkpoint_path, committed=committed, exclude=exclude,
+    )

@@ -20,11 +20,12 @@ route bloom-positive docs to an exact verify tier instead
 
 Idempotency (the ingest_guard replay discipline applied to bitmap
 state): the state table is (epoch, block, bits), written per epoch
-with dynamic partition overwrite, and the probe bitmap is the bit_or
-fold of every epoch EXCEPT the current one — so a replayed micro-batch
-re-derives exactly the same admit set against exactly the pre-epoch
-state and overwrites its own partitions. bit_or is idempotent and
-associative, so the fold is also insensitive to epoch replay order.
+(streaming/compaction.py's write_epoch), and the probe bitmap is the
+bit_or fold of every epoch EXCEPT the current one — so a replayed
+micro-batch re-derives exactly the same admit set against exactly the
+pre-epoch state and overwrites its own partitions. bit_or is
+idempotent and associative, so the fold is also insensitive to epoch
+replay order.
 
 Reference anchor: the reference's ingest path re-fetches and re-filters
 page batches (dag.py pagination); dedup-at-ingest with bounded state is
@@ -33,33 +34,14 @@ its scale completion, not a port.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from databeats_spark.operators.scale import bloom_bitmap, bloom_probe
+from databeats_spark.streaming.compaction import drain, read_state, write_epoch
 
 _BITMAP_SCHEMA = "block BIGINT, bits BIGINT, epoch BIGINT"
-
-
-def _prior_bitmap(spark: SparkSession, path: str, current_epoch: int) -> DataFrame:
-    """The probe bitmap: every epoch's partitions EXCEPT the current
-    one (replay safety), folded per block with bit_or."""
-    try:
-        state = spark.read.parquet(path)
-    except AnalysisException as exc:
-        # only "state not created yet" is empty state; a corrupt table
-        # must fail the micro-batch so the checkpoint retries instead
-        # of silently re-admitting the whole history
-        if exc.getCondition() != "PATH_NOT_FOUND":
-            raise
-        return spark.createDataFrame([], _BITMAP_SCHEMA).select("block", "bits")
-    return (
-        state.filter(F.col("epoch") != current_epoch)
-        .groupBy("block")
-        .agg(F.bit_or("bits").alias("bits"))
-    )
 
 
 def bloom_guard_sink(
@@ -85,21 +67,20 @@ def bloom_guard_sink(
             .drop("__rn")
         )
 
-        prior = _prior_bitmap(spark, f"{state_dir}/bitmap", epoch_id)
+        # the probe bitmap: every epoch EXCEPT the current one (replay
+        # safety), folded per block with bit_or
+        prior = (
+            read_state(spark, f"{state_dir}/bitmap", _BITMAP_SCHEMA, epoch_id)
+            .groupBy("block")
+            .agg(F.bit_or("bits").alias("bits"))
+        )
         probed = bloom_probe(batch, prior, key_col, m_bits, n_hashes)
         admitted = probed.filter(~F.col("__bloom_hit")).drop("__bloom_hit")
         admitted = admitted.localCheckpoint()  # two consumers below
 
-        # dynamic overwrite per write (never session-wide): only this
-        # epoch's partition is replaced
-        ep = F.lit(int(epoch_id)).cast("long")
-        admitted.withColumn("epoch", ep).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("epoch").parquet(f"{state_dir}/admitted")
+        write_epoch(admitted, f"{state_dir}/admitted", epoch_id, ["epoch"])
         delta = bloom_bitmap(admitted.select(key_col), key_col, m_bits, n_hashes)
-        delta.withColumn("epoch", ep).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("epoch").parquet(f"{state_dir}/bitmap")
+        write_epoch(delta, f"{state_dir}/bitmap", epoch_id, ["epoch"])
 
     return merge
 
@@ -114,16 +95,8 @@ def run_bloom_guard(
     n_hashes: int = 2,
 ) -> StreamingQuery:
     """Drain all available document files through the guard."""
-    q = (
-        docs_stream.writeStream.foreachBatch(
-            bloom_guard_sink(state_dir, id_col, key_col, m_bits, n_hashes)
-        )
-        .option("checkpointLocation", f"{state_dir}/_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    sink = bloom_guard_sink(state_dir, id_col, key_col, m_bits, n_hashes)
+    return drain(docs_stream, sink, f"{state_dir}/_ckpt")
 
 
 def admitted_docs(spark: SparkSession, state_dir: str) -> DataFrame:

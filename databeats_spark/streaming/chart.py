@@ -25,44 +25,39 @@ from pyspark.sql.streaming import StreamingQuery
 
 from databeats_spark.functions.timeutils import week_index
 from databeats_spark.operators.windows import streak_ending_at_latest, top_k_per_group
+from databeats_spark.streaming.compaction import compact_epoch_partials, drain, write_epoch
+
+
+def _fold_weeks(partials: DataFrame) -> DataFrame:
+    """Fold (wk, epoch) partials to one row per (week, user) with the
+    sink's pinned schema — shared by the serving read and compaction."""
+    return partials.groupBy("wk", "user_id").agg(
+        F.sum("wv_part").cast("decimal(28,2)").alias("wv_part"),
+        F.sum("n_events").cast("long").alias("n_events"),
+    )
 
 
 def weekly_state_sink(state_path: str):
     """foreachBatch sink: write the micro-batch's per-(week, user)
     PARTIAL aggregates into the batch's own (wk, epoch) partitions.
 
-    foreachBatch is at-least-once — a crash between the state write
-    and the checkpoint commit replays the epoch — so idempotence must
-    come from the LAYOUT: a replayed epoch dynamically overwrites
-    exactly its own partitions and the state is byte-identical after
-    (pinned in test_streaming_chart.py by calling the sink twice with
-    one epoch). The previous additive merge (fold the batch into
-    existing week totals) double-counted precisely in that crash
-    window — r10 session-3 fix, same shape as streaming/monitor.py.
-    Late data for an old week simply lands as a new (old wk, new
-    epoch) partial; the serving read folds partials per (week, user),
-    so state stays (weeks × users × touched-epochs) compact rows.
-    On a long-lived stream the touched-epochs factor grows — bound it
-    with streaming/compaction.py::compact_chart_state (fold committed
-    epochs into an epoch=-1 base, crash-safe, readout-identical)."""
+    A crash-replayed epoch overwrites exactly its own partitions, so
+    the state is byte-identical after (pinned in test_streaming_chart.py
+    by calling the sink twice with one epoch); an additive merge into
+    existing week totals double-counted in that window. Late data for
+    an old week simply lands as a new (old wk, new epoch) partial; the
+    serving read folds partials per (week, user), so state stays
+    (weeks × users × touched-epochs) compact rows. On a long-lived
+    stream the touched-epochs factor grows — bound it with
+    :func:`compact_chart_state`."""
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        weekly = batch_df.groupBy(
-            week_index("ts").alias("wk"), F.col("user_id")
-        ).agg(
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("wv_part"),
-            F.count(F.lit(1)).alias("n_events"),
+        weekly = batch_df.groupBy(week_index("ts").alias("wk"), F.col("user_id")).agg(
+            # pin parquet types so every epoch writes the same schema
+            F.sum(F.col("value").cast("decimal(18,2)")).cast("decimal(28,2)").alias("wv_part"),
+            F.count(F.lit(1)).cast("long").alias("n_events"),
         )
-        # pin parquet types so every epoch writes the same schema
-        weekly.select(
-            "wk",
-            "user_id",
-            F.col("wv_part").cast("decimal(28,2)").alias("wv_part"),
-            F.col("n_events").cast("long").alias("n_events"),
-            F.lit(int(epoch_id)).cast("long").alias("epoch"),
-        ).write.mode("overwrite").partitionBy("wk", "epoch").parquet(state_path)
+        write_epoch(weekly, state_path, epoch_id, ["wk", "epoch"])
 
     return write
 
@@ -73,14 +68,7 @@ def run_incremental_chart(
     state_path: str,
 ) -> StreamingQuery:
     """Drain all available event files into the weekly state table."""
-    q = (
-        events_stream.writeStream.foreachBatch(weekly_state_sink(state_path))
-        .option("checkpointLocation", state_path + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return drain(events_stream, weekly_state_sink(state_path), state_path + "_ckpt")
 
 
 def chart_streaks_from_state(
@@ -89,15 +77,22 @@ def chart_streaks_from_state(
     """Serving query: top-k chart per week + streak ending at the
     newest week — identical semantics to the batch weekly_chart_streak
     registry query, computed from the compact state table."""
-    weekly = (
-        spark.read.parquet(state_path)
-        .groupBy("wk", "user_id")
-        .agg(F.sum("wv_part").alias("wv_sum"))
-        .select("wk", "user_id", F.col("wv_sum").cast("double").alias("wv"))
+    weekly = _fold_weeks(spark.read.parquet(state_path)).select(
+        "wk", "user_id", F.col("wv_part").cast("double").alias("wv")
     )
     chart = top_k_per_group(weekly, ["wk"], [F.col("wv").desc(), F.col("user_id")], k)
     return (
         streak_ending_at_latest(chart, "user_id", "wk", latest_idx=None)
         .select("user_id", F.col("streak").cast("long").alias("streak"))
         .orderBy(F.col("streak").desc(), "user_id")
+    )
+
+
+def compact_chart_state(
+    spark: SparkSession, state_path: str, checkpoint_path: str | None = None
+) -> int:
+    """Compact the sink's committed (wk, epoch) partials into one
+    ``epoch=-1`` base row per (wk, user) (streaming/compaction.py)."""
+    return compact_epoch_partials(
+        spark, state_path, _fold_weeks, ["wk", "epoch"], checkpoint_path
     )

@@ -1,26 +1,44 @@
-"""Epoch-partial compaction for the durable streaming state sinks
-(VERDICT r10 item 4 / ADVICE r10).
+"""The epoch-state protocol shared by every durable streaming sink.
 
-Both epoch-partitioned sinks (`streaming/chart.py`, `streaming/
-monitor.py`) are idempotent by LAYOUT: every micro-batch overwrites
-exactly its own (key…, epoch) partitions, so an at-least-once replay
-can never double-count. The cost is monotonic state growth — one
+Five foreachBatch sinks keep epoch-partitioned state: the weekly chart
+(`chart.py`, ``wk/epoch``), the SPRT monitor (`monitor.py`,
+``epoch``), the near-dup ingest guard and the bloom guard
+(`ingest_guard.py`, `bloom_guard.py`, ``epoch`` per table) and the
+IVF corpus (`ann_ingest.py`, ``epoch/centroid_id``). This module is
+the only code that knows how that state is written, read, drained and
+compacted; each sink owns just its rows and, next to it, its fold.
+The HLL sketch sink (`distincts.py`, one unpartitioned table) reuses
+the read and the drain.
+
+- :func:`write_epoch` writes a micro-batch as its own epoch with
+  dynamic partition overwrite set on that one write, never on the
+  session. foreachBatch is at-least-once — a crash between the sink
+  write and the checkpoint commit replays the same data under the
+  SAME epoch id — so idempotence comes from the LAYOUT: the replay
+  overwrites exactly its own partitions and can never double-count.
+- :func:`read_state` reads a state table as the next micro-batch must
+  see it: not-yet-created is empty, anything else unreadable fails
+  the batch, and the current epoch can be excluded (a replay must see
+  the pre-epoch state).
+- :func:`drain` runs a sink over everything available now under its
+  checkpoint (``<state>_ckpt`` for single-table sinks,
+  ``<dir>/_ckpt`` for the guards).
+
+The cost of idempotence-by-layout is monotonic state growth — one
 partial partition per touched (key, epoch) forever, and the serving
-read folds all of them. This module bounds that: fold all COMMITTED
-epoch partials into a single ``epoch=-1`` base partition per key
-prefix and drop the folded partitions, leaving the serving readout
-byte-identical with far fewer files.
+read folds all of them. :func:`compact_epoch_partials` bounds that:
+fold all COMMITTED epoch partials into a single ``epoch=-1`` base
+partition per key prefix and drop the folded partitions, leaving the
+serving readout byte-identical with far fewer files.
 
 Two safety properties, each structural:
 
-1. **Never fold an epoch that can still replay.** foreachBatch commits
-   an epoch to the stream checkpoint AFTER the sink write; a crash in
-   between replays the same data under the SAME epoch id on restart.
-   Folding that uncommitted epoch into the base would double-count the
-   replay (the replayed write recreates the partition the fold already
-   absorbed). So compaction reads the checkpoint's ``commits/`` ledger
-   and folds only epochs recorded there (plus any existing ``epoch=-1``
-   base, which is by construction already-committed data).
+1. **Never fold an epoch that can still replay.** Folding an
+   uncommitted epoch into the base would double-count its replay (the
+   replayed write recreates the partition the fold already absorbed).
+   So compaction reads the checkpoint's ``commits/`` ledger and folds
+   only epochs recorded there (plus any existing ``epoch=-1`` base,
+   which is by construction already-committed data).
 
 2. **Crash-safe fold-then-swap.** Plain parquet directories have no
    transactions, so the swap is two-phase with a manifest:
@@ -34,9 +52,9 @@ Two safety properties, each structural:
    after, the manifest is replayed idempotently (deletes of missing
    dirs and moves of already-moved dirs are no-ops). Compaction is a
    MAINTENANCE operation: run it while the stream is stopped (the
-   drain helpers here are availableNow anyway); readers between
-   phase-2 deletes and moves may see a partially-compacted key, which
-   is the documented non-goal (serving availability mid-compact).
+   drains are availableNow anyway); readers between phase-2 deletes
+   and moves may see a partially-compacted key, which is the
+   documented non-goal (serving availability mid-compact).
 
 At 100 TB scale the same protocol holds: the fold is one partial
 aggregation over the state table (itself already events-compacted),
@@ -48,14 +66,72 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQuery
 
 BASE_EPOCH = -1
 _TMP = "_compact_tmp"
 _MANIFEST = "_compact_manifest.json"
+
+
+def write_epoch(
+    df: DataFrame, path: str, epoch_id: int, partition_by: Sequence[str]
+) -> None:
+    """Write a micro-batch as epoch ``epoch_id`` of the state table at
+    ``path``: add the BIGINT ``epoch`` column and replace exactly the
+    partitions this batch touches. ``partition_by`` is the sink's
+    layout, ``epoch`` included."""
+    (
+        df.withColumn("epoch", F.lit(int(epoch_id)).cast("bigint"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_by)
+        .parquet(path)
+    )
+
+
+def read_state(
+    spark: SparkSession,
+    path: str,
+    schema: str,
+    exclude_epoch: int | None = None,
+) -> DataFrame:
+    """The state table at ``path``, without ``exclude_epoch``'s rows.
+    A table not created yet is empty state with ``schema``; any other
+    read failure (a corrupt or unreadable table) raises, so the
+    micro-batch fails and the checkpoint retries instead of silently
+    resetting the state."""
+    try:
+        df = spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() != "PATH_NOT_FOUND":
+            raise
+        df = spark.createDataFrame([], schema)
+    if exclude_epoch is None:
+        return df
+    return df.filter(F.col("epoch") != exclude_epoch)
+
+
+def drain(
+    stream: DataFrame,
+    sink: Callable[[DataFrame, int], None],
+    checkpoint: str,
+) -> StreamingQuery:
+    """Run ``sink`` via foreachBatch over everything ``stream`` has
+    available now and wait for it; the checkpoint makes a re-run
+    process only new input."""
+    q = (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    return q
 
 
 def committed_epochs(checkpoint_path: str) -> set[int]:
@@ -260,76 +336,3 @@ def compact_epoch_partials(
     recover_compaction(state_path)
     return len(move)
 
-
-def compact_chart_state(
-    spark: SparkSession, state_path: str, checkpoint_path: str | None = None
-) -> int:
-    """Compact the weekly-chart sink's (wk, epoch) partials: one base
-    row per (wk, user) with the sink's exact pinned schema."""
-
-    def fold(df: DataFrame) -> DataFrame:
-        return df.groupBy("wk", "user_id").agg(
-            F.sum("wv_part").cast("decimal(28,2)").alias("wv_part"),
-            F.sum("n_events").cast("long").alias("n_events"),
-        )
-
-    return compact_epoch_partials(
-        spark, state_path, fold, ["wk", "epoch"], checkpoint_path
-    )
-
-
-def compact_sprt_state(
-    spark: SparkSession, state_path: str, checkpoint_path: str | None = None
-) -> int:
-    """Compact the SPRT monitor sink's epoch partials: one base row
-    per day carrying both arms' exact BIGINT counts."""
-
-    def fold(df: DataFrame) -> DataFrame:
-        return df.groupBy("day").agg(
-            F.sum("dn").cast("bigint").alias("dn"),
-            F.sum("ds").cast("bigint").alias("ds"),
-            F.sum("cn").cast("bigint").alias("cn"),
-            F.sum("cs").cast("bigint").alias("cs"),
-        )
-
-    return compact_epoch_partials(
-        spark, state_path, fold, ["epoch"], checkpoint_path
-    )
-
-
-def compact_ann_corpus(
-    spark: SparkSession,
-    corpus_path: str,
-    checkpoint_path: str | None = None,
-    committed: set[int] | None = None,
-    keep_latest: bool = True,
-) -> int:
-    """Compact the streaming IVF ingest corpus
-    (`streaming/ann_ingest.py` — partitioned (epoch, centroid_id)).
-
-    Unlike the additive sinks this corpus is APPEND rows, so the fold
-    is identity — the value is layout: N epochs × K centroids of small
-    files re-cluster to ONE base partition per centroid (fewer files,
-    and every probe's partition pruning touches one directory instead
-    of one per epoch). By default the LATEST committed epoch stays
-    unfolded so ``drift()`` (which reads max(epoch) as "the newest
-    batch") keeps answering the refit question; pass
-    ``keep_latest=False`` for a terminal pack."""
-    if committed is None:
-        committed = committed_epochs(checkpoint_path or corpus_path + "_ckpt")
-    exclude: set[int] = set()
-    if keep_latest and committed:
-        exclude.add(max(committed))
-
-    def fold(df: DataFrame) -> DataFrame:
-        return df.drop("epoch")
-
-    return compact_epoch_partials(
-        spark,
-        corpus_path,
-        fold,
-        ["epoch", "centroid_id"],
-        checkpoint_path,
-        committed=committed,
-        exclude=exclude,
-    )

@@ -19,10 +19,11 @@ event volume.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
+
+from databeats_spark.streaming.compaction import drain, read_state
 
 
 def daily_sketch_sink(state_path: str):
@@ -35,20 +36,12 @@ def daily_sketch_sink(state_path: str):
         batch_sk = batch_df.select(day, "user_id").groupBy("day").agg(
             F.hll_sketch_agg("user_id").alias("sketch")
         )
-        try:
-            state = spark.read.parquet(state_path)
-            merged = (
-                state.unionByName(batch_sk)
-                .groupBy("day")
-                .agg(F.hll_union_agg("sketch").alias("sketch"))
-            )
-        except AnalysisException as exc:
-            # only "no state yet" starts fresh; a corrupt/unreadable
-            # state table must fail the micro-batch (checkpoint retries)
-            # rather than silently wiping all prior days
-            if exc.getCondition() != "PATH_NOT_FOUND":
-                raise
-            merged = batch_sk
+        merged = (
+            read_state(spark, state_path, "day STRING, sketch BINARY")
+            .unionByName(batch_sk)
+            .groupBy("day")
+            .agg(F.hll_union_agg("sketch").alias("sketch"))
+        )
         # day axis is calendar-bounded: the overwrite is a tiny table.
         # Materialize BEFORE overwriting — the plan reads the old state.
         rows = merged.collect()
@@ -61,14 +54,7 @@ def run_incremental_distincts(
     spark: SparkSession, events_stream: DataFrame, state_path: str
 ) -> StreamingQuery:
     """Drain all available event files into the per-day sketch table."""
-    q = (
-        events_stream.writeStream.foreachBatch(daily_sketch_sink(state_path))
-        .option("checkpointLocation", state_path + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return drain(events_stream, daily_sketch_sink(state_path), state_path + "_ckpt")
 
 
 def daily_distinct_estimates(spark: SparkSession, state_path: str) -> DataFrame:

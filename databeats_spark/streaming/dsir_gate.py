@@ -29,6 +29,8 @@ from databeats_spark.registry.signals import (
     DSIR_TARGET_LANG,
     _dsir_features,
 )
+from databeats_spark.streaming.events import run_available_now
+from databeats_spark.streaming.quality_gate import stream_documents
 
 
 @dataclass
@@ -113,15 +115,6 @@ def run_dsir_gate(
     micro-batch, so per-batch grouping is exact with ZERO streaming
     state — appending (doc_id, log_ir) to the curation ledger and
     routing keep/drop on a resampling threshold."""
-    schema = spark.read.parquet(docs_path).schema
-    stream = spark.readStream.schema(schema).parquet(docs_path)
-    q = (
-        dsir_score(stream, model)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = stream_documents(spark, docs_path)
+    run_available_now(dsir_score(stream, model), query_name, "complete")
     return spark.table(query_name)

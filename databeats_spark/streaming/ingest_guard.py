@@ -21,11 +21,12 @@ index (≈100 bytes/doc), never text, so it stays executor-readable at
 any corpus scale and the per-batch work is bounded by batch × matching
 buckets, not batch × corpus.
 
-Idempotency: every state write is partitioned by epoch_id with dynamic
-partition overwrite, and the guard excludes the CURRENT epoch's rows
-when loading the index — a replayed epoch re-derives exactly the same
-accept set against exactly the pre-epoch state and overwrites its own
-partition (exactly-once under checkpointing, like the chart sink).
+Idempotency: every state table is written per epoch and the guard
+excludes the CURRENT epoch's rows when loading the index
+(streaming/compaction.py's write_epoch / read_state) — a replayed epoch
+re-derives exactly the same accept set against exactly the pre-epoch
+state and overwrites its own partition (exactly-once under
+checkpointing, like the chart sink).
 
 Semantic note vs batch dedup: the guard is FIRST-ARRIVAL-WINS and
 does not transitively collapse chains (if A≈B and B≈C but A≉C, B is
@@ -46,7 +47,6 @@ sketch state — novel data is never silently dropped at ingest.
 
 from __future__ import annotations
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
@@ -56,23 +56,16 @@ from databeats_spark.operators.dedup import (
     minhash_signatures,
     signature_jaccard,
 )
+from databeats_spark.streaming.compaction import (
+    committed_epochs,
+    compact_epoch_partials,
+    drain,
+    read_state,
+    write_epoch,
+)
 
 _SIG_SCHEMA = "doc_id BIGINT, signature ARRAY<BIGINT>, epoch BIGINT"
 _BAND_SCHEMA = "doc_id BIGINT, band INT, key BIGINT, epoch BIGINT"
-
-
-def _read_state(spark: SparkSession, path: str, schema: str, current_epoch: int) -> DataFrame:
-    try:
-        df = spark.read.parquet(path)
-    except AnalysisException as exc:
-        # only "state not created yet" means empty state; a corrupt or
-        # unreadable table must FAIL the micro-batch so the checkpoint
-        # retries instead of silently resetting the dedup index
-        if exc.getCondition() == "PATH_NOT_FOUND":
-            return spark.createDataFrame([], schema)
-        raise
-    # replay safety: a re-run epoch must see exactly the pre-epoch state
-    return df.filter(F.col("epoch") != current_epoch)
 
 
 def dedup_guard_sink(
@@ -99,8 +92,8 @@ def dedup_guard_sink(
             num_hashes=num_hashes, bands=bands,
         ).withColumnRenamed("__id", "doc_id")
 
-        prev_sig = _read_state(spark, f"{state_dir}/sigs", _SIG_SCHEMA, epoch_id)
-        prev_band = _read_state(spark, f"{state_dir}/bands", _BAND_SCHEMA, epoch_id)
+        prev_sig = read_state(spark, f"{state_dir}/sigs", _SIG_SCHEMA, epoch_id)
+        prev_band = read_state(spark, f"{state_dir}/bands", _BAND_SCHEMA, epoch_id)
 
         # tier 1: batch vs accepted corpus — bucket collision, then
         # signature-estimated Jaccard on the (small) candidate set
@@ -189,24 +182,13 @@ def dedup_guard_sink(
             .join(rejects, "doc_id", "left_anti")
         )
 
-        # dynamic overwrite is set PER-WRITE (never session-wide): only
-        # this epoch's partition is replaced, and unrelated writes in the
-        # same session keep static-overwrite semantics.
-        ep = F.lit(int(epoch_id)).cast("long")
         accepted_docs = batch_df.join(accepted_ids, batch_df[id_col] == accepted_ids["doc_id"], "left_semi")
-        accepted_docs.withColumn("epoch", ep).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("epoch").parquet(f"{state_dir}/accepted")
-        sig.join(accepted_ids, "doc_id", "left_semi").withColumn("epoch", ep).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy("epoch").parquet(
-            f"{state_dir}/sigs"
-        )
-        band.join(accepted_ids, "doc_id", "left_semi").withColumn("epoch", ep).write.mode(
-            "overwrite"
-        ).option("partitionOverwriteMode", "dynamic").partitionBy("epoch").parquet(
-            f"{state_dir}/bands"
-        )
+        for table, df in (
+            ("accepted", accepted_docs),
+            ("sigs", sig.join(accepted_ids, "doc_id", "left_semi")),
+            ("bands", band.join(accepted_ids, "doc_id", "left_semi")),
+        ):
+            write_epoch(df, f"{state_dir}/{table}", epoch_id, ["epoch"])
 
     return merge
 
@@ -218,14 +200,7 @@ def run_ingest_guard(
     **guard_kwargs,
 ) -> StreamingQuery:
     """Drain all available document files through the near-dup guard."""
-    q = (
-        docs_stream.writeStream.foreachBatch(dedup_guard_sink(state_dir, **guard_kwargs))
-        .option("checkpointLocation", state_dir + "/_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return q
+    return drain(docs_stream, dedup_guard_sink(state_dir, **guard_kwargs), state_dir + "/_ckpt")
 
 
 def accepted_corpus(spark: SparkSession, state_dir: str) -> DataFrame:
@@ -259,25 +234,16 @@ def compact_state(
     (>= 0) additionally restricts folding to epochs at or below it.
     Still a maintenance operation: never run concurrently with a drain
     (single-writer rule)."""
-    from databeats_spark.streaming.compaction import (
-        committed_epochs,
-        compact_epoch_partials,
-    )
-
     if committed is None:
         committed = committed_epochs(f"{state_dir}/_ckpt")
     exclude: set[int] = (
         {e for e in committed if e > epoch_floor} if epoch_floor >= 0 else set()
     )
-
-    def fold(df: DataFrame) -> DataFrame:
-        return df.drop("epoch")
-
     for table in ("accepted", "sigs", "bands"):
         compact_epoch_partials(
             spark,
             f"{state_dir}/{table}",
-            fold,
+            lambda df: df.drop("epoch"),  # append-only rows: identity fold
             ["epoch"],
             committed=committed,
             exclude=exclude,

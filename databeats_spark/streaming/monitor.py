@@ -16,8 +16,9 @@ EXACTLY (pinned in tests/test_streaming_monitor.py, including a
 two-file incremental drain).
 
 At 100 TB the raw events never re-scan: state is |days| rows. The
-memory sink here is the test harness; production would foreachBatch
-the same state rows into a day-partitioned table.
+complete-mode memory sink (:func:`run_sprt_monitor`) is the test
+harness; production drains the same state rows into the durable
+epoch-partitioned table (:func:`run_sprt_monitor_durable`).
 """
 
 from __future__ import annotations
@@ -26,6 +27,9 @@ import math
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from databeats_spark.streaming.compaction import compact_epoch_partials, drain, write_epoch
+from databeats_spark.streaming.events import run_available_now
 
 
 def sprt_daily_state(events: DataFrame) -> DataFrame:
@@ -84,27 +88,27 @@ def sprt_monitor_from_state(state: DataFrame) -> DataFrame:
     ).orderBy("day")
 
 
+def _fold_days(partials: DataFrame) -> DataFrame:
+    """Fold epoch partials to one row per day carrying both arms'
+    exact BIGINT counts — shared by the serving read and compaction."""
+    return partials.groupBy("day").agg(
+        *(F.sum(c).cast("bigint").alias(c) for c in ("dn", "ds", "cn", "cs"))
+    )
+
+
 def sprt_state_sink(state_path: str):
     """foreachBatch sink: write each micro-batch's per-day partial
-    counts into an EPOCH-partitioned state table. foreachBatch is
-    at-least-once — a crash between the write and the checkpoint
-    commit replays the batch — so idempotence comes from the layout,
-    not from hoping: a replayed epoch dynamically overwrites exactly
-    its own partition and the state is byte-identical afterwards
-    (pinned in tests/test_streaming_monitor.py by calling the sink
-    twice with the same epoch). The serving read folds partials per
-    day, so state is (days × epochs) tiny partial rows — an additive
-    merge against existing state (the simpler shape) would
-    double-count on replay. On a long-lived stream bound the epochs
-    factor with streaming/compaction.py::compact_sprt_state."""
+    counts into an EPOCH-partitioned state table. A replayed epoch
+    overwrites exactly its own partition and the state is
+    byte-identical afterwards (pinned in tests/test_streaming_monitor.py
+    by calling the sink twice with the same epoch). The serving read
+    folds partials per day, so state is (days × epochs) tiny partial
+    rows — an additive merge against existing state (the simpler
+    shape) would double-count on replay. On a long-lived stream bound
+    the epochs factor with :func:`compact_sprt_state`."""
 
     def write(batch_df: DataFrame, epoch_id: int) -> None:
-        spark = batch_df.sparkSession
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        daily = sprt_daily_state(batch_df).withColumn(
-            "epoch", F.lit(int(epoch_id)).cast("bigint")
-        )
-        daily.write.mode("overwrite").partitionBy("epoch").parquet(state_path)
+        write_epoch(sprt_daily_state(batch_df), state_path, epoch_id, ["epoch"])
 
     return write
 
@@ -112,17 +116,17 @@ def sprt_state_sink(state_path: str):
 def sprt_monitor_from_partials(spark: SparkSession, state_path: str) -> DataFrame:
     """Serving read over the epoch-partitioned partials: fold per day,
     then the same closed form."""
-    state = (
-        spark.read.parquet(state_path)
-        .groupBy("day")
-        .agg(
-            F.sum("dn").cast("bigint").alias("dn"),
-            F.sum("ds").cast("bigint").alias("ds"),
-            F.sum("cn").cast("bigint").alias("cn"),
-            F.sum("cs").cast("bigint").alias("cs"),
-        )
+    return sprt_monitor_from_state(_fold_days(spark.read.parquet(state_path)))
+
+
+def compact_sprt_state(
+    spark: SparkSession, state_path: str, checkpoint_path: str | None = None
+) -> int:
+    """Compact the sink's committed epoch partials into one ``epoch=-1``
+    base row per day (streaming/compaction.py)."""
+    return compact_epoch_partials(
+        spark, state_path, _fold_days, ["epoch"], checkpoint_path
     )
-    return sprt_monitor_from_state(state)
 
 
 def run_sprt_monitor_durable(
@@ -134,16 +138,8 @@ def run_sprt_monitor_durable(
     """Drain available event files into the durable epoch-partitioned
     state (restartable: the checkpoint under ``state_path + '_ckpt'``
     makes a re-run process only NEW files), then serve the readout."""
-    stream = (
-        spark.readStream.schema(schema).format("parquet").load(events_path)
-    )
-    q = (
-        stream.writeStream.foreachBatch(sprt_state_sink(state_path))
-        .option("checkpointLocation", state_path + "_ckpt")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(schema).parquet(events_path)
+    drain(stream, sprt_state_sink(state_path), state_path + "_ckpt")
     return sprt_monitor_from_partials(spark, state_path)
 
 
@@ -156,16 +152,6 @@ def run_sprt_monitor(
     """Drain ``events_path`` with an availableNow stream, maintaining
     the day-state aggregation in complete mode, then apply the serving
     computation. Returns the monitor readout DataFrame."""
-    stream = (
-        spark.readStream.schema(schema).format("parquet").load(events_path)
-    )
-    q = (
-        sprt_daily_state(stream)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    stream = spark.readStream.schema(schema).parquet(events_path)
+    run_available_now(sprt_daily_state(stream), query_name, "complete")
     return sprt_monitor_from_state(spark.table(query_name))

@@ -14,15 +14,13 @@ import pytest
 
 from databeats_spark.streaming.chart import (
     chart_streaks_from_state,
+    compact_chart_state,
     run_incremental_chart,
     weekly_state_sink,
 )
-from databeats_spark.streaming.compaction import (
-    compact_chart_state,
-    compact_sprt_state,
-    recover_compaction,
-)
+from databeats_spark.streaming.compaction import read_state, recover_compaction
 from databeats_spark.streaming.events import stream_events
+from databeats_spark.streaming.monitor import compact_sprt_state, sprt_state_sink
 from tests.conftest import SF_SMOKE
 
 
@@ -277,8 +275,7 @@ def test_ann_corpus_compaction_re_clusters_and_keeps_latest(spark, tmp_path):
     from databeats_spark.ml.ann import IVFIndex
     from databeats_spark.operators.multimodal import attach_payload, encode_payloads
     from databeats_spark.sources.tables import load_tables
-    from databeats_spark.streaming.ann_ingest import StreamingIVFIngest
-    from databeats_spark.streaming.compaction import compact_ann_corpus
+    from databeats_spark.streaming.ann_ingest import StreamingIVFIngest, compact_ann_corpus
 
     docs = load_tables(spark, SF_SMOKE, ["documents"]).documents
     seed = docs.filter(F.col("doc_id") < 100).select("doc_id", "text")
@@ -327,3 +324,60 @@ def test_ann_corpus_compaction_re_clusters_and_keeps_latest(spark, tmp_path):
         ingest.corpus(spark).orderBy("doc_id").toPandas().reset_index(drop=True)
         .equals(before)
     )
+
+
+_OVERWRITE_MODE = "spark.sql.sources.partitionOverwriteMode"
+
+
+@pytest.mark.parametrize(
+    "make_sink", [weekly_state_sink, sprt_state_sink], ids=["chart", "sprt"]
+)
+def test_sink_leaves_session_overwrite_mode_alone(spark, tmp_path, make_sink):
+    """Dynamic overwrite belongs to the sink's own write. Set
+    session-wide, it would make every later partitioned overwrite in
+    the session keep stale partitions."""
+    before = spark.conf.get(_OVERWRITE_MODE)
+    try:
+        batch = spark.read.parquet(f"{SF_SMOKE}/events.parquet")
+        make_sink(str(tmp_path / "state"))(batch, 0)
+        assert spark.conf.get(_OVERWRITE_MODE) == before
+
+        table = str(tmp_path / "plain")
+        spark.range(3).selectExpr("id", "id + 1 AS k").write.partitionBy("k").parquet(table)
+        spark.range(1).selectExpr("id", "1 AS k").write.mode("overwrite").partitionBy(
+            "k"
+        ).parquet(table)
+        assert spark.read.parquet(table).count() == 1
+    finally:
+        spark.conf.set(_OVERWRITE_MODE, before)
+
+
+_STATE_SCHEMA = "doc_id BIGINT, v STRING, epoch BIGINT"
+
+
+def test_read_state_of_missing_path_is_empty_with_schema(spark, tmp_path):
+    got = read_state(spark, str(tmp_path / "never_written"), _STATE_SCHEMA, 3)
+    assert got.count() == 0
+    assert got.schema.simpleString() == "struct<doc_id:bigint,v:string,epoch:bigint>"
+
+
+def test_read_state_of_unreadable_path_raises(spark, tmp_path):
+    """An existing table that cannot be read must fail the micro-batch
+    (the checkpoint retries), never pass for empty state."""
+    from pyspark.errors import AnalysisException
+
+    empty_dir = tmp_path / "empty"
+    empty_dir.mkdir()
+    with pytest.raises(AnalysisException) as err:
+        read_state(spark, str(empty_dir), _STATE_SCHEMA)
+    assert err.value.getCondition() == "UNABLE_TO_INFER_SCHEMA"
+
+
+def test_read_state_excludes_the_current_epoch(spark, tmp_path):
+    path = str(tmp_path / "st")
+    spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 1), (3, "c", 2)], _STATE_SCHEMA
+    ).write.partitionBy("epoch").parquet(path)
+    got = read_state(spark, path, _STATE_SCHEMA, exclude_epoch=1)
+    assert sorted(r.doc_id for r in got.collect()) == [1, 3]
+    assert read_state(spark, path, _STATE_SCHEMA).count() == 3
