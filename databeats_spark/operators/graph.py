@@ -52,7 +52,9 @@ def connected_components(
     Returns a DataFrame (node, component). Nodes are whatever appears
     in either endpoint column; isolated nodes (no edges) are by
     definition absent — union them in upstream if every input row must
-    be labeled.
+    be labeled. Raises ``RuntimeError`` when a round still changes a
+    label after ``max_iter`` rounds (the labels would not be
+    components yet); rounds needed = graph diameter + 1.
 
     The symmetrized edge table is checkpointed FIRST, so an expensive
     edge generator upstream (an LSH candidate pipeline) executes once,
@@ -98,9 +100,10 @@ def connected_components(
     )
     sym = pre_sym.localCheckpoint()  # single materialization of the edge generator
     # the lazy input checkpoint ran inside the sym action: both rows
-    # carry that action's wall
-    record_metrics(metrics_sink, "cc_input_edges", pre_edges, t0)
-    record_metrics(metrics_sink, "cc_edges", pre_sym, t0)
+    # carry that action's wall, read once (before either fold)
+    end = time.perf_counter()
+    record_metrics(metrics_sink, "cc_input_edges", pre_edges, t0, end)
+    record_metrics(metrics_sink, "cc_edges", pre_sym, t0, end)
     t0 = time.perf_counter()
     pre_labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
         "label", F.col("node")
@@ -141,6 +144,8 @@ def connected_components(
         record_metrics(metrics_sink, f"cc_round_{i + 1}", pre_round, t0)
         if (obs.get["changed"] or 0) == 0:
             break
+    else:
+        raise RuntimeError(f"connected_components: no fixpoint in {max_iter} rounds")
     return labels.select(F.col("node"), F.col("label").alias("component"))
 
 

@@ -12,31 +12,34 @@ individual operators exist FOR, composed as one flow:
       → token budget        (distributed prefix sum; keep documents
                              until the budget is spent)
 
-Each stage consumes the previous stage's DataFrame — lazy end to end
-except the connected-components rounds (bounded by near-dup cluster
-diameter). A user of the reference who curates corpora by hand-chained
-pandas steps runs this as one call; at 100 TB every stage is the
-shuffle-conscious operator form (bucketed candidate joins, broadcast
-eval shingles, no global windows).
+Each stage consumes the previous stage's DataFrame, and
+``curate_corpus`` is the ONE runner of the chain: it seals the flow in
+segments (one eager checkpoint job each) with every stage's count
+riding a seal as an ``observe()`` metric. A user of the reference who
+curates corpora by hand-chained pandas steps runs this as one call; at
+100 TB every stage is the shuffle-conscious operator form (bucketed
+candidate joins, broadcast eval shingles, no global windows).
 
 The stage-count funnel (``curation_report``) is the pipeline's audit
 artifact: how many documents each gate removed. Registry exposes it
-rows-only (MinHash/CC are not SQL-expressible); the monotone-decrease
-property and end-to-end determinism are pinned in
-tests/test_curation_plan.py.
+rows-only as curation_funnel (MinHash is not SQL-expressible) and,
+with the exact Jaccard pair generator swapped in, oracle-checked as
+curation_funnel_exact; the monotone-decrease property and end-to-end
+determinism are pinned in tests/test_curation_plan.py.
 """
 
 from __future__ import annotations
 
 import time
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from databeats_spark.functions.text import fingerprint, word_shingles
 from databeats_spark.operators.dedup import minhash_near_duplicates
 from databeats_spark.operators.graph import connected_components, dedup_keep_canonical
 from databeats_spark.operators.scale import attach_global_scalar, partitioned_running_total
+from databeats_spark.plans.instrument import record_metrics
 from databeats_spark.sources.tables import load_tables, spread
 
 # quality-gate bands (see registry/mining.py gopher_quality_flags)
@@ -118,14 +121,24 @@ def exact_dedup_stage(docs: DataFrame) -> DataFrame:
     )
 
 
+def lsh_pairs(docs: DataFrame) -> DataFrame:
+    """The production near-dup pair generator: MinHash+LSH candidates
+    verified at NEAR_DUP_THRESHOLD, as (id_a, id_b, jaccard) rows."""
+    return minhash_near_duplicates(
+        docs, "doc_id", "text", threshold=NEAR_DUP_THRESHOLD,
+        num_partitions=docs.sparkSession.sparkContext.defaultParallelism,
+    )
+
+
 def near_dup_stage(
     docs: DataFrame,
-    spark: SparkSession,
+    pair_gen=lsh_pairs,
     skew_guard: bool = False,
     metrics_sink: list | None = None,
 ) -> DataFrame:
-    """MinHash+LSH candidate pairs → connected components → keep the
-    canonical (min-id) document of every near-dup cluster.
+    """Candidate pairs (``pair_gen``: docs -> (id_a, id_b, ...)) →
+    connected components → keep the canonical (min-id) document of
+    every near-dup cluster.
 
     ``skew_guard=True`` composes the diagnosis query with its remedy:
     measure the heaviest pair-endpoint's share of the edge list
@@ -136,16 +149,13 @@ def near_dup_stage(
     Result-identical either way (tests/test_curation_plan.py); the
     diagnosis costs one small aggregate over the pair list, which CC
     was about to materialize anyway."""
-    pairs = minhash_near_duplicates(
-        docs, "doc_id", "text", threshold=NEAR_DUP_THRESHOLD,
-        num_partitions=spark.sparkContext.defaultParallelism,
-    )
+    pairs = pair_gen(docs)
     salt = None
     if skew_guard:
         from databeats_spark.operators.scale import top_key_share
 
         # pin the pair list so the diagnosis job and CC's edge
-        # checkpoint share one materialization of the LSH pipeline
+        # checkpoint share one materialization of the pair generator
         pairs = pairs.localCheckpoint(eager=False)
         endpoints = pairs.select(F.col("id_a").alias("k")).union(
             pairs.select(F.col("id_b").alias("k"))
@@ -200,160 +210,97 @@ def budget_stage(docs: DataFrame, token_budget: int) -> DataFrame:
     return packed.filter(F.col("cum_tok") <= token_budget).drop("__h", "cum_tok")
 
 
-def stage_builders(
-    spark: SparkSession,
-    token_budget: int,
-    skew_guard: bool = False,
-    scorer=None,
-    scorer_threshold: float = 0.5,
-    metrics_sink: list | None = None,
-):
-    """The curation stages as an ordered (name, prev_df -> df) list —
-    the single definition both the lazy flow (curate_corpus) and a
-    per-stage-timed runner (scripts/curate.py --stage-times) iterate,
-    so a timed run measures exactly the production stages.
-
-    ``scorer`` (optional) swaps the rule-based quality gate for the
-    learned one (see :func:`learned_quality_gate`) — the upgrade path
-    once a trained quality filter exists; every downstream stage is
-    agnostic to which gate ran."""
-    quality = (
-        (lambda df: learned_quality_gate(df, scorer, scorer_threshold))
-        if scorer is not None
-        else quality_gate
-    )
-    return [
-        ("quality", quality),
-        ("exact_dedup", exact_dedup_stage),
-        ("near_dup", lambda df: near_dup_stage(
-            df, spark, skew_guard=skew_guard, metrics_sink=metrics_sink)),
-        ("decontam", decontam_stage),
-        ("rebalance", rebalance_stage),
-        ("budget", lambda df: budget_stage(df, token_budget)),
-    ]
-
-
 def curate_corpus(
     spark: SparkSession,
     sf_dir: str | None = None,
     token_budget: int = 30_000,
-    pin_stages: bool = False,
     skew_guard: bool = False,
     scorer=None,
     scorer_threshold: float = 0.5,
     observe_counts: dict[str, int] | None = None,
     metrics_sink: list | None = None,
+    pair_gen=lsh_pairs,
 ) -> dict[str, DataFrame]:
     """Run the full curation flow; returns every stage's DataFrame so
     callers can audit, persist or branch at any point.
 
-    ``pin_stages=True`` inserts a lazy ``localCheckpoint`` between
-    stages so a caller that ACTIONS every stage (the funnel report)
-    materializes each one exactly once — without it, counting stage k
-    re-executes stages 1..k-1, and the expensive middle (shingling,
-    MinHash) runs once per downstream stage instead of once. Callers
-    that only consume the final DataFrame keep the default single
-    lazy plan (nothing materialized twice either way). At cluster
-    scale the same seam is where a production run would persist each
-    stage to reliable storage instead of executor-local blocks.
+    The funnel runs as SEALED segments: each segment ends in one eager
+    ``localCheckpoint`` (its one driver action), and every stage's row
+    count rides that job as an ``observe()`` metric — no separate
+    count jobs, and the pipeline executes once. ``observe_counts`` (a
+    dict, optional) fills with ``{stage: n_rows}`` in funnel order;
+    ``metrics_sink`` receives one row per segment seal (data movement
+    plus the seal's ``wall_s``) and the CC label rounds inside the
+    near_dup stage — the funnel's entry in the SHUFFLE.md audit.
 
-    Passing a dict as ``observe_counts`` switches to EAGER segment
-    checkpoints with every stage's row count riding a checkpoint job
-    as an ``observe()`` metric (the pagerank/CC one-action-per-round
-    recipe applied to the funnel): the dict fills with
-    ``{stage: n_rows}`` and the report needs NO separate count jobs.
-    Since r14 adjacent LINEAR stages share one checkpoint job (raw →
-    quality → exact_dedup fold into the exact_dedup seal; see the
-    segment comment below), so the report issues one driver action per
-    SEGMENT, not per stage — same counts, same order, fewer jobs.
-
-    ``metrics_sink`` (requires ``observe_counts`` — the eager seals are
-    the actions being measured) receives one row per segment
-    checkpoint (data movement plus the seal's ``wall_s``) and the CC
-    label rounds inside the near_dup stage — the funnel's entry in the
-    deterministic SHUFFLE.md audit."""
+    ``scorer`` (optional) swaps the rule-based quality gate for the
+    learned one (see :func:`learned_quality_gate`); every downstream
+    stage is agnostic to which gate ran. ``pair_gen`` is the near-dup
+    candidate generator: MinHash LSH in production, the exact Jaccard
+    verifier in the registry's oracle twin (curation_funnel_exact)."""
     # the whole flow is compute-bound (shingling, signatures, quality
     # expressions): spread a few-split scan once at the head and every
     # stage inherits the parallelism (no-op when the scan has splits)
     docs = spread(load_tables(spark, sf_dir, ["documents"]).documents, spark)
-    if metrics_sink is not None and observe_counts is None:
-        # the sink is only fed by the eager observe-pins; accepting it
-        # without them would return an empty audit that reads as "no
-        # data movement" instead of an error
-        raise ValueError("metrics_sink requires observe_counts")
-    if observe_counts is not None:
-        from pyspark.sql import Observation
-
-        from databeats_spark.plans.instrument import record_metrics
-
-        # Folded observe segments (r14, VERDICT r13 item 1): a stage
-        # boundary only needs its own eager checkpoint when the NEXT
-        # stage consumes it through more than one subtree (re-execution
-        # + double-counted CollectMetrics otherwise). raw → quality →
-        # exact_dedup is a LINEAR chain (quality_gate is one
-        # project+filter; exact_dedup_stage is one window since r14),
-        # so those three counts ride ONE checkpoint job — each
-        # CollectMetrics node is evaluated exactly once because every
-        # boundary inside the segment has exactly one consumer. The
-        # remaining stages keep their own seal: near_dup/decontam/
-        # rebalance outputs are each consumed 2-3x by the next stage
-        # (LSH + canonical join; shingle branches + anti join; counts
-        # agg + keep join), and budget is the caller-facing result.
-        # The learned gate (scorer) consumes its INPUT twice (score +
-        # semi join back), so with a scorer nothing folds: raw's
-        # observe node would sit under both branches and double-count.
-        pending: list[tuple[str, Observation]] = []
-
-        def observe_only(name: str, df: DataFrame) -> DataFrame:
-            obs = Observation()
-            pending.append((name, obs))
-            return df.observe(obs, F.count(F.lit(1)).alias("n"))
-
-        def pin(name: str, df: DataFrame) -> DataFrame:
-            pre = observe_only(name, df)
-            t0 = time.perf_counter()
-            out = pre.localCheckpoint()  # the segment's ONE action
-            names = [n for n, _ in pending]
-            record_metrics(metrics_sink, "stage_" + "+".join(names), pre, t0)
-            for n, obs in pending:
-                observe_counts[n] = int(obs.get["n"])
+    counts = {} if observe_counts is None else observe_counts
+    quality = (
+        (lambda df: learned_quality_gate(df, scorer, scorer_threshold))
+        if scorer is not None
+        else quality_gate
+    )
+    chain = [
+        ("raw", lambda df: df),
+        ("quality", quality),
+        ("exact_dedup", exact_dedup_stage),
+        ("near_dup", lambda df: near_dup_stage(df, pair_gen, skew_guard, metrics_sink)),
+        ("decontam", decontam_stage),
+        ("rebalance", rebalance_stage),
+        ("budget", lambda df: budget_stage(df, token_budget)),
+    ]
+    # A stage boundary only needs its own seal when the NEXT stage
+    # consumes it through more than one subtree (re-execution +
+    # double-counted CollectMetrics otherwise). raw → quality →
+    # exact_dedup is a LINEAR chain (quality_gate is one
+    # project+filter; exact_dedup_stage is one window), so those three
+    # counts ride ONE seal — each CollectMetrics node is evaluated
+    # exactly once because every boundary inside the segment has one
+    # consumer. near_dup/decontam/rebalance outputs are each consumed
+    # 2-3x by the next stage (pair generator + canonical join; shingle
+    # branches + anti join; counts agg + keep join), and budget is the
+    # caller-facing result. The learned gate consumes its INPUT twice
+    # (score + semi join back), so with a scorer nothing folds.
+    fold_into_next = {"raw", "quality"} if scorer is None else set()
+    pending: list[tuple[str, Observation]] = []
+    stages: dict[str, DataFrame] = {}
+    prev = docs
+    for name, build in chain:
+        obs = Observation()
+        pending.append((name, obs))
+        prev = build(prev).observe(obs, F.count(F.lit(1)).alias("n"))
+        if name not in fold_into_next:
+            pre, t0 = prev, time.perf_counter()
+            prev = pre.localCheckpoint()  # the segment's ONE action
+            step = "stage_" + "+".join(n for n, _ in pending)
+            record_metrics(metrics_sink, step, pre, t0)
+            for n, o in pending:
+                counts[n] = int(o.get["n"])
             pending.clear()
-            return out
-
-        # stages whose observe rides the NEXT seal instead of sealing
-        # themselves — safe only while the downstream chain is linear
-        fold_into_next = {"raw", "quality"} if scorer is None else set()
-
-        def maybe_pin(name: str, df: DataFrame) -> DataFrame:
-            if name in fold_into_next:
-                return observe_only(name, df)
-            return pin(name, df)
-    elif pin_stages:
-        maybe_pin = lambda name, df: df.localCheckpoint(eager=False)  # noqa: E731
-    else:
-        maybe_pin = lambda name, df: df  # noqa: E731
-    stages: dict[str, DataFrame] = {"raw": maybe_pin("raw", docs)}
-    prev = stages["raw"]
-    for name, build in stage_builders(
-        spark, token_budget, skew_guard=skew_guard,
-        scorer=scorer, scorer_threshold=scorer_threshold,
-        metrics_sink=metrics_sink if observe_counts is not None else None,
-    ):
-        prev = stages[name] = maybe_pin(name, build(prev))
+        stages[name] = prev
     return stages
 
 
 def curation_report(
-    spark: SparkSession, sf_dir: str | None = None, token_budget: int = 30_000
+    spark: SparkSession,
+    sf_dir: str | None = None,
+    token_budget: int = 30_000,
+    pair_gen=lsh_pairs,
 ) -> DataFrame:
     """The stage-count funnel: one row per stage with the surviving
-    document count — the audit artifact of a curation run. Each count
-    rides a segment's eager-checkpoint job as an ``observe()`` metric
-    (linear stages share one job since r14), so the pipeline executes
-    once end-to-end with exactly one driver action per segment and
-    zero separate count jobs (tests/test_curation_plan.py pins this by
+    document count — the audit artifact of a curation run, read from
+    :func:`curate_corpus`'s observe() counts (one driver action per
+    segment, zero count jobs; tests/test_curation_plan.py pins this by
     poisoning ``DataFrame.count`` for the duration of the report)."""
     counts: dict[str, int] = {}
-    curate_corpus(spark, sf_dir, token_budget, observe_counts=counts)
+    curate_corpus(spark, sf_dir, token_budget, observe_counts=counts, pair_gen=pair_gen)
     rows = [(i, name, n) for i, (name, n) in enumerate(counts.items())]
     return spark.createDataFrame(rows, "stage_idx: long, stage: string, n_docs: long")

@@ -249,13 +249,16 @@ def movement(spark: SparkSession, build: Callable[[], DataFrame]) -> dict[str, i
     return {**m, **stage_work(spark, mark)}
 
 
-def record_metrics(sink: list | None, step: str, df: DataFrame, t0: float) -> None:
+def record_metrics(
+    sink: list | None, step: str, df: DataFrame, t0: float, end: float | None = None
+) -> None:
     """Append ``{"step", "wall_s", **executed_metrics(df)}`` to ``sink``
     when a sink is provided (None = zero overhead). ``wall_s`` runs
-    from ``t0``, the step's start, to now — read before the fold, so
-    folding never counts. Call it once the step's action has run."""
+    from ``t0``, the step's start, to ``end`` (default: now) — read
+    before the fold, so folding never counts. Call it once the step's
+    action has run; pass one ``end`` to every row of a shared action."""
     if sink is not None:
-        wall = round(time.perf_counter() - t0, 4)
+        wall = round((time.perf_counter() if end is None else end) - t0, 4)
         sink.append({"step": step, "wall_s": wall, **executed_metrics(df)})
 
 

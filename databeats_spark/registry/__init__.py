@@ -82,12 +82,11 @@ class QuerySpec:
 # Regenerate with ``python scripts/rotation_report.py``.
 _WINDOW = (
     # Mirrors scripts/rotation_report.py's recommended front-50 exactly.
-    # — r15 CHANGED_QUERIES re-certs (per-step sink wall_s):
+    # — CHANGED_QUERIES re-certs (one funnel runner; CC fixpoint raise):
     "curation_funnel_exact",
     "curation_funnel",
     "dedup_components",
-    "pagerank_docs",
-    "pagerank_docs_exact",
+    "dup_cluster_sizes",
     # — age-4 certifying twin (forced):
     "blockmean_near_dups_exact",
     # — oldest greens, report order:
@@ -135,6 +134,7 @@ _WINDOW = (
     "js_source_drift",
     "chao1_vocab_richness",
     "k_eidetic_histogram",
+    "ngram_novelty_hashed",
 )
 
 # Queries whose BUILDER or ORACLE changed this round (reset to () at
@@ -145,14 +145,14 @@ _WINDOW = (
 # in r10, jackknife in r11), mechanical instead of CLAUDE.md prose the
 # report "cannot see".
 CHANGED_QUERIES: tuple[str, ...] = (
-    # metrics_sink rows carry each step's wall_s, pagerank's per-round
-    # timing included (operators/graph.py, registry/mining.py,
-    # plans/curation.py)
-    "pagerank_docs",
-    "pagerank_docs_exact",
-    "dedup_components",
-    "curation_funnel",
+    # the twin and the production funnel run the one sealed runner
+    # (plans/curation.py::curate_corpus) with different pair generators
     "curation_funnel_exact",
+    "curation_funnel",
+    # connected_components raises when max_iter rounds end unconverged
+    # (operators/graph.py)
+    "dedup_components",
+    "dup_cluster_sizes",
 )
 
 # The driver gate only sees the first _GATE_WIDTH entries; anything past

@@ -222,10 +222,10 @@ ORDER BY source, quota_rank
 # split for the quality band like plans/curation.py::quality_gate,
 # \s+ tokens for shingles, the > n*0.05 double compare, integer Knuth
 # math, inclusive running sum over md5(doc_id)) so the stage counts
-# hash-match. The production funnel (curation_funnel) keeps the LSH
-# generator and stays rows-only by design; THIS query proves the
-# surrounding pipeline arithmetic end to end. Spark side reuses the
-# production stage functions — only the pair generator differs.
+# hash-match. The Spark side IS the production runner
+# (plans/curation.py::curation_report, the same call curation_funnel
+# makes) with the exact pair generator passed in, so this query
+# certifies the production chain itself, not a copy of it.
 
 FUNNEL_EXACT_BUDGET = 30_000
 # stop-shingle cap for the exact pair generator: a 3-gram shared by
@@ -238,63 +238,21 @@ FUNNEL_EXACT_BUDGET = 30_000
 FUNNEL_MAX_SHINGLE_DF = 128
 
 
-def _curation_funnel_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Observation
-
+def _exact_pairs(docs: DataFrame) -> DataFrame:
     from databeats_spark.operators.dedup import ngram_jaccard_pairs
-    from databeats_spark.operators.graph import (
-        connected_components,
-        dedup_keep_canonical,
-    )
-    from databeats_spark.plans.curation import (
-        NEAR_DUP_THRESHOLD,
-        budget_stage,
-        decontam_stage,
-        exact_dedup_stage,
-        quality_gate,
-        rebalance_stage,
-    )
-    from databeats_spark.sources.tables import load_tables, spread
+    from databeats_spark.plans.curation import NEAR_DUP_THRESHOLD
 
-    from databeats_spark.plans.curation import stage_builders
-
-    # drift guard: this query re-spells the production chain by hand
-    # (it must — the near_dup stage swaps LSH for the exact verifier),
-    # so fail LOUDLY at build time if stage_builders ever adds,
-    # removes, or reorders a stage; otherwise the "exact twin" would
-    # keep certifying a pipeline that no longer matches production
-    production_chain = [n for n, _ in stage_builders(spark, FUNNEL_EXACT_BUDGET)]
-    if production_chain != [
-        "quality", "exact_dedup", "near_dup", "decontam", "rebalance", "budget"
-    ]:  # a raise, not an assert — the guard must survive python -O
-        raise RuntimeError(f"curation funnel chain drifted: {production_chain}")
-
-    docs = spread(load_tables(spark, sf_dir, ["documents"]).documents, spark)
-    counts: dict[str, int] = {}
-
-    def pin(name: str, df: DataFrame) -> DataFrame:
-        obs = Observation()
-        out = df.observe(obs, F.count(F.lit(1)).alias("n")).localCheckpoint()
-        counts[name] = int(obs.get["n"])
-        return out
-
-    raw = pin("raw", docs)
-    q = pin("quality", quality_gate(raw))
-    e = pin("exact_dedup", exact_dedup_stage(q))
-    pairs = ngram_jaccard_pairs(
-        e, "doc_id", "text", n=3, threshold=NEAR_DUP_THRESHOLD,
+    return ngram_jaccard_pairs(
+        docs, "doc_id", "text", n=3, threshold=NEAR_DUP_THRESHOLD,
         max_df=FUNNEL_MAX_SHINGLE_DF,
     )
-    comps = connected_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
-    nd = pin("near_dup", dedup_keep_canonical(e, comps, "doc_id"))
-    d = pin("decontam", decontam_stage(nd))
-    r = pin("rebalance", rebalance_stage(d))
-    pin("budget", budget_stage(r, FUNNEL_EXACT_BUDGET))
-    rows = [(i, name, n) for i, (name, n) in enumerate(counts.items())]
-    return spark.createDataFrame(
-        rows, "stage_idx: long, stage: string, n_docs: long"
+
+
+def _curation_funnel_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from databeats_spark.plans.curation import curation_report
+
+    return curation_report(
+        spark, sf_dir, FUNNEL_EXACT_BUDGET, pair_gen=_exact_pairs
     ).orderBy("stage_idx")
 
 

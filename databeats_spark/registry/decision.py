@@ -552,9 +552,10 @@ def _yoy_revenue_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(_net()).alias("rev"))
         # both join sides read this tiny aggregate: materialize it once
         # (AQE does not reuse the shared exchange under a broadcast
-        # side — same posture as attach_global_scalar). eager=False so
-        # BUILDING the query stays free — the scan+agg job runs at
-        # first action, not at create_dashboard_views() time.
+        # side — same posture as attach_global_scalar). eager=False
+        # defers the job only with AQE off: under AQE, building the
+        # query already runs the scan+agg shuffle stage, and only the
+        # final stage waits for the first action.
         .localCheckpoint(eager=False)
     )
     prev = yearly.select(

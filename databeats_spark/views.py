@@ -17,10 +17,16 @@ from pyspark.sql import SparkSession
 from databeats_spark.registry import registry
 from databeats_spark.sources.tables import register_views
 
-# builds that execute Spark jobs at CONSTRUCTION time (iterative
-# propagation, KMeans training, corpus-count scalars) — excluded by
-# default so opening the dashboard stays instant; pass them in
-# ``names`` explicitly to pay their cost.
+# builds whose CONSTRUCTION runs a whole pipeline (iterative
+# propagation, KMeans training, the curation funnel) — excluded by
+# default so opening the dashboard stays cheap; pass them in ``names``
+# explicitly to pay their cost. Not the full set of builders that run
+# jobs at build time: under AQE a lazy localCheckpoint executes every
+# shuffle/broadcast stage below it when the query is BUILT (only its
+# final stage waits for an action). At sf0.001, 73 of 306 builders ran
+# jobs when built in an AQE-on get_spark session and 47 with AQE off
+# (hits_copurchase 19 vs 2 jobs, minhash_near_dups 10 vs 2;
+# plans/r15/build_time_jobs.txt).
 EAGER_QUERIES = frozenset(
     {
         "dedup_components",
@@ -44,9 +50,12 @@ def create_dashboard_views(
 ) -> list[str]:
     """Register base tables + ``v_<query>`` views; returns view names.
 
-    Default: every lazy registry query (a temp view is just a named
-    plan — zero jobs run until someone SELECTs from it). ``names``
-    overrides the selection, including the eager entries."""
+    Default: every registry query outside ``EAGER_QUERIES``. A temp
+    view is just a named plan, but building it is not always free:
+    under AQE a builder with a lazy checkpoint runs that checkpoint's
+    upstream shuffle/broadcast stages here, at view creation (see
+    ``EAGER_QUERIES``). ``names`` overrides the selection, including
+    the eager entries."""
     register_views(spark, sf_dir)
     created = []
     for spec in registry():

@@ -8,8 +8,9 @@ the engine's answer to triggering the reference's Airflow DAG by hand:
 Writes:
     <out>/corpus/   the curated documents (parquet)
     <out>/funnel/   the stage-count audit table (parquet)
-and prints the funnel as one JSON line (machine-parseable, like
-bench.py).
+and prints the funnel plus each sealed segment's wall seconds
+(``segment_wall_s``, from the funnel's metrics_sink) as one JSON line
+(machine-parseable, like bench.py).
 """
 
 from __future__ import annotations
@@ -26,12 +27,6 @@ def main() -> None:
     ap.add_argument("--out", required=True)
     ap.add_argument("--token-budget", type=int, default=30_000)
     ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "*"))
-    ap.add_argument(
-        "--stage-times", action="store_true",
-        help="time each pinned stage's materialization and report the "
-        "per-stage split in the JSON line (stages are checkpointed, so "
-        "each count pays only its own stage's incremental cost)",
-    )
     ap.add_argument(
         "--skew-guard", action="store_true",
         help="diagnose pair-endpoint skew (top_key_share) before the "
@@ -55,7 +50,7 @@ def main() -> None:
     )
     args = ap.parse_args()
 
-    from databeats_spark.plans.curation import curate_corpus, stage_builders
+    from databeats_spark.plans.curation import curate_corpus
     from databeats_spark.session import get_spark
 
     spark = get_spark(app_name="databeats_curate", master=f"local[{args.cpus}]")
@@ -90,53 +85,27 @@ def main() -> None:
                 ],
             )
 
-    if args.stage_times:
-        # per-stage timing needs EAGER materialization inside each
-        # timed block — near_dup's connected-components rounds run at
-        # plan-build time, so the lazy flow would attribute them to
-        # whichever later action happens first
-        import time
-
-        from databeats_spark.sources.tables import load_tables, spread
-
-        t0 = time.perf_counter()
-        prev = spread(
-            load_tables(spark, args.sf_dir, ["documents"]).documents, spark
-        ).localCheckpoint(eager=True)
-        funnel = [(0, "raw", prev.count())]
-        stage_sec = {"raw": round(time.perf_counter() - t0, 4)}
-        for i, (name, build) in enumerate(
-            stage_builders(spark, args.token_budget, skew_guard=args.skew_guard,
-                           scorer=scorer, scorer_threshold=args.quality_threshold), 1
-        ):
-            t0 = time.perf_counter()
-            prev = build(prev).localCheckpoint(eager=True)
-            funnel.append((i, name, prev.count()))
-            stage_sec[name] = round(time.perf_counter() - t0, 4)
-        final = prev
-    else:
-        # observe_counts: each stage's count rides its eager checkpoint
-        # job — zero separate count jobs; the final corpus persists
-        # from the same checkpointed blocks
-        counts: dict[str, int] = {}
-        stages = curate_corpus(
-            spark, args.sf_dir, args.token_budget,
-            skew_guard=args.skew_guard,
-            scorer=scorer, scorer_threshold=args.quality_threshold,
-            observe_counts=counts,
-        )
-        funnel = [(i, name, n) for i, (name, n) in enumerate(counts.items())]
-        stage_sec = {}
-        final = stages["budget"]
+    # each stage's count rides its segment's checkpoint job (zero
+    # separate count jobs) and the sink times every segment seal; the
+    # final corpus persists from the same checkpointed blocks
+    counts: dict[str, int] = {}
+    sink: list[dict] = []
+    final = curate_corpus(
+        spark, args.sf_dir, args.token_budget,
+        skew_guard=args.skew_guard,
+        scorer=scorer, scorer_threshold=args.quality_threshold,
+        observe_counts=counts, metrics_sink=sink,
+    )["budget"]
+    funnel = [(i, name, n) for i, (name, n) in enumerate(counts.items())]
     final.write.mode("overwrite").parquet(f"{args.out}/corpus")
     spark.createDataFrame(
         funnel, "stage_idx: long, stage: string, n_docs: long"
     ).coalesce(1).write.mode("overwrite").parquet(f"{args.out}/funnel")
 
     record = {"sf_dir": args.sf_dir, "out": args.out,
-              "funnel": {name: n for _, name, n in funnel}}
-    if args.stage_times:
-        record["stage_sec"] = stage_sec
+              "funnel": {name: n for _, name, n in funnel},
+              "segment_wall_s": {r["step"][len("stage_"):]: r["wall_s"]
+                                 for r in sink if r["step"].startswith("stage_")}}
     if fit_auc is not None:
         record["quality_filter_auc"] = round(fit_auc, 4)
         # decile report: where the full-corpus mass sits on the learned

@@ -58,10 +58,10 @@ FLAGSHIPS = {
 # Hand-maintained measured-evidence section (preserved across plan
 # regeneration because this script rewrites PLANS.md wholesale).
 # Refresh the numbers with scripts/scale_curve.py (one
-# plans/instrument.py::profile per query and scale factor), the
-# metrics_sink rows of pagerank / curate_corpus (per-step wall_s and
-# bytes — bench.py's pagerank_rounds reads pagerank_docs' round rows),
-# and scripts/curate.py --stage-times.
+# plans/instrument.py::profile per query and scale factor) and the
+# metrics_sink rows of pagerank / curate_corpus (per-step
+# wall_s and bytes — bench.py's pagerank_rounds reads pagerank_docs'
+# round rows; scripts/curate.py prints the funnel's per-segment wall).
 SCALE_EVIDENCE = """\
 ## Measured scale evidence (round 6)
 
@@ -97,36 +97,6 @@ iteration rounds cost ~0.3 + 0.5 s of pagerank_docs' total — the rest
 is the one-time LSH edge generation. substring_dup_spans (stride-1
 anchored suffix sort) scales at 1.79x for 10x data: the suffix table
 is corpus-token-sized but every downstream op is key-partitioned.
-
-## curation_funnel stage breakdown (sf0.1, round 6)
-
-`scripts/curate.py --stage-times` (eager per-stage materialization —
-the lazy flow would attribute near_dup's CC rounds, which run at plan
-build time, to a later action). Cold numbers, fresh session. The r5
-cold column is kept for comparison; r6's near_dup drop is the CC
-edge-table checkpoint (label rounds no longer re-execute the
-MinHash+LSH pipeline):
-
-| stage | r6 cold s | r5 cold s |
-|---|---|---|
-| raw (scan+spread) | 5.17 | 4.01 |
-| quality | 1.40 | 1.04 |
-| exact_dedup | 3.55 | 3.03 |
-| near_dup | 10.27 | 14.14 |
-| decontam | 2.12 | 1.41 |
-| rebalance | 0.58 | 0.45 |
-| budget | 1.54 | 1.14 |
-
-near_dup still dominates; its remaining cost is the fixed CC round
-structure (~3 rounds x join+agg+checkpoint actions over 157 pairs),
-a documented floor, not a scale risk: the round count is bounded by
-near-dup cluster diameter (constant in practice), so at 100 TB the
-same ~15 actions orchestrate arbitrarily wide stages while per-round
-work scales out — consistent with the funnel's measured 1.59x runtime
-for 10x data above. The funnel also carries an opt-in skew guard
-(plans/curation.py::near_dup_stage skew_guard): top_key_share over
-pair endpoints, salting CC's neighbor join above a 10% hub share —
-result-identity and the salt fan-out are plan/pytest-pinned.
 """
 
 

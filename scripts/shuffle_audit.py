@@ -167,9 +167,7 @@ def iterative_runs(spark, sf_dir: str) -> dict[str, list[dict]]:
     return {
         "pagerank_docs": run(lambda s: _pagerank_docs(spark, sf_dir, metrics_sink=s), True),
         "dedup_components": run(lambda s: _dedup_components(spark, sf_dir, metrics_sink=s), True),
-        "curation_funnel": run(
-            lambda s: curate_corpus(spark, sf_dir, observe_counts={}, metrics_sink=s), False
-        ),
+        "curation_funnel": run(lambda s: curate_corpus(spark, sf_dir, metrics_sink=s), False),
     }
 
 

@@ -139,3 +139,33 @@ def test_learned_scorer_seam(spark):
     # schema contract through the funnel is unchanged vs the rule gate
     rule = curate_corpus(spark, SF_SMOKE, token_budget=20_000)
     assert set(learned["quality"].columns) == set(rule["quality"].columns)
+
+
+def test_exact_twin_runs_the_production_chain(spark):
+    """curation_funnel_exact is the production runner with the exact
+    pair generator swapped in: it lists the same stages in the same
+    order as curation_report, and no module outside plans/curation.py
+    calls a stage function to restate the chain by hand."""
+    import re
+    from pathlib import Path
+
+    from databeats_spark.registry import queries
+
+    twin = queries()["curation_funnel_exact"](spark, SF_SMOKE).collect()
+    report = curation_report(spark, SF_SMOKE).collect()
+    stages = lambda rows: [r["stage"] for r in sorted(rows, key=lambda r: r["stage_idx"])]
+    assert stages(twin) == stages(report), (twin, report)
+
+    root = Path(__file__).resolve().parents[1]
+    stage_call = re.compile(
+        r"\b(exact_dedup_stage|near_dup_stage|decontam_stage|rebalance_stage"
+        r"|budget_stage)\("
+    )
+    home = root / "databeats_spark" / "plans" / "curation.py"
+    offenders = [
+        str(p.relative_to(root))
+        for d in ("databeats_spark", "scripts")
+        for p in (root / d).rglob("*.py")
+        if p != home and stage_call.search(p.read_text())
+    ]
+    assert offenders == [], offenders

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from databeats_spark.operators.graph import connected_components, dedup_keep_canonical
@@ -163,3 +164,11 @@ def test_pagerank_matches_numpy_power_iteration(spark):
     }
     for v in nodes:
         assert abs(got[v] - r[idx[v]]) < 1e-9, (v, got[v], r[idx[v]])
+
+
+def test_unconverged_labels_raise(spark):
+    # diameter 9 needs 9 label rounds plus one that changes nothing
+    chain = edges_df(spark, [(i, i + 1) for i in range(10, 19)])
+    with pytest.raises(RuntimeError, match="no fixpoint in 3 rounds"):
+        connected_components(chain, max_iter=3)
+    assert set(comp_map(connected_components(chain)).values()) == {10}

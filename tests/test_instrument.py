@@ -88,3 +88,26 @@ def test_movement_folds_checkpointed_segments(spark):
     plain = movement(spark, lambda: reg["pricing_summary"](spark, SF_CORRECT))
     walk = execution_metrics(reg["pricing_summary"](spark, SF_CORRECT))
     assert {k: plain[k] for k in _PLAN_KEYS} == walk
+
+
+def test_cc_edge_rows_share_one_wall(spark, monkeypatch):
+    """cc_input_edges and cc_edges come from one checkpoint action: both
+    rows carry that action's wall, read before either fold (a slow
+    fold of the first row must not land in the second row's wall)."""
+    import time
+
+    from databeats_spark.operators.graph import connected_components
+    from databeats_spark.plans import instrument
+
+    fold = instrument.executed_metrics
+
+    def slow_fold(df):
+        time.sleep(0.5)
+        return fold(df)
+
+    monkeypatch.setattr(instrument, "executed_metrics", slow_fold)
+    sink: list[dict] = []
+    edges = spark.createDataFrame([(1, 2), (2, 3)], "src: long, dst: long")
+    connected_components(edges, metrics_sink=sink)
+    by_step = {r["step"]: r for r in sink}
+    assert by_step["cc_input_edges"]["wall_s"] == by_step["cc_edges"]["wall_s"], sink
