@@ -20,7 +20,8 @@ rows, so the whole pipeline stays in whole-stage codegen.
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
+from typing import NamedTuple
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -120,33 +121,33 @@ def ngram_jaccard_pairs(
     )
 
 
-def _minhash_signature(
-    exploded: DataFrame,
-    id_col: str,
-    hash_col: str,
-    num_hashes: int,
-    seed: int,
-) -> DataFrame:
-    """num_hashes min-hash values per id from exploded shingle hashes.
+class MinHashFamily(NamedTuple):
+    """A MinHash hash family. ``key(shingle)`` is projected once per
+    shingle row; ``hash(i, key)`` is the family's i-th hash of it, and
+    signature position i is its min over a document's shingles."""
 
-    Universal hashing h_i(x) = (a_i * x + b_i) mod p, vectorized by
-    cross-joining each row with a tiny literal array of (a, b) pairs —
-    Catalyst folds the constants; the per-row cost is pure arithmetic.
-    Output: one row per id with an array<long> signature (ordered by
-    hash index).
-    """
+    key: Callable[[Column], Column]
+    hash: Callable[[int, Column], Column]
+
+
+def universal_family(seed: int = 42) -> MinHashFamily:
+    """The production family: h_i(x) = (a_i * x + b_i) mod p over the
+    shingle's positive xxhash64. Catalyst folds the (a, b) literals; the
+    per-row cost is pure arithmetic. Pair i is the i-th draw of
+    ``Random(seed)``, whatever the number of hashes."""
     import random
 
     rng = random.Random(seed)
-    coeffs = [(rng.randrange(1, _MERSENNE_31), rng.randrange(0, _MERSENNE_31)) for _ in range(num_hashes)]
-    # positive 31-bit shingle hash
-    x = F.pmod(F.col(hash_col), F.lit(_MERSENNE_31))
-    mins = [
-        F.min(F.pmod(F.lit(a) * x + F.lit(b), F.lit(_MERSENNE_31))).alias(f"__h{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    sig = exploded.groupBy(id_col).agg(*mins)
-    return sig.select(id_col, F.array(*[f"__h{i}" for i in range(num_hashes)]).alias("signature"))
+    coeffs: list[tuple[int, int]] = []
+
+    def universal(i: int, key: Column) -> Column:
+        while len(coeffs) <= i:
+            coeffs.append((rng.randrange(1, _MERSENNE_31), rng.randrange(0, _MERSENNE_31)))
+        a, b = coeffs[i]
+        x = F.pmod(key, F.lit(_MERSENNE_31))  # positive 31-bit shingle hash
+        return F.pmod(F.lit(a) * x + F.lit(b), F.lit(_MERSENNE_31))
+
+    return MinHashFamily(lambda sh: F.abs(F.xxhash64(sh)), universal)
 
 
 def _shingled_docs(
@@ -183,11 +184,14 @@ def _shingled_docs(
     return shingled
 
 
-def _signatures_from_shingled(shingled: DataFrame, num_hashes: int, seed: int) -> DataFrame:
+def _signatures(shingled: DataFrame, num_hashes: int, family: MinHashFamily) -> DataFrame:
+    """(__id, signature): the array of ``num_hashes`` per-position mins."""
     exploded = shingled.select(
         "__id", F.explode("__shingles").alias("__sh")
-    ).withColumn("__h", F.abs(F.xxhash64("__sh")))
-    return _minhash_signature(exploded, "__id", "__h", num_hashes, seed)
+    ).withColumn("__h", family.key(F.col("__sh")))
+    mins = [F.min(family.hash(i, F.col("__h"))).alias(f"__h{i}") for i in range(num_hashes)]
+    sig = exploded.groupBy("__id").agg(*mins)
+    return sig.select("__id", F.array(*[f"__h{i}" for i in range(num_hashes)]).alias("signature"))
 
 
 def minhash_signatures(
@@ -198,13 +202,15 @@ def minhash_signatures(
     num_hashes: int = 16,
     seed: int = 42,
     num_partitions: int | None = None,
+    family: MinHashFamily | None = None,
 ) -> DataFrame:
     """Per-document MinHash signature table (__id, signature) — the
     compact sketch an ingest guard persists instead of text: estimated
     Jaccard between two docs is the fraction of agreeing signature
-    positions (see :func:`signature_jaccard`)."""
+    positions (see :func:`signature_jaccard`). ``family`` defaults to
+    :func:`universal_family` of ``seed``."""
     shingled = _shingled_docs(df, id_col, text_col, shingle_n, num_partitions)
-    return _signatures_from_shingled(shingled, num_hashes, seed)
+    return _signatures(shingled, num_hashes, family or universal_family(seed))
 
 
 def lsh_band_keys(sig: DataFrame, num_hashes: int = 16, bands: int = 8) -> DataFrame:
@@ -229,13 +235,17 @@ def lsh_band_keys(sig: DataFrame, num_hashes: int = 16, bands: int = 8) -> DataF
     ).select("__id", F.col("bk.band").alias("band"), F.col("bk.key").alias("key"))
 
 
+def signature_agreement(sig_a: Column, sig_b: Column) -> Column:
+    """Number of positions where two equal-length signatures agree."""
+    return F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda b: b))
+
+
 def signature_jaccard(sig_a: Column, sig_b: Column) -> Column:
     """Estimated Jaccard from two equal-length MinHash signatures: the
     fraction of agreeing positions (the standard unbiased estimator).
     Pure array expressions — usable on persisted signature sketches
     with no access to the original text."""
-    agree = F.size(F.filter(F.zip_with(sig_a, sig_b, lambda x, y: x == y), lambda b: b))
-    return agree / F.size(sig_a)
+    return signature_agreement(sig_a, sig_b) / F.size(sig_a)
 
 
 def minhash_near_duplicates(
@@ -248,23 +258,26 @@ def minhash_near_duplicates(
     threshold: float = 0.6,
     seed: int = 42,
     num_partitions: int | None = None,
+    family: MinHashFamily | None = None,
 ) -> DataFrame:
     """MinHash + LSH banding near-duplicate detection, scale path.
 
-    shingle → 61-bit hash → ``num_hashes`` min-hash signature → split
+    shingle → family hash → ``num_hashes`` min-hash signature → split
     into ``bands`` bands of r = num_hashes/bands rows → bucket-join on
     (band index, band hash) → verify candidates with exact shingle
     Jaccard (via :func:`ngram_jaccard_pairs`'s math on the candidate
     set only). With b=8, r=2 the LSH S-curve crosses ~0.5 at
     J ≈ (1/8)^(1/2) ≈ 0.35 — generous candidate generation whose false
-    positives the exact verifier discards.
+    positives the exact verifier discards. ``family`` defaults to
+    :func:`universal_family` of ``seed``.
 
-    Returns (id_a, id_b, jaccard) with jaccard ≥ threshold.
+    Returns (id_a, id_b, common, jaccard) with jaccard ≥ threshold —
+    the shape of :func:`ngram_jaccard_pairs`.
     """
     # shared LSH front half (shingle cache + signatures + band keys):
     # the streaming ingest guard reuses exactly these pieces
     shingled = _shingled_docs(df, id_col, text_col, shingle_n, num_partitions)
-    sig = _signatures_from_shingled(shingled, num_hashes, seed)
+    sig = _signatures(shingled, num_hashes, family or universal_family(seed))
     band_rows = lsh_band_keys(sig, num_hashes=num_hashes, bands=bands)
 
     cand = (
@@ -295,8 +308,8 @@ def minhash_near_duplicates(
     # the registry query's global orderBy re-runs it in the range
     # exchange's SAMPLING pass, and pagerank/connected-components
     # symmetrize pairs with a UNION whose branches each re-run it.
-    # The materialized rows are (id_a, id_b, jaccard) for the BANDED
-    # candidate set only — bounded by the LSH posture, never corpus².
+    # The materialized rows are (id_a, id_b, common, jaccard) for the
+    # BANDED candidate set only — bounded by the LSH posture, never corpus².
     sa = shingled.select(F.col("__id").alias("id_a"), F.col("__shingles").alias("__sh_a"))
     sb = shingled.select(F.col("__id").alias("id_b"), F.col("__shingles").alias("__sh_b"))
     inter = F.size(F.array_intersect("__sh_a", "__sh_b"))
@@ -304,7 +317,7 @@ def minhash_near_duplicates(
     scored = (
         cand.join(sa, "id_a")
         .join(sb, "id_b")
-        .select("id_a", "id_b", (inter / union).alias("jaccard"))
+        .select("id_a", "id_b", inter.alias("common"), (inter / union).alias("jaccard"))
         .localCheckpoint(eager=False)
     )
     return scored.filter(F.col("jaccard") >= threshold)
@@ -317,13 +330,15 @@ def simhash_near_duplicates(
     shingle_n: int = 2,
     hamming_max: int = 3,
     num_partitions: int | None = None,
+    bits: int = 64,
+    feature_hash: Callable[[Column], Column] = F.xxhash64,
 ) -> DataFrame:
-    """SimHash near-dup: 64-bit signature = sign(Σ ±bit per feature
-    hash); candidate generation bands the signature into
-    ``hamming_max + 1`` bit-blocks — by pigeonhole, any pair within
-    ``hamming_max`` Hamming distance matches exactly on at least one
-    block, so recall at the threshold is GUARANTEED, not probabilistic.
-    Exact Hamming verification filters the candidates.
+    """SimHash near-dup: ``bits``-bit signature = sign(Σ ±bit per
+    feature hash, ``feature_hash(shingle)`` a BIGINT); candidate
+    generation is :func:`banded_hamming_pairs` — by pigeonhole, any
+    pair within ``hamming_max`` Hamming distance matches exactly on at
+    least one block, so recall at the threshold is GUARANTEED, not
+    probabilistic. Exact Hamming verification filters the candidates.
 
     Returns (id_a, id_b, hamming).
     """
@@ -332,9 +347,9 @@ def simhash_near_duplicates(
     feats = df.select(
         F.col(id_col).alias("__id"),
         F.explode(word_shingles(text_col, shingle_n)).alias("__sh"),
-    ).withColumn("__h", F.xxhash64("__sh"))
+    ).withColumn("__h", feature_hash(F.col("__sh")))
 
-    # per-bit vote: for each of 64 bits, +1 if set else -1; sum per doc.
+    # per-bit vote: for each bit, +1 if set else -1; sum per doc.
     # Bit masks via shiftleft (1<<63 literal would overflow a signed long).
     def _mask(b: int) -> Column:
         return F.shiftleft(F.lit(1).cast("long"), b)
@@ -343,22 +358,24 @@ def simhash_near_duplicates(
         F.sum(
             F.when(F.col("__h").bitwiseAND(_mask(b)) != 0, 1).otherwise(-1)
         ).alias(f"__b{b}")
-        for b in range(64)
+        for b in range(bits)
     ]
     voted = feats.groupBy("__id").agg(*bit_votes)
     sig = F.lit(0).cast("long")
-    for b in range(64):
+    for b in range(bits):
         sig = sig.bitwiseOR(F.when(F.col(f"__b{b}") > 0, _mask(b)).otherwise(F.lit(0).cast("long")))
     signed = voted.select("__id", sig.alias("simhash"))
-    return banded_hamming_pairs(signed, "__id", "simhash", hamming_max)
+    return banded_hamming_pairs(signed, "__id", "simhash", hamming_max, bits)
 
 
 def banded_hamming_pairs(
-    signed: DataFrame, id_col: str, sig_col: str, hamming_max: int
+    signed: DataFrame, id_col: str, sig_col: str, hamming_max: int, bits: int = 64
 ) -> DataFrame:
-    """Pigeonhole-banded Hamming search over 64-bit BIGINT signatures —
-    the candidate-generation core shared by SimHash (text) and the
-    perceptual-hash tier (media payloads, operators/multimodal.py).
+    """Pigeonhole-banded Hamming search over ``bits``-bit BIGINT
+    signatures (bits above ``bits`` must be zero) — the candidate
+    generation and verify shared by SimHash (text), the perceptual-hash
+    tier (media payloads, operators/multimodal.py) and their md5
+    oracle twins.
 
     Bands the signature into ``hamming_max + 1`` bit-blocks: any pair
     within ``hamming_max`` Hamming distance matches exactly on at
@@ -368,7 +385,7 @@ def banded_hamming_pairs(
     """
     signed = signed.select(F.col(id_col).alias("__id"), F.col(sig_col).alias("__sig"))
     n_blocks = hamming_max + 1
-    width = 64 // n_blocks
+    width = bits // n_blocks
     # block i = bits [i*width, (i+1)*width) (last block absorbs the
     # remainder); explode each signature into its blocks
     def block_value(i: int) -> Column:
@@ -412,6 +429,7 @@ def semantic_near_duplicates(
     n_lists: int | None = None,
     threshold: float = 0.95,
     seed: int = 42,
+    assign: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs: cluster the
     embedding space (distributed KMeans), then compare pairs only
@@ -439,17 +457,23 @@ def semantic_near_duplicates(
 
     Reuses the IVF index's seeded KMeans assignment (ml/ann.py), so a
     corpus written with ``IVFIndex.write_partitioned`` dedups with
-    zero extra clustering cost.
+    zero extra clustering cost. ``assign`` replaces that bucketing: it
+    maps ``embeddings`` to the same rows plus an integer
+    ``centroid_id``. Returns (id_a, id_b, centroid_id, cos_sim).
     """
     from databeats_spark.functions.similarity import dot, norm
-    from databeats_spark.ml.ann import IVFIndex
 
-    if n_lists is None:
-        n_lists = max(8, embeddings.count() // 400)
-    idx = IVFIndex.fit(
-        embeddings, id_col, vec_col, n_lists=n_lists, seed=seed,
-        max_iter=4, init_mode="random",
-    )
+    if assign is None:
+        from databeats_spark.ml.ann import IVFIndex
+
+        if n_lists is None:
+            n_lists = max(8, embeddings.count() // 400)
+        assigned = IVFIndex.fit(
+            embeddings, id_col, vec_col, n_lists=n_lists, seed=seed,
+            max_iter=4, init_mode="random",
+        ).assigned
+    else:
+        assigned = assign(embeddings)
     # pin the assignment once: both sides of the self-join read the same
     # blocks instead of re-running the KMeans transform + scan twice.
     # Each row also carries its precomputed L2 norm: the candidate join
@@ -459,7 +483,7 @@ def semantic_near_duplicates(
     # suffices. norm(v) here is the same sqrt(dot(v, v)) expression
     # cosine() expands to, so dot/(n_a·n_b) is bit-identical to the
     # former per-pair arithmetic — only computed n times instead of n²/k.
-    e = idx.assigned.select(
+    e = assigned.select(
         F.col(id_col).alias("__id"),
         F.col(vec_col).alias("__v"),
         "centroid_id",
@@ -475,6 +499,7 @@ def semantic_near_duplicates(
         .select(
             F.col("a.__id").alias("id_a"),
             F.col("b.__id").alias("id_b"),
+            F.col("a.centroid_id").alias("centroid_id"),
             (
                 dot(F.col("a.__v"), F.col("b.__v"))
                 / (F.col("a.__n") * F.col("b.__n"))

@@ -301,8 +301,20 @@ def blockmean_near_dups(
     """Multi-scale block-mean near-dup pairs: a pair is a candidate
     when it verifies within ``hamming_max`` at ANY crop scale (the
     recall union — border-edited dups survive only the cropped scale,
-    byte-identical dups all scales). Per-scale search reuses
-    banded_hamming_pairs verbatim; the union dedups to one row per
+    byte-identical dups all scales). Returns (id_a, id_b, hamming,
+    n_scales) via :func:`multi_scale_hamming_pairs`."""
+    scales = [
+        blockmean_payloads(df, id_col, payload_col, crop=c, block_means=block_means)
+        for c in crops
+    ]
+    return multi_scale_hamming_pairs(scales, id_col, "bmh", hamming_max)
+
+
+def multi_scale_hamming_pairs(
+    scales: list[DataFrame], id_col: str, sig_col: str, hamming_max: int, bits: int = 64
+) -> DataFrame:
+    """One banded Hamming search per signature scale
+    (operators/dedup.py::banded_hamming_pairs), unioned to one row per
     pair carrying the MINIMUM hamming over scales and how many scales
     matched. Returns (id_a, id_b, hamming, n_scales)."""
     from functools import reduce
@@ -310,13 +322,7 @@ def blockmean_near_dups(
     from databeats_spark.operators.dedup import banded_hamming_pairs
 
     per_scale = [
-        banded_hamming_pairs(
-            blockmean_payloads(df, id_col, payload_col, crop=c, block_means=block_means),
-            id_col,
-            "bmh",
-            hamming_max,
-        )
-        for c in crops
+        banded_hamming_pairs(s, id_col, sig_col, hamming_max, bits) for s in scales
     ]
     return (
         reduce(DataFrame.unionAll, per_scale)
@@ -335,7 +341,7 @@ def perceptual_near_dups(
     hamming_max: int = 3,
     tiny_image=None,
 ) -> DataFrame:
-    """dHash signatures + the SimHash pigeonhole banding verbatim:
+    """dHash signatures + the SimHash pigeonhole banding:
     every payload pair within ``hamming_max`` signature bits is
     returned (recall guaranteed by the banding, exactness by the
     bit_count verify). Returns (id_a, id_b, hamming)."""

@@ -123,7 +123,7 @@ def exact_dedup_stage(docs: DataFrame) -> DataFrame:
 
 def lsh_pairs(docs: DataFrame) -> DataFrame:
     """The production near-dup pair generator: MinHash+LSH candidates
-    verified at NEAR_DUP_THRESHOLD, as (id_a, id_b, jaccard) rows."""
+    verified at NEAR_DUP_THRESHOLD, as (id_a, id_b, common, jaccard) rows."""
     return minhash_near_duplicates(
         docs, "doc_id", "text", threshold=NEAR_DUP_THRESHOLD,
         num_partitions=docs.sparkSession.sparkContext.defaultParallelism,

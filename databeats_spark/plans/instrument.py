@@ -7,7 +7,11 @@ one per-step channel.
   plan runs, nothing is collected — and the record carries the
   min-over-reps ``wall_s`` / ``cpu_seconds`` / ``run_seconds`` plus the
   stage counters of the last rep (jobs, stages, tasks, shuffle-write
-  bytes/records, spill: plan properties, identical across reps).
+  bytes/records, spill). ``n_jobs``, ``n_tasks`` and the records are
+  stable across reps and sessions; ``n_stages`` and the stage
+  shuffle-write bytes are not (curation_funnel at sf0.01 read 85-87
+  stages and bytes ±40 B across fresh sessions of unchanged code), so
+  compare those two only with their run-to-run spread.
   ``bench.py`` and ``scripts/{job_audit,scale_cores,scale_curve}.py``
   render it.
 - :func:`movement` audits the bytes a query moves: it executes the

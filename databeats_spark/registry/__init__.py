@@ -82,15 +82,26 @@ class QuerySpec:
 # Regenerate with ``python scripts/rotation_report.py``.
 _WINDOW = (
     # Mirrors scripts/rotation_report.py's recommended front-50 exactly.
-    # — CHANGED_QUERIES re-certs (one funnel runner; CC fixpoint raise):
-    "curation_funnel_exact",
+    # — CHANGED_QUERIES re-certs (near-dup twins call their production
+    # operators; one closure-CTE oracle prefix):
     "curation_funnel",
     "dedup_components",
-    "dup_cluster_sizes",
-    # — age-4 certifying twin (forced):
     "blockmean_near_dups_exact",
-    # — oldest greens, report order:
     "minhash_near_dups",
+    "takedown_blast_radius",
+    "minhash_near_dups_exact",
+    "minhash_estimate_audit",
+    "simhash_near_dups",
+    "simhash_near_dups_exact",
+    "semdedup_near_dups_exact",
+    "semdedup_near_dups",
+    "canonical_docs",
+    "phash_near_dups",
+    "phash_near_dups_exact",
+    "blockmean_near_dups",
+    "pagerank_docs",
+    "canonical_best_docs",
+    # — oldest greens, report order:
     "price_quantiles",
     "order_gaps",
     "session_windows",
@@ -124,17 +135,6 @@ _WINDOW = (
     "lang_label_noise",
     "lang_id_kappa",
     "zorder_locality_audit",
-    "bloom_incremental_dedup",
-    "bpe_fertility_by_lang",
-    "cusum_changepoint",
-    "dow_seasonal_decompose",
-    "theil_sen_trend",
-    "holt_winters_forecast",
-    "holt_linear_forecast",
-    "js_source_drift",
-    "chao1_vocab_richness",
-    "k_eidetic_histogram",
-    "ngram_novelty_hashed",
 )
 
 # Queries whose BUILDER or ORACLE changed this round (reset to () at
@@ -145,14 +145,29 @@ _WINDOW = (
 # in r10, jackknife in r11), mechanical instead of CLAUDE.md prose the
 # report "cannot see".
 CHANGED_QUERIES: tuple[str, ...] = (
-    # the twin and the production funnel run the one sealed runner
-    # (plans/curation.py::curate_corpus) with different pair generators
-    "curation_funnel_exact",
+    # each near-dup twin is one call of its production operator with a
+    # deterministic substitute injected (operators/dedup.py,
+    # operators/multimodal.py); the production queries run the same
+    # operators with their default arguments
+    "minhash_near_dups",
+    "minhash_near_dups_exact",
+    "minhash_estimate_audit",
+    "simhash_near_dups",
+    "simhash_near_dups_exact",
+    "phash_near_dups",
+    "phash_near_dups_exact",
+    "blockmean_near_dups",
+    "blockmean_near_dups_exact",
+    "semdedup_near_dups",
+    "semdedup_near_dups_exact",
+    # reach minhash_near_duplicates (its output gains ``common``)
+    "pagerank_docs",
     "curation_funnel",
-    # connected_components raises when max_iter rounds end unconverged
-    # (operators/graph.py)
+    # oracle prefix rendered from one helper (documents.py::_CLOSURE_CTES)
     "dedup_components",
-    "dup_cluster_sizes",
+    "canonical_best_docs",
+    "canonical_docs",
+    "takedown_blast_radius",
 )
 
 # The driver gate only sees the first _GATE_WIDTH entries; anything past

@@ -55,6 +55,7 @@ from databeats_spark.registry import QuerySpec
 from databeats_spark.registry.documents import (
     JACCARD_THRESHOLD,
     PAIR_DOC_LIMIT,
+    _CLOSURE_CTES,
     _PAIRS_CTES,
 )
 from databeats_spark.sources.tables import load_tables, spread
@@ -342,27 +343,7 @@ def _canonical_best_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CANONICAL_BEST_DOCS_SQL = f"""
-WITH RECURSIVE {_PAIRS_CTES},
-qual AS (
-  SELECT id_a, id_b
-  FROM pairs
-  JOIN sized sa ON sa.doc_id = id_a
-  JOIN sized sb ON sb.doc_id = id_b
-  WHERE common * 1.0 / (sa.n + sb.n - common) >= {JACCARD_THRESHOLD}
-),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM qual
-  UNION
-  SELECT id_b, id_a FROM qual
-),
-reach(node, label) AS (
-  SELECT DISTINCT a, a FROM edges
-  UNION
-  SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-),
-comp AS (
-  SELECT node AS doc_id, min(label) AS component FROM reach GROUP BY node
-),
+{_CLOSURE_CTES},
 ranked AS (
   SELECT d.doc_id, d.lang, CAST(d.n_chars AS BIGINT) AS n_chars,
          row_number() OVER (

@@ -10,7 +10,7 @@ is their ground-truth verifier.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databeats_spark.functions.text import (
@@ -28,7 +28,9 @@ from databeats_spark.functions.text import (
     top_token_fraction,
     word_shingles,
 )
-from databeats_spark.operators.dedup import dedup_exact, ngram_jaccard_pairs
+from databeats_spark.operators.dedup import (
+    banded_hamming_pairs, dedup_exact, ngram_jaccard_pairs,
+)
 from databeats_spark.registry import QuerySpec
 from databeats_spark.sources.tables import load_tables, spread
 
@@ -730,6 +732,32 @@ _PAIRS_CTES = f"""t AS (
   GROUP BY 1, 2
 )"""
 
+# the near-dup graph's connected components over the pairs above:
+# qual (pairs at JACCARD_THRESHOLD) → symmetric edges → recursive
+# reachability → comp (doc_id, min reachable label). The oracle prefix
+# of every connected-components query over the verifier slice.
+_CLOSURE_CTES = f"""WITH RECURSIVE {_PAIRS_CTES},
+qual AS (
+  SELECT id_a, id_b
+  FROM pairs
+  JOIN sized sa ON sa.doc_id = id_a
+  JOIN sized sb ON sb.doc_id = id_b
+  WHERE common * 1.0 / (sa.n + sb.n - common) >= {JACCARD_THRESHOLD}
+),
+edges AS (
+  SELECT id_a AS a, id_b AS b FROM qual
+  UNION
+  SELECT id_b, id_a FROM qual
+),
+reach(node, label) AS (
+  SELECT DISTINCT a, a FROM edges
+  UNION
+  SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
+),
+comp AS (
+  SELECT node AS doc_id, min(label) AS component FROM reach GROUP BY node
+)"""
+
 _NEAR_DUP_PAIRS_SQL = f"""
 WITH {_PAIRS_CTES}
 SELECT id_a, id_b, CAST(common AS BIGINT) AS common,
@@ -803,27 +831,7 @@ def _dedup_components(
 
 
 _DEDUP_COMPONENTS_SQL = f"""
-WITH RECURSIVE {_PAIRS_CTES},
-qual AS (
-  SELECT id_a, id_b
-  FROM pairs
-  JOIN sized sa ON sa.doc_id = id_a
-  JOIN sized sb ON sb.doc_id = id_b
-  WHERE common * 1.0 / (sa.n + sb.n - common) >= {JACCARD_THRESHOLD}
-),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM qual
-  UNION
-  SELECT id_b, id_a FROM qual
-),
-reach(node, label) AS (
-  SELECT DISTINCT a, a FROM edges
-  UNION
-  SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-),
-comp AS (
-  SELECT node AS doc_id, min(label) AS component FROM reach GROUP BY node
-)
+{_CLOSURE_CTES}
 SELECT doc_id, component,
        CAST(count(*) OVER (PARTITION BY component) AS BIGINT) AS n_members
 FROM comp
@@ -926,7 +934,7 @@ ORDER BY doc_id
 # The cheap pre-embedding dedup tier for images/frames (r7 VERDICT
 # item 7): dHash signatures (operators/multimodal.py::dhash_payloads,
 # Arrow-batched tiny-image downsample + gradient signs) fed through
-# the SimHash pigeonhole banding VERBATIM
+# the SimHash pigeonhole banding
 # (operators/dedup.py::banded_hamming_pairs). The signature stage is
 # mapInPandas → no SQL oracle (rows-only); semantics are pinned by
 # test_multimodal's planted-dup recall test, and the banding/verify
@@ -944,94 +952,46 @@ def _phash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Q: phash_near_dups_exact — oracle twin of the perceptual tier ---
-# Same promotion pattern as simhash_near_dups_exact: the production
-# signature (numpy tiny-image dHash) is not reproducible in DuckDB, so
-# the twin substitutes an engine-shared deterministic signature — bit
-# b is the HIGH BIT of hex digit b of md5(text) (digit >= '8'), the
-# md5 of the exact payload bytes the production op hashes (payload =
-# utf-8 of text on both engines). The signature rides as a '0'/'1'
-# STRING (the r7 recipe — no cross-engine integer bit-op semantics to
-# align); banding is the production pigeonhole scheme verbatim (4
-# blocks → any pair within hamming 3 collides on >= 1 block), and
-# exact Hamming is a per-position character compare. 20 bits, not the
-# production 64: md5 destroys the locality a real dHash preserves and
-# the corpus has no byte-identical texts, so at 64 bits the twin's
-# result would be empty-by-construction (P[hamming<=3] ~ 2^-51); at 20
-# bits the deterministic background distribution itself yields ~1e2
-# pairs spanning hammings 0..3 — the band bucket-join AND the verify
-# filter both do real work, hash-matched end to end.
+# The production search (operators/dedup.py::banded_hamming_pairs) run
+# on an engine-shared deterministic signature in place of the numpy
+# tiny-image dHash, which DuckDB cannot reproduce: bit b is the HIGH
+# BIT of hex digit b of md5(text) (digit >= '8'), the md5 of the exact
+# payload bytes the production op hashes (payload = utf-8 of text on
+# both engines). The oracle carries that signature as a '0'/'1' STRING
+# and bands/verifies it per character (_md5_band_ctes); the Spark side
+# packs the same bits into a BIGINT (_md5_bits) for the production
+# BIGINT banding (4 blocks → any pair within hamming 3 collides on
+# >= 1 block) and bit_count verify. 20 bits, not the production 64:
+# md5 destroys the locality a real dHash preserves and the corpus has
+# no byte-identical texts, so at 64 bits the twin's result would be
+# empty-by-construction (P[hamming<=3] ~ 2^-51); at 20 bits the
+# deterministic background distribution itself yields ~1e2 pairs
+# spanning hammings 0..3 — the band bucket-join AND the verify filter
+# both do real work, hash-matched end to end.
 PHASH_EXACT_BITS = 20
 PHASH_EXACT_HAMMING_MAX = 3
 
 
-def _md5_band_pairs(
-    hashed: DataFrame,
-    bits: int = PHASH_EXACT_BITS,
-    hmax: int = PHASH_EXACT_HAMMING_MAX,
-) -> DataFrame:
-    """(doc_id, h md5-hex) frame -> exact (id_a, id_b, hamming) pairs
-    within ``hmax`` bits via the production pigeonhole banding.
-
-    ONE Spark-side definition of the sig/band/verify arithmetic, shared
-    by phash_near_dups_exact and both crop scales of
-    blockmean_near_dups_exact (the oracle-twin recipe: the SQL twin of
-    this helper is ``_md5_band_ctes`` below — change them together)."""
-    n_blocks = hmax + 1
-    width = bits // n_blocks
-    sig = hashed.select(
-        "doc_id",
-        F.concat(
-            *[
-                F.when(
-                    F.substring("h", b + 1, 1).isin(*"89abcdef"), F.lit("1")
-                ).otherwise(F.lit("0"))
-                for b in range(bits)
-            ]
-        ).alias("sig"),
-    )
-    banded = sig.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("block"),
-                        F.substring("sig", i * width + 1, width).alias("value"),
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "sig", "bk.block", "bk.value")
-    a, b = banded.alias("a"), banded.alias("b")
-    hamming = sum(
-        (F.substring(F.col("a.sig"), p + 1, 1) != F.substring(F.col("b.sig"), p + 1, 1)).cast("int")
-        for p in range(bits)
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.value") == F.col("b.value"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            hamming.cast("long").alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= hmax)
-    )
+def _md5_bits(h: Column, bits: int) -> Column:
+    """BIGINT whose bit b is set iff hex digit b of the md5 hex string
+    ``h`` is >= '8' (b < ``bits`` <= 63) — the Spark side of the
+    '0'/'1' signature string ``_md5_band_ctes`` builds in SQL."""
+    high = F.translate(F.substring(h, 1, bits), "0123456789abcdef", "0000000011111111")
+    return F.conv(F.reverse(high), 2, 10).cast("long")
 
 
 def _phash_near_dups_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from databeats_spark.sources.tables import spread
-
     docs = spread(load_tables(spark, sf_dir, ["documents"]).documents, spark)
-    hashed = docs.select("doc_id", F.md5(F.encode(F.col("text"), "utf-8")).alias("h"))
-    return _md5_band_pairs(hashed).orderBy("id_a", "id_b")
+    signed = docs.select(
+        "doc_id",
+        _md5_bits(F.md5(F.encode(F.col("text"), "utf-8")), PHASH_EXACT_BITS).alias("sig"),
+    )
+    pairs = banded_hamming_pairs(
+        signed, "doc_id", "sig", PHASH_EXACT_HAMMING_MAX, bits=PHASH_EXACT_BITS
+    )
+    return pairs.select(
+        "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
+    ).orderBy("id_a", "id_b")
 
 
 _PHASH_SIG = " || ".join(
@@ -1045,9 +1005,10 @@ _PHASH_HAMMING = " + ".join(
 
 
 def _md5_band_ctes(src: str, tag: str) -> str:
-    """SQL twin of ``_md5_band_pairs``: emits sig_{tag} / banded_{tag} /
-    pairs_{tag} CTE text over a ``src`` CTE carrying (doc_id, h) —
-    the ONE SQL-side definition of the sig/band/verify arithmetic."""
+    """SQL twin of ``_md5_bits`` + the BIGINT banding: emits sig_{tag} /
+    banded_{tag} / pairs_{tag} CTE text over a ``src`` CTE carrying
+    (doc_id, h) — the ONE SQL-side definition of the sig/band/verify
+    arithmetic."""
     width = PHASH_EXACT_BITS // (PHASH_EXACT_HAMMING_MAX + 1)
     blocks = "\n  UNION ALL\n".join(
         f"  SELECT doc_id, sig, {i} AS block, substr(sig, {i * width + 1}, {width}) "
@@ -1079,8 +1040,8 @@ ORDER BY id_a, id_b
 # --- Q: blockmean_near_dups — multi-scale perceptual near-dup --------
 # Second signature family of the perceptual tier (r8 VERDICT item 6):
 # block-mean hashes (Yang et al. 2006) at two crop scales — full frame
-# + 0.75 center crop — each fed through the SimHash pigeonhole banding
-# verbatim, unioned to one row per pair (min hamming, scales matched).
+# + 0.75 center crop — each fed through the SimHash pigeonhole banding,
+# unioned to one row per pair (min hamming, scales matched).
 # The crop scale catches border-edited dups (letterbox / watermark /
 # frame-edge timestamps) whose full-frame hamming blows past the
 # threshold — pinned by test_connectors' planted letterbox test.
@@ -1099,44 +1060,37 @@ def _blockmean_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- Q: blockmean_near_dups_exact — oracle twin of the two-scale tier -
-# Closes the one r9 twin gap (VERDICT r9 item 4): the shared banding was
-# already certified by phash_near_dups_exact, but the MULTI-SCALE
-# arithmetic — per-scale search, union, min(hamming), scales-matched
-# count — was single-engine. This twin runs that exact pipeline shape
-# with the engine-shared md5 signature substitute at two "crop" scales:
-# scale 0 hashes the full text (the full frame), scale 1 hashes the
-# CENTRAL 3/4 substring (the 0.75 center crop analog — same substring
-# on both engines: n = greatest(1, length), span = greatest(1, 3n DIV
-# 4), start = (n - span) DIV 2 + 1, all non-negative integer floor-div,
-# exact through the double path since n < 2^50). Each scale feeds the
-# ONE shared band+verify definition (_md5_band_pairs /_md5_band_ctes);
-# the union then aggregates to one row per pair with min hamming and
-# n_scales, byte-identical to the production operator's final stage.
+# The production multi-scale search (operators/multimodal.py::
+# multi_scale_hamming_pairs — per-scale banded search, union,
+# min(hamming), scales-matched count) run on the engine-shared md5
+# signature substitute at two "crop" scales: scale 0 hashes the full
+# text (the full frame), scale 1 hashes the CENTRAL 3/4 substring (the
+# 0.75 center crop analog — same substring on both engines: n =
+# greatest(1, length), span = greatest(1, 3n DIV 4), start = (n - span)
+# DIV 2 + 1, all non-negative integer floor-div, exact through the
+# double path since n < 2^50). The oracle bands each scale with
+# _md5_band_ctes.
 
 def _blockmean_near_dups_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from databeats_spark.sources.tables import spread
+    from databeats_spark.operators.multimodal import multi_scale_hamming_pairs
 
     docs = spread(load_tables(spark, sf_dir, ["documents"]).documents, spark)
     n = F.greatest(F.lit(1).cast("bigint"), F.length("text").cast("bigint"))
     span = F.greatest(F.lit(1).cast("bigint"), F.floor(n * 3 / 4).cast("bigint"))
     start = (F.floor((n - span) / 2).cast("bigint") + 1).cast("int")
-    full = docs.select("doc_id", F.md5(F.encode(F.col("text"), "utf-8")).alias("h"))
-    crop = docs.select(
-        "doc_id",
-        F.md5(
-            F.encode(F.substring(F.col("text"), start, span.cast("int")), "utf-8")
-        ).alias("h"),
-    )
-    return (
-        _md5_band_pairs(full)
-        .unionAll(_md5_band_pairs(crop))
-        .groupBy("id_a", "id_b")
-        .agg(
-            F.min("hamming").cast("long").alias("hamming"),
-            F.count(F.lit(1)).cast("bigint").alias("n_scales"),
+    crop = F.substring(F.col("text"), start, span.cast("int"))
+    scales = [
+        docs.select(
+            "doc_id", _md5_bits(F.md5(F.encode(t, "utf-8")), PHASH_EXACT_BITS).alias("sig")
         )
-        .orderBy("id_a", "id_b")
+        for t in (F.col("text"), crop)
+    ]
+    pairs = multi_scale_hamming_pairs(
+        scales, "doc_id", "sig", PHASH_EXACT_HAMMING_MAX, bits=PHASH_EXACT_BITS
     )
+    return pairs.select(
+        "id_a", "id_b", F.col("hamming").cast("long").alias("hamming"), "n_scales"
+    ).orderBy("id_a", "id_b")
 
 
 _BLOCKMEAN_NEAR_DUPS_EXACT_SQL = f"""
@@ -1768,7 +1722,7 @@ SPECS = [
     QuerySpec("posexplode_tokens", "positional explode: (token, position) pairs", _posexplode_tokens, _POSEXPLODE_TOKENS_SQL, tags=("text", "reshape")),
     QuerySpec("multimodal_bytes", "binary payload columns: length + sha256", _multimodal_bytes, _MULTIMODAL_BYTES_SQL, tags=("multimodal",)),
     QuerySpec("phash_near_dups", "perceptual dHash near-dup over media payloads (rows-only; recall pytest-pinned, banding certified by the exact twin)", _phash_near_dups, None, tags=("multimodal", "dedup", "approx")),
-    QuerySpec("phash_near_dups_exact", "oracle twin: md5-bit signatures through the identical pigeonhole band + Hamming verify", _phash_near_dups_exact, _PHASH_NEAR_DUPS_EXACT_SQL, tags=("multimodal", "dedup")),
+    QuerySpec("phash_near_dups_exact", "oracle twin: md5-bit signatures through the production pigeonhole band + Hamming verify", _phash_near_dups_exact, _PHASH_NEAR_DUPS_EXACT_SQL, tags=("multimodal", "dedup")),
     QuerySpec("blockmean_near_dups", "multi-scale block-mean perceptual near-dup (full frame + center crop, border-edit robust; rows-only, banding certified by phash_near_dups_exact)", _blockmean_near_dups, None, tags=("multimodal", "dedup", "approx")),
     QuerySpec("blockmean_near_dups_exact", "oracle twin of the two-scale tier: md5-bit signatures at full-text + central-3/4 'crop' scales through the shared banding, union to min-hamming + n_scales", _blockmean_near_dups_exact, _BLOCKMEAN_NEAR_DUPS_EXACT_SQL, tags=("multimodal", "dedup")),
     QuerySpec("tf_idf_terms", "TF-IDF top terms per document", _tf_idf_terms, _TF_IDF_SQL, tags=("text",)),

@@ -6,9 +6,10 @@ the scale paths — their production hash/cluster machinery (xxhash64,
 KMeans) isn't DuckDB-reproducible, so they carry rows-only checks
 pinned by pytest against the exact operators (tests/test_near_dup.py).
 Since r7 each tier ALSO has an ``*_exact`` oracle twin that runs the
-identical pipeline arithmetic with an engine-shared deterministic
-substitute (md5 hash family / fixed centroids) and hash-matches DuckDB
-end to end — the approximation is the only thing left uncertified.
+production operator with an engine-shared deterministic substitute
+injected (md5 hash family / md5 signature bits / fixed centroids) and
+hash-matches DuckDB end to end — the approximation is the only thing
+left uncertified.
 """
 
 from __future__ import annotations
@@ -17,7 +18,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from databeats_spark.functions.similarity import cosine_top_k, lsh_cosine_top_k
-from databeats_spark.operators.dedup import minhash_near_duplicates, simhash_near_duplicates
+from databeats_spark.operators.dedup import (
+    MinHashFamily,
+    minhash_near_duplicates,
+    minhash_signatures,
+    ngram_jaccard_pairs,
+    semantic_near_duplicates,
+    signature_agreement,
+    simhash_near_duplicates,
+)
 from databeats_spark.registry import QuerySpec
 from databeats_spark.sources.tables import load_tables
 
@@ -72,8 +81,8 @@ def _lsh_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- lsh_cosine_topk_exact: oracle promotion of the hyperplane tier --
-# Unlike the other *_exact twins, the Spark side here IS the
-# production op verbatim (lsh_cosine_top_k, 4 tables x 8 planes,
+# Unlike the other *_exact twins, the Spark side here needs no
+# substitute at all (lsh_cosine_top_k, 4 tables x 8 planes,
 # Hamming-1 multiprobe): its plane vectors are seeded NumPy literals
 # folded into the plan, so the oracle can inline the SAME 32 plane
 # rows as VALUES and replay the whole pipeline — signature bits from
@@ -215,45 +224,35 @@ def _fixed_assign_ctes(n_lists: int) -> str:
 
 
 # --- semdedup_near_dups_exact: oracle promotion of the SemDeDup tier --
-# Same promotion as ivf_cosine_topk_exact: SemDeDup's only
-# non-SQL-expressible piece is the KMeans bucketing; the candidate
-# SHAPE (compare pairs only within a cluster — n²/k, never n²) and the
-# exact-cosine verification are deterministic arithmetic. Fix the
-# centroids (first SEMDEDUP_EXACT_LISTS corpus vectors), assign by
-# argmax cosine, and the whole within-cluster pair pipeline runs
-# dual-engine and hash-matches. Cluster QUALITY stays KMeans' job
-# (recall-floor pytest on the production op); this certifies that the
-# bucketed self-join + threshold arithmetic is right.
+# The production within-cluster pair search
+# (operators/dedup.py::semantic_near_duplicates) with its one
+# non-SQL-expressible piece, the KMeans bucketing, replaced: the
+# centroids are fixed (first SEMDEDUP_EXACT_LISTS corpus vectors) and
+# each vector goes to its argmax-cosine centroid. The candidate SHAPE
+# (compare pairs only within a cluster — n²/k, never n²) and the
+# exact-cosine verification then run dual-engine and hash-match.
+# Cluster QUALITY stays KMeans' job (recall-floor pytest on the
+# production op); this certifies the bucketed self-join + threshold
+# arithmetic.
 SEMDEDUP_EXACT_LISTS = 8
 SEMDEDUP_EXACT_THRESHOLD = 0.4
 
 
 def _semdedup_near_dups_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from databeats_spark.functions.similarity import cosine
     from databeats_spark.sources.tables import spread
 
     # the cosine HOF chains are compute-bound: spread the (often
     # single-split) embeddings scan before them (CLAUDE.md rule)
     emb = spread(load_tables(spark, sf_dir, ["embeddings"]).embeddings, spark)
-    assign = _fixed_centroid_assign(emb, SEMDEDUP_EXACT_LISTS)
-    a = assign.select(
-        F.col("vec_id").alias("id_a"), F.col("embedding").alias("__va"), "centroid_id"
+    pairs = semantic_near_duplicates(
+        emb, threshold=SEMDEDUP_EXACT_THRESHOLD,
+        assign=lambda e: _fixed_centroid_assign(e, SEMDEDUP_EXACT_LISTS),
     )
-    b = assign.select(
-        F.col("vec_id").alias("id_b"), F.col("embedding").alias("__vb"), "centroid_id"
-    )
-    return (
-        a.join(b, "centroid_id")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("__cs", cosine("__va", "__vb"))
-        .filter(F.col("__cs") >= SEMDEDUP_EXACT_THRESHOLD)
-        .select(
-            "id_a", "id_b",
-            F.col("centroid_id").cast("long").alias("cluster"),
-            F.round("__cs", 6).alias("cos_sim"),
-        )
-        .orderBy("id_a", "id_b")
-    )
+    return pairs.select(
+        "id_a", "id_b",
+        F.col("centroid_id").cast("long").alias("cluster"),
+        F.round("cos_sim", 6).alias("cos_sim"),
+    ).orderBy("id_a", "id_b")
 
 
 _SEMDEDUP_NEAR_DUPS_EXACT_SQL = f"""
@@ -285,86 +284,40 @@ def _minhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- minhash_near_dups_exact: oracle promotion of the MinHash tier ----
 # The production op (minhash_near_dups) hashes shingles with xxhash64 +
 # integer universal hashing — fast, but not reproducible in DuckDB, so
-# it stays rows-only. THIS twin runs the IDENTICAL LSH pipeline
-# (signature → bands → bucket-join candidates → exact-Jaccard verify)
-# with an md5 hash family: h_i(sh) = md5('i:' || sh), min taken
-# LEXICOGRAPHICALLY over the hex strings — a total order both engines
-# share byte-for-byte, so every stage is dual-engine and the final
-# pair list hash-matches. Banding math is unchanged (B bands of R
-# rows; a pair collides iff some band's R mins all agree), so this
-# certifies the exact candidate-generation arithmetic the production
-# op uses at scale. B*R kept small (4x3) — the twin proves the
+# it stays rows-only. THIS twin runs the same operator
+# (operators/dedup.py::minhash_near_duplicates: signature → bands →
+# bucket-join candidates → exact-Jaccard verify) with the md5 hash
+# family below: h_i(sh) = md5('i:' || sh), min taken LEXICOGRAPHICALLY
+# over the hex strings — a total order both engines share
+# byte-for-byte. Band keys differ by engine (xxhash64 of the joined
+# slice in Spark, md5 in the oracle), but both are equal exactly when
+# the band's R mins are, so the candidate pairs — and the verified
+# list — hash-match. B*R kept small (4x3) — the twin proves the
 # pipeline, the production op owns the recall/threshold tuning.
 MINHASH_EXACT_HASHES = 12  # 4 bands x 3 rows
 MINHASH_EXACT_BANDS = 4
 MINHASH_EXACT_ROWS = 3
 MINHASH_EXACT_THRESHOLD = 0.5
 
+_MD5_FAMILY = MinHashFamily(
+    key=lambda sh: sh, hash=lambda i, sh: F.md5(F.concat(F.lit(f"{i}:"), sh))
+)
+
 
 def _minhash_near_dups_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from databeats_spark.functions.text import word_shingles
-    from databeats_spark.sources.tables import spread
-
-    H, B, R = MINHASH_EXACT_HASHES, MINHASH_EXACT_BANDS, MINHASH_EXACT_ROWS
-    docs = spread(load_tables(spark, sf_dir, ["documents"]).documents, spark)
-    sh = docs.select(
-        "doc_id", F.explode(word_shingles("text", 3)).alias("sh")
+    t = load_tables(spark, sf_dir, ["documents"])
+    # the production query's num_partitions: both hit one shingle cache entry
+    out = minhash_near_duplicates(
+        t.documents, "doc_id", "text",
+        num_hashes=MINHASH_EXACT_HASHES, bands=MINHASH_EXACT_BANDS,
+        threshold=MINHASH_EXACT_THRESHOLD,
+        num_partitions=spark.sparkContext.defaultParallelism, family=_MD5_FAMILY,
     )
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("sh")))).alias(f"h{i}")
-            for i in range(H)
-        ]
-    )
-    melted = sig.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(b).alias("band_idx"),
-                        F.md5(
-                            F.concat_ws(
-                                "|", *[F.col(f"h{b * R + r}") for r in range(R)]
-                            )
-                        ).alias("key"),
-                    )
-                    for b in range(B)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band_idx", "bk.key")
-    a, b = melted.alias("a"), melted.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-        .distinct()
-    )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    common = (
-        cand.join(sh.select(F.col("doc_id").alias("id_a"), "sh"), "id_a")
-        .join(sh.select(F.col("doc_id").alias("id_b"), "sh"), ["id_b", "sh"])
-        .groupBy("id_a", "id_b")
-        .agg(F.count(F.lit(1)).alias("common"))
-    )
-    jac = F.col("common") / (F.col("n_a") + F.col("n_b") - F.col("common"))
-    return (
-        common.join(sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a")), "id_a")
-        .join(sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b")), "id_b")
-        .filter(jac >= MINHASH_EXACT_THRESHOLD)
-        .select(
-            "id_a",
-            "id_b",
-            F.col("common").cast("long").alias("common"),
-            F.round(jac, 6).alias("jaccard"),
-        )
-        .orderBy("id_a", "id_b")
-    )
+    return out.select(
+        "id_a", "id_b",
+        F.col("common").cast("long").alias("common"),
+        F.round("jaccard", 6).alias("jaccard"),
+    ).orderBy("id_a", "id_b")
 
 
 _SIG_COLS = ",\n         ".join(
@@ -431,56 +384,23 @@ ORDER BY c.id_a, c.id_b
 # verifier posture, not a data assumption.
 
 def _minhash_estimate_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from databeats_spark.functions.text import word_shingles
     from databeats_spark.registry.documents import PAIR_DOC_LIMIT
     from databeats_spark.sources.tables import spread
 
     H = MINHASH_EXACT_HASHES
     docs = spread(load_tables(spark, sf_dir, ["documents"]).documents, spark)
     docs = docs.filter(F.col("doc_id") < PAIR_DOC_LIMIT)
-    sh = docs.select("doc_id", F.explode(word_shingles("text", 3)).alias("sh"))
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).cast("bigint").alias("n"))
-    sig = sh.groupBy("doc_id").agg(
-        *[
-            F.min(F.md5(F.concat(F.lit(f"{i}:"), F.col("sh")))).alias(f"h{i}")
-            for i in range(H)
-        ]
-    )
-    a, b = sh.alias("a"), sh.alias("b")
-    common = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b")
-        )
-        .agg(F.count(F.lit(1)).cast("bigint").alias("common"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("n_a"))
-    sb = sizes.select(F.col("doc_id").alias("id_b"), F.col("n").alias("n_b"))
-    ga = sig.select(
-        F.col("doc_id").alias("id_a"), *[F.col(f"h{i}").alias(f"a{i}") for i in range(H)]
-    )
-    gb = sig.select(
-        F.col("doc_id").alias("id_b"), *[F.col(f"h{i}").alias(f"b{i}") for i in range(H)]
-    )
-    matches = None
-    for i in range(H):
-        term = (F.col(f"a{i}") == F.col(f"b{i}")).cast("bigint")
-        matches = term if matches is None else matches + term
-    jac = F.col("common").cast("double") / (
-        F.col("n_a") + F.col("n_b") - F.col("common")
-    ).cast("double")
+    sig = minhash_signatures(docs, "doc_id", "text", num_hashes=H, family=_MD5_FAMILY)
+    ga = sig.select(F.col("__id").alias("id_a"), F.col("signature").alias("sig_a"))
+    gb = sig.select(F.col("__id").alias("id_b"), F.col("signature").alias("sig_b"))
+    # every co-shingle pair: the exact Jaccard at threshold 0
     scored = (
-        common.join(sa, "id_a")
-        .join(sb, "id_b")
+        ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=0.0)
         .join(ga, "id_a")
         .join(gb, "id_b")
         .select(
-            jac.alias("jac"),
-            matches.cast("bigint").alias("matches"),
+            F.col("jaccard").alias("jac"),
+            signature_agreement("sig_a", "sig_b").cast("bigint").alias("matches"),
         )
     )
     est = F.col("matches").cast("double") / float(H)
@@ -657,87 +577,33 @@ ORDER BY query_id, rank
 
 # --- simhash_near_dups_exact: oracle promotion of the SimHash tier ---
 # Same promotion pattern as minhash_near_dups_exact: the production op
-# (xxhash64 feature bits, 64-bit signature) is not reproducible in
-# DuckDB, so the twin derives a 32-bit signature from md5 instead —
-# bit b of a shingle's vote vector is the HIGH BIT of hex digit b of
-# md5(shingle) (digit >= '8'), which both engines read off the same
-# lowercase hex string. The signature is carried as a 32-char '0'/'1'
-# string (no cross-engine integer bit-op semantics to align), banding
-# is the production op's pigeonhole scheme verbatim — hamming_max+1=4
-# blocks of 8 bits, so any pair within hamming 3 collides on >=1
-# block, recall GUARANTEED — and exact Hamming verification is a
-# 32-position character compare. Certifies the vote → sign → band →
-# verify arithmetic the production op runs at scale.
+# (operators/dedup.py::simhash_near_duplicates — xxhash64 feature bits,
+# 64-bit signature) is not reproducible in DuckDB, so the twin runs it
+# with a 32-bit md5 feature hash instead — bit b of a shingle's vote
+# vector is the HIGH BIT of hex digit b of md5(shingle) (digit >= '8'),
+# which both engines read off the same lowercase hex string. The oracle
+# carries the signature as a 32-char '0'/'1' string and bands/verifies
+# it per character; the Spark side packs the same bits into a BIGINT
+# (registry/documents.py::_md5_bits) for the production banding —
+# hamming_max+1=4 blocks of 8 bits, so any pair within hamming 3
+# collides on >=1 block, recall GUARANTEED — and bit_count verify.
 SIMHASH_EXACT_BITS = 32
 SIMHASH_EXACT_HAMMING_MAX = 3
 
 
 def _simhash_near_dups_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from databeats_spark.functions.text import word_shingles
-    from databeats_spark.sources.tables import spread
+    from databeats_spark.registry.documents import _md5_bits
 
-    bits, hmax = SIMHASH_EXACT_BITS, SIMHASH_EXACT_HAMMING_MAX
-    n_blocks = hmax + 1
-    width = bits // n_blocks
-    docs = spread(load_tables(spark, sf_dir, ["documents"]).documents, spark)
-    feats = docs.select(
-        "doc_id", F.explode(word_shingles("text", 2)).alias("sh")
-    ).withColumn("h", F.md5("sh"))
-    votes = feats.groupBy("doc_id").agg(
-        *[
-            F.sum(
-                F.when(
-                    F.substring("h", b + 1, 1).isin(*"89abcdef"), 1
-                ).otherwise(-1)
-            ).alias(f"b{b}")
-            for b in range(bits)
-        ]
+    t = load_tables(spark, sf_dir, ["documents"])
+    out = simhash_near_duplicates(
+        t.documents, "doc_id", "text", hamming_max=SIMHASH_EXACT_HAMMING_MAX,
+        num_partitions=spark.sparkContext.defaultParallelism,
+        bits=SIMHASH_EXACT_BITS,
+        feature_hash=lambda sh: _md5_bits(F.md5(sh), SIMHASH_EXACT_BITS),
     )
-    sig = votes.select(
-        "doc_id",
-        F.concat(
-            *[
-                F.when(F.col(f"b{b}") > 0, F.lit("1")).otherwise(F.lit("0"))
-                for b in range(bits)
-            ]
-        ).alias("sig"),
-    )
-    banded = sig.select(
-        "doc_id",
-        "sig",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("block"),
-                        F.substring("sig", i * width + 1, width).alias("value"),
-                    )
-                    for i in range(n_blocks)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "sig", "bk.block", "bk.value")
-    a, b = banded.alias("a"), banded.alias("b")
-    hamming = sum(
-        (F.substring(F.col("a.sig"), p + 1, 1) != F.substring(F.col("b.sig"), p + 1, 1)).cast("int")
-        for p in range(bits)
-    )
-    return (
-        a.join(
-            b,
-            (F.col("a.block") == F.col("b.block"))
-            & (F.col("a.value") == F.col("b.value"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("id_a"),
-            F.col("b.doc_id").alias("id_b"),
-            hamming.cast("long").alias("hamming"),
-        )
-        .distinct()
-        .filter(F.col("hamming") <= hmax)
-        .orderBy("id_a", "id_b")
-    )
+    return out.select(
+        "id_a", "id_b", F.col("hamming").cast("long").alias("hamming")
+    ).orderBy("id_a", "id_b")
 
 
 _SIM_VOTES = ",\n         ".join(
@@ -789,8 +655,6 @@ def _semdedup_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # within a cluster (operators/dedup.py::semantic_near_duplicates).
     # Rows-only: the seeded KMeans fit is not SQL-expressible; the
     # recall floor vs exact brute force is pinned in test_near_dup.py.
-    from databeats_spark.operators.dedup import semantic_near_duplicates
-
     t = load_tables(spark, sf_dir, ["embeddings"])
     # n_lists=None → auto max(8, n // 400): constant per-cluster pair
     # budget as the corpus grows (fixed k re-quadratizes at scale)
@@ -933,30 +797,10 @@ def _canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _canonical_docs_sql() -> str:
-    from databeats_spark.registry.documents import _PAIRS_CTES, JACCARD_THRESHOLD, PAIR_DOC_LIMIT
+    from databeats_spark.registry.documents import _CLOSURE_CTES, PAIR_DOC_LIMIT
 
     return f"""
-WITH RECURSIVE {_PAIRS_CTES},
-qual AS (
-  SELECT id_a, id_b
-  FROM pairs
-  JOIN sized sa ON sa.doc_id = id_a
-  JOIN sized sb ON sb.doc_id = id_b
-  WHERE common * 1.0 / (sa.n + sb.n - common) >= {JACCARD_THRESHOLD}
-),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM qual
-  UNION
-  SELECT id_b, id_a FROM qual
-),
-reach(node, label) AS (
-  SELECT DISTINCT a, a FROM edges
-  UNION
-  SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-),
-comp AS (
-  SELECT node AS doc_id, min(label) AS component FROM reach GROUP BY node
-)
+{_CLOSURE_CTES}
 SELECT d.doc_id, d.lang, CAST(length(d.text) AS BIGINT) AS n_chars
 FROM documents d
 LEFT JOIN comp c ON d.doc_id = c.doc_id
@@ -1321,30 +1165,10 @@ def _takedown_blast_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _takedown_blast_radius_sql() -> str:
-    from databeats_spark.registry.documents import _PAIRS_CTES, JACCARD_THRESHOLD, PAIR_DOC_LIMIT
+    from databeats_spark.registry.documents import _CLOSURE_CTES, PAIR_DOC_LIMIT
 
     return f"""
-WITH RECURSIVE {_PAIRS_CTES},
-qual AS (
-  SELECT id_a, id_b
-  FROM pairs
-  JOIN sized sa ON sa.doc_id = id_a
-  JOIN sized sb ON sb.doc_id = id_b
-  WHERE common * 1.0 / (sa.n + sb.n - common) >= {JACCARD_THRESHOLD}
-),
-edges AS (
-  SELECT id_a AS a, id_b AS b FROM qual
-  UNION
-  SELECT id_b, id_a FROM qual
-),
-reach(node, label) AS (
-  SELECT DISTINCT a, a FROM edges
-  UNION
-  SELECT e.a, r.label FROM edges e JOIN reach r ON e.b = r.node
-),
-comp AS (
-  SELECT node AS doc_id, min(label) AS component FROM reach GROUP BY node
-),
+{_CLOSURE_CTES},
 members AS (
   SELECT d.doc_id, d.source, coalesce(c.component, d.doc_id) AS component
   FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id

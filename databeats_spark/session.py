@@ -55,6 +55,20 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     return spark
 
 
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when ``SPARK_DRIVER_MEMORY`` is unset:
+    16g, capped at half the host's MemTotal — a 16g heap is more than a
+    15.7 GiB host can give one process (a RandomForest retrain was
+    OOM-killed there). Hosts without a readable meminfo keep 16g."""
+    try:
+        with open(meminfo) as f:
+            kib = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError, IndexError):
+        return "16g"
+    half_mib = kib // 2048
+    return "16g" if half_mib >= 16 << 10 else f"{half_mib}m"
+
+
 def get_spark(
     app_name: str = "databeats_spark",
     master: str | None = None,
@@ -76,7 +90,10 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(nshuffle))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEMORY") or default_driver_memory(),
+        )
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.ui.enabled", "false")
         # keep every stage of a bench/audit query in the status store

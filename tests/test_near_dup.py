@@ -10,6 +10,7 @@ from pyspark.sql import functions as F
 
 from databeats_spark.functions.similarity import cosine_top_k, lsh_cosine_top_k
 from databeats_spark.operators.dedup import (
+    banded_hamming_pairs,
     minhash_near_duplicates,
     ngram_jaccard_pairs,
     simhash_near_duplicates,
@@ -484,8 +485,9 @@ def test_blockmean_exact_twin_multi_scale_semantics(spark):
     'crop' scales genuinely differ (n_scales = 1 rows exist), so the
     union is doing real recall work, not echoing one scale twice."""
     from databeats_spark.registry.documents import (
+        PHASH_EXACT_BITS,
         _blockmean_near_dups_exact,
-        _md5_band_pairs,
+        _md5_bits,
     )
 
     out = _blockmean_near_dups_exact(spark, SF_CORRECT).toPandas()
@@ -496,14 +498,58 @@ def test_blockmean_exact_twin_multi_scale_semantics(spark):
 
     # the full-text scale alone must be a subset with hamming >= the min
     docs = load_tables(spark, SF_CORRECT, ["documents"]).documents
-    full = _md5_band_pairs(
-        docs.select("doc_id", F.md5(F.encode(F.col("text"), "utf-8")).alias("h"))
+    full = banded_hamming_pairs(
+        docs.select(
+            "doc_id",
+            _md5_bits(F.md5(F.encode(F.col("text"), "utf-8")), PHASH_EXACT_BITS).alias("sig"),
+        ),
+        "doc_id", "sig", 3, bits=PHASH_EXACT_BITS,
     ).toPandas()
     assert len(full) > 0
     merged = full.merge(out, on=["id_a", "id_b"], suffixes=("_full", "_min"))
     assert len(merged) == len(full), "a full-scale pair is missing from the union"
     assert (merged["hamming_min"] <= merged["hamming_full"]).all()
 
+
+
+def test_exact_twins_call_the_production_operators(spark, monkeypatch):
+    """Each near-dup certifying twin is one call of its production
+    operator with a deterministic substitute injected, so the oracle
+    certifies the code production runs — not a hand copy of it."""
+    import sys
+
+    from databeats_spark.operators import dedup
+    from databeats_spark.registry import queries
+
+    calls: dict[str, int] = {}
+
+    def counting(name, fn):
+        def wrapped(*args, **kwargs):
+            calls[name] = calls.get(name, 0) + 1
+            return fn(*args, **kwargs)
+        return wrapped
+
+    spied = ("banded_hamming_pairs", "minhash_near_duplicates",
+             "minhash_signatures", "semantic_near_duplicates")
+    for name in spied:
+        original = getattr(dedup, name)
+        for mod in list(sys.modules.values()):
+            if (getattr(mod, "__name__", "").startswith("databeats_spark")
+                    and getattr(mod, name, None) is original):
+                monkeypatch.setattr(mod, name, counting(name, original))
+    expected = {
+        "minhash_near_dups_exact": {"minhash_near_duplicates": 1},
+        "minhash_estimate_audit": {"minhash_signatures": 1},
+        "simhash_near_dups_exact": {"banded_hamming_pairs": 1},
+        "phash_near_dups_exact": {"banded_hamming_pairs": 1},
+        "blockmean_near_dups_exact": {"banded_hamming_pairs": 2},  # two scales
+        "semdedup_near_dups_exact": {"semantic_near_duplicates": 1},
+    }
+    q = queries()
+    for twin, want in expected.items():
+        calls.clear()
+        q[twin](spark, SF_SMOKE)
+        assert calls == want, f"{twin} called {calls}, expected {want}"
 
 def test_minhash_estimate_audit_matches_hashlib_replica(spark):
     """Per-band estimator calibration vs a pure-Python md5 replica:
