@@ -318,7 +318,7 @@ def rich_summary(
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    from databeats_spark.plans.instrument import profile
+    from databeats_spark.plans.instrument import observe, profile
     from databeats_spark.registry import bench_queries
     from databeats_spark.registry import queries as all_queries
     from databeats_spark.registry.mining import _pagerank_docs
@@ -335,12 +335,18 @@ def main() -> None:
     # warmup: touch every table + JIT the scan path
     qs[headline[0]](spark, sf_dir).limit(1).collect()
 
-    # pagerank_docs runs with a sink: its round_* rows carry the
-    # per-round walls — uniform inflation on a driver run means
+    # pagerank_docs builds under an observer: its round_* steps carry
+    # the per-round walls — uniform inflation on a driver run means
     # external CPU steal, a single slow round means a plan problem
     builds = dict(all_queries())
-    pagerank_sink: list[dict] = []
-    builds["pagerank_docs"] = lambda s, d: _pagerank_docs(s, d, metrics_sink=pagerank_sink)
+    pagerank_runs = []
+
+    def pagerank_observed(s, d):
+        with observe() as taken:
+            pagerank_runs.append(taken)
+            return _pagerank_docs(s, d)
+
+    builds["pagerank_docs"] = pagerank_observed
 
     # headline: best of 3 (the first run pays whole-stage-codegen
     # compilation; min-of-3 rejects GC/scheduler spikes). The other
@@ -359,7 +365,9 @@ def main() -> None:
             n: profile(spark, lambda b=builds[n]: b(spark, sf_dir), reps) for n in names
         }
         env_marks.append((section, _env_probe()))
-    rounds = [r["wall_s"] for r in pagerank_sink if r["step"].startswith("round_")]
+    rounds = [
+        r["wall_s"] for r in pagerank_runs[-1].steps() if r["step"].startswith("round_")
+    ]
     out = rich_summary(sections, env_marks, rounds, sf_dir)
 
     # rich line first: head-truncated in the driver's stdout tail but

@@ -34,10 +34,6 @@ from databeats_spark.functions.text import fingerprint, word_shingles
 # per-document shingle sets; candidates are exact-verified anyway.
 _MERSENNE_31 = (1 << 31) - 1
 
-# The most recent minhash shingle cache (see minhash_near_duplicates):
-# one entry max, released on the next invocation.
-_SHINGLE_CACHE: list[tuple[int, DataFrame]] = []
-
 
 def dedup_first(df: DataFrame, keys: Sequence[str], order_by: Sequence[str | Column]) -> DataFrame:
     """Deterministic ``drop_duplicates(subset=keys)`` — pandas keeps the
@@ -157,31 +153,15 @@ def _shingled_docs(
     shingle_n: int,
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """One row per doc with its distinct shingle set, through the
-    bounded single-entry cache. Repeated invocations over the same
-    corpus (bench best-of-3, interactive re-runs, guard epochs) build a
-    semantically identical plan — reuse the pinned blocks instead of
-    recomputing; a different corpus/params evicts the previous entry
-    first, so at most one shingle cache lives at a time (unpersist is
-    async; an in-flight prior job still finishes)."""
+    """(__id, __shingles): one row per doc with a non-empty distinct
+    shingle set. A caller that consumes it more than once pins it."""
     # shingling is compute-bound: when the source collapses to few
     # input splits (small files), spread it before the heavy expression
     if num_partitions:
         df = df.repartition(num_partitions)
-    shingled = df.select(
+    return df.select(
         F.col(id_col).alias("__id"), word_shingles(text_col, shingle_n).alias("__shingles")
     ).filter(F.size("__shingles") > 0)
-    sh_hash = shingled.semanticHash()
-    cached = next(
-        (d for h, d in _SHINGLE_CACHE if h == sh_hash and d.sameSemantics(shingled)), None
-    )
-    if cached is not None:
-        return cached
-    while _SHINGLE_CACHE:
-        _SHINGLE_CACHE.pop()[1].unpersist(blocking=False)
-    shingled = shingled.persist()
-    _SHINGLE_CACHE.append((sh_hash, shingled))
-    return shingled
 
 
 def _signatures(shingled: DataFrame, num_hashes: int, family: MinHashFamily) -> DataFrame:
@@ -274,9 +254,13 @@ def minhash_near_duplicates(
     Returns (id_a, id_b, common, jaccard) with jaccard ≥ threshold —
     the shape of :func:`ngram_jaccard_pairs`.
     """
-    # shared LSH front half (shingle cache + signatures + band keys):
-    # the streaming ingest guard reuses exactly these pieces
-    shingled = _shingled_docs(df, id_col, text_col, shingle_n, num_partitions)
+    # shared LSH front half (shingles + signatures + band keys): the
+    # streaming ingest guard reuses exactly these pieces. The shingle
+    # set has three consumers (signatures and both verify sides), so
+    # one lazy checkpoint shingles each document once.
+    shingled = _shingled_docs(
+        df, id_col, text_col, shingle_n, num_partitions
+    ).localCheckpoint(eager=False)
     sig = _signatures(shingled, num_hashes, family or universal_family(seed))
     band_rows = lsh_band_keys(sig, num_hashes=num_hashes, bands=bands)
 

@@ -37,6 +37,8 @@ import time
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
+from databeats_spark.plans.instrument import step
+
 
 def connected_components(
     edges: DataFrame,
@@ -44,7 +46,6 @@ def connected_components(
     dst: str = "dst",
     max_iter: int = 50,
     salt_factor: int | None = None,
-    metrics_sink: list | None = None,
 ) -> DataFrame:
     """Label every node of the undirected graph ``edges`` with the
     smallest node id reachable from it.
@@ -75,14 +76,12 @@ def connected_components(
     a join of two round-dependent tables would compound it
     quadratically (see :func:`pagerank`'s stats lesson).
 
-    ``metrics_sink``: pass a list to receive one
-    ``{"step", shuffle_bytes, ...}`` row per checkpoint action
-    (edge-generator materialization, label init, every label round) —
-    the deterministic data-movement audit for an op whose exchanges
-    live outside any single query execution (SHUFFLE.md).
+    Under ``instrument.observe()`` the checkpoints are named
+    ``cc_input_edges``, ``cc_edges``, ``cc_labels_init`` and
+    ``cc_round_<k>`` — the deterministic data-movement audit for an op
+    whose exchanges live outside any single query execution
+    (SHUFFLE.md).
     """
-    from databeats_spark.plans.instrument import record_metrics
-
     # Pin the INPUT edge list before the symmetrizing union: the union
     # references ``edges`` twice, and exchange reuse only covers
     # shuffle/broadcast boundaries — the narrow tail of an expensive
@@ -99,17 +98,17 @@ def connected_components(
         .distinct()
     )
     sym = pre_sym.localCheckpoint()  # single materialization of the edge generator
-    # the lazy input checkpoint ran inside the sym action: both rows
-    # carry that action's wall, read once (before either fold)
+    # the lazy input checkpoint ran inside the sym action: both steps
+    # carry that action's wall
     end = time.perf_counter()
-    record_metrics(metrics_sink, "cc_input_edges", pre_edges, t0, end)
-    record_metrics(metrics_sink, "cc_edges", pre_sym, t0, end)
+    step("cc_input_edges", pre_edges, t0, end)
+    step("cc_edges", pre_sym, t0, end)
     t0 = time.perf_counter()
     pre_labels = sym.select(F.col("a").alias("node")).distinct().withColumn(
         "label", F.col("node")
     )
     labels = pre_labels.localCheckpoint()
-    record_metrics(metrics_sink, "cc_labels_init", pre_labels, t0)
+    step("cc_labels_init", pre_labels, t0)
     sym_keyed = sym.select("a", F.col("b").alias("node"))
     for i in range(max_iter):
         t0 = time.perf_counter()
@@ -141,7 +140,7 @@ def connected_components(
             .select("node", "label")
         )
         labels = pre_round.localCheckpoint()  # the ONE action of the round
-        record_metrics(metrics_sink, f"cc_round_{i + 1}", pre_round, t0)
+        step(f"cc_round_{i + 1}", pre_round, t0)
         if (obs.get["changed"] or 0) == 0:
             break
     else:
@@ -351,7 +350,6 @@ def pagerank(
     max_iter: int = 15,
     tol: float = 1e-6,
     check_every: int = 2,
-    metrics_sink: list | None = None,
 ) -> DataFrame:
     """Distributed PageRank by power iteration over the edge list —
     the centrality pass a dedup/link-graph pipeline runs to pick
@@ -391,15 +389,13 @@ def pagerank(
     aggregate over two contribution tables (:func:`_rank_l1_delta`).
     The per-round driver reads (observed flowing mass, delta) are
     bounded 1-row actions. Pass ``tol=None`` to run exactly
-    ``max_iter`` rounds; pass a list as ``metrics_sink`` to receive one
-    row per checkpoint action (edge materialization, nodes, every
-    round) with its data movement and ``wall_s``. A ``round_*`` row's
-    wall covers the whole round, delta job included — the
-    steal-vs-plan diagnostic: uniform inflation across rounds on a
-    loaded host = external steal, one slow round = a plan problem.
+    ``max_iter`` rounds. Under ``instrument.observe()`` the checkpoints
+    are named ``edges``, ``nodes`` and ``round_<k>``, each with its
+    ``wall_s``. A ``round_*`` step's wall covers the whole round, delta
+    job included — the steal-vs-plan diagnostic: uniform inflation
+    across rounds on a loaded host = external steal, one slow round =
+    a plan problem.
     """
-    from databeats_spark.plans.instrument import record_metrics
-
     out_edges = edges.select(F.col(src).alias("e_src"), F.col(dst).alias("e_dst"))
     degrees = out_edges.groupBy("e_src").agg(F.count(F.lit(1)).alias("deg"))
     # pre-join degree onto edges ONCE and checkpoint FIRST: this is the
@@ -410,7 +406,7 @@ def pagerank(
     t0 = time.perf_counter()
     pre_withdeg = out_edges.join(degrees, "e_src")
     withdeg = pre_withdeg.localCheckpoint()
-    record_metrics(metrics_sink, "edges", pre_withdeg, t0)
+    step("edges", pre_withdeg, t0)
     t0 = time.perf_counter()
     pre_nodes = (
         withdeg.select(F.col("e_src").alias("node"))
@@ -418,7 +414,7 @@ def pagerank(
         .distinct()
     )
     nodes = pre_nodes.localCheckpoint()
-    record_metrics(metrics_sink, "nodes", pre_nodes, t0)
+    step("nodes", pre_nodes, t0)
     n = nodes.count()  # one scalar; fixed for the whole run
     if n == 0:
         # empty graph (e.g. a corpus slice with no near-dup edges):
@@ -475,7 +471,7 @@ def pagerank(
         if tol is not None and i % check_every == check_every - 1 and i < max_iter - 1:
             delta = _rank_l1_delta(contribs, flow, prev_contribs, prev_flow, damping, n)
             converged = delta < tol
-        record_metrics(metrics_sink, f"round_{i + 1}", pre_contribs, t0)
+        step(f"round_{i + 1}", pre_contribs, t0)
         if converged:
             break
     return rank_view(contribs, flow)

@@ -39,7 +39,7 @@ from databeats_spark.functions.text import fingerprint, word_shingles
 from databeats_spark.operators.dedup import minhash_near_duplicates
 from databeats_spark.operators.graph import connected_components, dedup_keep_canonical
 from databeats_spark.operators.scale import attach_global_scalar, partitioned_running_total
-from databeats_spark.plans.instrument import record_metrics
+from databeats_spark.plans.instrument import step
 from databeats_spark.sources.tables import load_tables, spread
 
 # quality-gate bands (see registry/mining.py gopher_quality_flags)
@@ -134,7 +134,6 @@ def near_dup_stage(
     docs: DataFrame,
     pair_gen=lsh_pairs,
     skew_guard: bool = False,
-    metrics_sink: list | None = None,
 ) -> DataFrame:
     """Candidate pairs (``pair_gen``: docs -> (id_a, id_b, ...)) →
     connected components → keep the canonical (min-id) document of
@@ -162,9 +161,7 @@ def near_dup_stage(
         )
         if top_key_share(endpoints, "k") > SKEW_SHARE_THRESHOLD:
             salt = CC_SALT_FACTOR
-    comps = connected_components(
-        pairs, "id_a", "id_b", salt_factor=salt, metrics_sink=metrics_sink
-    )
+    comps = connected_components(pairs, "id_a", "id_b", salt_factor=salt)
     return dedup_keep_canonical(docs, comps, "doc_id")
 
 
@@ -218,7 +215,6 @@ def curate_corpus(
     scorer=None,
     scorer_threshold: float = 0.5,
     observe_counts: dict[str, int] | None = None,
-    metrics_sink: list | None = None,
     pair_gen=lsh_pairs,
 ) -> dict[str, DataFrame]:
     """Run the full curation flow; returns every stage's DataFrame so
@@ -228,10 +224,11 @@ def curate_corpus(
     ``localCheckpoint`` (its one driver action), and every stage's row
     count rides that job as an ``observe()`` metric — no separate
     count jobs, and the pipeline executes once. ``observe_counts`` (a
-    dict, optional) fills with ``{stage: n_rows}`` in funnel order;
-    ``metrics_sink`` receives one row per segment seal (data movement
-    plus the seal's ``wall_s``) and the CC label rounds inside the
-    near_dup stage — the funnel's entry in the SHUFFLE.md audit.
+    dict, optional) fills with ``{stage: n_rows}`` in funnel order.
+    Under ``instrument.observe()`` each seal is the step
+    ``stage_<stages it seals>`` with its ``wall_s`` — the funnel's
+    entry in the SHUFFLE.md audit, beside the CC label rounds inside
+    the near_dup stage.
 
     ``scorer`` (optional) swaps the rule-based quality gate for the
     learned one (see :func:`learned_quality_gate`); every downstream
@@ -252,7 +249,7 @@ def curate_corpus(
         ("raw", lambda df: df),
         ("quality", quality),
         ("exact_dedup", exact_dedup_stage),
-        ("near_dup", lambda df: near_dup_stage(df, pair_gen, skew_guard, metrics_sink)),
+        ("near_dup", lambda df: near_dup_stage(df, pair_gen, skew_guard)),
         ("decontam", decontam_stage),
         ("rebalance", rebalance_stage),
         ("budget", lambda df: budget_stage(df, token_budget)),
@@ -280,8 +277,7 @@ def curate_corpus(
         if name not in fold_into_next:
             pre, t0 = prev, time.perf_counter()
             prev = pre.localCheckpoint()  # the segment's ONE action
-            step = "stage_" + "+".join(n for n, _ in pending)
-            record_metrics(metrics_sink, step, pre, t0)
+            step("stage_" + "+".join(n for n, _ in pending), pre, t0)
             for n, o in pending:
                 counts[n] = int(o.get["n"])
             pending.clear()

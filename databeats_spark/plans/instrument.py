@@ -1,6 +1,6 @@
 """The measurement core: every timing and every byte audit in the repo
-is one of the two calls below, and iterative operators report through
-one per-step channel.
+is one of the two calls below, and every checkpointed step is seen
+through one observer.
 
 - :func:`profile` times a query. The timed region is exactly
   ``build().write.mode("overwrite").format("noop").save()`` — the full
@@ -16,18 +16,21 @@ one per-step channel.
   render it.
 - :func:`movement` audits the bytes a query moves: it executes the
   df's own physical plan, folds the exchange/scan/spill SQLMetrics of
-  the final plan AND of every pre-checkpoint plan captured during
-  build+execute (:func:`capture_checkpoint_sources`), and adds the
-  stage counters. ``scripts/shuffle_audit.py`` and
-  ``scripts/scale_curve_bytes.py`` render it. Bytes are a property of
-  plan + data and reproduce exactly run over run; wall-clock on this
-  VM does not.
-- The ``metrics_sink`` list is the per-step channel of iterative
-  operators (PageRank/CC rounds, funnel segments): their
+  the final plan AND of every checkpoint observed during
+  build+execute, and adds the stage counters.
+  ``scripts/shuffle_audit.py`` and ``scripts/scale_curve_bytes.py``
+  render it. Bytes are a property of plan + data and reproduce exactly
+  run over run; wall-clock on a shared host does not.
+- :func:`observe` is the one record of checkpointed work: while it is
+  active every ``localCheckpoint`` is recorded, and an iterative
+  operator (PageRank/CC rounds, funnel segments) names its steps with
+  :func:`step`, which sets the step's ``wall_s``. Their
   driver-coordinated sub-jobs run in query executions the final plan
-  never carries, so each step calls :func:`record_metrics`, which
-  appends ``{"step", "wall_s", **executed_metrics(df)}`` folded from
-  the step's already-executed plan (no re-run).
+  never carries; :meth:`Observed.steps` folds each checkpoint's
+  already-executed plan (no re-run) when the record is read, never
+  inside a step, so no fold lands in a timed region. ``movement``,
+  bench.py's ``pagerank_rounds``, the shuffle audit's per-step tables
+  and ``scripts/curate.py``'s ``segment_wall_s`` all read it.
 
 Stage counters (:func:`stage_mark` / :func:`stage_work`) read the
 AppStatusStore for the stages created since a mark — O(stages of the
@@ -44,6 +47,7 @@ session's stage count under the limit: ``get_spark`` pins it to
 
 from __future__ import annotations
 
+import sys
 import time
 from collections.abc import Callable
 from contextlib import contextmanager
@@ -52,71 +56,100 @@ from pyspark.sql import DataFrame, SparkSession
 
 _STAGE_SUFFIX = "QueryStageExec"
 
-# --- checkpoint-source capture (VERDICT r12 item 5) ------------------
+# --- the checkpoint observer ----------------------------------------
 # A localCheckpoint truncates lineage: the final plan carries a
 # LogicalRDD where the checkpointed subtree used to be, so a plain
 # plan-walk of the final plan misses every exchange that EXECUTED
 # upstream of the checkpoint (hits_copurchase read 32 B of shuffle
-# while its rounds moved 44.6 MB). While a capture is active,
+# while its rounds moved 44.6 MB). While an observer is active,
 # DataFrame.localCheckpoint is wrapped to record each PRE-checkpoint
-# DataFrame; after the final plan runs, those dataframes' own
-# executedPlans hold the upstream exchanges' populated SQLMetrics —
-# fold them with :func:`executed_metrics`, no re-run. Inactive (the
-# default) nothing is patched, so production query paths pay nothing.
+# DataFrame; once the plans have run, those dataframes' own
+# executedPlans hold the upstream exchanges' populated SQLMetrics,
+# folded on read with :func:`executed_metrics`, no re-run. With no
+# observer active nothing is patched, so production query paths pay
+# nothing.
+
+# the class whose localCheckpoint the observer wraps: the RUNTIME one.
+# In PySpark 4 pyspark.sql.DataFrame is the dispatching facade and the
+# classic subclass overrides localCheckpoint, so patching the base
+# would never intercept.
+try:
+    from pyspark.sql.classic.dataframe import DataFrame as _RuntimeDF
+except ImportError:  # older PySpark: one concrete class
+    _RuntimeDF = DataFrame
+
+# the open observers, outermost first: process-global, like the class
+# patch they share
+_ACTIVE: list[Observed] = []
+
+
+class Observed(list):
+    """The checkpoints taken while one :func:`observe` was active, in
+    the order they were taken. Each record is ``[source, step,
+    wall_s]``: the pre-checkpoint DataFrame, the step name :func:`step`
+    gave it (until then ``(<function that took it>)``) and its wall
+    seconds (None when unnamed)."""
+
+    def steps(self) -> list[dict]:
+        """One row per record, ``{"step", "wall_s",
+        **executed_metrics(source)}``, folded now. The segments are
+        disjoint (each source's plan ends at the next checkpoint down
+        its own lineage), so the rows sum to the checkpointed work
+        exactly."""
+        return [{"step": n, "wall_s": w, **executed_metrics(src)} for src, n, w in self]
 
 
 @contextmanager
-def capture_checkpoint_sources():
-    """Collect every DataFrame that gets localCheckpoint'd while
-    active. Wrap BOTH the query build and its execution (lazy
-    checkpoints are created at build time but run with the final
-    action), then fold each captured source with
-    :func:`executed_metrics` and sum into the final plan's metrics —
-    the segments are disjoint by construction (the final plan sees
-    only the post-checkpoint LogicalRDD, and each source's plan ends
-    at the NEXT checkpoint down its own lineage). Audit-only (single
-    threaded); not re-entrant-safe across threads."""
-    # patch the RUNTIME class: in PySpark 4 pyspark.sql.DataFrame is
-    # the dispatching facade and the classic subclass overrides
-    # localCheckpoint, so patching the base would never intercept
-    try:
-        from pyspark.sql.classic.dataframe import DataFrame as _RuntimeDF
-    except ImportError:  # older PySpark: one concrete class
-        _RuntimeDF = DataFrame
-
+def observe():
+    """Record every DataFrame that gets localCheckpoint'd while active;
+    yields the :class:`Observed` that holds them. Wrap BOTH the query
+    build and its execution (lazy checkpoints are created at build
+    time but run with the final action) and read
+    :meth:`Observed.steps` once the plans have run. Nested observers
+    each see every checkpoint taken while they are open. Audit-only
+    (single threaded)."""
     # A Spark Connect session's DataFrames are a THIRD class the patch
-    # above never touches — the capture would silently stay empty and
-    # the audit would report the pre-capture blind numbers as if the
-    # fix ran (r13 review). Fail loud instead; the audit is a local
-    # classic-session tool by design.
-    try:
-        from pyspark.sql import SparkSession as _SS
-
-        active = _SS.getActiveSession()
-    except Exception:
-        active = None
-    if active is not None and type(active).__module__.startswith(
-        "pyspark.sql.connect"
-    ):
+    # never touches: the record would silently stay empty and an audit
+    # would report the blind numbers as if it saw the checkpoints.
+    # Fail loud instead; the audit is a local classic-session tool.
+    active = SparkSession.getActiveSession()
+    if active is not None and type(active).__module__.startswith("pyspark.sql.connect"):
         raise RuntimeError(
-            "capture_checkpoint_sources only intercepts classic-session "
-            "DataFrames; the active session is Spark Connect, whose "
-            "localCheckpoint this patch cannot see — run the audit on a "
-            "local classic session"
+            "observe() only intercepts classic-session DataFrames; the "
+            "active session is Spark Connect, whose localCheckpoint this "
+            "patch cannot see — run the audit on a local classic session"
         )
-
-    captured: list[DataFrame] = []
-    original = _RuntimeDF.localCheckpoint
+    original, installed = _RuntimeDF.localCheckpoint, not _ACTIVE
 
     def recording(self, *args, **kwargs):
-        captured.append(self)
+        caller = f"({sys._getframe(1).f_code.co_name})"
+        for obs in _ACTIVE:
+            obs.append([self, caller, None])
         return original(self, *args, **kwargs)
 
-    _RuntimeDF.localCheckpoint = recording
+    if installed:  # the outermost observer patches, and restores on exit
+        _RuntimeDF.localCheckpoint = recording
+    obs = Observed()
+    _ACTIVE.append(obs)
     try:
-        yield captured
+        yield obs
     finally:
-        _RuntimeDF.localCheckpoint = original
+        _ACTIVE.pop()  # observers nest: the innermost exits first
+        if installed:
+            _RuntimeDF.localCheckpoint = original
+
+
+def step(name: str, df: DataFrame, t0: float, end: float | None = None) -> None:
+    """Name the record of the checkpoint already taken FROM ``df`` and
+    set its ``wall_s``: from ``t0``, the step's start, to ``end``
+    (default: now). Pass one ``end`` to the steps of one shared action.
+    Does nothing when no observer is active; nothing is folded here."""
+    wall = round((time.perf_counter() if end is None else end) - t0, 4)
+    for obs in _ACTIVE:
+        for rec in reversed(obs):
+            if rec[0] is df:
+                rec[1:] = [name, wall]
+                break
 
 
 def _walk(node):
@@ -238,32 +271,17 @@ def profile(
 def movement(spark: SparkSession, build: Callable[[], DataFrame]) -> dict[str, int | float]:
     """Execute ``build()``'s plan and return its data movement: the
     :func:`execution_metrics` fold of the final plan plus that of every
-    pre-checkpoint plan captured during build and execute, and the
+    checkpoint observed during build and execute, and the
     :func:`stage_work` counters of the run."""
     mark = stage_mark(spark)
-    # capture brackets build AND execute: lazy checkpoints are created
-    # at build time but run with the final action. The segments are
-    # disjoint (each plan ends at the next checkpoint down its own
-    # lineage), so summing is exact, not double-counting.
-    with capture_checkpoint_sources() as sources:
+    # observe brackets build AND execute: lazy checkpoints are created
+    # at build time but run with the final action
+    with observe() as taken:
         m = execution_metrics(build())
-    for src in sources:
-        for k, v in executed_metrics(src).items():
-            m[k] += v
+    for row in taken.steps():
+        for k in m:
+            m[k] += row[k]
     return {**m, **stage_work(spark, mark)}
-
-
-def record_metrics(
-    sink: list | None, step: str, df: DataFrame, t0: float, end: float | None = None
-) -> None:
-    """Append ``{"step", "wall_s", **executed_metrics(df)}`` to ``sink``
-    when a sink is provided (None = zero overhead). ``wall_s`` runs
-    from ``t0``, the step's start, to ``end`` (default: now) — read
-    before the fold, so folding never counts. Call it once the step's
-    action has run; pass one ``end`` to every row of a shared action."""
-    if sink is not None:
-        wall = round((time.perf_counter() if end is None else end) - t0, 4)
-        sink.append({"step": step, "wall_s": wall, **executed_metrics(df)})
 
 
 def fmt_bytes(n: float) -> str:

@@ -82,25 +82,18 @@ class QuerySpec:
 # Regenerate with ``python scripts/rotation_report.py``.
 _WINDOW = (
     # Mirrors scripts/rotation_report.py's recommended front-50 exactly.
-    # — CHANGED_QUERIES re-certs (near-dup twins call their production
-    # operators; one closure-CTE oracle prefix):
+    # — CHANGED_QUERIES re-certs (per-step record moved to
+    # instrument.observe(); minhash shingles pinned per call):
     "curation_funnel",
     "dedup_components",
-    "blockmean_near_dups_exact",
     "minhash_near_dups",
-    "takedown_blast_radius",
     "minhash_near_dups_exact",
     "minhash_estimate_audit",
-    "simhash_near_dups",
-    "simhash_near_dups_exact",
-    "semdedup_near_dups_exact",
-    "semdedup_near_dups",
-    "canonical_docs",
-    "phash_near_dups",
-    "phash_near_dups_exact",
-    "blockmean_near_dups",
     "pagerank_docs",
-    "canonical_best_docs",
+    "curation_funnel_exact",
+    "pagerank_docs_exact",
+    # — certifying twin older than TWIN_MAX_AGE rounds:
+    "blockmean_near_dups_exact",
     # — oldest greens, report order:
     "price_quantiles",
     "order_gaps",
@@ -135,6 +128,14 @@ _WINDOW = (
     "lang_label_noise",
     "lang_id_kappa",
     "zorder_locality_audit",
+    "bloom_incremental_dedup",
+    "bpe_fertility_by_lang",
+    "cusum_changepoint",
+    "dow_seasonal_decompose",
+    "theil_sen_trend",
+    "holt_winters_forecast",
+    "holt_linear_forecast",
+    "js_source_drift",
 )
 
 # Queries whose BUILDER or ORACLE changed this round (reset to () at
@@ -145,29 +146,19 @@ _WINDOW = (
 # in r10, jackknife in r11), mechanical instead of CLAUDE.md prose the
 # report "cannot see".
 CHANGED_QUERIES: tuple[str, ...] = (
-    # each near-dup twin is one call of its production operator with a
-    # deterministic substitute injected (operators/dedup.py,
-    # operators/multimodal.py); the production queries run the same
-    # operators with their default arguments
+    # builders back to (spark, sf_dir): the per-step record moved to
+    # instrument.observe()
+    "dedup_components",
+    "pagerank_docs",
+    # reach operators/dedup.py::_shingled_docs, which no longer caches
+    # shingle sets across calls (minhash_near_duplicates pins per call)
     "minhash_near_dups",
     "minhash_near_dups_exact",
     "minhash_estimate_audit",
-    "simhash_near_dups",
-    "simhash_near_dups_exact",
-    "phash_near_dups",
-    "phash_near_dups_exact",
-    "blockmean_near_dups",
-    "blockmean_near_dups_exact",
-    "semdedup_near_dups",
-    "semdedup_near_dups_exact",
-    # reach minhash_near_duplicates (its output gains ``common``)
-    "pagerank_docs",
     "curation_funnel",
-    # oracle prefix rendered from one helper (documents.py::_CLOSURE_CTES)
-    "dedup_components",
-    "canonical_best_docs",
-    "canonical_docs",
-    "takedown_blast_radius",
+    # run pagerank / curate_corpus, whose steps now name observer records
+    "pagerank_docs_exact",
+    "curation_funnel_exact",
 )
 
 # The driver gate only sees the first _GATE_WIDTH entries; anything past

@@ -806,9 +806,7 @@ ORDER BY doc_id, pos
 # oracle'd by a recursive CTE computing reachability — an ITERATIVE
 # algorithm with an exact SQL ground truth.
 
-def _dedup_components(
-    spark: SparkSession, sf_dir: str, metrics_sink: list | None = None
-) -> DataFrame:
+def _dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     from databeats_spark.operators.graph import connected_components
@@ -817,8 +815,7 @@ def _dedup_components(
     docs = t.documents.filter(F.col("doc_id") < PAIR_DOC_LIMIT)
     pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=JACCARD_THRESHOLD)
     comps = connected_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        metrics_sink=metrics_sink,
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
     return (
         comps.select(F.col("node").alias("doc_id"), "component")

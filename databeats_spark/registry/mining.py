@@ -837,17 +837,13 @@ ORDER BY n.doc_id
 PAGERANK_EDGE_THRESHOLD = 0.2
 
 
-def _pagerank_docs(
-    spark: SparkSession, sf_dir: str, metrics_sink: list | None = None
-) -> DataFrame:
+def _pagerank_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from databeats_spark.operators.dedup import minhash_near_duplicates
     from databeats_spark.operators.graph import pagerank
 
     t = load_tables(spark, sf_dir, ["documents"])
     # same num_partitions as the headline minhash call: the shingle set
-    # is compute-bound (spread the single-file scan) AND the identical
-    # lineage hits the operator's bounded shingle cache when both run
-    # in one session (bench, dashboards)
+    # is compute-bound, so spread the single-file scan
     pairs = minhash_near_duplicates(
         t.documents, "doc_id", "text", threshold=PAGERANK_EDGE_THRESHOLD,
         num_partitions=spark.sparkContext.defaultParallelism,
@@ -860,11 +856,9 @@ def _pagerank_docs(
     # paying ~8 no-op iterations. r6 shape: ONE eager contribution job
     # per round (flowing mass observed on it; dangling semi-join gone),
     # plus a small paired-aggregate delta job every 2nd round. The
-    # rounds run at build time, so ``metrics_sink`` (one row per
-    # checkpoint action, ``wall_s`` per round) is complete on return.
-    out = pagerank(
-        edges, "id_a", "id_b", max_iter=10, tol=1e-6, metrics_sink=metrics_sink
-    )
+    # rounds run at build time, so an ``instrument.observe()`` around
+    # the build holds every round's step on return.
+    out = pagerank(edges, "id_a", "id_b", max_iter=10, tol=1e-6)
     return out.select(
         F.col("node").alias("doc_id"), F.round("rank", 6).alias("rank")
     ).orderBy(F.desc("rank"), "doc_id")

@@ -306,7 +306,6 @@ _MD5_FAMILY = MinHashFamily(
 
 def _minhash_near_dups_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["documents"])
-    # the production query's num_partitions: both hit one shingle cache entry
     out = minhash_near_duplicates(
         t.documents, "doc_id", "text",
         num_hashes=MINHASH_EXACT_HASHES, bands=MINHASH_EXACT_BANDS,

@@ -9,7 +9,8 @@ Writes:
     <out>/corpus/   the curated documents (parquet)
     <out>/funnel/   the stage-count audit table (parquet)
 and prints the funnel plus each sealed segment's wall seconds
-(``segment_wall_s``, from the funnel's metrics_sink) as one JSON line
+(``segment_wall_s``, the funnel's seal steps under
+``instrument.observe``) as one JSON line
 (machine-parseable, like bench.py).
 """
 
@@ -51,6 +52,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from databeats_spark.plans.curation import curate_corpus
+    from databeats_spark.plans.instrument import observe
     from databeats_spark.session import get_spark
 
     spark = get_spark(app_name="databeats_curate", master=f"local[{args.cpus}]")
@@ -86,16 +88,16 @@ def main() -> None:
             )
 
     # each stage's count rides its segment's checkpoint job (zero
-    # separate count jobs) and the sink times every segment seal; the
-    # final corpus persists from the same checkpointed blocks
+    # separate count jobs) and the observer times every segment seal;
+    # the final corpus persists from the same checkpointed blocks
     counts: dict[str, int] = {}
-    sink: list[dict] = []
-    final = curate_corpus(
-        spark, args.sf_dir, args.token_budget,
-        skew_guard=args.skew_guard,
-        scorer=scorer, scorer_threshold=args.quality_threshold,
-        observe_counts=counts, metrics_sink=sink,
-    )["budget"]
+    with observe() as taken:
+        final = curate_corpus(
+            spark, args.sf_dir, args.token_budget,
+            skew_guard=args.skew_guard,
+            scorer=scorer, scorer_threshold=args.quality_threshold,
+            observe_counts=counts,
+        )["budget"]
     funnel = [(i, name, n) for i, (name, n) in enumerate(counts.items())]
     final.write.mode("overwrite").parquet(f"{args.out}/corpus")
     spark.createDataFrame(
@@ -105,7 +107,7 @@ def main() -> None:
     record = {"sf_dir": args.sf_dir, "out": args.out,
               "funnel": {name: n for _, name, n in funnel},
               "segment_wall_s": {r["step"][len("stage_"):]: r["wall_s"]
-                                 for r in sink if r["step"].startswith("stage_")}}
+                                 for r in taken.steps() if r["step"].startswith("stage_")}}
     if fit_auc is not None:
         record["quality_filter_auc"] = round(fit_auc, 4)
         # decile report: where the full-corpus mass sits on the learned

@@ -59,9 +59,10 @@ FLAGSHIPS = {
 # regeneration because this script rewrites PLANS.md wholesale).
 # Refresh the numbers with scripts/scale_curve.py (one
 # plans/instrument.py::profile per query and scale factor) and the
-# metrics_sink rows of pagerank / curate_corpus (per-step
-# wall_s and bytes — bench.py's pagerank_rounds reads pagerank_docs'
-# round rows; scripts/curate.py prints the funnel's per-segment wall).
+# steps plans/instrument.py::observe records for pagerank /
+# curate_corpus (per-step wall_s and bytes — bench.py's
+# pagerank_rounds reads pagerank_docs' round steps; scripts/curate.py
+# prints the funnel's per-segment wall).
 SCALE_EVIDENCE = """\
 ## Measured scale evidence (round 6)
 

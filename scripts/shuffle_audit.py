@@ -9,6 +9,12 @@ matter how noisy the clock is).
 
     python scripts/shuffle_audit.py
 
+The script builds its own session at one fixed shape — local[32], a
+6g driver heap and 16m memory pages — so the file regenerates the
+same on any host: broadcast dataSize follows the memory page size,
+which Spark otherwise derives from heap / cores, and exec write
+follows the default parallelism.
+
 Each row is one ``plans/instrument.py::movement`` record, which folds
 three layers:
 
@@ -17,10 +23,10 @@ three layers:
   AQE's empty-relation propagation can erase already-executed
   exchanges from the FINAL plan (empty result at one SF), reading 0 B.
 - CHECKPOINT layer: a localCheckpoint truncates lineage, so the final
-  plan misses every exchange upstream of it. ``movement`` captures
-  each pre-checkpoint DataFrame during build+execute and folds its
-  executedPlan's SQLMetrics into the PLAN columns — disjoint
-  segments, summed exactly.
+  plan misses every exchange upstream of it. ``movement`` observes
+  every checkpoint taken during build+execute (``instrument.observe``)
+  and folds each pre-checkpoint executedPlan's SQLMetrics into the
+  PLAN columns — disjoint segments, summed exactly.
 - STAGE layer: shuffle-write bytes + executor CPU summed over every
   stage the run created, from the AppStatusStore — records every
   stage that ran regardless of the final plan, closing the AQE-empty
@@ -29,9 +35,10 @@ three layers:
 
 Iterative queries (pagerank_docs, curation_funnel, dedup_components)
 run driver-coordinated rounds in separate query executions whose
-exchanges the final plan doesn't carry — they are measured through
-their operators' ``metrics_sink`` rows (one per checkpoint action) and
-published in their own per-step section.
+exchanges the final plan doesn't carry — they are published in their
+own per-step section: one row per checkpoint ``instrument.observe``
+saw, named by the operator's ``step`` or, when unnamed, by the function
+that took it.
 """
 
 from __future__ import annotations
@@ -145,29 +152,32 @@ QUERIES = [
 
 
 def iterative_runs(spark, sf_dir: str) -> dict[str, list[dict]]:
-    """Per-step movement rows for the iterative ops, via their
-    metrics_sink hooks. Each op runs once per SF; the sink rows cover
-    every checkpoint action (edge materialization, label/contribution
-    rounds, funnel stages). pagerank/CC append a final_plan row for the
-    post-iteration ranking plan; the funnel's LAST stage is itself an
-    eager checkpoint already in the sink, so its totals cover
-    checkpoint actions completely and no final_plan row exists."""
+    """Per-step movement rows for the iterative ops: one row per
+    checkpoint an ``instrument.observe`` around the run saw (edge
+    materialization, label/contribution rounds, funnel seals, and the
+    unnamed pins inside them). Each op runs once per SF. pagerank/CC
+    append a final_plan row for the post-iteration ranking plan; the
+    funnel's LAST stage is itself an eager checkpoint, so no final_plan
+    row exists. The rows are disjoint plan segments, so their sum is
+    the op's whole plan-layer movement."""
     from databeats_spark.plans.curation import curate_corpus
-    from databeats_spark.plans.instrument import execution_metrics, stage_mark, stage_work
+    from databeats_spark.plans.instrument import (
+        execution_metrics, observe, stage_mark, stage_work,
+    )
     from databeats_spark.registry.documents import _dedup_components
     from databeats_spark.registry.mining import _pagerank_docs
 
     def run(build, final_plan: bool) -> list[dict]:
-        mark, sink = stage_mark(spark), []
-        final = build(sink)
-        if final_plan:
-            sink.append({"step": "final_plan", **execution_metrics(final)})
-        return sink + [{"step": "stage_totals", **stage_work(spark, mark)}]
+        mark = stage_mark(spark)
+        with observe() as taken:
+            final = build()
+            tail = [{"step": "final_plan", **execution_metrics(final)}] if final_plan else []
+        return taken.steps() + tail + [{"step": "stage_totals", **stage_work(spark, mark)}]
 
     return {
-        "pagerank_docs": run(lambda s: _pagerank_docs(spark, sf_dir, metrics_sink=s), True),
-        "dedup_components": run(lambda s: _dedup_components(spark, sf_dir, metrics_sink=s), True),
-        "curation_funnel": run(lambda s: curate_corpus(spark, sf_dir, metrics_sink=s), False),
+        "pagerank_docs": run(lambda: _pagerank_docs(spark, sf_dir), True),
+        "dedup_components": run(lambda: _dedup_components(spark, sf_dir), True),
+        "curation_funnel": run(lambda: curate_corpus(spark, sf_dir), False),
     }
 
 
@@ -180,9 +190,12 @@ def main() -> None:
     from databeats_spark.registry import queries
     from databeats_spark.session import get_spark
 
+    # the fixed session shape (module docstring)
     spark = get_spark(
         app_name="databeats_shuffle_audit",
+        master="local[32]",
         shuffle_partitions=shuffle_partitions_for(SF_DIRS[0]),
+        extra_conf={"spark.driver.memory": "6g", "spark.buffer.pageSize": "16m"},
     )
     reg = queries()
     by_sf: dict[str, dict[str, dict]] = {}
@@ -202,55 +215,41 @@ def main() -> None:
     with open(os.path.join(repo, "SHUFFLE.md"), "w") as f:
         f.write(
             "# SHUFFLE — deterministic data-movement audit\n\n"
-            "Generated by `scripts/shuffle_audit.py`.\n"
-            "Bytes moved are a property of the plan and the data — they\n"
-            "reproduce exactly run over run, so these tables (not\n"
-            "wall-clock, which README's variance note shows swinging ±25%\n"
-            "with external VM steal) are the round-over-round regression\n"
-            "signal: a broadcast join regressing to sort-merge, a lost\n"
-            "pushdown, or a partial aggregation regressing to full-row\n"
-            "shuffle shows up as an order-of-magnitude byte jump — and the\n"
-            "cross-scale byte ratio is the scale curve in deterministic\n"
-            "form (10x data moving ~10x bytes is linear; superlinear byte\n"
-            "growth exposes a re-quadratizing stage regardless of clock\n"
-            "noise; far-below-10x means the mover is a bounded candidate /\n"
-            "catalog / top-k set, not the corpus).\n\n"
-            "Every row is one `plans/instrument.py::movement` record.\n"
-            "Its columns come from two layers: plan-walk SQLMetrics\n"
-            "(shuffle/broadcast dataSize — uncompressed, per-exchange)\n"
-            "and stage-store totals for the same run (`exec write` =\n"
-            "post-compression shuffle bytes actually written by every\n"
-            "stage that RAN, `cpu_s` = executor CPU seconds — both\n"
-            "steal-immune). Queries whose bounded verifier slice is empty\n"
-            "at sf0.1 (near_dup_pairs, split_leakage_pairs,\n"
-            "dedup_components) read 0 B in the PLAN columns there because\n"
-            "AQE's empty-relation propagation erases already-executed\n"
-            "exchanges from the final plan — their `exec write` column\n"
-            "shows the true executed movement (the shingle/join work runs\n"
-            "either way; AQE discovers emptiness bottom-up).\n"
-            "The spill column sums disk spill over sort/aggregate/join/\n"
-            "window operators — 0 B everywhere is the partition-sizing\n"
-            "proof (every partition fits its task's memory share);\n"
+            "Generated by `scripts/shuffle_audit.py` at a shape the script fixes\n"
+            "itself: local[32], a 6g driver heap and 16m memory pages (broadcast\n"
+            "bytes follow the page size, exec write the default parallelism).\n"
+            "Bytes moved are a property of plan and data and reproduce run over\n"
+            "run, so these tables — not wall-clock, which swings ±25% with host\n"
+            "CPU steal — are the regression signal: a broadcast join regressing to\n"
+            "sort-merge, a lost pushdown or a partial aggregate turning into a\n"
+            "full-row shuffle is an order-of-magnitude byte jump. The cross-scale\n"
+            "byte ratio is the scale curve in deterministic form: ~10x for 10x\n"
+            "data is linear, more exposes a re-quadratizing stage, far less means\n"
+            "the mover is a bounded candidate / catalog / top-k set.\n\n"
+            "Every row is one `plans/instrument.py::movement` record. The PLAN\n"
+            "columns fold the exchange/scan/spill SQLMetrics (dataSize,\n"
+            "uncompressed) of the final plan and of every checkpoint\n"
+            "`instrument.observe` saw during build+execute — disjoint segments,\n"
+            "summed exactly. `exec write` (post-compression shuffle bytes of every\n"
+            "stage that ran) and `cpu_s` (executor CPU) come from the stage store.\n"
+            "Where a bounded verifier slice is empty at sf0.1 (near_dup_pairs,\n"
+            "split_leakage_pairs, dedup_components), AQE's empty-relation\n"
+            "propagation erases executed exchanges from the final plan: the PLAN\n"
+            "columns read 0 B and `exec write` shows the real movement. 0 B of\n"
+            "spill everywhere is the partition-sizing proof;\n"
             "test_shuffle_budget.py pins it at the correctness SF.\n\n"
-            "The PLAN columns also see past localCheckpoints: `movement`\n"
-            "captures every pre-checkpoint DataFrame during build+execute\n"
-            "and folds its executedPlan's SQLMetrics into the row —\n"
-            "disjoint plan segments, summed exactly.\n\n"
-            "Iterative queries (pagerank/CC/funnel) are measured per\n"
-            "checkpoint action via their metrics_sink rows and tabled in\n"
-            "their own section — their exchanges run in separate query\n"
-            "executions the final plan never carries. The funnel's last\n"
-            "stage is itself an eager checkpoint, so its rows cover the\n"
-            "op completely; pagerank/CC carry an explicit final_plan row\n"
-            "for the post-iteration ranking plan.\n"
-            "\n"
-            "The *_exact oracle twins (phash/blockmean) are excluded from\n"
-            "this audit: their 20-bit signatures densify the banded background\n"
-            "on purpose (the verify filter must do real work at the correctness\n"
-            "SF), so their candidate pairs grow quadratically with bucket\n"
-            "occupancy — a bit-width property of the twin, not the production\n"
-            "64-bit path (whose rows above scale ~10x). Measured once in r10:\n"
-            "blockmean_near_dups_exact moved 26.8x bytes at 10x data.\n"
+            "Iterative ops (pagerank/CC/funnel) run their exchanges in query\n"
+            "executions the final plan never carries, so they get their own\n"
+            "section: one row per checkpoint `instrument.observe` saw — a step the\n"
+            "operator named (edges, rounds, seals) or, in parentheses, the function\n"
+            "that took an unnamed one — plus a final_plan row for pagerank/CC's\n"
+            "ranking plan (the funnel's last seal is itself a checkpoint). Each\n"
+            "op's total sums all of its rows.\n\n"
+            "The *_exact twins (phash/blockmean) are left out: their 20-bit\n"
+            "signatures densify the banded background on purpose, so their\n"
+            "candidate pairs grow quadratically with bucket occupancy (r10:\n"
+            "blockmean_near_dups_exact moved 26.8x bytes at 10x data), unlike the\n"
+            "64-bit production rows (~10x).\n"
         )
         for sf_dir in SF_DIRS:
             f.write(

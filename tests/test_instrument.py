@@ -1,19 +1,24 @@
 """The measurement core (plans/instrument.py): ``profile`` attributes
 exactly the jobs and stages its query created, eager build-time work
 included; ``movement`` folds pre-checkpoint plan segments that a plain
-``execution_metrics`` walk cannot see; the iterative operators' sink
-rows carry per-step wall time without changing the job count."""
+``execution_metrics`` walk cannot see; ``observe`` records every
+checkpoint, and the iterative operators' named steps carry per-step
+wall time without changing the job count."""
 
 from __future__ import annotations
 
+import pytest
 from tests.conftest import SF_CORRECT
 
+from databeats_spark.plans import instrument
 from databeats_spark.plans.instrument import (
     execution_metrics,
     movement,
+    observe,
     profile,
     stage_mark,
     stage_work,
+    step,
 )
 from databeats_spark.registry import queries
 
@@ -62,18 +67,23 @@ def test_profile_counts_eager_build_time_jobs(spark):
     assert rec["n_jobs"] == build_jobs + exec_jobs, (rec, build_jobs, exec_jobs)
 
 
-def test_pagerank_sink_rows_carry_wall_and_add_no_jobs(spark):
+def test_pagerank_steps_carry_wall_and_add_no_jobs(spark):
     from databeats_spark.registry.mining import _pagerank_docs
 
-    _noop(_pagerank_docs(spark, SF_CORRECT))  # warm the shingle cache
+    _noop(_pagerank_docs(spark, SF_CORRECT))  # warm: first-touch jobs differ
     plain = profile(spark, lambda: _pagerank_docs(spark, SF_CORRECT))
-    sink: list[dict] = []
-    sunk = profile(spark, lambda: _pagerank_docs(spark, SF_CORRECT, metrics_sink=sink))
-    assert sunk["n_jobs"] == plain["n_jobs"], (plain, sunk)
-    rounds = [r for r in sink if r["step"].startswith("round_")]
-    assert rounds, sink
+    with observe() as taken:
+        observed = profile(spark, lambda: _pagerank_docs(spark, SF_CORRECT))
+    assert observed["n_jobs"] == plain["n_jobs"], (plain, observed)
+    rows = taken.steps()
+    rounds = [r for r in rows if r["step"].startswith("round_")]
+    assert rounds, rows
     assert all(r["wall_s"] > 0 for r in rounds), rounds
-    assert all("wall_s" in r for r in sink), sink
+    assert all("wall_s" in r for r in rows), rows
+    # every step the operator named carries a wall; unnamed pins do not
+    assert all(
+        (r["wall_s"] is None) == r["step"].startswith("(") for r in rows
+    ), rows
 
 
 def test_movement_folds_checkpointed_segments(spark):
@@ -92,22 +102,58 @@ def test_movement_folds_checkpointed_segments(spark):
 
 def test_cc_edge_rows_share_one_wall(spark, monkeypatch):
     """cc_input_edges and cc_edges come from one checkpoint action: both
-    rows carry that action's wall, read before either fold (a slow
-    fold of the first row must not land in the second row's wall)."""
-    import time
-
+    steps carry that action's wall. Folds run when the record is read,
+    never inside a step, so no fold can land in any step's wall."""
     from databeats_spark.operators.graph import connected_components
-    from databeats_spark.plans import instrument
 
-    fold = instrument.executed_metrics
+    fold, folded = instrument.executed_metrics, []
 
-    def slow_fold(df):
-        time.sleep(0.5)
+    def counting_fold(df):
+        folded.append(df)
         return fold(df)
 
-    monkeypatch.setattr(instrument, "executed_metrics", slow_fold)
-    sink: list[dict] = []
+    monkeypatch.setattr(instrument, "executed_metrics", counting_fold)
     edges = spark.createDataFrame([(1, 2), (2, 3)], "src: long, dst: long")
-    connected_components(edges, metrics_sink=sink)
-    by_step = {r["step"]: r for r in sink}
-    assert by_step["cc_input_edges"]["wall_s"] == by_step["cc_edges"]["wall_s"], sink
+    with observe() as taken:
+        connected_components(edges)
+    assert folded == [], "a step folded metrics"
+    rows = taken.steps()
+    assert len(folded) == len(rows) == len(taken)
+    by_step = {r["step"]: r for r in rows}
+    assert by_step["cc_input_edges"]["wall_s"] == by_step["cc_edges"]["wall_s"], rows
+
+
+def test_observe_restores_nests_and_records_unnamed_checkpoints(spark):
+    """The patch lives exactly as long as the outermost observer, an
+    exception included; a nested observer loses no record to either
+    side and a step names both; a checkpoint no step names is still
+    recorded — pagerank_docs' MinHash scored-pair pin among them."""
+    from databeats_spark.registry.mining import _pagerank_docs
+
+    me = f"({test_observe_restores_nests_and_records_unnamed_checkpoints.__name__})"
+    original = instrument._RuntimeDF.localCheckpoint
+    with pytest.raises(ValueError), observe():
+        assert instrument._RuntimeDF.localCheckpoint is not original
+        raise ValueError
+    assert instrument._RuntimeDF.localCheckpoint is original
+
+    df = spark.range(3)
+    with observe() as outer:
+        df.localCheckpoint()
+        with observe() as inner:
+            src = df.selectExpr("id + 1 AS id")
+            src.localCheckpoint()
+            step("plus_one", src, 0.0)
+        df.localCheckpoint()
+    assert instrument._RuntimeDF.localCheckpoint is original
+    assert [r[1] for r in outer] == [me, "plus_one", me], outer
+    assert [r[1] for r in inner] == ["plus_one"], inner
+
+    with observe() as taken:
+        _pagerank_docs(spark, SF_CORRECT)
+    scored = [
+        row for (src, _, _), row in zip(taken, taken.steps())
+        if src.columns == ["id_a", "id_b", "common", "jaccard"]
+    ]
+    assert [r["step"] for r in scored] == ["(minhash_near_duplicates)"], scored
+    assert scored[0]["shuffle_bytes"] > 0, scored

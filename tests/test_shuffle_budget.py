@@ -113,29 +113,26 @@ def test_pagerank_rounds_move_bounded_bytes(spark):
     pairs — kilobytes on this graph — while the one-time LSH edge
     materialization dominates. A round that starts re-executing the
     edge generator (or compounding state) shows up as round bytes on
-    the edge step's scale. r13: the LSH pipeline's bytes moved out of
-    the sink's "edges" row into the minhash operator's own scored-
-    candidate checkpoint (minhash_near_duplicates pins the verified
-    pair list ONCE for all consumers), so the materialization cost is
-    folded from the captured pre-checkpoint plans — the same recovery
-    scripts/shuffle_audit.py uses for every localCheckpoint."""
-    from databeats_spark.plans.instrument import (
-        capture_checkpoint_sources, executed_metrics,
-    )
+    the edge step's scale. The LSH pipeline's bytes sit upstream of
+    the "edges" step, in the minhash operator's own unnamed pins (the
+    shingle set and the scored candidate list), so the
+    materialization cost is the edges step plus those observed
+    checkpoints — the same record scripts/shuffle_audit.py tables."""
+    from databeats_spark.plans.instrument import observe
     from databeats_spark.registry.mining import _pagerank_docs
 
-    sink: list[dict] = []
-    with capture_checkpoint_sources() as sources:
-        _pagerank_docs(spark, SF_CORRECT, metrics_sink=sink)
-    steps = {s["step"]: s for s in sink}
+    with observe() as taken:
+        _pagerank_docs(spark, SF_CORRECT)
+    rows = taken.steps()
+    steps = {s["step"]: s for s in rows}
     assert "edges" in steps and any(k.startswith("round_") for k in steps)
     rounds = [s for k, s in steps.items() if k.startswith("round_")]
-    # measured: edges+captured checkpoints ~578 KB total, rounds 1-4 KB
+    # measured: edges+observed checkpoints ~578 KB total, rounds 1-4 KB
     # each at sf0.01 — order-of-magnitude headroom, trips only on
     # re-execution/compounding
     assert all(r["shuffle_bytes"] < 100_000 for r in rounds), steps
     materialization = steps["edges"]["shuffle_bytes"] + sum(
-        executed_metrics(s)["shuffle_bytes"] for s in sources
+        s["shuffle_bytes"] for s in rows if s["step"] == "(minhash_near_duplicates)"
     )
     assert materialization > max(
         r["shuffle_bytes"] for r in rounds
@@ -148,15 +145,17 @@ def test_funnel_stage_movement_is_bounded(spark):
     work), and the CC label rounds inside near_dup stay near-constant
     round over round. r14: the linear raw → quality → exact_dedup chain
     rides ONE seal (folded observe segments, VERDICT r13 item 1), so
-    the sink carries one row for that segment and one per remaining
+    the observer records one seal for that segment and one per remaining
     stage — 5 stage actions total, pinned from above so a regression
     back to per-stage checkpoint jobs fails loudly."""
     from databeats_spark.plans.curation import curate_corpus
+    from databeats_spark.plans.instrument import observe
 
     counts: dict[str, int] = {}
-    sink: list[dict] = []
-    curate_corpus(spark, SF_CORRECT, observe_counts=counts, metrics_sink=sink)
-    by_step = {s["step"]: s for s in sink}
+    with observe() as taken:
+        curate_corpus(spark, SF_CORRECT, observe_counts=counts)
+    rows = taken.steps()
+    by_step = {s["step"]: s for s in rows}
     assert {
         "stage_raw+quality+exact_dedup", "stage_near_dup", "stage_decontam",
         "stage_rebalance", "stage_budget",
@@ -177,7 +176,7 @@ def test_funnel_stage_movement_is_bounded(spark):
     # segment (scan spread + quality + exact-dedup window)
     head = by_step["stage_raw+quality+exact_dedup"]["shuffle_bytes"]
     assert all(
-        s["shuffle_bytes"] <= max(head * 20, 5_000_000) for s in sink
+        s["shuffle_bytes"] <= max(head * 20, 5_000_000) for s in rows
     ), by_step
 
 
@@ -310,21 +309,16 @@ def test_checkpoint_capture_recovers_hits_round_movement(spark):
     recover the rounds' real movement from the pre-checkpoint plans.
     Upper bound on the blind final plan, lower bound on the folded
     total — both order-of-magnitude, steal-immune."""
-    from databeats_spark.plans.instrument import (
-        capture_checkpoint_sources,
-        executed_metrics,
-        execution_metrics,
-    )
+    from databeats_spark.plans.instrument import execution_metrics, observe
 
     reg = queries()
-    with capture_checkpoint_sources() as sources:
+    with observe() as taken:
         m = execution_metrics(reg["hits_copurchase"](spark, SF_CORRECT))
     assert m["shuffle_bytes"] < 10_000, m  # the blind spot, pinned
-    assert len(sources) >= 2, "both attach_global_scalar checkpoints"
+    assert len(taken) >= 2, "both attach_global_scalar checkpoints"
     folded = dict(m)
-    for src in sources:
-        sm = executed_metrics(src)
-        for k in sm:
+    for sm in taken.steps():
+        for k in m:
             folded[k] += sm[k]
     # the rounds join edges (~75k rows at sf0.01) repeatedly: MBs of
     # real shuffle and the full orders+lineitem scan come back into
