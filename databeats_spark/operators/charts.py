@@ -29,10 +29,10 @@ would double-count the pandas walk too.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from databeats_spark.operators.windows import top_k_per_group
+from databeats_spark.operators.windows import streak_ending_at_latest, top_k_per_group
 
 
 def snapshot_chart(
@@ -50,6 +50,25 @@ def snapshot_chart(
         [F.col(popularity_col).desc(), F.col(entity_col).asc()],
         k,
     ).select(ts_col, entity_col)
+
+
+# the weekly dashboard chart's length (weekly_chart_streak and the
+# streaming chart serve)
+CHART_K = 10
+
+
+def chart_streaks(weekly: DataFrame) -> DataFrame:
+    """Weekly totals (wk, user_id, wv) → (user_id, streak BIGINT): the
+    top-CHART_K chart per week (wv desc, user_id asc), then each user's
+    run of consecutive chart weeks ending at the newest chart week,
+    longest first. The batch ``weekly_chart_streak`` query and the
+    streaming serve path (streaming/chart.py) both run this."""
+    chart = top_k_per_group(weekly, ["wk"], [F.col("wv").desc(), F.col("user_id")], CHART_K)
+    return (
+        streak_ending_at_latest(chart, "user_id", "wk")
+        .select("user_id", F.col("streak").cast("long").alias("streak"))
+        .orderBy(F.col("streak").desc(), "user_id")
+    )
 
 
 def week_on_chart(

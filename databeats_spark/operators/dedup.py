@@ -180,17 +180,15 @@ def minhash_signatures(
     text_col: str,
     shingle_n: int = 3,
     num_hashes: int = 16,
-    seed: int = 42,
-    num_partitions: int | None = None,
     family: MinHashFamily | None = None,
 ) -> DataFrame:
     """Per-document MinHash signature table (__id, signature) — the
     compact sketch an ingest guard persists instead of text: estimated
     Jaccard between two docs is the fraction of agreeing signature
     positions (see :func:`signature_jaccard`). ``family`` defaults to
-    :func:`universal_family` of ``seed``."""
-    shingled = _shingled_docs(df, id_col, text_col, shingle_n, num_partitions)
-    return _signatures(shingled, num_hashes, family or universal_family(seed))
+    :func:`universal_family`."""
+    shingled = _shingled_docs(df, id_col, text_col, shingle_n)
+    return _signatures(shingled, num_hashes, family or universal_family())
 
 
 def lsh_band_keys(sig: DataFrame, num_hashes: int = 16, bands: int = 8) -> DataFrame:
@@ -236,7 +234,6 @@ def minhash_near_duplicates(
     num_hashes: int = 16,
     bands: int = 8,
     threshold: float = 0.6,
-    seed: int = 42,
     num_partitions: int | None = None,
     family: MinHashFamily | None = None,
 ) -> DataFrame:
@@ -249,7 +246,7 @@ def minhash_near_duplicates(
     set only). With b=8, r=2 the LSH S-curve crosses ~0.5 at
     J ≈ (1/8)^(1/2) ≈ 0.35 — generous candidate generation whose false
     positives the exact verifier discards. ``family`` defaults to
-    :func:`universal_family` of ``seed``.
+    :func:`universal_family`.
 
     Returns (id_a, id_b, common, jaccard) with jaccard ≥ threshold —
     the shape of :func:`ngram_jaccard_pairs`.
@@ -261,7 +258,7 @@ def minhash_near_duplicates(
     shingled = _shingled_docs(
         df, id_col, text_col, shingle_n, num_partitions
     ).localCheckpoint(eager=False)
-    sig = _signatures(shingled, num_hashes, family or universal_family(seed))
+    sig = _signatures(shingled, num_hashes, family or universal_family())
     band_rows = lsh_band_keys(sig, num_hashes=num_hashes, bands=bands)
 
     cand = (

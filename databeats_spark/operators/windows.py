@@ -93,8 +93,6 @@ def streak_ending_at_latest(
     on_chart: DataFrame,
     entity_col: str,
     period_idx_col: str,
-    latest_idx: Column | int | None = None,
-    out_col: str = "streak",
 ) -> DataFrame:
     """Consecutive-period streak ending at the latest period — the
     gaps-and-islands re-expression of reference W3 (`get_week_on_chart`,
@@ -104,36 +102,30 @@ def streak_ending_at_latest(
 
     ``on_chart``: one row per (entity, period) the entity qualified in;
     ``period_idx_col``: dense integer period index (e.g. week number).
-    Returns (entity, streak) for entities whose island reaches
-    ``latest_idx`` — all other entities have streak 0 by definition.
+    Returns (entity, streak) for entities whose island reaches the
+    newest period on the chart — all other entities have streak 0 by
+    definition.
 
     Plan shape: one shuffle on entity, two window passes, one
     aggregation — no iteration, scales linearly in rows.
     """
+    from databeats_spark.operators.scale import attach_global_scalar
+
     w = Window.partitionBy(entity_col).orderBy(period_idx_col)
     island = (F.col(period_idx_col) - F.row_number().over(w)).alias("__island")
     grouped = (
         on_chart.select(entity_col, period_idx_col, island)
         .groupBy(entity_col, "__island")
         .agg(
-            F.count(F.lit(1)).alias(out_col),
+            F.count(F.lit(1)).alias("streak"),
             F.max(period_idx_col).alias("__maxp"),
         )
     )
-    if latest_idx is None:
-        # global newest period from the chart itself, attached as a
-        # broadcast scalar (an empty-partition window would drag
-        # everything to one task and warn); attach_global_scalar
-        # materializes the grouped islands once instead of re-running
-        # the whole chart pipeline for the scalar (AQE does not dedupe
-        # the shared exchange under the broadcast side)
-        from databeats_spark.operators.scale import attach_global_scalar
-
-        grouped = attach_global_scalar(grouped, F.max("__maxp").alias("__latest"))
-        lit_latest = F.col("__latest")
-    else:
-        lit_latest = F.lit(latest_idx) if isinstance(latest_idx, int) else latest_idx
-    return (
-        grouped.filter(F.col("__maxp") == lit_latest)
-        .select(entity_col, out_col)
-    )
+    # global newest period from the chart itself, attached as a
+    # broadcast scalar (an empty-partition window would drag everything
+    # to one task and warn); attach_global_scalar materializes the
+    # grouped islands once instead of re-running the whole chart
+    # pipeline for the scalar (AQE does not dedupe the shared exchange
+    # under the broadcast side)
+    grouped = attach_global_scalar(grouped, F.max("__maxp").alias("__latest"))
+    return grouped.filter(F.col("__maxp") == F.col("__latest")).select(entity_col, "streak")

@@ -82,18 +82,22 @@ class QuerySpec:
 # Regenerate with ``python scripts/rotation_report.py``.
 _WINDOW = (
     # Mirrors scripts/rotation_report.py's recommended front-50 exactly.
-    # — CHANGED_QUERIES re-certs (per-step record moved to
-    # instrument.observe(); minhash shingles pinned per call):
-    "curation_funnel",
-    "dedup_components",
-    "minhash_near_dups",
-    "minhash_near_dups_exact",
-    "minhash_estimate_audit",
-    "pagerank_docs",
-    "curation_funnel_exact",
-    "pagerank_docs_exact",
+    # — CHANGED_QUERIES re-certs (one Spark helper per shared fragment):
+    "session_transcripts",
+    "weekly_chart_streak",
+    "sessionization",
+    "ks_two_sample",
+    "quantile_treatment_effect",
+    "cvm_two_sample",
+    "sprt_evalue_monitor",
+    "lang_id_calibration",
+    "brier_decomposition",
+    "isotonic_calibration",
+    "peak_concurrency",
     # — certifying twin older than TWIN_MAX_AGE rounds:
     "blockmean_near_dups_exact",
+    # — bench headliner not green in the latest recorded round:
+    "minhash_near_dups",
     # — oldest greens, report order:
     "price_quantiles",
     "order_gaps",
@@ -124,7 +128,6 @@ _WINDOW = (
     "srm_daily_check",
     "did_experiment_effect",
     "cuped_experiment_effect",
-    "session_transcripts",
     "lang_label_noise",
     "lang_id_kappa",
     "zorder_locality_audit",
@@ -133,9 +136,6 @@ _WINDOW = (
     "cusum_changepoint",
     "dow_seasonal_decompose",
     "theil_sen_trend",
-    "holt_winters_forecast",
-    "holt_linear_forecast",
-    "js_source_drift",
 )
 
 # Queries whose BUILDER or ORACLE changed this round (reset to () at
@@ -146,19 +146,20 @@ _WINDOW = (
 # in r10, jackknife in r11), mechanical instead of CLAUDE.md prose the
 # report "cannot see".
 CHANGED_QUERIES: tuple[str, ...] = (
-    # builders back to (spark, sf_dir): the per-step record moved to
-    # instrument.observe()
-    "dedup_components",
-    "pagerank_docs",
-    # reach operators/dedup.py::_shingled_docs, which no longer caches
-    # shingle sets across calls (minhash_near_duplicates pins per call)
-    "minhash_near_dups",
-    "minhash_near_dups_exact",
-    "minhash_estimate_audit",
-    "curation_funnel",
-    # run pagerank / curate_corpus, whose steps now name observer records
-    "pagerank_docs_exact",
-    "curation_funnel_exact",
+    # one Spark helper per shared fragment (registry/events.py
+    # _arm_ecdf, _session_ids, sprt_readout; operators/charts.py
+    # chart_streaks; registry/documents.py _lang_scored): same plans
+    "quantile_treatment_effect",
+    "ks_two_sample",
+    "cvm_two_sample",
+    "sessionization",
+    "session_transcripts",
+    "peak_concurrency",
+    "weekly_chart_streak",
+    "sprt_evalue_monitor",
+    "lang_id_calibration",
+    "brier_decomposition",
+    "isotonic_calibration",
 )
 
 # The driver gate only sees the first _GATE_WIDTH entries; anything past

@@ -57,6 +57,8 @@ from databeats_spark.registry.documents import (
     PAIR_DOC_LIMIT,
     _CLOSURE_CTES,
     _PAIRS_CTES,
+    _pairs_ctes,
+    _shingle_ctes,
 )
 from databeats_spark.sources.tables import load_tables, spread
 
@@ -193,25 +195,6 @@ ORDER BY p.source
 DUP_HIST_DOC_LIMIT = 500
 DUP_HIST_THRESHOLD = 0.35
 
-_HIST_PAIRS_CTES = f"""t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-  FROM documents WHERE doc_id < {DUP_HIST_DOC_LIMIT}
-), s AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-                        i -> array_to_string(toks[i:i+2], ' '))) AS shingles
-  FROM t
-), sized AS (
-  SELECT doc_id, len(shingles) AS n FROM s
-), e AS (
-  SELECT doc_id, unnest(shingles) AS sh FROM s
-), pairs AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
-  FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-)"""
-
-
 def _dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t.documents.filter(F.col("doc_id") < DUP_HIST_DOC_LIMIT)
@@ -232,7 +215,7 @@ def _dup_cluster_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _DUP_CLUSTER_SIZES_SQL = f"""
-WITH RECURSIVE {_HIST_PAIRS_CTES},
+WITH RECURSIVE {_pairs_ctes(DUP_HIST_DOC_LIMIT)},
 qual AS (
   SELECT id_a, id_b
   FROM pairs
@@ -1123,19 +1106,7 @@ def _dedup_sensitivity_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _DEDUP_SENSITIVITY_DELTA_SQL = rf"""
-WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\s+') AS toks
-  FROM documents WHERE doc_id < {PAIR_DOC_LIMIT}
-), s AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-                        i -> array_to_string(toks[i:i+2], ' '))) AS shingles
-  FROM t
-), sized AS (
-  SELECT doc_id, len(shingles) AS n FROM s
-), e AS (
-  SELECT doc_id, unnest(shingles) AS sh FROM s
-), pairs AS (
+WITH {_shingle_ctes(PAIR_DOC_LIMIT)}, pairs AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
   FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
   WHERE a.doc_id >= {SENS_DELTA_SPLIT} OR b.doc_id >= {SENS_DELTA_SPLIT}

@@ -182,9 +182,11 @@ ORDER BY doc_id
 CALIB_BINS = 10
 
 
-def _lang_scored(docs: DataFrame) -> DataFrame:
-    """(lang, guess, best, total) per marker-carrying doc — the shared
-    front of lang_id_calibration and brier_decomposition."""
+def _lang_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(lang, guess, best, total) per marker-carrying doc — the Spark
+    front of lang_id_calibration, brier_decomposition and
+    isotonic_calibration; _lang_scored_ctes is the DuckDB half."""
+    docs = spread(load_tables(spark, sf_dir, ["documents"]).documents, spark)
     base = docs.select(
         "doc_id", "lang", F.split(F.trim("text"), r"\s+").alias("toks")
     )
@@ -217,22 +219,59 @@ def _lang_scored(docs: DataFrame) -> DataFrame:
     ).filter(F.col("total") > 0)
 
 
-def _lang_id_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    docs = spread(t.documents, spark)
-    scored = _lang_scored(docs)
-    bucket = F.least(
+def _calib_bucket() -> Column:
+    """The calibration bin of a scored doc: its rule-of-succession
+    confidence (best + 1) / (total + 2) cut into CALIB_BINS equal bins."""
+    return F.least(
         F.floor(
             F.lit(CALIB_BINS) * (F.col("best") + F.lit(1)) / (F.col("total") + F.lit(2))
         ),
         F.lit(CALIB_BINS - 1),
     ).cast("bigint")
-    binned = scored.groupBy(bucket.alias("bucket")).agg(
+
+
+def _calib_binned(scored: DataFrame) -> DataFrame:
+    """(bucket, n, n_correct) per calibration bin of the scored docs."""
+    return scored.groupBy(_calib_bucket().alias("bucket")).agg(
         F.count(F.lit(1)).cast("bigint").alias("n"),
         F.sum((F.col("guess") == F.col("lang")).cast("bigint"))
         .cast("bigint")
         .alias("n_correct"),
     )
+
+
+def _lang_scored_ctes() -> str:
+    """t → s (marker hits per language) → scored (lang, guess, best,
+    total per marker-carrying doc): the DuckDB half of _lang_scored."""
+    score_cols_sql, best_expr = _lang_guess_sql_parts()
+    total = " + ".join(f"s_{lang}" for lang in LANG_MARKERS)
+    best_score = "0"
+    for lang in LANG_MARKERS:
+        best_score = f"greatest(s_{lang}, {best_score})"
+    return f"""t AS (
+  SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS toks FROM documents
+), s AS (
+  SELECT doc_id, lang, {score_cols_sql} FROM t
+), scored AS (
+  SELECT lang, {best_expr} AS guess,
+         CAST({best_score} AS BIGINT) AS best,
+         CAST({total} AS BIGINT) AS total
+  FROM s
+  WHERE {total} > 0
+)"""
+
+
+# (bucket, n, n_correct) per calibration bin: the DuckDB half of _calib_binned
+_CALIB_BINNED_CTE = f"""binned AS (
+  SELECT CAST(least(floor({CALIB_BINS} * (best + 1) / (total + 2)), {CALIB_BINS - 1}) AS BIGINT) AS bucket,
+         CAST(count(*) AS BIGINT) AS n,
+         CAST(sum(CASE WHEN guess = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
+  FROM scored GROUP BY 1
+)"""
+
+
+def _lang_id_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    binned = _calib_binned(_lang_scored(spark, sf_dir))
     conf_mid = (F.col("bucket").cast("double") + F.lit(0.5)) / F.lit(float(CALIB_BINS))
     acc = F.col("n_correct").cast("double") / F.col("n").cast("double")
     return binned.select(
@@ -246,29 +285,9 @@ def _lang_id_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lang_id_calibration_sql() -> str:
-    score_cols_sql, best_expr = _lang_guess_sql_parts()
-    total = " + ".join(f"s_{lang}" for lang in LANG_MARKERS)
-    best_score = "0"
-    for lang in LANG_MARKERS:
-        best_score = f"greatest(s_{lang}, {best_score})"
     b = CALIB_BINS
     return f"""
-WITH t AS (
-  SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS toks FROM documents
-), s AS (
-  SELECT doc_id, lang, {score_cols_sql} FROM t
-), scored AS (
-  SELECT lang, {best_expr} AS guess,
-         CAST({best_score} AS BIGINT) AS best,
-         CAST({total} AS BIGINT) AS total
-  FROM s
-  WHERE {total} > 0
-), binned AS (
-  SELECT CAST(least(floor({b} * (best + 1) / (total + 2)), {b - 1}) AS BIGINT) AS bucket,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN guess = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
-  FROM scored GROUP BY 1
-)
+WITH {_lang_scored_ctes()}, {_CALIB_BINNED_CTE}
 SELECT bucket,
        round((CAST(bucket AS DOUBLE) + 0.5) / {float(b)!r}, 6) AS conf_mid,
        n, n_correct,
@@ -296,19 +315,11 @@ ORDER BY bucket
 # replica pytest.
 
 def _brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    docs = spread(t.documents, spark)
-    scored = _lang_scored(docs)
     p = (F.col("best") + F.lit(1)).cast("double") / (F.col("total") + F.lit(2))
     o = (F.col("guess") == F.col("lang")).cast("bigint")
-    bucket = F.least(
-        F.floor(
-            F.lit(CALIB_BINS) * (F.col("best") + F.lit(1)) / (F.col("total") + F.lit(2))
-        ),
-        F.lit(CALIB_BINS - 1),
-    ).cast("bigint")
     bins = (
-        scored.select(bucket.alias("bucket"), p.alias("p"), o.alias("o"))
+        _lang_scored(spark, sf_dir)
+        .select(_calib_bucket().alias("bucket"), p.alias("p"), o.alias("o"))
         .groupBy("bucket")
         .agg(
             F.count(F.lit(1)).cast("bigint").alias("n"),
@@ -361,24 +372,9 @@ def _brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _brier_decomposition_sql() -> str:
-    score_cols_sql, best_expr = _lang_guess_sql_parts()
-    total = " + ".join(f"s_{lang}" for lang in LANG_MARKERS)
-    best_score = "0"
-    for lang in LANG_MARKERS:
-        best_score = f"greatest(s_{lang}, {best_score})"
     b = CALIB_BINS
     return f"""
-WITH t AS (
-  SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS toks FROM documents
-), s AS (
-  SELECT doc_id, lang, {score_cols_sql} FROM t
-), scored AS (
-  SELECT lang, {best_expr} AS guess,
-         CAST({best_score} AS BIGINT) AS best,
-         CAST({total} AS BIGINT) AS total
-  FROM s
-  WHERE {total} > 0
-), po AS (
+WITH {_lang_scored_ctes()}, po AS (
   SELECT CAST(least(floor({b} * (best + 1) / (total + 2)), {b - 1}) AS BIGINT) AS bucket,
          CAST(best + 1 AS DOUBLE) / (total + 2) AS p,
          CAST(CASE WHEN guess = lang THEN 1 ELSE 0 END AS BIGINT) AS o
@@ -434,25 +430,7 @@ GROUP BY t.nn, t.oo
 # sweep (the two algorithms agree exactly — the identity, verified).
 
 def _isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    t = load_tables(spark, sf_dir, ["documents"])
-    docs = spread(t.documents, spark)
-    scored = _lang_scored(docs)
-    bucket = F.least(
-        F.floor(
-            F.lit(CALIB_BINS) * (F.col("best") + F.lit(1)) / (F.col("total") + F.lit(2))
-        ),
-        F.lit(CALIB_BINS - 1),
-    ).cast("bigint")
-    binned = (
-        scored.groupBy(bucket.alias("bucket"))
-        .agg(
-            F.count(F.lit(1)).cast("bigint").alias("n"),
-            F.sum((F.col("guess") == F.col("lang")).cast("bigint"))
-            .cast("bigint")
-            .alias("n_correct"),
-        )
-        .limit(CALIB_BINS)
-    )
+    binned = _calib_binned(_lang_scored(spark, sf_dir)).limit(CALIB_BINS)
     w = Window.orderBy("bucket").rowsBetween(Window.unboundedPreceding, 0)
     pref = binned.select(
         "bucket",
@@ -505,29 +483,9 @@ def _isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _isotonic_calibration_sql() -> str:
-    score_cols_sql, best_expr = _lang_guess_sql_parts()
-    total = " + ".join(f"s_{lang}" for lang in LANG_MARKERS)
-    best_score = "0"
-    for lang in LANG_MARKERS:
-        best_score = f"greatest(s_{lang}, {best_score})"
     b = CALIB_BINS
     return f"""
-WITH t AS (
-  SELECT doc_id, lang, string_split_regex(trim(text), '\\s+') AS toks FROM documents
-), s AS (
-  SELECT doc_id, lang, {score_cols_sql} FROM t
-), scored AS (
-  SELECT lang, {best_expr} AS guess,
-         CAST({best_score} AS BIGINT) AS best,
-         CAST({total} AS BIGINT) AS total
-  FROM s
-  WHERE {total} > 0
-), binned AS (
-  SELECT CAST(least(floor({b} * (best + 1) / (total + 2)), {b - 1}) AS BIGINT) AS bucket,
-         CAST(count(*) AS BIGINT) AS n,
-         CAST(sum(CASE WHEN guess = lang THEN 1 ELSE 0 END) AS BIGINT) AS n_correct
-  FROM scored GROUP BY 1
-), pref AS (
+WITH {_lang_scored_ctes()}, {_CALIB_BINNED_CTE}, pref AS (
   SELECT bucket, n, n_correct,
          CAST(sum(n) OVER wo AS BIGINT) AS ncum,
          CAST(sum(n_correct) OVER wo AS BIGINT) AS ccum
@@ -712,11 +670,14 @@ def _near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("id_a", "id_b")
 
 
-# shared CTE chain: shingle → invert → count-common → Jaccard pairs
-# (used by the pairs oracle AND the connected-components oracle)
-_PAIRS_CTES = f"""t AS (
+def _shingle_ctes(limit: int) -> str:
+    """The oracle's word-3-shingle chain over ``doc_id < limit``: t
+    (tokens) → s (distinct shingles per doc) → sized (doc_id, n) → e
+    (one row per doc and shingle). Every shingle-pair oracle starts
+    here; the pair step is :func:`_pairs_ctes` or the query's own."""
+    return f"""t AS (
   SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-  FROM documents WHERE doc_id < {PAIR_DOC_LIMIT}
+  FROM documents WHERE doc_id < {limit}
 ), s AS (
   SELECT doc_id,
          list_distinct(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
@@ -726,11 +687,21 @@ _PAIRS_CTES = f"""t AS (
   SELECT doc_id, len(shingles) AS n FROM s
 ), e AS (
   SELECT doc_id, unnest(shingles) AS sh FROM s
-), pairs AS (
+)"""
+
+
+def _pairs_ctes(limit: int) -> str:
+    """Shingle → invert → count-common: :func:`_shingle_ctes` plus
+    pairs (id_a < id_b, common) — the prefix of the Jaccard-pair and
+    connected-components oracles over ``doc_id < limit``."""
+    return _shingle_ctes(limit) + """, pairs AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS common
   FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id < b.doc_id
   GROUP BY 1, 2
 )"""
+
+
+_PAIRS_CTES = _pairs_ctes(PAIR_DOC_LIMIT)
 
 # the near-dup graph's connected components over the pairs above:
 # qual (pairs at JACCARD_THRESHOLD) → symmetric edges → recursive

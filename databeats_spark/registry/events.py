@@ -10,16 +10,17 @@ W1 (top-k window) + gaps-and-islands (two window passes), all JVM-side.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databeats_spark.functions.timeutils import week_index
-from databeats_spark.operators.windows import streak_ending_at_latest, top_k_per_group
+from databeats_spark.operators.charts import CHART_K, chart_streaks
 from databeats_spark.registry import QuerySpec
 from databeats_spark.registry.relational import dec
 from databeats_spark.sources.tables import load_tables
 
-CHART_K = 10
 SESSION_GAP_US = 1800 * 1_000_000  # 30 min
 
 
@@ -28,11 +29,7 @@ def _weekly_chart_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
     weekly = t.events.groupBy(
         week_index("ts").alias("wk"), F.col("user_id")
     ).agg(F.sum(dec("value")).cast("double").alias("wv"))
-    chart = top_k_per_group(weekly, ["wk"], [F.col("wv").desc(), F.col("user_id")], CHART_K)
-    streaks = streak_ending_at_latest(chart, "user_id", "wk", latest_idx=None)
-    return streaks.select("user_id", F.col("streak").cast("long").alias("streak")).orderBy(
-        F.col("streak").desc(), "user_id"
-    )
+    return chart_streaks(weekly)
 
 
 _WEEKLY_CHART_STREAK_SQL = f"""
@@ -131,11 +128,14 @@ ORDER BY event_id
 """
 
 
-def _sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Gaps-and-islands sessionization: 30-min inactivity gap starts a
-    new session. Exact microsecond arithmetic (no float time math)."""
-    t = load_tables(spark, sf_dir, ["events"])
-    ev = t.events.select("user_id", "event_id", F.unix_micros("ts").alias("us"))
+def _session_ids(ev: DataFrame) -> DataFrame:
+    """``ev`` (user_id, event_id, us, ...) plus ``sid``: per user, the
+    running count of session starts in (us, event_id) order, a start
+    being the user's first event or one more than SESSION_GAP_US after
+    the previous. Exact microsecond arithmetic (no float time math).
+    The Spark half of the session rule sessionization,
+    session_transcripts and peak_concurrency share; _SESSION_CTES is
+    the DuckDB half."""
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     new_s = (
         F.when(F.lag("us").over(w).isNull(), 1)
@@ -143,8 +143,32 @@ def _sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(0)
     )
     sid = F.sum(new_s).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    return ev.withColumn("sid", sid)
+
+
+# o: events with the new-session flag; s: one row per event with its sid
+_SESSION_CTES = f"""o AS (
+  SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
+         CASE WHEN lag(epoch_us(ts)) OVER w IS NULL THEN 1
+              WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > {SESSION_GAP_US} THEN 1
+              ELSE 0 END AS new_s
+  FROM events
+  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
+), s AS (
+  SELECT user_id, event_id, event_type, us,
+         sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
+           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
+  FROM o
+)"""
+
+
+def _sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gaps-and-islands sessionization: 30-min inactivity gap starts a
+    new session."""
+    t = load_tables(spark, sf_dir, ["events"])
+    ev = t.events.select("user_id", "event_id", F.unix_micros("ts").alias("us"))
     per_session = (
-        ev.withColumn("sid", sid)
+        _session_ids(ev)
         .groupBy("user_id", "sid")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
@@ -160,18 +184,7 @@ def _sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SESSIONIZATION_SQL = f"""
-WITH o AS (
-  SELECT user_id, event_id, epoch_us(ts) AS us,
-         CASE WHEN lag(epoch_us(ts)) OVER w IS NULL THEN 1
-              WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > {SESSION_GAP_US} THEN 1
-              ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-), s AS (
-  SELECT user_id, sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM o
-), per_session AS (
+WITH {_SESSION_CTES}, per_session AS (
   SELECT user_id, sid, count(*) AS cnt FROM s GROUP BY user_id, sid
 )
 SELECT user_id,
@@ -204,13 +217,6 @@ def _session_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = t.events.select(
         "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
     )
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    new_s = (
-        F.when(F.lag("us").over(w).isNull(), 1)
-        .when(F.col("us") - F.lag("us").over(w) > SESSION_GAP_US, 1)
-        .otherwise(0)
-    )
-    sid = F.sum(new_s).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     transcript = F.array_join(
         F.transform(
             F.array_sort(F.collect_list(F.struct("us", "event_id", "event_type"))),
@@ -219,7 +225,7 @@ def _session_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
         " ",
     )
     return (
-        ev.withColumn("sid", sid)
+        _session_ids(ev)
         .groupBy("user_id", F.col("sid").cast("long").alias("sid"))
         .agg(
             transcript.alias("transcript"),
@@ -232,19 +238,7 @@ def _session_transcripts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _SESSION_TRANSCRIPTS_SQL = f"""
-WITH o AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
-         CASE WHEN lag(epoch_us(ts)) OVER w IS NULL THEN 1
-              WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > {SESSION_GAP_US} THEN 1
-              ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-), s AS (
-  SELECT user_id, event_id, event_type, us,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM o
-)
+WITH {_SESSION_CTES}
 SELECT user_id, CAST(sid AS BIGINT) AS sid,
        string_agg(event_type, ' ' ORDER BY us, event_id) AS transcript,
        CAST(count(*) AS BIGINT) AS n_turns,
@@ -1159,6 +1153,61 @@ FROM s
 """
 
 
+def _arm_ecdf(events: DataFrame) -> DataFrame:
+    """The two arms' ECDF table over the per-user DECIMAL spend ``y``
+    (arm = user_id % 2): one row per distinct y with the per-value arm
+    counts c1/c0, their cumulative counts f1/f0 (two distributed prefix
+    sums, operators/scale.py::partitioned_running_total — no global
+    window) and the arm totals n1/n0, attached from a keyless
+    aggregate by crossJoin of the ≤1-row side. The Spark half shared by
+    quantile_treatment_effect, ks_two_sample and cvm_two_sample;
+    _ARM_ECDF_CTES is the DuckDB half."""
+    from databeats_spark.operators.scale import partitioned_running_total
+
+    per_user = (
+        events.groupBy("user_id")
+        .agg(F.sum(dec("value")).cast("decimal(18,2)").alias("y"))
+        .withColumn("arm", (F.col("user_id") % 2).cast("bigint"))
+    )
+    by_value = per_user.groupBy("y").agg(
+        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("bigint").alias("c1"),
+        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("bigint").alias("c0"),
+    )
+    cum1 = partitioned_running_total(by_value, [F.col("y")], "c1", out_col="f1")
+    cum0 = partitioned_running_total(
+        by_value.select("y", "c0"), [F.col("y")], "c0", out_col="f0"
+    )
+    merged = cum1.select("y", "c1", "f1").join(cum0.select("y", "c0", "f0"), "y")
+    totals = per_user.agg(
+        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("bigint").alias("n1"),
+        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("bigint").alias("n0"),
+    )
+    return merged.crossJoin(F.broadcast(totals))
+
+
+# per_user → by_value (c1, c0) → cum (+ f1, f0); totals (n1, n0)
+_ARM_ECDF_CTES = """per_user AS (
+  SELECT user_id,
+         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y,
+         CAST(user_id % 2 AS BIGINT) AS arm
+  FROM events GROUP BY user_id
+), by_value AS (
+  SELECT y,
+         CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
+         CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0
+  FROM per_user GROUP BY y
+), cum AS (
+  SELECT y, c1, c0,
+         CAST(sum(c1) OVER (ORDER BY y) AS BIGINT) AS f1,
+         CAST(sum(c0) OVER (ORDER BY y) AS BIGINT) AS f0
+  FROM by_value
+), totals AS (
+  SELECT CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
+         CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0
+  FROM per_user
+)"""
+
+
 # --- Q: quantile_treatment_effect — distributional A/B readout --------
 # Where CUPED/Mann-Whitney summarize to one number, QTE reports the
 # treatment effect at p25/p50/p75 — the heavy-tail question ("did the
@@ -1172,28 +1221,7 @@ QTE_QUANTILES = (25, 50, 75)
 
 
 def _quantile_treatment_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from databeats_spark.operators.scale import partitioned_running_total
-
-    t = load_tables(spark, sf_dir, ["events"])
-    per_user = (
-        t.events.groupBy("user_id")
-        .agg(F.sum(dec("value")).cast("decimal(18,2)").alias("y"))
-        .withColumn("arm", (F.col("user_id") % 2).cast("bigint"))
-    )
-    by_value = per_user.groupBy("y").agg(
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("bigint").alias("c1"),
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("bigint").alias("c0"),
-    )
-    cum1 = partitioned_running_total(by_value, [F.col("y")], "c1", out_col="f1")
-    cum0 = partitioned_running_total(
-        by_value.select("y", "c0"), [F.col("y")], "c0", out_col="f0"
-    )
-    merged = cum1.select("y", "f1").join(cum0.select("y", "f0"), "y")
-    totals = per_user.agg(
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("bigint").alias("n1"),
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("bigint").alias("n0"),
-    )
-    wt = merged.crossJoin(F.broadcast(totals))
+    wt = _arm_ecdf(load_tables(spark, sf_dir, ["events"]).events)
 
     def rank_of(q: int, n):
         # ceil(q*n/100) as exact integer floor arithmetic (q*n < 2^53)
@@ -1252,26 +1280,7 @@ def _qte_sql() -> str:
         for q in QTE_QUANTILES
     )
     return f"""
-WITH per_user AS (
-  SELECT user_id,
-         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y,
-         CAST(user_id % 2 AS BIGINT) AS arm
-  FROM events GROUP BY user_id
-), by_value AS (
-  SELECT y,
-         CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-         CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0
-  FROM per_user GROUP BY y
-), cum AS (
-  SELECT y,
-         CAST(sum(c1) OVER (ORDER BY y) AS BIGINT) AS f1,
-         CAST(sum(c0) OVER (ORDER BY y) AS BIGINT) AS f0
-  FROM by_value
-), totals AS (
-  SELECT CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-         CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0
-  FROM per_user
-), one AS (
+WITH {_ARM_ECDF_CTES}, one AS (
   SELECT t.n1 AS n_treated, t.n0 AS n_control, {", ".join(per_q)}
   FROM cum c CROSS JOIN totals t
   GROUP BY t.n1, t.n0
@@ -1292,30 +1301,7 @@ ORDER BY q_pct
 # (operators/scale.py::partitioned_running_total — the Mann-Whitney
 # posture, no global window), joined back on the value.
 def _ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from databeats_spark.operators.scale import partitioned_running_total
-
-    t = load_tables(spark, sf_dir, ["events"])
-    per_user = (
-        t.events.groupBy("user_id")
-        .agg(F.sum(dec("value")).cast("decimal(18,2)").alias("y"))
-        .withColumn("arm", (F.col("user_id") % 2).cast("bigint"))
-    )
-    by_value = per_user.groupBy("y").agg(
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("bigint").alias("c1"),
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("bigint").alias("c0"),
-    )
-    cum1 = partitioned_running_total(by_value, [F.col("y")], "c1", out_col="f1")
-    cum0 = partitioned_running_total(
-        by_value.select("y", "c0"), [F.col("y")], "c0", out_col="f0"
-    )
-    merged = cum1.select("y", "f1").join(cum0.select("y", "f0"), "y")
-    # the n1/n0 totals ride a keyless aggregate; the max numerator needs
-    # them per row, so attach via crossJoin of the ≤1-row side
-    totals = per_user.agg(
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("bigint").alias("n1"),
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("bigint").alias("n0"),
-    )
-    with_tot = merged.crossJoin(F.broadcast(totals))
+    with_tot = _arm_ecdf(load_tables(spark, sf_dir, ["events"]).events)
     d_num = F.abs(F.col("f1") * F.col("n0") - F.col("f0") * F.col("n1"))
     out = with_tot.groupBy("n1", "n0").agg(
         F.max(d_num).cast("bigint").alias("d_num")
@@ -1332,27 +1318,8 @@ def _ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_KS_TWO_SAMPLE_SQL = """
-WITH per_user AS (
-  SELECT user_id,
-         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y,
-         CAST(user_id % 2 AS BIGINT) AS arm
-  FROM events GROUP BY user_id
-), by_value AS (
-  SELECT y,
-         CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-         CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0
-  FROM per_user GROUP BY y
-), cum AS (
-  SELECT y,
-         CAST(sum(c1) OVER (ORDER BY y) AS BIGINT) AS f1,
-         CAST(sum(c0) OVER (ORDER BY y) AS BIGINT) AS f0
-  FROM by_value
-), totals AS (
-  SELECT CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-         CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0
-  FROM per_user
-)
+_KS_TWO_SAMPLE_SQL = f"""
+WITH {_ARM_ECDF_CTES}
 SELECT t.n1 AS n_treated, t.n0 AS n_control,
        CAST(max(abs(c.f1 * t.n0 - c.f0 * t.n1)) AS BIGINT) AS d_num,
        round(CAST(max(abs(c.f1 * t.n0 - c.f0 * t.n1)) AS DOUBLE)
@@ -1476,31 +1443,7 @@ ORDER BY day
 # order-exposed — positive terms, round-6 absorbs it.
 
 def _cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from databeats_spark.operators.scale import partitioned_running_total
-
-    t = load_tables(spark, sf_dir, ["events"])
-    per_user = (
-        t.events.groupBy("user_id")
-        .agg(F.sum(dec("value")).cast("decimal(18,2)").alias("y"))
-        .withColumn("arm", (F.col("user_id") % 2).cast("bigint"))
-    )
-    by_value = per_user.groupBy("y").agg(
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("bigint").alias("c1"),
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("bigint").alias("c0"),
-    )
-    cum1 = partitioned_running_total(by_value, [F.col("y")], "c1", out_col="f1")
-    cum0 = partitioned_running_total(
-        by_value.select("y", "c0"), [F.col("y")], "c0", out_col="f0"
-    )
-    merged = (
-        cum1.select("y", "c1", "f1")
-        .join(cum0.select("y", "c0", "f0"), "y")
-    )
-    totals = per_user.agg(
-        F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("bigint").alias("n1"),
-        F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("bigint").alias("n0"),
-    )
-    with_tot = merged.crossJoin(F.broadcast(totals))
+    with_tot = _arm_ecdf(load_tables(spark, sf_dir, ["events"]).events)
     delta = (F.col("f1") * F.col("n0") - F.col("f0") * F.col("n1")).cast("double")
     term = (F.col("c1") + F.col("c0")).cast("double") * delta * delta
     out = with_tot.groupBy("n1", "n0").agg(F.sum(term).alias("t_sum"))
@@ -1516,27 +1459,8 @@ def _cvm_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CVM_TWO_SAMPLE_SQL = """
-WITH per_user AS (
-  SELECT user_id,
-         CAST(sum(CAST(value AS DECIMAL(18,2))) AS DECIMAL(18,2)) AS y,
-         CAST(user_id % 2 AS BIGINT) AS arm
-  FROM events GROUP BY user_id
-), by_value AS (
-  SELECT y,
-         CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS c1,
-         CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS c0
-  FROM per_user GROUP BY y
-), cum AS (
-  SELECT y, c1, c0,
-         CAST(sum(c1) OVER (ORDER BY y) AS BIGINT) AS f1,
-         CAST(sum(c0) OVER (ORDER BY y) AS BIGINT) AS f0
-  FROM by_value
-), totals AS (
-  SELECT CAST(sum(CASE WHEN arm = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n1,
-         CAST(sum(CASE WHEN arm = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n0
-  FROM per_user
-)
+_CVM_TWO_SAMPLE_SQL = f"""
+WITH {_ARM_ECDF_CTES}
 SELECT t.n1 AS n_treated, t.n0 AS n_control,
        round(sum(CAST(c.c1 + c.c0 AS DOUBLE)
                  * CAST(c.f1 * t.n0 - c.f0 * t.n1 AS DOUBLE)
@@ -1566,6 +1490,33 @@ SPRT_MDE = 0.25
 SPRT_ALPHA = 0.05
 
 
+def sprt_readout(daily: DataFrame, p0: DataFrame) -> DataFrame:
+    """The monitor's readout from per-day treatment counts (day, dn, ds)
+    and the one-row control share ``p0``: cumulative n_t/s_t over the
+    first SEQ_DAY_CAP days, the log e-value against the alternative
+    p1 = min(p0·(1+SPRT_MDE), 0.99) and the ln(1/α) decision. The batch
+    query and the streaming serve path (streaming/monitor.py) both run
+    it; _sprt_evalue_monitor_sql is the DuckDB half."""
+    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
+    cum = daily.limit(SEQ_DAY_CAP).select(
+        "day",
+        F.sum("dn").over(w).cast("bigint").alias("n_t"),
+        F.sum("ds").over(w).cast("bigint").alias("s_t"),
+    ).crossJoin(F.broadcast(p0))
+    p1 = F.least(F.col("p0") * (1.0 + SPRT_MDE), F.lit(0.99))
+    llr = F.col("s_t").cast("double") * F.log(p1 / F.col("p0")) + (
+        F.col("n_t") - F.col("s_t")
+    ).cast("double") * F.log((1.0 - p1) / (1.0 - F.col("p0")))
+    return cum.select(
+        "day",
+        "n_t",
+        "s_t",
+        F.round("p0", 6).alias("p0"),
+        F.round(llr, 6).alias("log_e"),
+        (llr >= math.log(1.0 / SPRT_ALPHA)).alias("decided"),
+    ).orderBy("day")
+
+
 def _sprt_evalue_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     arm = (F.col("user_id") % 2).cast("bigint")
@@ -1579,40 +1530,17 @@ def _sprt_evalue_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).cast("bigint").alias("dn"),
             F.sum(is_conv).cast("bigint").alias("ds"),
         )
-        .limit(SEQ_DAY_CAP)
     )
     p0_tbl = t.events.filter(arm == 0).agg(
         (
             F.sum(is_conv).cast("double") / F.count(F.lit(1)).cast("double")
         ).alias("p0")
     )
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    cum = daily.select(
-        "day",
-        F.sum("dn").over(w).cast("bigint").alias("n_t"),
-        F.sum("ds").over(w).cast("bigint").alias("s_t"),
-    ).crossJoin(F.broadcast(p0_tbl))
-    p1 = F.least(F.col("p0") * (1.0 + SPRT_MDE), F.lit(0.99))
-    llr = F.col("s_t").cast("double") * F.log(p1 / F.col("p0")) + (
-        F.col("n_t") - F.col("s_t")
-    ).cast("double") * F.log((1.0 - p1) / (1.0 - F.col("p0")))
-    import math as _math
-
-    thresh = _math.log(1.0 / SPRT_ALPHA)
-    return cum.select(
-        "day",
-        "n_t",
-        "s_t",
-        F.round("p0", 6).alias("p0"),
-        F.round(llr, 6).alias("log_e"),
-        (llr >= thresh).alias("decided"),
-    ).orderBy("day")
+    return sprt_readout(daily, p0_tbl)
 
 
 def _sprt_evalue_monitor_sql() -> str:
-    import math as _math
-
-    thresh = _math.log(1.0 / SPRT_ALPHA)
+    thresh = math.log(1.0 / SPRT_ALPHA)
     return f"""
 WITH daily AS (
   SELECT strftime(date_trunc('day', ts), '%Y-%m-%d') AS day,

@@ -37,6 +37,7 @@ from pyspark.sql import functions as F
 
 from databeats_spark.operators.scale import attach_global_scalar
 from databeats_spark.registry import QuerySpec
+from databeats_spark.registry.documents import _shingle_ctes
 from databeats_spark.sources.tables import load_tables
 
 
@@ -237,19 +238,7 @@ def _containment_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _CONTAINMENT_PAIRS_SQL = f"""
-WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-  FROM documents WHERE doc_id < {CONTAIN_DOC_LIMIT}
-), s AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-                        i -> array_to_string(toks[i:i+2], ' '))) AS shingles
-  FROM t
-), sized AS (
-  SELECT doc_id, len(shingles) AS n FROM s
-), e AS (
-  SELECT doc_id, unnest(shingles) AS sh FROM s
-), pairs AS (
+WITH {_shingle_ctes(CONTAIN_DOC_LIMIT)}, pairs AS (
   SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(count(*) AS BIGINT) AS common
   FROM e a JOIN e b ON a.sh = b.sh AND a.doc_id <> b.doc_id
   GROUP BY 1, 2
@@ -744,19 +733,7 @@ def _incremental_corpus_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _INCREMENTAL_CORPUS_DUPS_SQL = f"""
-WITH t AS (
-  SELECT doc_id, string_split_regex(trim(text), '\\s+') AS toks
-  FROM documents WHERE doc_id < {INC_LIMIT}
-), s AS (
-  SELECT doc_id,
-         list_distinct(list_transform(range(1, greatest(len(toks) - 2, 0) + 1),
-                        i -> array_to_string(toks[i:i+2], ' '))) AS shingles
-  FROM t
-), sized AS (
-  SELECT doc_id, len(shingles) AS n FROM s
-), e AS (
-  SELECT doc_id, unnest(shingles) AS sh FROM s
-), pairs AS (
+WITH {_shingle_ctes(INC_LIMIT)}, pairs AS (
   SELECT a.doc_id AS old_id, b.doc_id AS new_id, CAST(count(*) AS BIGINT) AS common
   FROM e a JOIN e b ON a.sh = b.sh
   WHERE a.doc_id < {INC_SPLIT} AND b.doc_id >= {INC_SPLIT}

@@ -40,7 +40,7 @@ from pyspark.sql import functions as F
 from databeats_spark.functions.text import LANG_MARKERS
 from databeats_spark.operators.scale import attach_global_scalar, partitioned_running_total
 from databeats_spark.registry import QuerySpec
-from databeats_spark.registry.events import SESSION_GAP_US
+from databeats_spark.registry.events import _SESSION_CTES, _session_ids
 from databeats_spark.sources.tables import load_tables, spread
 
 
@@ -910,15 +910,8 @@ ORDER BY source, rank
 def _peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = load_tables(spark, sf_dir, ["events"])
     ev = t.events.select("user_id", "event_id", F.unix_micros("ts").alias("us"))
-    w = Window.partitionBy("user_id").orderBy("us", "event_id")
-    new_s = (
-        F.when(F.lag("us").over(w).isNull(), 1)
-        .when(F.col("us") - F.lag("us").over(w) > SESSION_GAP_US, 1)
-        .otherwise(0)
-    )
-    sid = F.sum(new_s).over(w.rowsBetween(Window.unboundedPreceding, Window.currentRow))
     sess = (
-        ev.withColumn("sid", sid)
+        _session_ids(ev)
         .groupBy("user_id", "sid")
         .agg(F.min("us").alias("s_us"), F.max("us").alias("e_us"))
     )
@@ -941,20 +934,7 @@ def _peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _PEAK_CONCURRENCY_SQL = f"""
-WITH o AS (
-  SELECT user_id, event_id, epoch_us(ts) AS us,
-         CASE WHEN lag(epoch_us(ts)) OVER w IS NULL THEN 1
-              WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER w > {SESSION_GAP_US} THEN 1
-              ELSE 0 END AS new_s
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-), s AS (
-  SELECT user_id,
-         us,
-         sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS sid
-  FROM o
-), sess AS (
+WITH {_SESSION_CTES}, sess AS (
   SELECT user_id, sid, min(us) AS s_us, max(us) AS e_us
   FROM s GROUP BY user_id, sid
 ), deltas AS (

@@ -90,12 +90,13 @@ def load_tables(spark: SparkSession, sf_dir: str | None = None, names=TESTDATA_T
     return SimpleNamespace(**{n: _load_one(spark, sf_dir, n) for n in names})
 
 
-def spread(df: DataFrame, spark: SparkSession, min_partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame, spark: SparkSession) -> DataFrame:
     """Repartition a compute-bound input that arrived in too few splits
-    (small files ⇒ one task ⇒ serial execution of heavy expressions).
-    No-op when the scan already has enough parallelism — at real scale
-    inputs have many splits and the shuffle would be pure waste."""
-    target = min_partitions or spark.sparkContext.defaultParallelism
+    (small files ⇒ one task ⇒ serial execution of heavy expressions)
+    into defaultParallelism partitions. No-op when the scan already has
+    enough parallelism — at real scale inputs have many splits and the
+    shuffle would be pure waste."""
+    target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= max(2, target // 2):
         return df
     return df.repartition(target)

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from databeats_spark.functions.timeutils import week_index
-from databeats_spark.operators.windows import streak_ending_at_latest, top_k_per_group
+from databeats_spark.operators.charts import chart_streaks
 from databeats_spark.streaming.compaction import compact_epoch_partials, drain, write_epoch
 
 
@@ -71,21 +71,14 @@ def run_incremental_chart(
     return drain(events_stream, weekly_state_sink(state_path), state_path + "_ckpt")
 
 
-def chart_streaks_from_state(
-    spark: SparkSession, state_path: str, k: int = 10
-) -> DataFrame:
-    """Serving query: top-k chart per week + streak ending at the
-    newest week — identical semantics to the batch weekly_chart_streak
-    registry query, computed from the compact state table."""
+def chart_streaks_from_state(spark: SparkSession, state_path: str) -> DataFrame:
+    """Serving query: the batch weekly_chart_streak query's chart and
+    streak (operators/charts.py::chart_streaks), computed from the
+    compact state table."""
     weekly = _fold_weeks(spark.read.parquet(state_path)).select(
         "wk", "user_id", F.col("wv_part").cast("double").alias("wv")
     )
-    chart = top_k_per_group(weekly, ["wk"], [F.col("wv").desc(), F.col("user_id")], k)
-    return (
-        streak_ending_at_latest(chart, "user_id", "wk", latest_idx=None)
-        .select("user_id", F.col("streak").cast("long").alias("streak"))
-        .orderBy(F.col("streak").desc(), "user_id")
-    )
+    return chart_streaks(weekly)
 
 
 def compact_chart_state(

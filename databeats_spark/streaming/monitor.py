@@ -23,8 +23,6 @@ epoch-partitioned table (:func:`run_sprt_monitor_durable`).
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -48,12 +46,10 @@ def sprt_daily_state(events: DataFrame) -> DataFrame:
 
 
 def sprt_monitor_from_state(state: DataFrame) -> DataFrame:
-    """The batch query's closed form over the compact day-state table:
-    identical expression shapes to registry/events.py, so a drained
-    stream's readout is bit-equal to the batch query's."""
-    from pyspark.sql import Window
-
-    from databeats_spark.registry.events import SEQ_DAY_CAP, SPRT_ALPHA, SPRT_MDE
+    """The batch query's readout (registry/events.py::sprt_readout)
+    over the compact day-state table, so a drained stream's readout is
+    bit-equal to the batch query's."""
+    from databeats_spark.registry.events import sprt_readout
 
     # Mirror the batch query's row set EXACTLY (ADVICE r10): the batch
     # daily aggregate filters arm==1 BEFORE the day groupBy, so a
@@ -66,26 +62,7 @@ def sprt_monitor_from_state(state: DataFrame) -> DataFrame:
     p0_tbl = state.agg(
         (F.sum("cs").cast("double") / F.sum("cn").cast("double")).alias("p0")
     )
-    bounded = state.filter(F.col("dn") > 0).limit(SEQ_DAY_CAP)
-    w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
-    cum = bounded.select(
-        "day",
-        F.sum("dn").over(w).cast("bigint").alias("n_t"),
-        F.sum("ds").over(w).cast("bigint").alias("s_t"),
-    ).crossJoin(F.broadcast(p0_tbl))
-    p1 = F.least(F.col("p0") * (1.0 + SPRT_MDE), F.lit(0.99))
-    llr = F.col("s_t").cast("double") * F.log(p1 / F.col("p0")) + (
-        F.col("n_t") - F.col("s_t")
-    ).cast("double") * F.log((1.0 - p1) / (1.0 - F.col("p0")))
-    thresh = math.log(1.0 / SPRT_ALPHA)
-    return cum.select(
-        "day",
-        "n_t",
-        "s_t",
-        F.round("p0", 6).alias("p0"),
-        F.round(llr, 6).alias("log_e"),
-        (llr >= thresh).alias("decided"),
-    ).orderBy("day")
+    return sprt_readout(state.filter(F.col("dn") > 0), p0_tbl)
 
 
 def _fold_days(partials: DataFrame) -> DataFrame:

@@ -11,7 +11,10 @@ with BOTH growth ratios per query:
 - x10 ratio: sf0.1 / sf0.01 bytes vs 10x data (linear = ~10);
 - x2 ratio: sf0.2 / sf0.1 bytes vs 2x data (linear = ~2).
 
-Each measurement is one ``plans/instrument.py::movement`` record: the
+The session is the audit shape SHUFFLE.md is measured at
+(``scripts/shuffle_audit.py::audit_session``), so the two files agree
+at sf0.01/sf0.1. Each measurement is one
+``plans/instrument.py::movement`` record: the
 stage-store ``exec write`` column (post-compression shuffle bytes
 actually written by every executed stage) alongside the plan-walk
 uncompressed shuffle bytes, which fold every pre-checkpoint plan
@@ -83,12 +86,11 @@ def main() -> None:
     if not os.path.isdir(SF_DIRS[2][0]):
         raise SystemExit("run scripts/make_scale_data.py first (.scale/sf0.2 missing)")
 
-    from bench import shuffle_partitions_for
     from databeats_spark.plans.instrument import fmt_bytes, movement
     from databeats_spark.registry import queries
-    from databeats_spark.session import get_spark
+    from scripts.shuffle_audit import audit_session
 
-    spark = get_spark(app_name="databeats_scale_curve_bytes")
+    spark = audit_session("databeats_scale_curve_bytes")
     reg = queries()
     # JIT pass so codegen compile cost never lands in a measured leg
     for name in MOVERS:
@@ -99,9 +101,6 @@ def main() -> None:
     if os.path.isdir(SF4_DIR):
         legs.append((SF4_DIR, 0.4))
     for sf_dir, sf in legs:
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(shuffle_partitions_for(sf_dir))
-        )
         for name in (MOVERS if sf != 0.4 else X4_MOVERS):
             rows[name][sf] = m = movement(spark, lambda: reg[name](spark, sf_dir))
             print(json.dumps({"sf": sf, "query": name,

@@ -10,7 +10,8 @@ matter how noisy the clock is).
     python scripts/shuffle_audit.py
 
 The script builds its own session at one fixed shape — local[32], a
-6g driver heap and 16m memory pages — so the file regenerates the
+6g driver heap, 16m memory pages and 4 shuffle partitions
+(:func:`audit_session`) — so the file regenerates the
 same on any host: broadcast dataSize follows the memory page size,
 which Spark otherwise derives from heap / cores, and exec write
 follows the default parallelism.
@@ -184,19 +185,26 @@ def iterative_runs(spark, sf_dir: str) -> dict[str, list[dict]]:
 SF_DIRS = ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
 
-def main() -> None:
-    from bench import shuffle_partitions_for
-    from databeats_spark.plans.instrument import fmt_bytes, movement
-    from databeats_spark.registry import queries
+def audit_session(app_name: str):
+    """The fixed audit session shape (module docstring): local[32], a
+    6g driver heap, 16m memory pages and 4 shuffle partitions — the
+    count bench.py::shuffle_partitions_for gives every input below
+    ~100 MB. scripts/scale_curve_bytes.py builds its session here too."""
     from databeats_spark.session import get_spark
 
-    # the fixed session shape (module docstring)
-    spark = get_spark(
-        app_name="databeats_shuffle_audit",
+    return get_spark(
+        app_name=app_name,
         master="local[32]",
-        shuffle_partitions=shuffle_partitions_for(SF_DIRS[0]),
+        shuffle_partitions=4,
         extra_conf={"spark.driver.memory": "6g", "spark.buffer.pageSize": "16m"},
     )
+
+
+def main() -> None:
+    from databeats_spark.plans.instrument import fmt_bytes, movement
+    from databeats_spark.registry import queries
+
+    spark = audit_session("databeats_shuffle_audit")
     reg = queries()
     by_sf: dict[str, dict[str, dict]] = {}
     iter_by_sf: dict[str, dict[str, list[dict]]] = {}

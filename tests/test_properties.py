@@ -86,7 +86,7 @@ def test_top_k_per_group_bounds(spark, rows, k):
 def test_streak_bounds_and_latest_rule(spark, periods):
     # one entity on-chart in an arbitrary period set
     df = spark.createDataFrame(pd.DataFrame({"e": ["x"] * len(periods), "p": sorted(periods)}))
-    out = streak_ending_at_latest(df, "e", "p", latest_idx=None).collect()
+    out = streak_ending_at_latest(df, "e", "p").collect()
     # the entity's newest island always reaches the global latest (it is
     # the only entity) → exactly one row, streak = trailing consecutive run
     assert len(out) == 1
