@@ -288,6 +288,12 @@ def rich_summary(
         # driver-side scheduling cost per headline query (rich line
         # only): job count is a plan property, steal-immune like bytes
         "queries_jobs": {n: r["n_jobs"] for n, r in sections["headline"].items()},
+        # generated classes the last rep compiled (rich line only): 0
+        # once the first rep filled the cache, unless a whole-stage-
+        # codegen'd LIMIT renames its source per plan
+        "queries_codegen_compiles": {
+            n: r["n_codegen_compiles"] for n, r in sections["headline"].items()
+        },
         "cpu_seconds_total": total(cpu["headline"]),
         "mining_queries_total_runtime": total(wall["mining"]),
         "mining_queries": wall["mining"],

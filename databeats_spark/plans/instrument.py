@@ -171,6 +171,33 @@ def _walk(node):
         yield from _walk(kids.apply(i))
 
 
+# the codegen'd LIMIT operators: each names its row counter from a
+# JVM-global sequence (BaseLimitExec.newLimitCountTerm ->
+# "_limit_counter_<N>"), so a whole-stage class holding one has new
+# source on every plan and misses the generated-class cache
+_LIMITS = ("LocalLimitExec", "GlobalLimitExec")
+
+
+def _stage_limit(node) -> bool:
+    name = node.getClass().getSimpleName()
+    if name in _LIMITS:
+        return True
+    if name == "InputAdapter":  # the whole-stage boundary
+        return False
+    kids = node.children()
+    return any(_stage_limit(kids.apply(i)) for i in range(kids.size()))
+
+
+def codegen_limit(df: DataFrame) -> bool:
+    """True when a whole-stage-codegen'd stage of ``df``'s executed plan
+    holds a LocalLimit/GlobalLimit: that stage compiles afresh on every
+    call of the query, whatever the cache size."""
+    return any(
+        name == "WholeStageCodegenExec" and _stage_limit(node.child())
+        for name, node in _walk(df._jdf.queryExecution().executedPlan())
+    )
+
+
 def _metric_values(node) -> dict[str, int]:
     m = node.metrics()
     it = m.keys().iterator()
@@ -211,23 +238,34 @@ def executed_metrics(df: DataFrame) -> dict[str, int]:
     return _fold_plan_metrics(df._jdf.queryExecution().executedPlan())
 
 
-def stage_mark(spark: SparkSession) -> tuple[int, int]:
-    """(next stage id, next job id) once the listener bus has drained —
-    a point in the session's sequence of stages and jobs. Take it
-    outside any timed region."""
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes the JVM's code generator has compiled so far: one per
+    miss of its generated-class cache (``CodegenMetrics``' compilation
+    timer), counted JVM-wide, driver and local task threads alike."""
+    metrics = spark.sparkContext._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())
+
+
+def stage_mark(spark: SparkSession) -> tuple[int, int, int]:
+    """(next stage id, next job id, codegen compiles) once the listener
+    bus has drained — a point in the session's sequence of stages, jobs
+    and generated classes. Take it outside any timed region."""
     sc = spark.sparkContext
     sc._jsc.sc().listenerBus().waitUntilEmpty()
     dag = sc._jsc.sc().dagScheduler()
-    return int(dag.nextStageId()), int(dag.nextJobId())
+    return int(dag.nextStageId()), int(dag.nextJobId()), codegen_compiles(spark)
 
 
-def stage_work(spark: SparkSession, mark: tuple[int, int]) -> dict[str, int | float]:
+def stage_work(spark: SparkSession, mark: tuple[int, int, int]) -> dict[str, int | float]:
     """Task metrics summed over the stages created since ``mark``, plus
-    the number of jobs submitted since it."""
+    the number of jobs submitted and of classes compiled since it. A
+    repeat call of an unchanged query should compile none: generated
+    source that differs per call (a per-plan name) misses the cache."""
     end = stage_mark(spark)
     store = spark.sparkContext._jsc.sc().statusStore()
     out = {
-        "n_jobs": end[1] - mark[1], "n_stages": 0, "n_tasks": 0,
+        "n_jobs": end[1] - mark[1], "n_codegen_compiles": end[2] - mark[2],
+        "n_stages": 0, "n_tasks": 0,
         "cpu_ns": 0, "run_ms": 0,
         "stage_shuffle_write_bytes": 0,   # post-compression, executed
         "stage_shuffle_write_records": 0,

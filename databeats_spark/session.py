@@ -39,6 +39,28 @@ ADAPTIVE_CONFS: dict[str, str] = {
 }
 
 
+# Size of Spark's generated-class cache: the Janino-compiled
+# whole-stage and expression classes, keyed by their source. At the
+# default 100 an interleaved dashboard evicts each query's classes
+# before its next click (one round of the 14 headliners needs ~218),
+# so every click re-runs Janino and then the JIT on code it compiled a
+# round earlier. Measured with scripts/codegen_sweep.py (sf0.001, all
+# 306 builders built and collected twice in one fresh session, cache at
+# 100000): the cold pass compiled 4,345 classes at the bench policy
+# (AQE off, 4 partitions) and 4,188 with AQE on; the size is that max
+# plus ~90% headroom, and keeping a full sweep's classes costs ~30 MB
+# of Metaspace (plans/r15/codegen_cache.txt). The conf is static and
+# Spark reads it ONCE per JVM, in CodeGenerator's static initializer,
+# from the conf of the session that first generates code: that session
+# fixes the size for the JVM's lifetime, and a JVM whose first session
+# is someone else's (the driver's verify session) keeps 100. Executors
+# are JVMs too, each with its own cache sized the same way from the
+# conf its tasks carry, so on a cluster the setting keeps an
+# interleaved dashboard's classes on every executor (argued from the
+# conf, not measured: only local mode was run).
+CODEGEN_CACHE_ENTRIES = 8192
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply the engine's required CORRECTNESS confs to an existing
     session. Called by every loader entry point so the engine works
@@ -104,8 +126,11 @@ def get_spark(
         # registry sweep's stage count)
         .config("spark.ui.retainedStages", "100000")
         .config("spark.ui.retainedJobs", "100000")
-        # local mode: all shuffle is local disk; compress less, spill less
+        # scratch space for shuffle files and spills (SPARK_LOCAL_DIRS,
+        # when set, overrides it in the cluster managers that read it)
         .config("spark.local.dir", os.environ.get("SPARK_LOCAL_DIRS", "/tmp"))
+        # see CODEGEN_CACHE_ENTRIES
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # managed (bucketed) tables land outside the repo; static conf,
         # so it must be set at build time
         .config(

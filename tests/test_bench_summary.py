@@ -11,14 +11,14 @@ import bench
 
 _SAMPLE = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "artifacts", "bench_samples", "BENCH_LOCAL_r14_after2_sample.json",
+    "artifacts", "bench_samples", "BENCH_LOCAL_r15_codegen_sample.json",
 )
 
 
 def _record(i: int) -> dict:
     return {
         "wall_s": 1.0 + i, "cpu_seconds": 0.5 + i, "run_seconds": 2.0 + i,
-        "n_jobs": 3 + i, "n_stages": 5, "n_tasks": 9,
+        "n_jobs": 3 + i, "n_codegen_compiles": i % 2, "n_stages": 5, "n_tasks": 9,
         "stage_shuffle_write_bytes": 100, "stage_shuffle_write_records": 7,
         "stage_spill_bytes": 0,
     }
@@ -46,6 +46,7 @@ def test_rich_summary_matches_committed_schema():
     assert list(rich) == list(sample)
     assert list(rich["env"]) == list(sample["env"])
     assert rich["queries_jobs"]["pricing_summary"] == 3
+    assert rich["queries_codegen_compiles"]["pricing_summary"] == 0
     assert rich["value"] == round(sum(rich["queries"].values()), 4)
     assert rich["audit_queries"] == {
         **rich["audit_core_queries"], **rich["audit_rotating_queries"]

@@ -16,7 +16,8 @@ import os
 
 from bench import adaptive_for, shuffle_partitions_for
 from databeats_spark.session import (
-    ADAPTIVE_CONFS, RUNTIME_CONFS, apply_runtime_confs, default_driver_memory,
+    ADAPTIVE_CONFS, CODEGEN_CACHE_ENTRIES, RUNTIME_CONFS, apply_runtime_confs,
+    default_driver_memory,
 )
 
 
@@ -76,3 +77,11 @@ def test_driver_memory_default_fits_the_host(tmp_path):
     meminfo.write_text("MemTotal:       263921284 kB\n")
     assert default_driver_memory(str(meminfo)) == "16g"
     assert default_driver_memory(str(tmp_path / "missing")) == "16g"
+
+
+def test_codegen_cache_is_set_on_the_session(spark):
+    """get_spark sets Spark's generated-class cache above the default
+    100 (below one headline round), and the static conf is visible on
+    the session it built."""
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(CODEGEN_CACHE_ENTRIES)
+    assert CODEGEN_CACHE_ENTRIES > 100
