@@ -39,9 +39,9 @@ def cosine(a: str | Column, b: str | Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def sq8_dequantize(a: str | Column, levels: int = 256) -> Column:
+def sq8_dequantize(a: str | Column) -> Column:
     """Simulate int8 scalar-quantized storage: per-vector min/max
-    quantization to ``levels`` codes, decoded back to bucket midpoints
+    quantization to 256 codes, decoded back to bucket midpoints
     (array<double>). The quantization arithmetic matches the
     embedding_quantization registry audit (registry/vectors.py) bit for
     bit; searching over this column measures exactly the recall a
@@ -49,6 +49,7 @@ def sq8_dequantize(a: str | Column, levels: int = 256) -> Column:
     codec in the pipeline. Degenerate constant vectors pass through
     unchanged (hi == lo carries no quantization error)."""
     v = F.transform(_c(a), lambda x: x.cast("double"))
+    levels = 256
 
     def dq(arr):
         lo, hi = F.array_min(arr), F.array_max(arr)
@@ -126,42 +127,40 @@ def lsh_cosine_top_k(
     embeddings: DataFrame,
     queries: DataFrame,
     dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     k: int = 10,
     n_planes: int = 8,
     n_tables: int = 4,
-    seed: int = 42,
-    multiprobe: bool = True,
 ) -> DataFrame:
-    """Approximate top-k: candidates share an LSH bucket with the query
-    in ANY of ``n_tables`` independent hash tables, then exact cosine +
-    window. The recall dials, in the standard LSH design:
+    """Approximate top-k over ``(vec_id, embedding)`` rows: candidates
+    share an LSH bucket with the query in ANY of ``n_tables`` independent
+    hash tables, then exact cosine + window. The recall dials, in the
+    standard LSH design:
 
     - ``n_planes`` (bits per table): fewer → bigger buckets → recall up,
       candidate count up;
     - ``n_tables``: per-table miss probabilities multiply, so recall
       1-(1-p)^L — the lever that works even for weakly-similar
-      neighbors;
-    - ``multiprobe``: each query also probes the ``n_planes`` buckets at
-      Hamming distance 1 — recall without growing the corpus index.
+      neighbors.
+
+    Each query also probes the ``n_planes`` buckets at Hamming distance
+    1 (multiprobe) — recall without growing the corpus index.
 
     The corpus side carries n_tables signatures per vector (the usual
     LSH index cost); at cluster scale each table is an equi-join on its
     bucket column."""
-    c = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("__cv"))
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("__qv"))
+    c = embeddings.select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("__cv"))
+    q = queries.select(F.col("vec_id").alias("query_id"), F.col("embedding").alias("__qv"))
 
     table_sigs_c = [
-        hyperplane_signature("__cv", dim, n_planes, seed + 1000 * t).alias(f"__b{t}")
+        hyperplane_signature("__cv", dim, n_planes, 42 + 1000 * t).alias(f"__b{t}")
         for t in range(n_tables)
     ]
     table_sigs_q = [
-        hyperplane_signature("__qv", dim, n_planes, seed + 1000 * t).alias(f"__b{t}")
+        hyperplane_signature("__qv", dim, n_planes, 42 + 1000 * t).alias(f"__b{t}")
         for t in range(n_tables)
     ]
-    # (table, bucket) rows for corpus and queries; query side optionally
-    # fans out to the n_planes hamming-1 probes per table
+    # (table, bucket) rows for corpus and queries; the query side fans
+    # out to the n_planes hamming-1 probes per table
     c_rows = c.select("neighbor_id", "__cv", *table_sigs_c).select(
         "neighbor_id",
         "__cv",
@@ -172,9 +171,7 @@ def lsh_cosine_top_k(
 
     def q_probes(t: int) -> list[Column]:
         base = F.col(f"__b{t}")
-        probes = [base]
-        if multiprobe:
-            probes += [base.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
+        probes = [base] + [base.bitwiseXOR(F.lit(1 << i)) for i in range(n_planes)]
         return [F.struct(F.lit(t).alias("t"), p.alias("b")) for p in probes]
 
     q_rows = q.select("query_id", "__qv", *table_sigs_q).select(
@@ -210,7 +207,6 @@ def embedding_near_duplicates(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     n_planes: int = 12,
-    seed: int = 42,
     *,
     dim: int,
 ) -> DataFrame:
@@ -220,7 +216,7 @@ def embedding_near_duplicates(
     ``dim`` is required (like ``lsh_cosine_top_k``/``ivf``) — inferring
     it would cost a driver round-trip per call.
     """
-    sig = hyperplane_signature(vec_col, dim, n_planes, seed)
+    sig = hyperplane_signature(vec_col, dim, n_planes)
     e = embeddings.select(F.col(id_col).alias("__id"), F.col(vec_col).alias("__v"), sig.alias("__bucket"))
     return (
         e.alias("a")

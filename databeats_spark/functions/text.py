@@ -54,11 +54,6 @@ def bpe_token_count(text: str | Column) -> Column:
     return F.size(bpe_tokens(text))
 
 
-def char_count(text: str | Column) -> Column:
-    c = F.col(text) if isinstance(text, str) else text
-    return F.length(c)
-
-
 def punct_ratio(text: str | Column) -> Column:
     """Punctuation chars / total chars — a quality-score component."""
     c = F.col(text) if isinstance(text, str) else text
@@ -73,8 +68,9 @@ def stopword_count(text: str | Column, stopwords: tuple[str, ...]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t)))
 
 
-def stopword_ratio(text: str | Column, stopwords: tuple[str, ...] = LANG_MARKERS["en"]) -> Column:
-    return stopword_count(text, stopwords) / F.greatest(token_count(text), F.lit(1))
+def stopword_ratio(text: str | Column) -> Column:
+    """English marker tokens / tokens — a quality-score component."""
+    return stopword_count(text, LANG_MARKERS["en"]) / F.greatest(token_count(text), F.lit(1))
 
 
 def mean_token_length(text: str | Column) -> Column:
@@ -92,11 +88,6 @@ def quality_score(text: str | Column) -> Column:
     punct_component = F.lit(1.0) - F.least(punct_ratio(text) * 5, F.lit(1.0))
     stop_component = F.least(stopword_ratio(text) * 10, F.lit(1.0))
     return F.round((len_component + punct_component + stop_component) / 3, 6)
-
-
-def lang_scores(text: str | Column) -> dict[str, Column]:
-    """Marker-token count per language (the lang-ID signal)."""
-    return {lang: stopword_count(text, marks) for lang, marks in LANG_MARKERS.items()}
 
 
 def lang_guess(text: str | Column) -> Column:

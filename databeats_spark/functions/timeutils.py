@@ -1,8 +1,8 @@
-"""Time/scalar functions — the reference's C1-C5 surface (SURVEY §2.9).
+"""Time/scalar functions (SURVEY §2.9).
 
-The reference round-trips unix longs ↔ datetimes with row-wise
-``.apply`` lambdas (reference dag.py:119-121, 498-516); here each is a
-single codegen'd expression.
+The reference buckets dates into weeks with row-wise ``.apply``
+lambdas (reference dag.py:69-76); here the week index is a single
+codegen'd expression.
 """
 
 from __future__ import annotations
@@ -17,27 +17,7 @@ def _c(c: str | Column) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
-def from_unix(col: str | Column) -> Column:
-    """unix seconds → timestamp (reference C1, dag.py:119-121)."""
-    return F.timestamp_seconds(_c(col))
-
-
-def to_unix(col: str | Column) -> Column:
-    """timestamp → unix seconds, truncating (reference C2, dag.py:498-516)."""
-    return F.unix_timestamp(_c(col))
-
-
-def week_start(col: str | Column) -> Column:
-    """Start-of-week Monday date (reference C3, dag.py:69-76)."""
-    return F.date_trunc("week", _c(col)).cast("date")
-
-
 def week_index(col: str | Column) -> Column:
     """Dense integer week number since epoch (Mondays map to distinct
     consecutive ints) — the period index for streak/islands logic."""
     return F.floor(F.unix_timestamp(F.date_trunc("week", _c(col))) / SECONDS_PER_WEEK).cast("long")
-
-
-def days_between(end: str | Column, start: str | Column) -> Column:
-    """Calendar-day difference (reference C4, dag.py:142,148)."""
-    return F.datediff(_c(end).cast("date"), _c(start).cast("date"))

@@ -42,19 +42,19 @@ def sentences():
     return _Sentences
 
 
-def sentence_rows_native(docs: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
+def sentence_rows_native(docs: DataFrame) -> DataFrame:
     """Column-expression twin of the UDTF: split + posexplode, fully
     JVM-side. This is the hot-path implementation; the UDTF exists to
     cover the Python-table-function API surface."""
-    parts = F.split(F.col(text_col), _SENT_SPLIT)
+    parts = F.split(F.col("text"), _SENT_SPLIT)
     out = docs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         F.posexplode(parts).alias("sentence_idx", "raw"),
     ).withColumn("sentence", F.trim("raw"))
     return (
         out.filter(F.length("sentence") > 0)
         .select(
-            id_col,
+            "doc_id",
             F.col("sentence_idx").cast("int").alias("sentence_idx"),
             "sentence",
             F.size(F.split("sentence", r"\s+")).cast("int").alias("n_words"),

@@ -44,10 +44,10 @@ def _literal_repl(s: str) -> str:
     return s.replace("\\", "\\\\").replace("$", "\\$")
 
 
-def _word_vocab(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """One corpus pass: space-tokenize, count word frequencies, and
+def _word_vocab(docs: DataFrame) -> DataFrame:
+    """One corpus pass: space-tokenize ``text``, count word frequencies, and
     seed each word's symbol string (chars + </w> terminator)."""
-    words = docs.select(F.explode(F.split(F.col(text_col), r"\s+")).alias("w")).filter(
+    words = docs.select(F.explode(F.split(F.col("text"), r"\s+")).alias("w")).filter(
         F.col("w") != ""
     )
     vocab = words.groupBy("w").agg(F.count(F.lit(1)).alias("freq"))
@@ -78,12 +78,12 @@ def _pair_counts(vocab: DataFrame) -> DataFrame:
 
 
 def train_bpe(
-    docs: DataFrame, n_merges: int, text_col: str = "text"
+    docs: DataFrame, n_merges: int
 ) -> tuple[list[tuple[str, str]], DataFrame]:
     """Learn ``n_merges`` BPE merge rules; returns (merges, vocab)
     where vocab is the final (word, freq, syms) table. Stops early when
     no pair occurs at least twice (merging hapax pairs is noise)."""
-    vocab = _word_vocab(docs, text_col).localCheckpoint()
+    vocab = _word_vocab(docs).localCheckpoint()
     merges: list[tuple[str, str]] = []
     for i in range(n_merges):
         top = (
@@ -107,12 +107,12 @@ def train_bpe(
 
 
 def apply_bpe(
-    docs: DataFrame, merges: list[tuple[str, str]], text_col: str = "text"
+    docs: DataFrame, merges: list[tuple[str, str]]
 ) -> DataFrame:
     """Tokenize a corpus with learned merges: per distinct word, apply
     every merge in order, then re-attach to documents by word — the
     vocabulary table is the unit of work, never the corpus."""
-    vocab = _word_vocab(docs.select(text_col), text_col).select("w", "syms")
+    vocab = _word_vocab(docs.select("text")).select("w", "syms")
     syms = F.col("syms")
     for a, b in merges:
         pat = rf"(?<!\S){re.escape(a)} {re.escape(b)}(?!\S)"

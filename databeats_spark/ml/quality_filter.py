@@ -37,22 +37,23 @@ from databeats_spark.ml.text import _strip_training_summary
 WEAK_LABEL_THRESHOLD = 0.75
 
 
-def weak_quality_labels(docs: DataFrame, threshold: float = WEAK_LABEL_THRESHOLD) -> DataFrame:
-    """Rule-gate weak labels: 1.0 when the composite heuristic passes.
+def weak_quality_labels(docs: DataFrame) -> DataFrame:
+    """Rule-gate weak labels: 1.0 when the composite heuristic reaches
+    ``WEAK_LABEL_THRESHOLD``.
 
     One scan of pure Column arithmetic — the labeling pass is free to
     run over any sample size the fit budget allows.
     """
     return docs.withColumn(
-        "label", (quality_score("text") >= threshold).cast("double")
+        "label", (quality_score("text") >= WEAK_LABEL_THRESHOLD).cast("double")
     )
 
 
-def build_quality_filter(num_features: int = 1 << 15) -> Pipeline:
+def build_quality_filter() -> Pipeline:
     tokenizer = RegexTokenizer(
         inputCol="text", outputCol="__toks", pattern=r"\s+", minTokenLength=1
     )
-    tf = HashingTF(inputCol="__toks", outputCol="__tf", numFeatures=num_features)
+    tf = HashingTF(inputCol="__toks", outputCol="__tf", numFeatures=1 << 15)
     idf = IDF(inputCol="__tf", outputCol="features")
     lr = LogisticRegression(maxIter=25, regParam=1e-3)
     return Pipeline(stages=[tokenizer, tf, idf, lr])
@@ -90,8 +91,6 @@ class QualityFilter:
 def train_quality_filter(
     docs: DataFrame,
     seed: int = 7,
-    train_fraction: float = 0.8,
-    threshold: float = WEAK_LABEL_THRESHOLD,
 ) -> QualityFilter:
     """Weak-label → seeded split → fit → held-out AUC (vs weak labels).
 
@@ -101,8 +100,8 @@ def train_quality_filter(
     """
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
 
-    labeled = weak_quality_labels(docs, threshold)
-    train, test = labeled.randomSplit([train_fraction, 1 - train_fraction], seed=seed)
+    labeled = weak_quality_labels(docs)
+    train, test = labeled.randomSplit([0.8, 1 - 0.8], seed=seed)
     model = _strip_training_summary(build_quality_filter().fit(train))
     auc = BinaryClassificationEvaluator(metricName="areaUnderROC").evaluate(
         model.transform(test)

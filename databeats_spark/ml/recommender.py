@@ -100,21 +100,11 @@ class SongRecommender:
         self.model.write().overwrite().save(path)
 
 
-def format_recommendations(recs: DataFrame, artists: DataFrame | None = None) -> list[str]:
+def format_recommendations(recs: DataFrame) -> list[str]:
     """W6 presentation (reference format_recommendation,
     recommendation.py:82-96): numbered display strings, deduped, cap
-    enforced upstream. Joins the artist display name when a dimension
-    frame is supplied (the reference shows raw ids)."""
-    if artists is not None:
-        recs = (
-            recs.join(
-                F.broadcast(artists.select("artist_id", "artist_name").dropDuplicates(["artist_id"])),
-                "artist_id",
-                "left",
-            )
-            .withColumn("artist_name", F.coalesce("artist_name", "artist_id"))
-        )
-    else:
-        recs = recs.withColumn("artist_name", F.col("artist_id"))
+    enforced upstream; the artist shows as its raw id, as in the
+    reference."""
+    recs = recs.withColumn("artist_name", F.col("artist_id"))
     rows = recs.select("track_name", "artist_name").collect()
     return [f"{i + 1}. {r['track_name']} — {r['artist_name']}" for i, r in enumerate(rows)]

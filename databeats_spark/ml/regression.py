@@ -123,15 +123,14 @@ def tpe_param_maps(
     history: list[tuple[dict, float]],
     n_iter: int,
     seed: int = 42,
-    gamma: float = 0.5,
 ) -> list[dict]:
     """Model-based continuation of a random search — the adaptive half
     of the reference's ``BayesSearchCV``/``fmin(tpe)`` loops (reference
     ml_training_dag.py:66-98; Prediction_Model.ipynb cell-11).
 
     TPE over categorical dimensions (Bergstra et al., NIPS 2011): split
-    the evaluated configs into good/bad at the ``gamma`` metric
-    quantile (metric minimized), estimate per-axis densities
+    the evaluated configs into good/bad at the metric median
+    (metric minimized), estimate per-axis densities
     l(v)=P(v|good) and g(v)=P(v|bad) with add-one smoothing, and return
     the ``n_iter`` UNSEEN configs maximizing Σ log l − Σ log g.
     Deterministic: the discrete space is ranked exhaustively when small
@@ -141,7 +140,7 @@ def tpe_param_maps(
         return []
     keys = list(space)
     ranked = sorted(history, key=lambda h: h[1])
-    n_good = max(1, math.ceil(gamma * len(ranked)))
+    n_good = max(1, math.ceil(0.5 * len(ranked)))
     good, bad = ranked[:n_good], ranked[n_good:]
 
     def dens(subset: list[tuple[dict, float]]) -> dict:
@@ -207,7 +206,6 @@ def train_popularity_model(
     algo: str = "rf",
     feature_cols: tuple[str, ...] = AUDIO_FEATURE_COLS,
     cv_folds: int = 3,
-    train_frac: float = 0.8,
     seed: int = 42,
     search: str = "grid",
     n_iter: int = 10,
@@ -229,7 +227,7 @@ def train_popularity_model(
     persisting, ml_training_dag.py:95 — callers can do the same).
     """
     data = df.select(LABEL, *feature_cols).na.drop()
-    train, test = data.randomSplit([train_frac, 1 - train_frac], seed=seed)
+    train, test = data.randomSplit([0.8, 1 - 0.8], seed=seed)
 
     est, grid_fn = _estimator(algo, seed)
     pipe = Pipeline(
@@ -275,35 +273,31 @@ def train_popularity_model(
 def rfe_select_features(
     df: DataFrame,
     n_features: int = 10,
-    feature_cols: tuple[str, ...] = AUDIO_FEATURE_COLS,
-    step: int = 1,
-    seed: int = 42,
 ) -> tuple[str, ...]:
     """M3: recursive feature elimination — refit, rank, drop the
-    weakest ``step`` features, repeat until ``n_features`` remain
+    weakest feature, repeat until ``n_features`` remain
     (reference Prediction_Model.ipynb cell-8/9:
     ``RFE(LinearRegression(), n_features_to_select=10)``).
 
-    Ranking uses a seeded RandomForest's ``featureImportances`` rather
+    Ranking uses a seeded (42) RandomForest's ``featureImportances`` rather
     than raw LR coefficients: impurity importances are scale-invariant,
     whereas |coef| on unstandardized features (the reference's ranking)
     conflates weight with unit. Each round is one distributed fit on
-    the surviving columns — ``(len(feature_cols) - n_features) / step``
+    the surviving columns — ``len(AUDIO_FEATURE_COLS) - n_features``
     fits total, no driver-side data.
     """
-    remaining = list(feature_cols)
+    remaining = list(AUDIO_FEATURE_COLS)
     while len(remaining) > n_features:
         data = df.select(LABEL, *remaining).na.drop()
         pipe = Pipeline(
             stages=[
                 VectorAssembler(inputCols=remaining, outputCol="features"),
-                RandomForestRegressor(labelCol=LABEL, seed=seed, numTrees=40, maxDepth=8),
+                RandomForestRegressor(labelCol=LABEL, seed=42, numTrees=40, maxDepth=8),
             ]
         )
         vec = pipe.fit(data).stages[-1].featureImportances
         ranked = sorted(remaining, key=lambda c: vec[remaining.index(c)])
-        drop = min(step, len(remaining) - n_features)
-        remaining = [c for c in remaining if c not in set(ranked[:drop])]
+        remaining = [c for c in remaining if c != ranked[0]]
     return tuple(remaining)
 
 
@@ -311,22 +305,22 @@ def train_lr_with_rfe(
     df: DataFrame,
     n_features: int = 10,
     cv_folds: int = 3,
-    seed: int = 42,
 ) -> tuple[TrainedModel, tuple[str, ...]]:
     """M3 end-to-end: RFE down to ``n_features``, then the linear model
     on the selected subset (reference band: RMSE 20.663 with 10/13
     features, Prediction_Model.ipynb cell-9)."""
-    selected = rfe_select_features(df, n_features=n_features, seed=seed)
-    trained = train_popularity_model(df, algo="lr", feature_cols=selected, cv_folds=cv_folds, seed=seed)
+    selected = rfe_select_features(df, n_features=n_features)
+    trained = train_popularity_model(df, algo="lr", feature_cols=selected, cv_folds=cv_folds)
     return trained, selected
 
 
-def feature_importances(trained: TrainedModel, feature_cols=AUDIO_FEATURE_COLS) -> dict[str, float]:
-    """M9 feature-importance report (reference app.py:121-144)."""
+def feature_importances(trained: TrainedModel) -> dict[str, float]:
+    """M9 feature-importance report (reference app.py:121-144) for a
+    model trained on ``AUDIO_FEATURE_COLS``."""
     last = trained.model.stages[-1]
     if hasattr(last, "featureImportances"):
         vec = last.featureImportances
-        return {c: float(vec[i]) for i, c in enumerate(feature_cols)}
+        return {c: float(vec[i]) for i, c in enumerate(AUDIO_FEATURE_COLS)}
     if hasattr(last, "coefficients"):
-        return {c: float(abs(last.coefficients[i])) for i, c in enumerate(feature_cols)}
+        return {c: float(abs(last.coefficients[i])) for i, c in enumerate(AUDIO_FEATURE_COLS)}
     return {}

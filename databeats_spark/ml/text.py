@@ -21,11 +21,11 @@ from pyspark.ml.feature import IDF, HashingTF, IndexToString, RegexTokenizer, St
 from pyspark.sql import DataFrame
 
 
-def build_lang_classifier(num_features: int = 1 << 12, label_col: str = "lang") -> Pipeline:
+def build_lang_classifier(label_col: str = "lang") -> Pipeline:
     tokenizer = RegexTokenizer(
         inputCol="text", outputCol="__toks", pattern=r"\s+", minTokenLength=1
     )
-    tf = HashingTF(inputCol="__toks", outputCol="__tf", numFeatures=num_features)
+    tf = HashingTF(inputCol="__toks", outputCol="__tf", numFeatures=1 << 12)
     idf = IDF(inputCol="__tf", outputCol="features")
     indexer = StringIndexer(inputCol=label_col, outputCol="label", handleInvalid="error")
     lr = LogisticRegression(maxIter=25, regParam=1e-3)
@@ -68,7 +68,7 @@ class LangClassifier:
 
 
 def train_lang_classifier(
-    docs: DataFrame, seed: int = 7, train_fraction: float = 0.8, label_col: str = "lang"
+    docs: DataFrame, seed: int = 7, label_col: str = "lang"
 ) -> LangClassifier:
     """Seeded split → fit → held-out accuracy. Deterministic for a
     fixed corpus/seed (the M1 reproducibility requirement).
@@ -78,7 +78,7 @@ def train_lang_classifier(
     a rule-based labeler into the model — the weak-supervision
     bootstrap real corpus pipelines use when gold labels don't exist.
     """
-    train, test = docs.randomSplit([train_fraction, 1 - train_fraction], seed=seed)
+    train, test = docs.randomSplit([0.8, 1 - 0.8], seed=seed)
     model = _strip_training_summary(build_lang_classifier(label_col=label_col).fit(train))
     labels = model.stages[3].labels
     decoded = IndexToString(inputCol="prediction", outputCol="pred_lang", labels=labels)

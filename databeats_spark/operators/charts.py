@@ -75,16 +75,15 @@ def week_on_chart(
     df: DataFrame,
     entity_col: str,
     ts_col: str = "timestamp",
-    popularity_col: str = "popularity",
     k: int = 50,
-    gap_days: int = 7,
 ) -> DataFrame:
-    """Full reference semantics: newest row per entity + ``chart`` streak.
+    """Full reference semantics: newest row per entity + ``chart`` streak
+    ranked by ``popularity``; a gap of more than 7 days breaks a streak.
 
     ``ts_col`` must be a timestamp/date column (cast unix longs at the
     edge, reference C1/C2).
     """
-    chart = snapshot_chart(df, entity_col, ts_col, popularity_col, k).withColumn(
+    chart = snapshot_chart(df, entity_col, ts_col, "popularity", k).withColumn(
         "__on_chart", F.lit(True)
     )
 
@@ -95,7 +94,7 @@ def week_on_chart(
     w = Window.partitionBy(entity_col).orderBy(ts_col)
     gap_ok = F.coalesce(
         F.datediff(F.col(ts_col).cast("date"), F.lag(F.col(ts_col).cast("date")).over(w))
-        <= gap_days,
+        <= 7,
         F.lit(True),  # first row: pandas initializes prev=first → diff 0
     )
     qualifies = (F.col("__on_chart") & gap_ok).alias("__ok")
@@ -118,7 +117,7 @@ def week_on_chart(
         .withColumn(
             # newest-snapshot guard: entity stale by >= 7 days → 0 (dag.py:148-152)
             "chart",
-            F.when(F.datediff(newest_all, last_ts) >= gap_days, F.lit(0))
+            F.when(F.datediff(newest_all, last_ts) >= 7, F.lit(0))
             .otherwise(F.col("__chart_raw"))
             .cast("int"),
         )

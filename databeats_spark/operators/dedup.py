@@ -48,15 +48,14 @@ def dedup_exact(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    fingerprint_col: str = "fp",
 ) -> DataFrame:
     """Exact content dedup: md5 fingerprint of normalized text, keep the
     lowest id per fingerprint. One hash-partitioned aggregate — the
     map-side partial min/count makes the shuffle tiny regardless of
     corpus size."""
     return (
-        df.select(F.col(id_col), fingerprint(text_col).alias(fingerprint_col))
-        .groupBy(fingerprint_col)
+        df.select(F.col(id_col), fingerprint(text_col).alias("fp"))
+        .groupBy("fp")
         .agg(
             F.min(id_col).alias("keep_id"),
             F.count(F.lit(1)).alias("n_copies"),
@@ -126,14 +125,14 @@ class MinHashFamily(NamedTuple):
     hash: Callable[[int, Column], Column]
 
 
-def universal_family(seed: int = 42) -> MinHashFamily:
+def universal_family() -> MinHashFamily:
     """The production family: h_i(x) = (a_i * x + b_i) mod p over the
     shingle's positive xxhash64. Catalyst folds the (a, b) literals; the
     per-row cost is pure arithmetic. Pair i is the i-th draw of
-    ``Random(seed)``, whatever the number of hashes."""
+    ``Random(42)``, whatever the number of hashes."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(42)
     coeffs: list[tuple[int, int]] = []
 
     def universal(i: int, key: Column) -> Column:
@@ -230,7 +229,6 @@ def minhash_near_duplicates(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_n: int = 3,
     num_hashes: int = 16,
     bands: int = 8,
     threshold: float = 0.6,
@@ -239,7 +237,7 @@ def minhash_near_duplicates(
 ) -> DataFrame:
     """MinHash + LSH banding near-duplicate detection, scale path.
 
-    shingle → family hash → ``num_hashes`` min-hash signature → split
+    word 3-shingle → family hash → ``num_hashes`` min-hash signature → split
     into ``bands`` bands of r = num_hashes/bands rows → bucket-join on
     (band index, band hash) → verify candidates with exact shingle
     Jaccard (via :func:`ngram_jaccard_pairs`'s math on the candidate
@@ -256,7 +254,7 @@ def minhash_near_duplicates(
     # set has three consumers (signatures and both verify sides), so
     # one lazy checkpoint shingles each document once.
     shingled = _shingled_docs(
-        df, id_col, text_col, shingle_n, num_partitions
+        df, id_col, text_col, 3, num_partitions
     ).localCheckpoint(eager=False)
     sig = _signatures(shingled, num_hashes, family or universal_family())
     band_rows = lsh_band_keys(sig, num_hashes=num_hashes, bands=bands)
@@ -308,14 +306,14 @@ def simhash_near_duplicates(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_n: int = 2,
     hamming_max: int = 3,
     num_partitions: int | None = None,
     bits: int = 64,
     feature_hash: Callable[[Column], Column] = F.xxhash64,
 ) -> DataFrame:
     """SimHash near-dup: ``bits``-bit signature = sign(Σ ±bit per
-    feature hash, ``feature_hash(shingle)`` a BIGINT); candidate
+    feature hash, ``feature_hash(shingle)`` a BIGINT, over word
+    2-shingles); candidate
     generation is :func:`banded_hamming_pairs` — by pigeonhole, any
     pair within ``hamming_max`` Hamming distance matches exactly on at
     least one block, so recall at the threshold is GUARANTEED, not
@@ -327,7 +325,7 @@ def simhash_near_duplicates(
         df = df.repartition(num_partitions)
     feats = df.select(
         F.col(id_col).alias("__id"),
-        F.explode(word_shingles(text_col, shingle_n)).alias("__sh"),
+        F.explode(word_shingles(text_col, 2)).alias("__sh"),
     ).withColumn("__h", feature_hash(F.col("__sh")))
 
     # per-bit vote: for each bit, +1 if set else -1; sum per doc.
@@ -409,7 +407,6 @@ def semantic_near_duplicates(
     vec_col: str = "embedding",
     n_lists: int | None = None,
     threshold: float = 0.95,
-    seed: int = 42,
     assign: Callable[[DataFrame], DataFrame] | None = None,
 ) -> DataFrame:
     """SemDeDup-style semantic near-duplicate pairs: cluster the
@@ -450,7 +447,7 @@ def semantic_near_duplicates(
         if n_lists is None:
             n_lists = max(8, embeddings.count() // 400)
         assigned = IVFIndex.fit(
-            embeddings, id_col, vec_col, n_lists=n_lists, seed=seed,
+            embeddings, id_col, vec_col, n_lists=n_lists, seed=42,
             max_iter=4, init_mode="random",
         ).assigned
     else:

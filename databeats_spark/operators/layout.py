@@ -55,7 +55,6 @@ def zorder_write(
     path: str,
     cols: Sequence[str],
     n_files: int = 8,
-    bits: int = MORTON_BITS,
 ) -> None:
     """Write ``df`` as parquet clustered on the Z-curve of ``cols``.
 
@@ -70,10 +69,10 @@ def zorder_write(
         *[F.max(c).alias(f"mx_{c}") for c in cols],
     ).first()
     quantized = [
-        _quantized(F.col(c), F.lit(stats[f"mn_{c}"]), F.lit(stats[f"mx_{c}"]), bits)
+        _quantized(F.col(c), F.lit(stats[f"mn_{c}"]), F.lit(stats[f"mx_{c}"]), MORTON_BITS)
         for c in cols
     ]
-    keyed = df.withColumn("__z", morton_key(quantized, bits))
+    keyed = df.withColumn("__z", morton_key(quantized, MORTON_BITS))
     (
         keyed.repartitionByRange(n_files, "__z")
         .sortWithinPartitions("__z")

@@ -84,8 +84,6 @@ def scd2_apply(
     key: str,
     attrs: list[str],
     ts_col: str = "change_ts",
-    from_col: str = "valid_from",
-    to_col: str = "valid_to",
 ) -> DataFrame:
     """Type-2 slowly-changing-dimension apply: close changed rows,
     append new versions, keep full history.
@@ -109,17 +107,17 @@ def scd2_apply(
     """
     from databeats_spark.operators.windows import latest_per_key
 
-    cols = [key, *attrs, from_col, to_col]
+    cols = [key, *attrs, "valid_from", "valid_to"]
     newest = latest_per_key(changes, [key], ts_col)
     # prefix-alias both join sides: attribute references (df[col])
     # become ambiguous when the output is fed back in as next batch's
     # dim (re-apply / idempotence), since every union branch then
     # shares lineage with the open-rows side
-    o = dim.filter(F.col(to_col).isNull()).select(
+    o = dim.filter(F.col("valid_to").isNull()).select(
         *(F.col(c).alias(f"__o_{c}") for c in cols)
     )
     n = newest.select(*(F.col(c).alias(f"__n_{c}") for c in [key, *attrs, ts_col]))
-    closed_rows = dim.filter(F.col(to_col).isNotNull())
+    closed_rows = dim.filter(F.col("valid_to").isNotNull())
 
     ok, nk = F.col(f"__o_{key}"), F.col(f"__n_{key}")
     same = reduce(
@@ -134,13 +132,13 @@ def scd2_apply(
     untouched = j.filter(nk.isNull()).select(*o_cols())
     unchanged = j.filter(ok.isNotNull() & nk.isNotNull() & same).select(*o_cols())
     closed_now = j.filter(ok.isNotNull() & nk.isNotNull() & ~same).select(
-        *(F.col(f"__o_{c}").alias(c) for c in [key, *attrs, from_col]),
-        F.col(f"__n_{ts_col}").alias(to_col),
+        *(F.col(f"__o_{c}").alias(c) for c in [key, *attrs, "valid_from"]),
+        F.col(f"__n_{ts_col}").alias("valid_to"),
     )
     opened = j.filter(nk.isNotNull() & (ok.isNull() | ~same)).select(
         *(F.col(f"__n_{c}").alias(c) for c in [key, *attrs]),
-        F.col(f"__n_{ts_col}").alias(from_col),
-        F.lit(None).cast(dim.schema[to_col].dataType).alias(to_col),
+        F.col(f"__n_{ts_col}").alias("valid_from"),
+        F.lit(None).cast(dim.schema["valid_to"].dataType).alias("valid_to"),
     )
     return (
         closed_rows.select(*cols)

@@ -30,10 +30,10 @@ IMAGE_FEATURE_SCHEMA = (
 )
 
 
-def attach_payload(df: DataFrame, text_col: str = "text", out_col: str = "payload") -> DataFrame:
-    """Materialize a binary payload column (here derived from text; in
-    production this is the raw media bytes from the lake)."""
-    return df.withColumn(out_col, F.encode(F.col(text_col), "utf-8"))
+def attach_payload(df: DataFrame) -> DataFrame:
+    """Materialize a binary ``payload`` column (here derived from
+    ``text``; in production this is the raw media bytes from the lake)."""
+    return df.withColumn("payload", F.encode(F.col("text"), "utf-8"))
 
 
 def _fake_decode(payload: bytes) -> tuple[str, int, int]:
@@ -60,13 +60,9 @@ def _fake_embedding(payload: bytes, dim: int = 8) -> np.ndarray:
     return (v / np.linalg.norm(v)).astype(np.float32)
 
 
-def decode_image_features(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    embed_dim: int = 8,
-) -> DataFrame:
-    """decode → metadata + embedding, one Arrow batch at a time.
+def decode_image_features(df: DataFrame) -> DataFrame:
+    """decode ``payload`` → metadata + 8-dim embedding per ``doc_id``,
+    one Arrow batch at a time.
 
     The output drops the payload column: downstream operators work on
     features only, so the heavy bytes never cross a shuffle boundary.
@@ -78,7 +74,7 @@ def decode_image_features(
             # per row and dominates the batch cost; the codec call is
             # per-payload either way
             recs = []
-            for doc_id, payload in zip(pdf[id_col], pdf[payload_col]):
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
                 fmt, w, h = _fake_decode(payload)
                 recs.append(
                     {
@@ -87,23 +83,22 @@ def decode_image_features(
                         "format": fmt,
                         "width": w,
                         "height": h,
-                        "embedding": _fake_embedding(payload, embed_dim).tolist(),
+                        "embedding": _fake_embedding(payload).tolist(),
                     }
                 )
             yield pd.DataFrame(recs)
 
-    return df.select(id_col, payload_col).mapInPandas(run, schema=IMAGE_FEATURE_SCHEMA)
+    return df.select("doc_id", "payload").mapInPandas(run, schema=IMAGE_FEATURE_SCHEMA)
 
 
 def encode_payloads(
     df: DataFrame,
     encoder=None,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
     embed_dim: int = 8,
     batch_size: int = 64,
 ) -> DataFrame:
-    """The embedding-generation seam: payload bytes → embedding column,
+    """The embedding-generation seam: ``payload`` bytes → embedding
+    column per ``doc_id``,
     with the MODEL injected the same way sources/rest.py injects its
     transport — ``encoder(payloads: list[bytes]) -> ndarray (n, dim)``
     is the batch-inference signature every real encoder (vision tower,
@@ -128,7 +123,7 @@ def encode_payloads(
         for pdf in batches:
             for start in range(0, len(pdf), batch_size):
                 chunk = pdf.iloc[start : start + batch_size]
-                vecs = np.asarray(encoder(list(chunk[payload_col])), dtype=np.float32)
+                vecs = np.asarray(encoder(list(chunk["payload"])), dtype=np.float32)
                 if vecs.shape != (len(chunk), embed_dim):
                     raise ValueError(
                         f"encoder returned shape {vecs.shape}, expected "
@@ -136,108 +131,109 @@ def encode_payloads(
                     )
                 yield pd.DataFrame(
                     {
-                        id_col: chunk[id_col].to_numpy(),
+                        "doc_id": chunk["doc_id"].to_numpy(),
                         "embedding": [v.tolist() for v in vecs],
                     }
                 )
 
     # carry the caller's id type through (string/uuid keys are as
     # legitimate as longs; hardcoding would break at the first batch)
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=f"{id_col} {id_type}, embedding array<float>"
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return df.select("doc_id", "payload").mapInPandas(
+        run, schema=f"doc_id {id_type}, embedding array<float>"
     )
 
 
 DHASH_GRID = 8  # signature = DHASH_GRID x DHASH_GRID bits (64)
 
 
-def dhash_payloads(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    tiny_image=None,
-) -> DataFrame:
+def _tiny_image(payloads: list) -> np.ndarray:
+    """Decode + downsample each payload to a DHASH_GRID x (DHASH_GRID
+    + 1) grayscale grid, ndarray (n, 8, 9). A real implementation is PIL
+    decode + grayscale + resize — unavailable in this image, so this
+    treats the payload as a RAW grayscale byte stream and block-averages
+    it into the grid (zero-padded to at least one byte per cell). That
+    IS the resize arithmetic a real pipeline runs after decode, so
+    near-identical payloads (a few bytes changed) land within small
+    Hamming distance — the property the planted-dup pytest pins."""
+    g = DHASH_GRID
+    n_cells = g * (g + 1)
+    grids = np.empty((len(payloads), g, g + 1), dtype=np.float64)
+    for i, p in enumerate(payloads):
+        arr = np.frombuffer(p, dtype=np.uint8).astype(np.float64)
+        if len(arr) < n_cells:
+            arr = np.pad(arr, (0, n_cells - len(arr)))
+        # block-average into g*(g+1) nearly-equal chunks — the
+        # downsample step of a real dHash, over raw bytes
+        grids[i] = np.array(
+            [c.mean() for c in np.array_split(arr, n_cells)]
+        ).reshape(g, g + 1)
+    return grids
+
+
+def dhash_payloads(df: DataFrame) -> DataFrame:
     """Perceptual difference-hash signatures for media payloads — the
     cheap pre-embedding dedup tier (r7 VERDICT item 7): at 100 TB you
     dHash every image/frame for cents before any vision tower runs.
 
-    Pipeline per payload: ``tiny_image`` (decode + downsample to an
-    8x9 grayscale grid) → horizontal gradient signs → 64-bit
-    signature, returned as a signed BIGINT so the banded Hamming
-    search (operators/dedup.py::banded_hamming_pairs — the SimHash
-    pigeonhole scheme verbatim) runs on JVM bit ops.
-
-    ``tiny_image(payloads: list[bytes]) -> ndarray (n, 8, 9)`` is the
-    injectable decode seam (same pattern as encode_payloads' encoder):
-    a real implementation is PIL decode + grayscale + resize —
-    unavailable in this image, so the default treats the payload as a
-    RAW grayscale byte stream and block-averages it into the grid
-    (zero-padded to at least one byte per cell). That IS the resize
-    arithmetic a real pipeline runs after decode, so near-identical
-    payloads (a few bytes changed) land within small Hamming distance
-    — the property the planted-dup pytest pins.
+    Pipeline per ``(doc_id, payload)`` row: :func:`_tiny_image`
+    (decode + downsample to an 8x9 grayscale grid) → horizontal
+    gradient signs → 64-bit signature, returned as a signed BIGINT so
+    the banded Hamming search (operators/dedup.py::banded_hamming_pairs
+    — the SimHash pigeonhole scheme verbatim) runs on JVM bit ops.
 
     Arrow-batched mapInPandas; payload bytes never survive the stage.
     """
     g = DHASH_GRID
-    if tiny_image is None:
-
-        def tiny_image(payloads: list) -> np.ndarray:
-            grids = np.empty((len(payloads), g, g + 1), dtype=np.float64)
-            for i, p in enumerate(payloads):
-                arr = np.frombuffer(p, dtype=np.uint8).astype(np.float64)
-                n_cells = g * (g + 1)
-                if len(arr) < n_cells:
-                    arr = np.pad(arr, (0, n_cells - len(arr)))
-                # block-average into g*(g+1) nearly-equal chunks — the
-                # downsample step of a real dHash, over raw bytes
-                grids[i] = np.array(
-                    [c.mean() for c in np.array_split(arr, n_cells)]
-                ).reshape(g, g + 1)
-            return grids
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            grids = np.asarray(tiny_image(list(pdf[payload_col])), dtype=np.float64)
-            if grids.shape != (len(pdf), g, g + 1):
-                raise ValueError(
-                    f"tiny_image returned shape {grids.shape}, expected "
-                    f"({len(pdf)}, {g}, {g + 1})"
-                )
+            grids = _tiny_image(list(pdf["payload"]))
             # dHash: bit (r, c) = cell brighter than its right neighbor
             bits = (grids[:, :, :-1] > grids[:, :, 1:]).reshape(len(pdf), g * g)
             weights = (1 << np.arange(g * g, dtype=np.uint64))
             sigs = (bits.astype(np.uint64) * weights).sum(axis=1).astype(np.uint64)
             yield pd.DataFrame(
                 {
-                    id_col: pdf[id_col].to_numpy(),
+                    "doc_id": pdf["doc_id"].to_numpy(),
                     # two's-complement view: BIGINT column, bit-identical
                     "dhash": sigs.view(np.int64),
                 }
             )
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=f"{id_col} {id_type}, dhash long"
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return df.select("doc_id", "payload").mapInPandas(
+        run, schema=f"doc_id {id_type}, dhash long"
     )
 
 
 BLOCKMEAN_CROPS = (1.0, 0.75)  # full frame + center crop
 
 
-def blockmean_payloads(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    crop: float = 1.0,
-    block_means=None,
-) -> DataFrame:
+def _block_means(payloads: list, crop: float) -> np.ndarray:
+    """The central ``crop`` fraction of each payload block-averaged into
+    64 nearly-equal blocks, ndarray (n, 64). A real implementation is
+    PIL decode + grayscale + center crop + 8x8 block means — unavailable
+    in this image, so this treats the payload as a raw grayscale byte
+    stream."""
+    means = np.empty((len(payloads), 64), dtype=np.float64)
+    for i, p in enumerate(payloads):
+        arr = np.frombuffer(p, dtype=np.uint8).astype(np.float64)
+        lo = int(len(arr) * (1.0 - crop) / 2.0)
+        arr = arr[lo : lo + max(1, int(len(arr) * crop))]
+        if len(arr) < 64:
+            arr = np.pad(arr, (0, 64 - len(arr)))
+        means[i] = [c.mean() for c in np.array_split(arr, 64)]
+    return means
+
+
+def blockmean_payloads(df: DataFrame, crop: float = 1.0) -> DataFrame:
     """Block-mean perceptual hash (Yang et al. 2006, block mean value
     based image perceptual hashing) at one crop scale — the second
     signature family of the perceptual tier (r8 VERDICT item 6).
 
-    Per payload: take the CENTRAL ``crop`` fraction of the stream,
+    Per ``(doc_id, payload)`` row: take the CENTRAL ``crop`` fraction
+    of the stream (:func:`_block_means`),
     block-average it into 64 nearly-equal blocks, bit b = block mean >
     median of the 64 means. The median threshold makes the signature
     invariant to global brightness/offset shifts (dHash's gradient
@@ -245,69 +241,36 @@ def blockmean_payloads(
     edits — letterboxing, watermarks, frame-edge timestamps — which
     flip many full-frame bits but leave the cropped signature within
     verify distance (pinned by the planted letterbox-dup pytest).
-
-    ``block_means(payloads: list[bytes], crop: float) -> ndarray
-    (n, 64)`` is the injectable decode seam (the dhash_payloads
-    pattern): a real implementation is PIL decode + grayscale + center
-    crop + 8x8 block means — unavailable in this image, so the default
-    treats the payload as a raw grayscale byte stream and
-    block-averages its central ``crop`` fraction. Same signed-BIGINT
-    signature contract as dhash_payloads, so the banded Hamming search
-    (operators/dedup.py::banded_hamming_pairs) is reused unchanged.
+    Same signed-BIGINT signature contract as dhash_payloads, so the
+    banded Hamming search (operators/dedup.py::banded_hamming_pairs)
+    is reused unchanged.
     """
-    n_bits = 64
-    if block_means is None:
-
-        def block_means(payloads: list, crop: float) -> np.ndarray:
-            means = np.empty((len(payloads), n_bits), dtype=np.float64)
-            for i, p in enumerate(payloads):
-                arr = np.frombuffer(p, dtype=np.uint8).astype(np.float64)
-                lo = int(len(arr) * (1.0 - crop) / 2.0)
-                arr = arr[lo : lo + max(1, int(len(arr) * crop))]
-                if len(arr) < n_bits:
-                    arr = np.pad(arr, (0, n_bits - len(arr)))
-                means[i] = [c.mean() for c in np.array_split(arr, n_bits)]
-            return means
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            means = np.asarray(block_means(list(pdf[payload_col]), crop), dtype=np.float64)
-            if means.shape != (len(pdf), n_bits):
-                raise ValueError(
-                    f"block_means returned shape {means.shape}, expected "
-                    f"({len(pdf)}, {n_bits})"
-                )
+            means = _block_means(list(pdf["payload"]), crop)
             bits = means > np.median(means, axis=1, keepdims=True)
-            weights = (1 << np.arange(n_bits, dtype=np.uint64))
+            weights = (1 << np.arange(64, dtype=np.uint64))
             sigs = (bits.astype(np.uint64) * weights).sum(axis=1).astype(np.uint64)
             yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy(), "bmh": sigs.view(np.int64)}
+                {"doc_id": pdf["doc_id"].to_numpy(), "bmh": sigs.view(np.int64)}
             )
 
-    id_type = df.schema[id_col].dataType.simpleString()
-    return df.select(id_col, payload_col).mapInPandas(
-        run, schema=f"{id_col} {id_type}, bmh long"
+    id_type = df.schema["doc_id"].dataType.simpleString()
+    return df.select("doc_id", "payload").mapInPandas(
+        run, schema=f"doc_id {id_type}, bmh long"
     )
 
 
-def blockmean_near_dups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    hamming_max: int = 3,
-    crops: tuple = BLOCKMEAN_CROPS,
-    block_means=None,
-) -> DataFrame:
-    """Multi-scale block-mean near-dup pairs: a pair is a candidate
-    when it verifies within ``hamming_max`` at ANY crop scale (the
+def blockmean_near_dups(df: DataFrame, hamming_max: int = 3) -> DataFrame:
+    """Multi-scale block-mean near-dup pairs over ``(doc_id, payload)``
+    rows: a pair is a candidate when it verifies within ``hamming_max``
+    at ANY of the ``BLOCKMEAN_CROPS`` scales (the
     recall union — border-edited dups survive only the cropped scale,
     byte-identical dups all scales). Returns (id_a, id_b, hamming,
     n_scales) via :func:`multi_scale_hamming_pairs`."""
-    scales = [
-        blockmean_payloads(df, id_col, payload_col, crop=c, block_means=block_means)
-        for c in crops
-    ]
-    return multi_scale_hamming_pairs(scales, id_col, "bmh", hamming_max)
+    scales = [blockmean_payloads(df, crop=c) for c in BLOCKMEAN_CROPS]
+    return multi_scale_hamming_pairs(scales, "doc_id", "bmh", hamming_max)
 
 
 def multi_scale_hamming_pairs(
@@ -334,35 +297,25 @@ def multi_scale_hamming_pairs(
     )
 
 
-def perceptual_near_dups(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    payload_col: str = "payload",
-    hamming_max: int = 3,
-    tiny_image=None,
-) -> DataFrame:
-    """dHash signatures + the SimHash pigeonhole banding:
-    every payload pair within ``hamming_max`` signature bits is
+def perceptual_near_dups(df: DataFrame, hamming_max: int = 3) -> DataFrame:
+    """dHash signatures + the SimHash pigeonhole banding over
+    ``(doc_id, payload)`` rows: every payload pair within
+    ``hamming_max`` signature bits is
     returned (recall guaranteed by the banding, exactness by the
     bit_count verify). Returns (id_a, id_b, hamming)."""
     from databeats_spark.operators.dedup import banded_hamming_pairs
 
-    sigs = dhash_payloads(df, id_col, payload_col, tiny_image=tiny_image)
-    return banded_hamming_pairs(sigs, id_col, "dhash", hamming_max)
+    sigs = dhash_payloads(df)
+    return banded_hamming_pairs(sigs, "doc_id", "dhash", hamming_max)
 
 
-def frame_sample_plan(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_frames: int = 4,
-    duration_col: str | None = None,
-) -> DataFrame:
+def frame_sample_plan(df: DataFrame, n_frames: int = 4) -> DataFrame:
     """Video frame-sampling plumbing: expand each media row into
-    ``n_frames`` (row, frame_idx, frame_ts_frac) rows — pure Spark
+    ``n_frames`` (doc_id, frame_idx, frame_ts_frac) rows — pure Spark
     (posexplode over a literal sequence), the decode-per-frame then
     rides the same mapInPandas path as images."""
     fracs = F.transform(
         F.sequence(F.lit(0), F.lit(n_frames - 1)),
         lambda i: (i + F.lit(0.5)) / F.lit(float(n_frames)),
     )
-    return df.select(id_col, F.posexplode(fracs).alias("frame_idx", "frame_ts_frac"))
+    return df.select("doc_id", F.posexplode(fracs).alias("frame_idx", "frame_ts_frac"))

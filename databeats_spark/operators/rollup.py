@@ -30,19 +30,19 @@ _PARTIAL_AGGS = (
 )
 
 
-def time_partials(events: DataFrame, grain: str = "hour", keys: tuple[str, ...] = ("event_type",)) -> DataFrame:
-    """Materialize finest-grain partials: one row per (bucket, keys)."""
+def time_partials(events: DataFrame, grain: str = "hour") -> DataFrame:
+    """Materialize finest-grain partials: one row per (bucket, event_type)."""
     return events.groupBy(
-        F.date_trunc(grain, F.col("ts")).alias("bucket"), *keys
+        F.date_trunc(grain, F.col("ts")).alias("bucket"), "event_type"
     ).agg(*_PARTIAL_AGGS)
 
 
-def rollup_to(partials: DataFrame, grain: str, keys: tuple[str, ...] = ("event_type",)) -> DataFrame:
+def rollup_to(partials: DataFrame, grain: str) -> DataFrame:
     """Coarsen partials to ``grain`` by re-aggregating the partial
     columns — never touching raw rows. sum-of-sums and sum-of-counts
     are exact, so this equals the direct aggregation."""
     return partials.groupBy(
-        F.date_trunc(grain, F.col("bucket")).alias("bucket"), *keys
+        F.date_trunc(grain, F.col("bucket")).alias("bucket"), "event_type"
     ).agg(
         F.sum("n_events").cast("long").alias("n_events"),
         F.sum("sv_dec").alias("sv_dec"),
@@ -53,7 +53,7 @@ def finish(rolled: DataFrame) -> DataFrame:
     """Finalize carried partials into presentation columns."""
     return rolled.select(
         "bucket",
-        *[c for c in rolled.columns if c not in ("bucket", "n_events", "sv_dec")],
+        "event_type",
         F.col("n_events").cast("long").alias("n_events"),
         F.col("sv_dec").cast("double").alias("total_value"),
     )

@@ -71,20 +71,21 @@ def write_bucketed(
     )
 
 
-def bucketed_join(spark: SparkSession, left_table: str, right_table: str, key: str, how: str = "inner") -> DataFrame:
-    """Join two same-key bucketed tables — exchange-free by layout."""
-    return spark.table(left_table).join(spark.table(right_table), key, how)
+def bucketed_join(spark: SparkSession, left_table: str, right_table: str, key: str) -> DataFrame:
+    """Inner-join two same-key bucketed tables — exchange-free by layout."""
+    return spark.table(left_table).join(spark.table(right_table), key, "inner")
 
 
 def partitioned_running_total(
     df: DataFrame,
     order_by: list[Column],
-    value_col: str,
-    out_col: str = "running_total",
+    sums: dict[str, str],
     num_partitions: int | None = None,
 ) -> DataFrame:
-    """Distributed prefix sum: running total of ``value_col`` over a
-    GLOBAL total order, without the single-partition window funnel.
+    """Distributed prefix sum: for each ``out_col: value_col`` entry of
+    ``sums``, the running total of ``value_col`` over a GLOBAL total
+    order, without the single-partition window funnel. Every entry
+    rides the same range exchange, checkpoint and offsets broadcast.
 
     ``Window.orderBy(...)`` with no partitionBy collapses all rows into
     ONE task — the classic scale-killer for cumulative metrics. The
@@ -131,24 +132,23 @@ def partitioned_running_total(
         .withColumn("__pid", F.spark_partition_id())
         .localCheckpoint()
     )
-    subtotals = ranged.groupBy("__pid").agg(F.sum(value_col).alias("__sub"))
+    # (out, value, subtotal, offset) per entry; the first keeps the
+    # unsuffixed helper names
+    cols = [
+        (out, value, f"__sub{i or ''}", f"__offset{i or ''}")
+        for i, (out, value) in enumerate(sums.items())
+    ]
+    subtotals = ranged.groupBy("__pid").agg(*[F.sum(v).alias(sub) for _, v, sub, _ in cols])
+    prior = Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
     offsets = subtotals.select(
         "__pid",
-        F.coalesce(
-            F.sum("__sub").over(
-                Window.orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1)
-            ),
-            F.lit(0),
-        ).alias("__offset"),
+        *[F.coalesce(F.sum(sub).over(prior), F.lit(0)).alias(off) for _, _, sub, off in cols],
     )
-    within = F.sum(value_col).over(
-        Window.partitionBy("__pid").orderBy(*order_by).rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return (
-        ranged.join(F.broadcast(offsets), "__pid")
-        .withColumn(out_col, within + F.col("__offset"))
-        .drop("__pid", "__offset")
-    )
+    upto = Window.partitionBy("__pid").orderBy(*order_by).rowsBetween(Window.unboundedPreceding, 0)
+    out = ranged.join(F.broadcast(offsets), "__pid")
+    for out_col, value, _, off in cols:
+        out = out.withColumn(out_col, F.sum(value).over(upto) + F.col(off))
+    return out.drop("__pid", *[off for *_, off in cols])
 
 
 def top_key_share(df: DataFrame, key: str) -> float:
@@ -195,12 +195,14 @@ def attach_global_scalar(df: DataFrame, *aggs: Column) -> DataFrame:
     return base.crossJoin(F.broadcast(base.agg(*aggs)))
 
 
-def bloom_bitmap(
-    history: DataFrame, key: str, m_bits: int = 1 << 20, n_hashes: int = 2
-) -> DataFrame:
+# seeded xxhash64 draws per key: the bitmap build and the probe agree on it
+BLOOM_HASHES = 2
+
+
+def bloom_bitmap(history: DataFrame, key: str, m_bits: int = 1 << 20) -> DataFrame:
     """Build a block-partitioned Bloom bitmap over ``history[key]``:
     one row per 64-bit block that has any bit set — ``(block BIGINT,
-    bits BIGINT)``. Positions come from ``n_hashes`` seeded xxhash64
+    bits BIGINT)``. Positions come from ``BLOOM_HASHES`` seeded xxhash64
     draws mod ``m_bits``; blocks fold with the ``bit_or`` partial
     aggregate, so the build is one hash aggregate whose output is
     ``<= m_bits/64`` rows (8 bytes of payload per block) no matter how
@@ -216,7 +218,7 @@ def bloom_bitmap(
             F.array(
                 *[
                     F.pmod(F.xxhash64(F.col(key), F.lit(i)), F.lit(m_bits))
-                    for i in range(n_hashes)
+                    for i in range(BLOOM_HASHES)
                 ]
             )
         ).alias("p")
@@ -236,16 +238,15 @@ def bloom_probe(
     bitmap: DataFrame,
     key: str,
     m_bits: int = 1 << 20,
-    n_hashes: int = 2,
 ) -> DataFrame:
     """Attach ``__bloom_hit`` to ``new``: true iff every one of the
-    key's ``n_hashes`` bloom positions is set in ``bitmap``. The
-    bitmap side broadcasts (one equi-join per hash — n_hashes is 2-3);
+    key's ``BLOOM_HASHES`` bloom positions is set in ``bitmap``. The
+    bitmap side broadcasts (one equi-join per hash);
     a false NEVER occurs for a key present in the history (no false
     negatives), so ``__bloom_hit = false`` rows are PROVABLY absent
     from the history without touching it."""
     probed = new
-    for i in range(n_hashes):
+    for i in range(BLOOM_HASHES):
         probed = probed.withColumn(
             f"__p{i}", F.pmod(F.xxhash64(F.col(key), F.lit(i)), F.lit(m_bits))
         )
@@ -258,7 +259,7 @@ def bloom_probe(
             "left",
         )
     hit = F.lit(True)
-    for i in range(n_hashes):
+    for i in range(BLOOM_HASHES):
         test = (
             F.coalesce(F.col(f"__bits{i}"), F.lit(0)).bitwiseAND(
                 F.expr(f"shiftleft(1L, CAST(__p{i} % 64 AS INT))")
@@ -266,7 +267,7 @@ def bloom_probe(
             != 0
         )
         hit = hit & test
-    drop = [c for i in range(n_hashes) for c in (f"__p{i}", f"__blk{i}", f"__bits{i}")]
+    drop = [c for i in range(BLOOM_HASHES) for c in (f"__p{i}", f"__blk{i}", f"__bits{i}")]
     return probed.withColumn("__bloom_hit", hit).drop(*drop)
 
 
@@ -275,13 +276,12 @@ def bloom_anti_join(
     history: DataFrame,
     key: str,
     m_bits: int = 1 << 20,
-    n_hashes: int = 2,
 ) -> DataFrame:
     """Anti join ``new`` against a huge ``history`` key set without
     shuffling the bloom-negative bulk: rows whose bloom probe misses
     are DEFINITELY new (no false negatives) and pass straight through;
     only the bloom-POSITIVE slice — the true duplicates plus the
-    ~``(1 - e^(-n_hashes*n/m))^n_hashes`` false-positive residue — is
+    ~``(1 - e^(-2n/m))^2`` false-positive residue (two hashes) — is
     verified by an exact anti join. Result-identical to
     ``new.join(history, key, "left_anti")`` BY CONSTRUCTION (the
     approximate structure only routes rows; the exact join decides),
@@ -295,7 +295,7 @@ def bloom_anti_join(
     Scale shape for incremental corpus dedup: the new crawl never
     shuffles in full; history is touched only by the candidate slice.
     Size ``m_bits`` at ~10 bits per history key."""
-    probed = bloom_probe(new, bloom_bitmap(history, key, m_bits, n_hashes), key, m_bits, n_hashes)
+    probed = bloom_probe(new, bloom_bitmap(history, key, m_bits), key, m_bits)
     definite = probed.filter(~F.col("__bloom_hit")).drop("__bloom_hit")
     candidates = probed.filter(F.col("__bloom_hit")).drop("__bloom_hit")
     verified = candidates.join(history.select(key), key, "left_anti")

@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 from databeats_spark.operators.dedup import dedup_first
 
 
-def top_tracks_by(tracks: DataFrame, metric: str = "popularity", k: int = 20) -> DataFrame:
+def top_tracks_by(tracks: DataFrame, metric: str = "popularity") -> DataFrame:
     """`dashboard()` / `weeksOnChart()` (app.py:56-91, 99-119): dropna,
     dedup by track_name, top-20 by popularity or chart streak."""
     return (
@@ -24,7 +24,7 @@ def top_tracks_by(tracks: DataFrame, metric: str = "popularity", k: int = 20) ->
             [F.col(metric).desc(), "track_id"],
         )
         .orderBy(F.col(metric).desc(), "track_name")
-        .limit(k)
+        .limit(20)
         .select("track_name", "artist_id", metric)
     )
 
@@ -61,26 +61,7 @@ def audio_comparison(
     )
 
 
-def top_tracks_sql(spark, tracks: DataFrame, metric: str = "popularity", k: int = 20) -> DataFrame:
-    """The same dashboard query through the SQL surface with parameter
-    markers — the safe form of the reference's f-string SQL templating
-    (C9, dag.py:726-738; f-strings invite injection and defeat plan
-    caching)."""
-    tracks.createOrReplaceTempView("curated_tracks")
-    return spark.sql(
-        """
-        SELECT track_name, artist_id, {metric} AS metric_value
-        FROM curated_tracks
-        WHERE {metric} IS NOT NULL AND track_name IS NOT NULL
-        ORDER BY {metric} DESC, track_name
-        LIMIT {k}
-        """,
-        metric=F.col(metric),
-        k=k,
-    )
-
-
-def genre_explode_counts(artists: DataFrame, k: int = 20) -> DataFrame:
+def genre_explode_counts(artists: DataFrame) -> DataFrame:
     """Genre array analytics (the reference stores ARRAY<STR> genre but
     never aggregates it — free capability surfaced): top genres by
     artist count."""
@@ -89,5 +70,5 @@ def genre_explode_counts(artists: DataFrame, k: int = 20) -> DataFrame:
         .groupBy("genre")
         .agg(F.count(F.lit(1)).alias("n_artists"))
         .orderBy(F.col("n_artists").desc(), "genre")
-        .limit(k)
+        .limit(20)
     )

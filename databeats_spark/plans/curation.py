@@ -202,7 +202,7 @@ def budget_stage(docs: DataFrame, token_budget: int) -> DataFrame:
     window."""
     ordered = docs.withColumn("__h", F.md5(F.col("doc_id").cast("string")))
     packed = partitioned_running_total(
-        ordered, [F.col("__h")], "n_tok", "cum_tok"
+        ordered, [F.col("__h")], {"cum_tok": "n_tok"}
     )
     return packed.filter(F.col("cum_tok") <= token_budget).drop("__h", "cum_tok")
 

@@ -82,18 +82,15 @@ class QuerySpec:
 # Regenerate with ``python scripts/rotation_report.py``.
 _WINDOW = (
     # Mirrors scripts/rotation_report.py's recommended front-50 exactly.
-    # — CHANGED_QUERIES re-certs (one Spark helper per shared fragment):
-    "session_transcripts",
-    "weekly_chart_streak",
-    "sessionization",
+    # — CHANGED_QUERIES re-certs (arm ECDF in one prefix pass, journey
+    # sessions, near-dup closure helper):
     "ks_two_sample",
     "quantile_treatment_effect",
     "cvm_two_sample",
-    "sprt_evalue_monitor",
-    "lang_id_calibration",
-    "brier_decomposition",
-    "isotonic_calibration",
-    "peak_concurrency",
+    "takedown_blast_radius",
+    "canonical_docs",
+    "canonical_best_docs",
+    "markov_removal_attribution",
     # — certifying twin older than TWIN_MAX_AGE rounds:
     "blockmean_near_dups_exact",
     # — bench headliner not green in the latest recorded round:
@@ -120,6 +117,7 @@ _WINDOW = (
     "bpe_token_stats",
     "bpe_merges",
     "bpe_segmentation",
+    "session_transcripts",
     "ann_recall_audit",
     "embedding_isotropy_audit",
     "semantic_decontam",
@@ -136,6 +134,9 @@ _WINDOW = (
     "cusum_changepoint",
     "dow_seasonal_decompose",
     "theil_sen_trend",
+    "holt_winters_forecast",
+    "holt_linear_forecast",
+    "js_source_drift",
 )
 
 # Queries whose BUILDER or ORACLE changed this round (reset to () at
@@ -146,20 +147,18 @@ _WINDOW = (
 # in r10, jackknife in r11), mechanical instead of CLAUDE.md prose the
 # report "cannot see".
 CHANGED_QUERIES: tuple[str, ...] = (
-    # one Spark helper per shared fragment (registry/events.py
-    # _arm_ecdf, _session_ids, sprt_readout; operators/charts.py
-    # chart_streaks; registry/documents.py _lang_scored): same plans
+    # the arm ECDF's f1/f0 in one prefix pass (registry/events.py
+    # _arm_ecdf): one range exchange and one eager checkpoint fewer
     "quantile_treatment_effect",
     "ks_two_sample",
     "cvm_two_sample",
-    "sessionization",
-    "session_transcripts",
-    "peak_concurrency",
-    "weekly_chart_streak",
-    "sprt_evalue_monitor",
-    "lang_id_calibration",
-    "brier_decomposition",
-    "isotonic_calibration",
+    # journey sessions from registry/events.py _session_ids/_SESSION_CTES
+    "markov_removal_attribution",
+    # the near-dup closure through registry/documents.py
+    # _closure_components (min-label connected components)
+    "canonical_docs",
+    "canonical_best_docs",
+    "takedown_blast_radius",
 )
 
 # The driver gate only sees the first _GATE_WIDTH entries; anything past

@@ -38,7 +38,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from databeats_spark.registry import QuerySpec
-from databeats_spark.registry.events import SESSION_GAP_US
+from databeats_spark.registry.events import _SESSION_CTES, _session_ids
 from databeats_spark.sources.tables import load_tables
 
 CONV_EVENT = "purchase"
@@ -70,21 +70,11 @@ def _journey_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     and including the FIRST purchase; purchase maps to CONV, exhausted
     sessions close with an END edge, the first event gets a START edge."""
     t = load_tables(spark, sf_dir, ["events"])
-    wu = Window.partitionBy("user_id").orderBy("us", "event_id")
-    ev = t.events.select(
-        "user_id", "event_id", "event_type", F.unix_micros("ts").alias("us")
-    ).withColumn(
-        "new_s",
-        F.when(F.lag("us").over(wu).isNull(), 1)
-        .when(F.col("us") - F.lag("us").over(wu) > SESSION_GAP_US, 1)
-        .otherwise(0),
+    ev = _session_ids(
+        t.events.select("user_id", "event_id", "event_type", F.unix_micros("ts").alias("us"))
     )
-    ev = ev.withColumn(
-        "sess",
-        F.sum("new_s").over(wu.rowsBetween(Window.unboundedPreceding, 0)).cast("bigint"),
-    )
-    ws = Window.partitionBy("user_id", "sess").orderBy("us", "event_id")
-    wsf = Window.partitionBy("user_id", "sess")
+    ws = Window.partitionBy("user_id", "sid").orderBy("us", "event_id")
+    wsf = Window.partitionBy("user_id", "sid")
     ev = ev.withColumn("rn", F.row_number().over(ws).cast("bigint"))
     ev = ev.withColumn(
         "fp",
@@ -110,30 +100,19 @@ def _journey_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 _JOURNEY_EDGES_SQL = f"""
-ev AS (
-  SELECT user_id, event_id, event_type, epoch_us(ts) AS us,
-         CASE WHEN lag(epoch_us(ts)) OVER wu IS NULL THEN 1
-              WHEN epoch_us(ts) - lag(epoch_us(ts)) OVER wu > {SESSION_GAP_US} THEN 1
-              ELSE 0 END AS new_s
-  FROM events
-  WINDOW wu AS (PARTITION BY user_id ORDER BY epoch_us(ts), event_id)
-), sess AS (
-  SELECT *, CAST(sum(new_s) OVER (PARTITION BY user_id ORDER BY us, event_id
-            ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS sess
-  FROM ev
-), numbered AS (
-  SELECT *, CAST(row_number() OVER (PARTITION BY user_id, sess ORDER BY us, event_id) AS BIGINT) AS rn
-  FROM sess
+{_SESSION_CTES}, numbered AS (
+  SELECT *, CAST(row_number() OVER (PARTITION BY user_id, sid ORDER BY us, event_id) AS BIGINT) AS rn
+  FROM s
 ), pos AS (
   SELECT *,
          min(CASE WHEN event_type = '{CONV_EVENT}' THEN rn END)
-             OVER (PARTITION BY user_id, sess) AS fp,
-         max(rn) OVER (PARTITION BY user_id, sess) AS last_rn
+             OVER (PARTITION BY user_id, sid) AS fp,
+         max(rn) OVER (PARTITION BY user_id, sid) AS last_rn
   FROM numbered
 ), kept AS (
   SELECT * FROM pos WHERE fp IS NULL OR rn <= fp
 ), steps AS (
-  SELECT COALESCE(lag(event_type) OVER (PARTITION BY user_id, sess ORDER BY us, event_id),
+  SELECT COALESCE(lag(event_type) OVER (PARTITION BY user_id, sid ORDER BY us, event_id),
                   '{START}') AS from_state,
          CASE WHEN event_type = '{CONV_EVENT}' THEN 'CONV' ELSE event_type END AS to_state
   FROM kept

@@ -57,6 +57,7 @@ from databeats_spark.registry.documents import (
     PAIR_DOC_LIMIT,
     _CLOSURE_CTES,
     _PAIRS_CTES,
+    _closure_components,
     _pairs_ctes,
     _shingle_ctes,
 )
@@ -309,14 +310,9 @@ ORDER BY d.source
 # curation pipelines run (keep the best copy, not an arbitrary one).
 
 def _canonical_best_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from databeats_spark.operators.graph import alternating_components
-
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t.documents.filter(F.col("doc_id") < PAIR_DOC_LIMIT)
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=JACCARD_THRESHOLD)
-    comps = alternating_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
+    comps = _closure_components(docs)
     kept = dedup_keep_best(
         docs, comps, "doc_id", [F.col("n_chars").desc(), F.col("doc_id").asc()]
     )
@@ -1809,7 +1805,7 @@ def _robust_spend_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("cnt")
     ).localCheckpoint(eager=False)
     ranked = partitioned_running_total(
-        by_val, [F.col("seg"), F.col("y")], "cnt", out_col="cum"
+        by_val, [F.col("seg"), F.col("y")], {"cum": "cnt"}
     )
     from pyspark.sql import Window
 

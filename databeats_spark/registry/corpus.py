@@ -1259,8 +1259,7 @@ def _epoch_shard_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     with_total = partitioned_running_total(
         sized,
         order_by=[F.col("perm"), F.col("doc_id")],
-        value_col="n_tok",
-        out_col="end_tok",
+        sums={"end_tok": "n_tok"},
     )
     return with_total.select(
         "doc_id",

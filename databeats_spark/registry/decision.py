@@ -34,10 +34,10 @@ from databeats_spark.registry.relational import dec, money_sum
 from databeats_spark.sources.tables import load_tables
 
 
-def _net(price: str = "l_extendedprice", disc: str = "l_discount"):
+def _net():
     """extendedprice * (1 - discount) in exact decimal — the revenue
     expression every TPC-H query aggregates."""
-    return dec(price) * (F.lit(1) - dec(disc))
+    return dec("l_extendedprice") * (F.lit(1) - dec("l_discount"))
 
 
 # --- Q: shipping_priority — Q3 shape ----------------------------------

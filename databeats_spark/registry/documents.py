@@ -729,6 +729,20 @@ comp AS (
   SELECT node AS doc_id, min(label) AS component FROM reach GROUP BY node
 )"""
 
+
+def _closure_components(docs: DataFrame) -> DataFrame:
+    """The Spark side of ``_CLOSURE_CTES``: (node, component) over
+    ``docs``, the ``doc_id < PAIR_DOC_LIMIT`` slice — word-3-shingle
+    Jaccard pairs at JACCARD_THRESHOLD, closed by min-label connected
+    components. Every builder whose oracle embeds ``_CLOSURE_CTES``
+    calls it."""
+    from databeats_spark.operators.graph import connected_components
+
+    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=JACCARD_THRESHOLD)
+    return connected_components(
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
+    )
+
 _NEAR_DUP_PAIRS_SQL = f"""
 WITH {_PAIRS_CTES}
 SELECT id_a, id_b, CAST(common AS BIGINT) AS common,
@@ -780,14 +794,8 @@ ORDER BY doc_id, pos
 def _dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
-    from databeats_spark.operators.graph import connected_components
-
     t = load_tables(spark, sf_dir, ["documents"])
-    docs = t.documents.filter(F.col("doc_id") < PAIR_DOC_LIMIT)
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=JACCARD_THRESHOLD)
-    comps = connected_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
+    comps = _closure_components(t.documents.filter(F.col("doc_id") < PAIR_DOC_LIMIT))
     return (
         comps.select(F.col("node").alias("doc_id"), "component")
         .withColumn(
@@ -1433,8 +1441,7 @@ def _token_budget_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
     packed = partitioned_running_total(
         docs,
         order_by=[F.col("shuffle_key"), F.col("doc_id")],
-        value_col="n_tokens",
-        out_col="cum_tokens",
+        sums={"cum_tokens": "n_tokens"},
     )
     return (
         packed.filter(F.col("cum_tokens") <= TOKEN_BUDGET)
@@ -1626,8 +1633,7 @@ def _quantile_normalized_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     pooled = partitioned_running_total(
         docs.withColumn("one", F.lit(1).cast("bigint")),
         [F.col("n_chars"), F.col("doc_id")],
-        "one",
-        out_col="idx",
+        {"idx": "one"},
     ).select(F.col("idx").cast("bigint").alias("idx"), F.col("n_chars").alias("norm_chars"))
     n_total = docs.agg(F.count(F.lit(1)).cast("bigint").alias("N"))
     k = F.when(

@@ -134,8 +134,8 @@ def _session_ids(ev: DataFrame) -> DataFrame:
     being the user's first event or one more than SESSION_GAP_US after
     the previous. Exact microsecond arithmetic (no float time math).
     The Spark half of the session rule sessionization,
-    session_transcripts and peak_concurrency share; _SESSION_CTES is
-    the DuckDB half."""
+    session_transcripts, peak_concurrency and markov_removal_attribution
+    share; _SESSION_CTES is the DuckDB half."""
     w = Window.partitionBy("user_id").orderBy("us", "event_id")
     new_s = (
         F.when(F.lag("us").over(w).isNull(), 1)
@@ -1092,7 +1092,7 @@ def _mann_whitney_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("bigint").alias("cnt"),
         F.sum((F.col("t") == 1).cast("bigint")).cast("bigint").alias("cnt1"),
     )
-    ranked = partitioned_running_total(by_value, [F.col("y")], "cnt", out_col="cum")
+    ranked = partitioned_running_total(by_value, [F.col("y")], {"cum": "cnt"})
     s = ranked.agg(
         F.sum(F.col("cnt1") * (2 * F.col("cum") - F.col("cnt") + 1)).cast("bigint").alias("two_r1"),
         F.sum("cnt1").cast("bigint").alias("n1"),
@@ -1156,9 +1156,9 @@ FROM s
 def _arm_ecdf(events: DataFrame) -> DataFrame:
     """The two arms' ECDF table over the per-user DECIMAL spend ``y``
     (arm = user_id % 2): one row per distinct y with the per-value arm
-    counts c1/c0, their cumulative counts f1/f0 (two distributed prefix
-    sums, operators/scale.py::partitioned_running_total — no global
-    window) and the arm totals n1/n0, attached from a keyless
+    counts c1/c0, their cumulative counts f1/f0 (both sums in ONE
+    distributed prefix pass, operators/scale.py::
+    partitioned_running_total — no global window) and the arm totals n1/n0, attached from a keyless
     aggregate by crossJoin of the ≤1-row side. The Spark half shared by
     quantile_treatment_effect, ks_two_sample and cvm_two_sample;
     _ARM_ECDF_CTES is the DuckDB half."""
@@ -1173,11 +1173,9 @@ def _arm_ecdf(events: DataFrame) -> DataFrame:
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("bigint").alias("c1"),
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("bigint").alias("c0"),
     )
-    cum1 = partitioned_running_total(by_value, [F.col("y")], "c1", out_col="f1")
-    cum0 = partitioned_running_total(
-        by_value.select("y", "c0"), [F.col("y")], "c0", out_col="f0"
-    )
-    merged = cum1.select("y", "c1", "f1").join(cum0.select("y", "c0", "f0"), "y")
+    merged = partitioned_running_total(
+        by_value, [F.col("y")], {"f1": "c1", "f0": "c0"}
+    ).select("y", "c1", "f1", "c0", "f0")
     totals = per_user.agg(
         F.sum(F.when(F.col("arm") == 1, 1).otherwise(0)).cast("bigint").alias("n1"),
         F.sum(F.when(F.col("arm") == 0, 1).otherwise(0)).cast("bigint").alias("n0"),

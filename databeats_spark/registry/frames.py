@@ -211,8 +211,7 @@ def _customer_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     rn = partitioned_running_total(
         spend.withColumn("__one", F.lit(1)),
         order_by=[F.col("spend").desc(), F.col("o_custkey")],
-        value_col="__one",
-        out_col="rn",
+        sums={"rn": "__one"},
     ).drop("__one")
 
     # ntile(k): sz = n div k rows per bucket, the first (n mod k)

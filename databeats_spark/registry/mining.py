@@ -168,7 +168,7 @@ def _vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).alias("new_terms"))
     )
     return partitioned_running_total(
-        per_bucket, [F.col("doc_bucket")], "new_terms", "vocab_size"
+        per_bucket, [F.col("doc_bucket")], {"vocab_size": "new_terms"}
     ).orderBy("doc_bucket")
 
 
@@ -1386,7 +1386,7 @@ def _sequence_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(F.split("text", " ")).cast("bigint").alias("n_tok"),
         F.md5(F.col("doc_id").cast("string")).alias("__h"),
     )
-    packed = partitioned_running_total(docs, [F.col("__h")], "n_tok", "cum_tok")
+    packed = partitioned_running_total(docs, [F.col("__h")], {"cum_tok": "n_tok"})
     start = F.col("cum_tok") - F.col("n_tok")
     start_bin = F.floor(start / SEQ_LEN).cast("bigint")
     end_bin = F.floor((F.col("cum_tok") - 1) / SEQ_LEN).cast("bigint")

@@ -921,7 +921,7 @@ def _peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
         sess.select(F.col("e_us").alias("us"), F.lit(-1).alias("delta"), "user_id")
     )
     run = partitioned_running_total(
-        deltas, [F.col("us"), F.col("delta"), F.col("user_id")], "delta", "conc"
+        deltas, [F.col("us"), F.col("delta"), F.col("user_id")], {"conc": "delta"}
     )
     return (
         run.select(

@@ -771,24 +771,19 @@ ORDER BY e.vec_id
 
 # --- Q: canonical_docs — end-to-end fuzzy-dedup pipeline -----------------
 # The full training-data dedup chain in one query: exact n-gram Jaccard
-# pairs → connected components via the LARGE-STAR/SMALL-STAR alternation
-# (operators/graph.py::alternating_components — O(log n) rounds,
-# diameter-independent) → dedup_keep_canonical keeps the min-id doc per
+# pairs → connected components (registry/documents.py::
+# _closure_components) → dedup_keep_canonical keeps the min-id doc per
 # cluster plus all singletons. Oracle = recursive-CTE reachability over
 # the same pair predicate, anti-joined to non-canonical members.
 
 
 def _canonical_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from databeats_spark.operators.dedup import ngram_jaccard_pairs
-    from databeats_spark.operators.graph import alternating_components, dedup_keep_canonical
-    from databeats_spark.registry.documents import JACCARD_THRESHOLD, PAIR_DOC_LIMIT
+    from databeats_spark.operators.graph import dedup_keep_canonical
+    from databeats_spark.registry.documents import PAIR_DOC_LIMIT, _closure_components
 
     t = load_tables(spark, sf_dir, ["documents"])
     docs = t.documents.filter(F.col("doc_id") < PAIR_DOC_LIMIT)
-    pairs = ngram_jaccard_pairs(docs, "doc_id", "text", n=3, threshold=JACCARD_THRESHOLD)
-    comps = alternating_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
+    comps = _closure_components(docs)
     kept = dedup_keep_canonical(docs, comps, "doc_id")
     return kept.select(
         "doc_id", "lang", F.length("text").cast("long").alias("n_chars")
@@ -1105,17 +1100,12 @@ ORDER BY query_id
 # cross-engine component-ID parity is even required (it holds anyway).
 
 def _takedown_blast_radius(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from databeats_spark.operators.dedup import ngram_jaccard_pairs
-    from databeats_spark.operators.graph import alternating_components
-    from databeats_spark.registry.documents import JACCARD_THRESHOLD, PAIR_DOC_LIMIT
+    from databeats_spark.registry.documents import PAIR_DOC_LIMIT, _closure_components
 
     t = load_tables(spark, sf_dir, ["documents"])
     sliced = t.documents.filter(F.col("doc_id") < PAIR_DOC_LIMIT)
     docs = sliced.select("doc_id", "source")
-    pairs = ngram_jaccard_pairs(sliced, "doc_id", "text", n=3, threshold=JACCARD_THRESHOLD)
-    comps = alternating_components(
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
-    )
+    comps = _closure_components(sliced)
     members = docs.join(
         comps.withColumnRenamed("node", "doc_id"), "doc_id", "left"
     ).select(

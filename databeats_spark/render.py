@@ -9,7 +9,7 @@ plain string formatting — zero imports beyond the stdlib — so the
 artifact opens in any browser. The renderer consumes REGISTRY / plan
 DataFrames, and every ``.collect()`` here is the presentation-tier
 driver action done right: the inputs are already top-k / aggregate
-results (top-20 charts, per-nation totals), and ``max_rows`` hard-caps
+results (top-20 charts, per-nation totals), and a row cap bounds
 the transfer so a mis-wired full-table DataFrame cannot flood the
 driver.
 """
@@ -17,12 +17,12 @@ driver.
 from __future__ import annotations
 
 import html
-from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MAX_ROWS = 100  # presentation cap: charts/tables never pull more
+SVG_WIDTH = 640
 
 _CSS = """
 body { font-family: system-ui, sans-serif; margin: 2rem; color: #222; }
@@ -53,14 +53,12 @@ def bar_chart_svg(
     label_col: str,
     value_col: str,
     title: str,
-    max_rows: int = 20,
-    width: int = 640,
 ) -> str:
     """Horizontal bar chart (the reference's ``plt.barh`` shape) as an
     inline SVG string. Bars are drawn in DataFrame order and truncated
-    to the first ``max_rows`` — the reference's ``[:20]`` head on an
-    ordered result — so a 25-nation aggregate simply charts its top 20."""
-    rows = df.limit(max_rows).collect()
+    to the first 20 — the reference's ``[:20]`` head on an ordered
+    result — so a 25-nation aggregate simply charts its top 20."""
+    rows = df.limit(20).collect()
     if not rows:
         return f"<h2>{html.escape(title)}</h2><p>(no rows)</p>"
     vmax = max(float(r[value_col]) for r in rows) or 1.0
@@ -68,12 +66,12 @@ def bar_chart_svg(
     height = len(rows) * (bar_h + gap) + 30
     parts = [
         f'<h2>{html.escape(title)}</h2>',
-        f'<svg width="{width}" height="{height}" role="img" aria-label="{html.escape(title)}">',
+        f'<svg width="{SVG_WIDTH}" height="{height}" role="img" aria-label="{html.escape(title)}">',
     ]
     for i, r in enumerate(rows):
         y = 10 + i * (bar_h + gap)
         val = float(r[value_col])
-        w = max(1, int((width - label_w - 90) * val / vmax))
+        w = max(1, int((SVG_WIDTH - label_w - 90) * val / vmax))
         label = html.escape(str(r[label_col]))[:34]
         parts.append(
             f'<text class="lbl" x="{label_w - 6}" y="{y + 13}" text-anchor="end">{label}</text>'
@@ -93,7 +91,6 @@ def distribution_strip_svg(
     group_col: str,
     value_col: str,
     title: str,
-    width: int = 640,
 ) -> str:
     """Per-group distribution strip — the render-tier equivalent of the
     reference's RainCloud feature-comparison panel (app.py:93-97): one
@@ -117,7 +114,7 @@ def distribution_strip_svg(
     hi = max(float(r["q"][-1]) for r in rows)
     span = (hi - lo) or 1.0
     strip_h, gap, label_w, pad_r = 34, 10, 220, 70
-    plot_w = width - label_w - pad_r
+    plot_w = SVG_WIDTH - label_w - pad_r
 
     def x(v: float) -> float:
         return label_w + plot_w * (float(v) - lo) / span
@@ -125,7 +122,7 @@ def distribution_strip_svg(
     height = len(rows) * (strip_h + gap) + 30
     parts = [
         f"<h2>{html.escape(title)}</h2>",
-        f'<svg width="{width}" height="{height}" role="img" aria-label="{html.escape(title)}">',
+        f'<svg width="{SVG_WIDTH}" height="{height}" role="img" aria-label="{html.escape(title)}">',
     ]
     for i, r in enumerate(rows):
         y = 12 + i * (strip_h + gap)
@@ -177,20 +174,16 @@ def render_dashboard(
     spark: SparkSession,
     sf_dir: str | None = None,
     out_path: str | None = None,
-    sections: Sequence[tuple[str, str, str, str]] | None = None,
 ) -> str:
     """The reference's dashboard page over this engine's queries:
     top-20 bar charts (app.py's Track/Artist/Album-popularity pages,
     re-expressed on the testdata schema) plus audit tables. Returns the
     HTML; writes it to ``out_path`` when given.
-
-    ``sections``: optional (query_name, label_col, value_col, title)
-    bar-chart spec list to render instead of the default page.
     """
     from databeats_spark.registry import queries
 
     reg = queries()
-    specs = sections or (
+    specs = (
         ("top_customers", "c_name", "total_spend", "Top 20 customers by spend"),
         ("revenue_by_nation", "n_name", "revenue", "Revenue by nation"),
         ("source_pareto", "source", "tokens", "Corpus tokens by source"),

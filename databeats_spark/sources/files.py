@@ -17,12 +17,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def read_csv(spark: SparkSession, path: str, schema: T.StructType, header: bool = True) -> DataFrame:
-    """CSV with an explicit schema — never inferSchema in a pipeline
-    (a second pass over the data AND nondeterministic typing)."""
-    return spark.read.csv(path, header=header, schema=schema, mode="FAILFAST")
-
-
 def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     """JSON for curated stores: FAILFAST like every schema-explicit
     reader here (default PERMISSIVE silently nulls malformed rows —
@@ -100,8 +94,8 @@ def read_with_quarantine(
 ) -> DataFrame:
     """PERMISSIVE text read carrying the raw line of every row that
     failed to parse in ``QUARANTINE_COL`` (NULL for valid rows).
-    ``header`` mirrors :func:`read_csv` (CSV only — a headerless feed
-    would otherwise quarantine-or-mangle its first data row).
+    ``header`` is for CSV only (a headerless feed would otherwise
+    quarantine-or-mangle its first data row).
 
     Spark caveat baked into this API: a query referencing ONLY the
     corrupt-record column of a lazy text scan is rejected by the
@@ -133,19 +127,17 @@ def split_quarantine(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     return good, bad
 
 
-def quarantine_split_write(
-    df: DataFrame, good_path: str, quarantine_path: str, fmt: str = "parquet"
-) -> None:
-    """Materialize both sides. Two filtered map-only writes of the same
+def quarantine_split_write(df: DataFrame, good_path: str, quarantine_path: str) -> None:
+    """Materialize both sides as parquet. Two filtered map-only writes of the same
     scan: at scale this reads the raw text twice but shuffles nothing —
     cheaper than caching the corpus to split it in one pass, and each
     write's predicate prunes at the parser."""
     good, bad = split_quarantine(df)
-    write_table(good, good_path, fmt=fmt)
+    write_table(good, good_path)
     # full-width on purpose: Spark rejects projecting ONLY the corrupt
     # column from a raw text scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN),
     # and the partially-parsed columns are triage signal anyway
-    write_table(bad, quarantine_path, fmt=fmt)
+    write_table(bad, quarantine_path)
 
 
 def read_table(

@@ -2,13 +2,13 @@
 media → embedding → IVF pipeline.
 
 Batch half of the story: ``operators/multimodal.py::encode_payloads``
-(injectable encoder) feeds ``ml/ann.py::IVFIndex.fit``; incremental
+feeds ``ml/ann.py::IVFIndex.fit``; incremental
 half: ``IVFIndex.add`` assigns a new batch to existing centroids
 without a refit. This module runs that incremental half as a
 Structured Streaming sink so a document/media stream keeps the index
 current:
 
-    stream -> attach payload -> encode (Arrow batches, injected model)
+    stream -> attach payload -> encode (Arrow batches, stub model)
            -> assign to nearest existing centroid (KMeans transform)
            -> append to a centroid-partitioned parquet corpus
 
@@ -40,54 +40,36 @@ from databeats_spark.streaming.compaction import (
 
 
 class StreamingIVFIngest:
-    """foreachBatch sink that grows an IVF corpus from a payload
-    stream. ``encoder`` is the injectable batch model (see
-    encode_payloads); ``index`` provides the frozen centroid book."""
+    """foreachBatch sink that grows an IVF corpus from a ``(doc_id,
+    payload)`` stream, encoded by encode_payloads' default model;
+    ``index`` provides the frozen centroid book."""
 
-    def __init__(
-        self,
-        index: IVFIndex,
-        out_path: str,
-        encoder=None,
-        embed_dim: int = 8,
-        id_col: str = "doc_id",
-        payload_col: str = "payload",
-    ) -> None:
+    def __init__(self, index: IVFIndex, out_path: str) -> None:
         self.index = index
         self.out_path = out_path
-        self.encoder = encoder
-        self.embed_dim = embed_dim
-        self.id_col = id_col
-        self.payload_col = payload_col
 
     def sink(self, batch_df: DataFrame, batch_id: int) -> None:
         """The foreachBatch target: encode → assign → epoch-partitioned
         append (replay-idempotent)."""
         from pyspark.ml.functions import array_to_vector
 
-        emb = encode_payloads(
-            batch_df,
-            encoder=self.encoder,
-            id_col=self.id_col,
-            payload_col=self.payload_col,
-            embed_dim=self.embed_dim,
-        )
+        emb = encode_payloads(batch_df)
         assigned = self.index.kmeans.transform(
             emb.withColumn("__v", array_to_vector(F.col("embedding")))
-        ).select(self.id_col, "embedding", "centroid_id")
+        ).select("doc_id", "embedding", "centroid_id")
         write_epoch(assigned, self.out_path, batch_id, ["epoch", "centroid_id"])
 
     def corpus(self, spark: SparkSession) -> DataFrame:
         """Everything ingested so far: (id, embedding, centroid_id)."""
         return spark.read.parquet(self.out_path).select(
-            self.id_col, "embedding", "centroid_id"
+            "doc_id", "embedding", "centroid_id"
         )
 
     def as_index(self, spark: SparkSession) -> IVFIndex:
         """An IVFIndex over the streamed corpus (frozen centroid book +
         the centroid-partitioned files — probes prune partitions)."""
         return IVFIndex(
-            self.index.kmeans, self.corpus(spark), self.id_col, "embedding"
+            self.index.kmeans, self.corpus(spark), "doc_id", "embedding"
         )
 
     def drift(self, spark: SparkSession) -> float:
@@ -99,7 +81,7 @@ class StreamingIVFIngest:
             # the streamed corpus always carries 'embedding' (the
             # encoder's output name); the seed index may have been fit
             # with any vec_col — align to it
-            self.id_col,
+            "doc_id",
             F.col("embedding").alias(self.index.vec_col),
         )
         return self.index.mean_assignment_distance(latest)

@@ -46,12 +46,9 @@ _BITMAP_SCHEMA = "block BIGINT, bits BIGINT, epoch BIGINT"
 
 def bloom_guard_sink(
     state_dir: str,
-    id_col: str = "doc_id",
-    key_col: str = "fp",
     m_bits: int = 1 << 20,
-    n_hashes: int = 2,
 ):
-    """foreachBatch sink: admit only fingerprint-novel docs; state is
+    """foreachBatch sink: admit only ``fp``-novel ``doc_id`` rows; state is
     the per-epoch bloom bitmap (``{state_dir}/bitmap``), admitted rows
     land epoch-partitioned at ``{state_dir}/admitted``."""
 
@@ -60,7 +57,7 @@ def bloom_guard_sink(
 
         # within-batch exact dedup, deterministic first-arrival-wins
         # (min id per fingerprint) so replays derive the same keep set
-        w = Window.partitionBy(key_col).orderBy(id_col)
+        w = Window.partitionBy("fp").orderBy("doc_id")
         batch = (
             batch_df.withColumn("__rn", F.row_number().over(w))
             .filter(F.col("__rn") == 1)
@@ -74,12 +71,12 @@ def bloom_guard_sink(
             .groupBy("block")
             .agg(F.bit_or("bits").alias("bits"))
         )
-        probed = bloom_probe(batch, prior, key_col, m_bits, n_hashes)
+        probed = bloom_probe(batch, prior, "fp", m_bits)
         admitted = probed.filter(~F.col("__bloom_hit")).drop("__bloom_hit")
         admitted = admitted.localCheckpoint()  # two consumers below
 
         write_epoch(admitted, f"{state_dir}/admitted", epoch_id, ["epoch"])
-        delta = bloom_bitmap(admitted.select(key_col), key_col, m_bits, n_hashes)
+        delta = bloom_bitmap(admitted.select("fp"), "fp", m_bits)
         write_epoch(delta, f"{state_dir}/bitmap", epoch_id, ["epoch"])
 
     return merge
@@ -89,13 +86,11 @@ def run_bloom_guard(
     spark: SparkSession,
     docs_stream: DataFrame,
     state_dir: str,
-    id_col: str = "doc_id",
-    key_col: str = "fp",
     m_bits: int = 1 << 20,
-    n_hashes: int = 2,
 ) -> StreamingQuery:
-    """Drain all available document files through the guard."""
-    sink = bloom_guard_sink(state_dir, id_col, key_col, m_bits, n_hashes)
+    """Drain all available ``(doc_id, fp)`` document files through the
+    guard."""
+    sink = bloom_guard_sink(state_dir, m_bits=m_bits)
     return drain(docs_stream, sink, f"{state_dir}/_ckpt")
 
 

@@ -143,7 +143,6 @@ def streaming_srm_guard(
     events: DataFrame,
     window: str = "1 day",
     watermark: str = "2 days",
-    crit: float = 3.841459,
 ) -> DataFrame:
     """Live sample-ratio-mismatch guardrail — the streaming sibling of
     the batch ``srm_daily_check`` registry query. A broken assignment
@@ -157,7 +156,7 @@ def streaming_srm_guard(
     same deterministic hash, and the batch query stays the
     user-grained authority. Counts are exact per window; the two-cell
     chi-square collapses to (n1-n0)^2/n with one division, as in the
-    batch form."""
+    batch form, flagged above the 1-df 95% critical value 3.841459."""
     arm = (F.col("user_id") % 2).cast("bigint")
     agg = (
         events.withWatermark("ts", watermark)
@@ -174,7 +173,7 @@ def streaming_srm_guard(
         "n_treated",
         "n_control",
         F.round(chi2, 6).alias("chi2"),
-        (chi2 > F.lit(crit)).alias("srm_flag"),
+        (chi2 > F.lit(3.841459)).alias("srm_flag"),
     )
 
 
@@ -240,10 +239,10 @@ def event_type_moments(events: DataFrame) -> DataFrame:
 
 
 def streaming_anomalies(
-    events_stream: DataFrame, moments: DataFrame, z_threshold: float = 3.0
+    events_stream: DataFrame, moments: DataFrame
 ) -> DataFrame:
-    """Streaming z-score anomaly detection: score the live stream
-    against batch-maintained per-type moments (broadcast stream-static
+    """Streaming z-score anomaly detection (|z| > 3): score the live
+    stream against batch-maintained per-type moments (broadcast stream-static
     join — re-planned each micro-batch, so refreshed moments are
     picked up without restart). The streaming twin of the batch
     value_outliers registry query."""
@@ -251,6 +250,6 @@ def streaming_anomalies(
     return (
         events_stream.join(F.broadcast(moments), "event_type")
         .withColumn("z_score", z)
-        .filter(F.abs(F.col("z_score")) > z_threshold)
+        .filter(F.abs(F.col("z_score")) > 3.0)
         .select("event_id", "event_type", "value", F.round("z_score", 6).alias("z_score"))
     )

@@ -208,12 +208,7 @@ def accepted_corpus(spark: SparkSession, state_dir: str) -> DataFrame:
     return spark.read.parquet(f"{state_dir}/accepted")
 
 
-def compact_state(
-    spark: SparkSession,
-    state_dir: str,
-    epoch_floor: int = -1,
-    committed: set[int] | None = None,
-) -> None:
+def compact_state(spark: SparkSession, state_dir: str) -> None:
     """Fold drained epoch partitions into one consolidated ``epoch=-1``
     partition per state table (accepted / sigs / bands).
 
@@ -228,17 +223,11 @@ def compact_state(
     were folded — the replay's ``epoch != current`` exclusion no longer
     hides them, so the batch would collide with ITSELF and re-decide
     against a corrupted index. Now only checkpoint-committed epochs
-    fold (ledger read from the drain helper's ``_ckpt``; override with
-    ``committed`` when the sink is driven directly), the swap is
-    two-phase with idempotent crash recovery, and ``epoch_floor``
-    (>= 0) additionally restricts folding to epochs at or below it.
+    fold (ledger read from the drain helper's ``_ckpt``) and the swap
+    is two-phase with idempotent crash recovery.
     Still a maintenance operation: never run concurrently with a drain
     (single-writer rule)."""
-    if committed is None:
-        committed = committed_epochs(f"{state_dir}/_ckpt")
-    exclude: set[int] = (
-        {e for e in committed if e > epoch_floor} if epoch_floor >= 0 else set()
-    )
+    committed = committed_epochs(f"{state_dir}/_ckpt")
     for table in ("accepted", "sigs", "bands"):
         compact_epoch_partials(
             spark,
@@ -246,5 +235,4 @@ def compact_state(
             lambda df: df.drop("epoch"),  # append-only rows: identity fold
             ["epoch"],
             committed=committed,
-            exclude=exclude,
         )

@@ -32,9 +32,10 @@ def stream_documents(spark: SparkSession, path: str) -> DataFrame:
 
 
 def quality_gate(
-    docs: DataFrame, qf: QualityFilter, threshold: float = KEEP_THRESHOLD
+    docs: DataFrame, qf: QualityFilter
 ) -> DataFrame:
-    """Score a (batch or streaming) document feed and flag keeps.
+    """Score a (batch or streaming) document feed and flag keeps
+    (``p_good >= KEEP_THRESHOLD``).
 
     Emits (doc_id, p_good, keep) — downstream routes on ``keep``;
     the score is kept so threshold changes replay without re-scoring.
@@ -42,5 +43,5 @@ def quality_gate(
     return qf.score(docs).select(
         "doc_id",
         "p_good",
-        (F.col("p_good") >= threshold).alias("keep"),
+        (F.col("p_good") >= KEEP_THRESHOLD).alias("keep"),
     )

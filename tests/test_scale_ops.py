@@ -88,12 +88,30 @@ def test_partitioned_running_total_matches_global_window(spark):
     # session (scale-adaptive), instead of the local core count
     for n_parts in (None, 1, 4, 32, 64):
         got = partitioned_running_total(
-            df, order_by=[F.col("key"), F.col("id")], value_col="v",
-            out_col="rt", num_partitions=n_parts,
+            df, order_by=[F.col("key"), F.col("id")], sums={"rt": "v"},
+            num_partitions=n_parts,
         )
         a = naive.select("id", "rt").orderBy("id").toPandas()
         b = got.select("id", "rt").orderBy("id").toPandas()
         assert a.equals(b), f"mismatch at num_partitions={n_parts}"
+
+
+def test_partitioned_running_total_carries_several_sums(spark):
+    """Two ``sums`` entries ride one range pass and each equals its own
+    single-sum run."""
+    from databeats_spark.operators.scale import partitioned_running_total
+
+    df = spark.createDataFrame(
+        [(i, (i * 37) % 101, i % 7 + 1, i % 3) for i in range(500)], ["id", "key", "v", "w"]
+    )
+    order = [F.col("key"), F.col("id")]
+    both = partitioned_running_total(df, order, {"rv": "v", "rw": "w"}, num_partitions=4)
+    assert both.columns == ["id", "key", "v", "w", "rv", "rw"]
+    for out, value in (("rv", "v"), ("rw", "w")):
+        one = partitioned_running_total(df, order, {out: value}, num_partitions=4)
+        a = one.select("id", out).orderBy("id").toPandas()
+        b = both.select("id", out).orderBy("id").toPandas()
+        assert a.equals(b), out
 
 
 def test_partitioned_running_total_avoids_single_partition_window(spark):
@@ -103,7 +121,7 @@ def test_partitioned_running_total_avoids_single_partition_window(spark):
         F.col("id"), (F.col("id") % 13).alias("v")
     )
     out = partitioned_running_total(
-        df, order_by=[F.col("id")], value_col="v", num_partitions=16
+        df, order_by=[F.col("id")], sums={"running_total": "v"}, num_partitions=16
     )
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):

@@ -49,9 +49,16 @@ FAMILIES = {
     ),
     "session_ids": (
         (_EVENTS, "_session_ids"),
-        ["sessionization", "session_transcripts", "peak_concurrency"],
+        ["sessionization", "session_transcripts", "peak_concurrency", "markov_removal_attribution"],
         [(lambda: _sql(_EVENTS, "_SESSION_CTES"),
-          ["sessionization", "session_transcripts", "peak_concurrency"])],
+          ["sessionization", "session_transcripts", "peak_concurrency",
+           "markov_removal_attribution"])],
+    ),
+    "near_dup_closure": (
+        (_DOCS, "_closure_components"),
+        ["dedup_components", "canonical_docs", "canonical_best_docs", "takedown_blast_radius"],
+        [(lambda: _sql(_DOCS, "_CLOSURE_CTES"),
+          ["dedup_components", "canonical_docs", "canonical_best_docs", "takedown_blast_radius"])],
     ),
     "shingle_pairs": (
         None,
