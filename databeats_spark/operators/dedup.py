@@ -177,16 +177,15 @@ def minhash_signatures(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    shingle_n: int = 3,
     num_hashes: int = 16,
     family: MinHashFamily | None = None,
 ) -> DataFrame:
-    """Per-document MinHash signature table (__id, signature) — the
-    compact sketch an ingest guard persists instead of text: estimated
-    Jaccard between two docs is the fraction of agreeing signature
-    positions (see :func:`signature_jaccard`). ``family`` defaults to
-    :func:`universal_family`."""
-    shingled = _shingled_docs(df, id_col, text_col, shingle_n)
+    """Per-document MinHash signature table (__id, signature) over word
+    3-shingles — the compact sketch an ingest guard persists instead of
+    text: estimated Jaccard between two docs is the fraction of agreeing
+    signature positions (see :func:`signature_jaccard`). ``family``
+    defaults to :func:`universal_family`."""
+    shingled = _shingled_docs(df, id_col, text_col, 3)
     return _signatures(shingled, num_hashes, family or universal_family())
 
 

@@ -68,28 +68,22 @@ _SIG_SCHEMA = "doc_id BIGINT, signature ARRAY<BIGINT>, epoch BIGINT"
 _BAND_SCHEMA = "doc_id BIGINT, band INT, key BIGINT, epoch BIGINT"
 
 
-def dedup_guard_sink(
-    state_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 16,
-    bands: int = 8,
-    threshold: float = 0.5,
-):
-    """foreachBatch sink: near-dup-gate the micro-batch against the
-    accepted-corpus sketch index, append survivors + their sketches."""
+_THRESHOLD = 0.5  # signature-estimated Jaccard at which a doc is a near-dup
+
+
+def dedup_guard_sink(state_dir: str):
+    """foreachBatch sink: near-dup-gate the micro-batch of (doc_id, text)
+    rows against the accepted-corpus sketch index, append survivors +
+    their sketches."""
 
     def merge(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
 
         sig = minhash_signatures(
-            batch_df, id_col, text_col, shingle_n=shingle_n,
-            num_hashes=num_hashes,
+            batch_df, "doc_id", "text"
         ).withColumnRenamed("__id", "doc_id").localCheckpoint()
         band = lsh_band_keys(
-            sig.select(F.col("doc_id").alias("__id"), "signature"),
-            num_hashes=num_hashes, bands=bands,
+            sig.select(F.col("doc_id").alias("__id"), "signature")
         ).withColumnRenamed("__id", "doc_id")
 
         prev_sig = read_state(spark, f"{state_dir}/sigs", _SIG_SCHEMA, epoch_id)
@@ -111,7 +105,7 @@ def dedup_guard_sink(
                 prev_sig.select(F.col("doc_id").alias("acc_id"), F.col("signature").alias("acc_sig")),
                 "acc_id",
             )
-            .filter(signature_jaccard(F.col("signature"), F.col("acc_sig")) >= threshold)
+            .filter(signature_jaccard(F.col("signature"), F.col("acc_sig")) >= _THRESHOLD)
             .select("doc_id")
             .distinct()
             .localCheckpoint()
@@ -137,7 +131,7 @@ def dedup_guard_sink(
                 sig.select(F.col("doc_id").alias("early_id"), F.col("signature").alias("early_sig")),
                 "early_id",
             )
-            .filter(signature_jaccard(F.col("signature"), F.col("early_sig")) >= threshold)
+            .filter(signature_jaccard(F.col("signature"), F.col("early_sig")) >= _THRESHOLD)
             .select("early_id", "doc_id")
             .localCheckpoint()
         )
@@ -177,12 +171,12 @@ def dedup_guard_sink(
         # table: docs too short to shingle can never be near-dups, so
         # they pass (they simply contribute no sketch state).
         accepted_ids = (
-            batch_df.select(F.col(id_col).alias("doc_id"))
+            batch_df.select("doc_id")
             .distinct()
             .join(rejects, "doc_id", "left_anti")
         )
 
-        accepted_docs = batch_df.join(accepted_ids, batch_df[id_col] == accepted_ids["doc_id"], "left_semi")
+        accepted_docs = batch_df.join(accepted_ids, batch_df["doc_id"] == accepted_ids["doc_id"], "left_semi")
         for table, df in (
             ("accepted", accepted_docs),
             ("sigs", sig.join(accepted_ids, "doc_id", "left_semi")),
@@ -197,10 +191,9 @@ def run_ingest_guard(
     spark: SparkSession,
     docs_stream: DataFrame,
     state_dir: str,
-    **guard_kwargs,
 ) -> StreamingQuery:
     """Drain all available document files through the near-dup guard."""
-    return drain(docs_stream, dedup_guard_sink(state_dir, **guard_kwargs), state_dir + "/_ckpt")
+    return drain(docs_stream, dedup_guard_sink(state_dir), state_dir + "/_ckpt")
 
 
 def accepted_corpus(spark: SparkSession, state_dir: str) -> DataFrame:

@@ -81,32 +81,49 @@ def _defaulted(fn: ast.FunctionDef) -> list[tuple[str, int | None]]:
 
 
 def _calls():
-    """called name -> (keywords passed, most positionals passed, whether
-    any call unpacks ``*args``/``**kwargs``); and every referenced name."""
-    keywords, positionals, unpacked, refs = defaultdict(set), defaultdict(int), set(), set()
-    for p in CALLER_FILES:
-        for node in ast.walk(ast.parse(p.read_text())):
-            if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
-                refs.add(node.id)
-            elif isinstance(node, ast.Attribute):
-                refs.add(node.attr)
-            if not isinstance(node, ast.Call):
-                continue
+    """called name -> (keywords passed, most positionals passed); and
+    every referenced name. A call that forwards ``**kw`` where ``kw`` is
+    the enclosing function's own ``**`` parameter passes whatever
+    keywords the calls of that enclosing function pass; any other
+    unpacking (``*args``, a local dict) sets nothing."""
+    keywords, positionals, refs = defaultdict(set), defaultdict(int), set()
+    forwards = defaultdict(set)  # callee -> enclosing functions forwarding **kw into it
+
+    def walk(node, kwargs):
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            kwargs = {**kwargs, node.args.kwarg.arg: node.name} if node.args.kwarg else kwargs
+        if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
+            refs.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            refs.add(node.attr)
+        elif isinstance(node, ast.Call):
             f = node.func
             name = f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
-            if name is None:
-                continue
-            positionals[name] = max(positionals[name], len(node.args))
-            keywords[name] |= {k.arg for k in node.keywords if k.arg}
-            if any(isinstance(a, ast.Starred) for a in node.args) or any(
-                k.arg is None for k in node.keywords
-            ):
-                unpacked.add(name)
-    return keywords, positionals, unpacked, refs
+            if name is not None:
+                plain = [a for a in node.args if not isinstance(a, ast.Starred)]
+                positionals[name] = max(positionals[name], len(plain))
+                keywords[name] |= {k.arg for k in node.keywords if k.arg}
+                for k in node.keywords:
+                    if k.arg is None and isinstance(k.value, ast.Name) and k.value.id in kwargs:
+                        forwards[name].add(kwargs[k.value.id])
+        for ch in ast.iter_child_nodes(node):
+            walk(ch, kwargs)
+
+    for p in CALLER_FILES:
+        walk(ast.parse(p.read_text()), {})
+    changed = True
+    while changed:
+        changed = False
+        for callee, outers in forwards.items():
+            got = set().union(*(keywords[o] for o in outers))
+            if not got <= keywords[callee]:
+                keywords[callee] |= got
+                changed = True
+    return keywords, positionals, refs
 
 
 DEFS = _defs()
-KEYWORDS, POSITIONALS, UNPACKED, REFS = _calls()
+KEYWORDS, POSITIONALS, REFS = _calls()
 
 
 def _unset() -> set[tuple[str, str, str]]:
@@ -116,7 +133,7 @@ def _unset() -> set[tuple[str, str, str]]:
         shift = 1 if is_method and fn.args.args and fn.args.args[0].arg in ("self", "cls") else 0
         for arg, i in _defaulted(fn):
             set_by_position = i is not None and POSITIONALS[called] + shift > i
-            if not (arg in KEYWORDS[called] or set_by_position or called in UNPACKED):
+            if not (arg in KEYWORDS[called] or set_by_position):
                 out.add((rel, qual, arg))
     return out
 
